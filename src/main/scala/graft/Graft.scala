@@ -58,20 +58,28 @@ object Graft {
     *     pure reinterpretation — identical wall clock and epoch micros
     *     to DuckDB's naive read of the same file.
     */
-  /** In-process memo of INFERRED parquet schemas for the immutable
-    * driver input tables: every `spark.read.parquet` without a schema
-    * runs a 1-task footer-inference job, and the bench pays it per
-    * table reference per query per rep. Metadata only — rows are
-    * never cached, and a fresh JVM re-infers from the files.
+  /** In-process memo of INFERRED parquet schemas: every
+    * `spark.read.parquet` without a schema runs a 1-task
+    * footer-inference job, and the bench pays it per table reference
+    * per query per rep. Metadata only — rows are never cached. Keyed
+    * by path AND the files' modification time and size, so a table
+    * rewritten at the same path (a different schema, in the same JVM)
+    * is inferred again instead of read with a stale schema.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
-  /** Inferred schema of `path`, memoized per absolute path (input
-    * tables are immutable for the life of a run).
+  /** Inferred schema of `path`, memoized per (path, newest mtime,
+    * total bytes) of the file or of the directory's files.
     */
-  def inferredSchema(s: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    schemaMemo.computeIfAbsent(path, p => s.read.parquet(p).schema)
+  def inferredSchema(s: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files = if (st.isDirectory) fs.listStatus(p).toSeq.filter(_.isFile) else Seq(st)
+    val key = (path, (st +: files).map(_.getModificationTime).max, files.map(_.getLen).sum)
+    schemaMemo.computeIfAbsent(key, _ => s.read.parquet(path).schema)
+  }
 
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftx._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{BooleanType, IntegerType}
 
 /** Spark-native deployment entry point: register graft's expressions
   * in every session via
@@ -47,6 +47,11 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
+/** graft's one SQL function table: the extension injects it into
+  * every session and `Graft.registerFunctions` registers it into an
+  * existing one. Column-API-only expressions (those taking a
+  * driver-held model, e.g. `nearest_centroid`) are not in it.
+  */
 object GraftSparkExtensions {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "")
@@ -71,6 +76,8 @@ object GraftSparkExtensions {
       es => MixHashLongs(es)),
     ("zorder2", info("zorder2", "zorder2(x, y) - Morton bit-interleave clustering key"),
       es => Zorder2(es.head, es(1))),
+    ("hilbert2", info("hilbert2", "hilbert2(x, y, bits) - Hilbert-curve index on the 2^bits grid"),
+      es => Hilbert2(es.head, es(1), es(2).eval().asInstanceOf[Int])),
     ("theta_estimate", info("theta_estimate",
       "theta_estimate(sketch) - distinct estimate of a theta sketch"),
       es => ThetaEstimate(es.head)),
@@ -129,5 +136,14 @@ object GraftSparkExtensions {
         WinnowFingerprints(toks, n, w)
       case es => throw new IllegalArgumentException(
         s"winnow_fingerprints(toks, n, w) with literal n/w; got ${es.length} args")
+    }),
+    ("ngram_hashes", info("ngram_hashes",
+      "ngram_hashes(toks, n[, dedup_sort]) - fused word-n-gram xxhash64 set"), {
+      case Seq(toks, Literal(n: Int, IntegerType)) =>
+        NgramHashes(toks, n, dedupSort = true)
+      case Seq(toks, Literal(n: Int, IntegerType), Literal(d: Boolean, BooleanType)) =>
+        NgramHashes(toks, n, d)
+      case es => throw new IllegalArgumentException(
+        s"ngram_hashes(toks, n[, dedup_sort]) with literal n; got ${es.length} args")
     }))
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftx.GraftExpressions
+import org.apache.spark.sql.graftx.{AdcModel, Codebook, GraftExpressions}
 
 /** graft's public Column-level function API (re-export of the native
   * Catalyst expressions in org.apache.spark.sql.graftx — see the
@@ -71,6 +71,28 @@ object GraftFunctions {
 
   /** Cosine similarity of two Array[Float] embedding columns. */
   def cosine_sim(a: Column, b: Column): Column = GraftExpressions.cosine_sim(a, b)
+
+  /** The `n` centroids of a driver-held quantizer nearest to `v` by
+    * cosine (ties to the lower id; a NULL cosine ranks last), best
+    * first, as array<struct<cell, cos, centroid>>: a Voronoi
+    * assignment, a PQ code or a probe list in one narrow map.
+    */
+  def nearest_centroid(v: Column, codebook: Codebook, n: Int = 1): Column =
+    GraftExpressions.nearest_centroid(v, codebook, n)
+
+  /** ADC cosine of query vector `q` to the vector encoded by `keys`
+    * (c_0..c_{m-1}, preceded by the coarse cell for residual codes)
+    * under frozen codebooks held as plan constants.
+    */
+  def adc_score(q: Column, keys: Seq[Column], model: AdcModel): Column =
+    GraftExpressions.adc_score(q, keys, model)
+
+  /** One Lloyd update for several quantizers in one global aggregate:
+    * BINARY per-(quantizer, cluster) quantized sums, decoded by
+    * `LloydStepAgg.centroids`.
+    */
+  def lloyd_step(vs: Seq[Column], codebooks: Seq[Codebook], quantScale: Double): Column =
+    GraftExpressions.lloyd_step(vs, codebooks, quantScale)
 
   /** Portable 64-bit scalar hash (murmur3 fmix64 finalizer) — the
     * oracle-replicable alternative to xxhash64 for hash splits.

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.{AdcModel, Codebook, LloydStepAgg}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructField, StructType}
 import graft.functions.GraftFunctions
 
 import scala.util.Random
@@ -132,14 +134,7 @@ object Ann {
                      idCol: String, embCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
     val c = corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb"))
-    val scored = c.crossJoin(broadcast(q))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(c.crossJoin(broadcast(q)), k)
   }
 
   /** L7b — true IVF (inverted-file) ANN: k-means cells over the
@@ -181,14 +176,85 @@ object Ann {
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nProbe)
       .select("qid", "qemb", "cell")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    cells.join(broadcast(probes), Seq("cell"))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(cells.join(broadcast(probes), Seq("cell")), k)
   }
+
+  /** Each query's `nProbe` nearest cells of a driver-held coarse
+    * quantizer, as (qid, qemb, cell) rows: a narrow top-nProbe over the
+    * queries (ORDER BY cdist DESC NULLS LAST, cell — the
+    * [[Codebook]] ranking contract), no window and no centroid join.
+    */
+  private def probesOf(q: DataFrame, coarse: Codebook, nProbe: Int): DataFrame =
+    q.select(col("qid"), col("qemb"),
+        explode(GraftFunctions.nearest_centroid(col("qemb"), coarse, nProbe)).as("p"))
+      .select(col("qid"), col("qemb"), col("p.cell").as("cell"))
+
+  /** The nearest centroid of `v` as struct<cell, cos, centroid>. */
+  private def nearestOf(v: Column, cb: Codebook): Column =
+    GraftFunctions.nearest_centroid(v, cb, 1).getItem(0)
+
+  /** Collects seed tables (ids as BIGINT, vectors as array<float>;
+    * NULL-id rows skipped) into driver-held quantizers, all in one job.
+    */
+  private def seedCodebooks(seeds: Seq[DataFrame], idCol: String,
+                            embCol: String): Seq[Codebook] = {
+    val rows = seeds.zipWithIndex.map { case (df, i) =>
+      df.filter(col(idCol).isNotNull).select(lit(i).as("q"),
+        col(idCol).cast("long").as("id"), col(embCol).cast("array<float>").as("v"))
+    }.reduce(_.unionByName(_)).collect().groupBy(_.getInt(0))
+    seeds.indices.map { i =>
+      val rs = rows.getOrElse(i, Array.empty[Row])
+      new Codebook(rs.map(_.getLong(1)), rs.map(r => Codebook.floats(r.getSeq[Any](2))))
+    }
+  }
+
+  private def seedCodebook(seeds: DataFrame, idCol: String, embCol: String): Codebook =
+    seedCodebooks(Seq(seeds), idCol, embCol).head
+
+  /** The PQ seed rows: every row with `vec_id < k` (cell id = its
+    * vec_id), cut into the m subspace slices by [[pqSeeds]].
+    */
+  private def pqSeedRows(vecs: DataFrame, idCol: String, k: Int): DataFrame =
+    vecs.filter(col(idCol).cast("long") < k)
+
+  private def pqSeeds(all: Codebook, m: Int, subDim: Int): Seq[Codebook] =
+    (0 until m).map(s => all.sliced(s * subDim, subDim))
+
+  /** Driver-held Lloyd trainer for any number of quantizers at once:
+    * quantizer i clusters the vectors of column `vecs(i)` of `input`,
+    * starting from `seeds(i)`. Each of the `iters − 1` updates is ONE
+    * global `lloyd_step` aggregate over `input` — every row assigned to
+    * its nearest centroid in every quantizer in the same pass, the
+    * quantized coordinates summed per (quantizer, cluster) — whose
+    * Σk·d-bounded result is collected and becomes the next round's
+    * centroids. Nothing is cached, checkpointed or joined.
+    *
+    * Determinism: the argmax is the [[Codebook]] ranking contract over
+    * [[CosineSim]] (the same fixed-order fold s01/d05 replay); centroid
+    * means are `floor(v·1e6 + 0.5)` BIGINT sums divided as
+    * `(sq − pmod(sq, n)) div n`, then `/1e6` and FLOAT — order-
+    * independent, so round i+1 scores against bit-identical centroids
+    * on any partitioning. Clusters that get no member drop out of the
+    * next round. Vectors are read as array<float>, as every scorer
+    * reads them.
+    */
+  private def lloydTrain(input: DataFrame, vecs: Seq[Column], seeds: Seq[Codebook],
+                         iters: Int, quantScale: Double): Seq[Codebook] = {
+    require(iters >= 1)
+    (2 to iters).foldLeft(seeds) { (cbs, _) =>
+      val sums = input.select(GraftFunctions.lloyd_step(vecs, cbs, quantScale))
+        .collect().head.getAs[Array[Byte]](0)
+      LloydStepAgg.centroids(sums, cbs, quantScale)
+    }
+  }
+
+  /** The coarse quantizer of [[lloydRounds]]: `iters` Lloyd rounds
+    * from `seeds` over the corpus rows with a non-NULL id.
+    */
+  private def coarseTrain(corpus: DataFrame, seeds: DataFrame, idCol: String, embCol: String,
+                          iters: Int, quantScale: Double): Codebook =
+    lloydTrain(corpus.filter(col(idCol).isNotNull), Seq(col(embCol)),
+      Seq(seedCodebook(seeds, idCol, embCol)), iters, quantScale).head
 
   /** L51 — nearest-seed cluster assignment (Voronoi partition of the
     * corpus under cosine similarity): every vector goes to the most
@@ -197,31 +263,32 @@ object Ann {
     * (cluster → dedup/score within cluster) and the assignment step
     * of IVF index builds, exposed as a first-class operator.
     *
-    * Scale shape: the seed set is tiny and BROADCAST — scoring is
-    * map-side over one corpus pass, and the argmax is a map-side-
-    * combinable groupBy(vec_id) (all k scored rows for a vector are
-    * born in the same partition, so partial aggregation collapses
-    * them before the shuffle; what travels is one slim row per
-    * vector). No window, no corpus×k shuffle.
+    * Scale shape: the seed set is collected to the driver (one small
+    * job) and rides into a narrow `nearest_centroid` expression as a
+    * plan constant — one corpus pass, no broadcast join, no shuffle.
     *
     * Determinism: cosines are double-precision fixed-order folds
     * (same kernel the s01/d05 oracles replay bit-identically); the
-    * argmax compares raw doubles then the seed id, so the assignment
+    * argmax is `max(struct(cos, −id))` — a NULL cosine (zero norm)
+    * ranks lowest, ties go to the lower seed id — so the assignment
     * is engine-exact. Only the reported similarity is rounded.
+    *
+    * Each input row is assigned on its own: a duplicated `vec_id`
+    * yields one output row per input row (the grouped form this
+    * replaced merged them into one). `vec_id` is unique in every
+    * input the oracles see.
     */
   def assignToSeeds(corpus: DataFrame, seeds: DataFrame,
-                    idCol: String, embCol: String): DataFrame = {
-    val c = corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb"))
-    val sd = seeds.select(col(idCol).as("cluster"), col(embCol).as("semb"))
-    c.crossJoin(broadcast(sd))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("cemb"), col("semb")))
-      // argmax(cos, then lowest cluster) as a struct max: negate the
-      // cluster id so the lexicographic struct order breaks ties low.
-      .groupBy("vec_id")
-      .agg(max(struct(col("cos"), (-col("cluster")).as("nc"))).as("m"))
-      .select(col("vec_id"), (-col("m.nc")).as("cluster"),
-        round(col("m.cos"), 4).as("cos"))
-  }
+                    idCol: String, embCol: String): DataFrame =
+    assignWith(corpus, seedCodebook(seeds, idCol, embCol),
+      seeds.schema(idCol).dataType, idCol, embCol)
+
+  private def assignWith(corpus: DataFrame, cb: Codebook,
+                         clusterType: org.apache.spark.sql.types.DataType,
+                         idCol: String, embCol: String): DataFrame =
+    corpus.select(col(idCol).as("vec_id"), nearestOf(col(embCol), cb).as("nc"))
+      .select(col("vec_id"), col("nc.cell").cast(clusterType).as("cluster"),
+        round(col("nc.cos"), 4).as("cos"))
 
   /** L58 — oracle-exact distributed Lloyd refinement (k-means under
     * cosine similarity): `iters` rounds of assign → centroid-update,
@@ -233,20 +300,13 @@ object Ann {
     * the refinement itself must be reproducible for an incremental
     * 100 TB pipeline (re-running the job must yield the same cells).
     *
-    * Scale shape per round: one broadcast-seeds corpus pass + one
-    * map-side-combinable argmax (assignToSeeds), then one
-    * (cluster, dim)-keyed aggregate for the centroid update — the
-    * same linear-shuffle shapes as s08/s04; nothing corpus×corpus.
-    * Rounds are sequential by nature (like BPE merges) and each
-    * round's centroid table is k rows.
+    * Scale shape: the k-row quantizer lives on the driver
+    * ([[lloydTrain]]): one seed collect, then per update round one
+    * global aggregate job over the corpus; the final assignment is a
+    * narrow map. Nothing corpus×corpus, nothing cached.
     *
-    * Determinism (what makes every round oracle-replayable): the
-    * argmax compares raw fixed-order-fold doubles then the seed id;
-    * centroid means run in 1e-6-quantized BIGINT space (order-
-    * independent sums, floor division), and the rebuilt centroid
-    * vectors go through the same FLOAT fold as stored embeddings —
-    * so iteration i+1 scores against bit-identical centroids on any
-    * partitioning and any engine.
+    * Determinism: see [[lloydTrain]] — every round is oracle-
+    * replayable on any partitioning and any engine.
     *
     * @return final assignment (vec_id, cluster, cos) after `iters`
     *         assign passes (centroids update between passes only)
@@ -256,46 +316,36 @@ object Ann {
                    quantScale: Double = 1e6): DataFrame =
     lloydRounds(corpus, seeds, idCol, embCol, iters, quantScale)._2
 
-  /** [[lloydIterate]] exposing BOTH halves of the result: the final
-    * centroid table (the trained quantizer — what an IVF index probes
-    * at query time) and the final assignment (the cells). Same
-    * iteration structure and determinism contract.
+  /** [[lloydIterate]] exposing BOTH halves of the result: the trained
+    * quantizer (what an IVF index probes at query time) and the final
+    * assignment (the cells). Same round structure and determinism
+    * contract.
     *
-    * @return (centroids(idCol, embCol), assignment(vec_id, cluster, cos))
+    * @return (centroids, assignment(vec_id, cluster, cos))
     */
   private[graft] def lloydRounds(corpus: DataFrame, seeds: DataFrame,
                                  idCol: String, embCol: String, iters: Int,
-                                 quantScale: Double = 1e6): (DataFrame, DataFrame) = {
-    require(iters >= 1)
-    var centroids = seeds.select(col(idCol), col(embCol))
-    var assign = assignToSeeds(corpus, centroids, idCol, embCol)
-    for (_ <- 2 to iters) {
-      val members = corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb"))
-        .join(assign.select("vec_id", "cluster"), "vec_id")
-      val cents = labelCentroids(members.select(col("cluster"), col("cemb")),
-        "cemb", "cluster", Some(quantScale))
-      // rebuild the k centroid vectors: sort the (dim, micro) structs
-      // so the collect order is total, then fold through FLOAT like a
-      // stored embedding — collect_list alone is partitioning-order-
-      // dependent, array_sort on the unique dim key makes it exact.
-      centroids = cents
-        .groupBy(col("label").as(idCol))
-        .agg(array_sort(collect_list(struct(col("dim"), col("centroid_micro")))).as("dm"))
-        .select(col(idCol),
-          transform(col("dm"),
-            x => (x.getField("centroid_micro").cast("double") / lit(quantScale))
-              .cast("float")).as(embCol))
-        // k-row table: truncate lineage every round, as the CC loop
-        // does — without this, round i's assign chains through every
-        // prior round's corpus passes and the plan grows per iteration.
-        .localCheckpoint(true)
-      assign = assignToSeeds(corpus, centroids, idCol, embCol)
-    }
-    (centroids, assign)
+                                 quantScale: Double = 1e6): (Codebook, DataFrame) = {
+    val coarse = coarseTrain(corpus, seeds, idCol, embCol, iters, quantScale)
+    (coarse, assignWith(corpus, coarse, seeds.schema(idCol).dataType, idCol, embCol))
+  }
+
+  /** Exact top-k by cosine over (qid, qemb, vec_id, cemb) candidate
+    * pairs: per-query row_number over (cos DESC NULLS LAST, vec_id),
+    * cosine reported rounded to 4 places.
+    */
+  private def rankByCos(pairs: DataFrame, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
+    pairs
+      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
+      .withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
   }
 
   /** L7b-exact — IVF top-k with a DETERMINISTIC coarse quantizer:
-    * the [[lloydRounds]] machinery (quantized-integer centroid means,
+    * the [[lloydTrain]] machinery (quantized-integer centroid means,
     * FLOAT-folded rebuilds, low-id argmax ties) trains the cells, so
     * the whole index build AND search is bit-reproducible on any
     * engine — the external oracle replays quantizer, cells, probes,
@@ -303,34 +353,16 @@ object Ann {
     * variant (production trains with more iterations; cell quality
     * only moves recall, which the spec pins there).
     *
-    * Scale shape: quantizer = `iters` broadcast corpus passes +
-    * (cell, dim)-sized shuffles; probing broadcasts the nCells-row
-    * centroid table and the (queries × nProbe)-row probe list; the
-    * candidate scan touches only probed cells. Nothing corpus×corpus.
+    * Scale shape: quantizer = one seed collect + one aggregate job per
+    * update round; cells and probes are narrow `nearest_centroid` maps
+    * (corpus side and query side); the candidate scan joins the
+    * (queries × nProbe)-row probe list on cell. Nothing corpus×corpus.
     */
   def ivfTopKExact(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
                    idCol: String, embCol: String, k: Int, nProbe: Int = 4,
-                   iters: Int = 2, quantScale: Double = 1e6): DataFrame = {
-    val (cents, assign) = lloydRounds(corpus, seeds, idCol, embCol, iters, quantScale)
-    val centroids = cents.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-    val cells = assign.select(col("vec_id"), col("cluster").as("cell"))
-      .join(corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb")), Seq("vec_id"))
-    val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cdist").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cdist", GraftFunctions.cosine_sim(col("qemb"), col("centroid")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select("qid", "qemb", "cell")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    cells.join(broadcast(probes), Seq("cell"))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
-  }
+                   iters: Int = 2, quantScale: Double = 1e6): DataFrame =
+    ivfFilteredTopK(corpus.select(col(idCol), col(embCol)), queries, seeds, idCol, embCol,
+      lit(true), k, nProbe, iters, quantScale)
 
   /** L89 — FILTERED vector search (the vector-DB serving shape every
     * production system exposes — FAISS IDSelector / Qdrant-Milvus
@@ -356,34 +388,18 @@ object Ann {
                       idCol: String, embCol: String, pred: Column,
                       k: Int, nProbe: Int = 4, iters: Int = 2,
                       quantScale: Double = 1e6): DataFrame = {
-    val (cents, assign) = lloydRounds(corpus, seeds, idCol, embCol, iters, quantScale)
-    val centroids = cents.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-    val cells = assign.select(col("vec_id"), col("cluster").as("cell"))
-      .join(corpus.withColumnRenamed(idCol, "vec_id")
-        .withColumnRenamed(embCol, "cemb"), Seq("vec_id"))
+    val coarse = coarseTrain(corpus, seeds, idCol, embCol, iters, quantScale)
+    val cells = corpus.withColumn("cell", nearestOf(col(embCol), coarse).getField("cell"))
+      .withColumnRenamed(idCol, "vec_id").withColumnRenamed(embCol, "cemb")
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cdist").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cdist", GraftFunctions.cosine_sim(col("qemb"), col("centroid")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select("qid", "qemb", "cell")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    cells.join(broadcast(probes), Seq("cell"))
-      .filter(pred)
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(cells.join(broadcast(probesOf(q, coarse, nProbe)), Seq("cell")).filter(pred), k)
   }
 
   /** L72 — product quantization (Jégou/Douze/Schmid 2011): the
     * standard embedding-COMPRESSION path for billion-vector corpora —
     * split each D-dim vector into `m` subvectors, train an
     * independent small quantizer per subspace with the deterministic
-    * [[lloydRounds]] machinery (quantized-integer centroid means,
+    * [[lloydTrain]] machinery (quantized-integer centroid means,
     * FLOAT-folded rebuilds, low-id ties — the s03/s10 contract), and
     * store each vector as m small codes. At m=4, k=16 a 64-dim float
     * vector (256 B) becomes 4 nibbles (2 B): a 10B-vector corpus
@@ -397,90 +413,78 @@ object Ann {
     * quantization-quality audit. Rounding is the engine-stable
     * floor(x·10⁴+½)/10⁴ form.
     *
-    * Scale shape: m independent Lloyd chains over persisted sliced
-    * subvectors (each the linear-shuffle s10 shape), an m-way
-    * id-keyed join of code columns, and k-row centroid broadcasts for
-    * reconstruction. Fully oracle-replayable — the DuckDB side
-    * replays all m chains. Known headroom: a fused assign evaluating
-    * all m subspaces in ONE corpus pass per iteration would cut scan
-    * count m× at true scale; the per-subspace form is kept because it
-    * reuses the certified lloydRounds contract verbatim.
+    * Scale shape: all m sub-quantizers train together — one seed
+    * collect (vec_id < k), then one `lloyd_step` aggregate per update
+    * round covering every subspace; codes and the reconstruction are
+    * one narrow `nearest_centroid` map per subspace. Fully
+    * oracle-replayable — the DuckDB side replays all m chains.
     */
-  /** The trained PQ model: per-subspace centroid tables
-    * (cell_s, se_s) and the code table (vec_id, c_0..c_{m-1}).
+  def pqTrainEncode(vecs: DataFrame, idCol: String, embCol: String,
+                    m: Int = 4, subDim: Int = 16, k: Int = 16,
+                    iters: Int = 2, quantScale: Double = 1e6): DataFrame = {
+    val cbs = pqTrain(vecs, idCol, embCol, m, subDim, k, iters, quantScale)
+    vecs.select(col(idCol).cast("long").as("vec_id") +: col(embCol).as("orig") +:
+        cbs.zipWithIndex.map { case (cb, s) =>
+          nearestOf(slice(col(embCol), s * subDim + 1, subDim), cb).as(s"n_$s") }: _*)
+      .select(col("vec_id") +:
+        (0 until m).map(s => col(s"n_$s.cell").as(s"c_$s")) :+
+        (floor(GraftFunctions.cosine_sim(col("orig"),
+          concat((0 until m).map(s => col(s"n_$s.centroid")): _*)) * lit(10000.0) +
+          lit(0.5)) / lit(10000.0)).as("recon_cos"): _*)
+  }
+
+  /** The m subspace slices `slice(emb, s·subDim + 1, subDim)`. */
+  private def slicesOf(emb: Column, m: Int, subDim: Int): Seq[Column] =
+    (0 until m).map(s => slice(emb, s * subDim + 1, subDim))
+
+  /** Code columns c_0..c_{m-1} (BIGINT cells) of `emb` under `cbs`. */
+  private def codeCols(emb: Column, cbs: Seq[Codebook], subDim: Int): Seq[Column] =
+    cbs.zipWithIndex.map { case (cb, s) =>
+      nearestOf(slice(emb, s * subDim + 1, subDim), cb).getField("cell").as(s"c_$s")
+    }
+
+  /** The trained PQ model: one codebook per subspace, all m trained
+    * together by [[lloydTrain]] (one aggregate per update round for
+    * every subspace). Per-subspace math is independent, so every
+    * number is BIT-IDENTICAL to running a separate Lloyd chain per
+    * slice — PqFusedSpec pins it against that DataFrame reference,
+    * including duplicate-id and zero-vector corpora.
     *
-    * FUSED training: all m sub-quantizers advance together — ONE
-    * corpus pass per Lloyd stage instead of m (the corpus explodes
-    * once into (vec_id, s, slice) rows; assignment is one broadcast
-    * argmax keyed by (vec_id, s); the centroid update is one
-    * (s, cell, dim)-keyed quantized-integer aggregate). The
-    * per-subspace math is independent, so every number is
-    * BIT-IDENTICAL to running [[lloydRounds]] per slice —
-    * PqFusedSpec pins the fused model equal to the sequential form
-    * ([[pqModelSequential]]), including duplicate-id and zero-vector
-    * corpora, and the s11/s12 oracles (which replay the per-subspace
-    * math) stay green unchanged.
-    *
-    * Cache bound: the sliced corpus persists (MEMORY_AND_DISK)
-    * across the Lloyd stages — m·|corpus| slim rows. When the corpus
-    * exceeds what the cluster can cache, production does what PQ
-    * practice has always done: TRAIN THE CODEBOOKS ON A SAMPLE
-    * (codebook quality converges long before corpus size — Jégou et
-    * al. train on subsets), then run the full corpus through the
-    * frozen-codebook encode pass only ([[pqEncodeAgainst]] /
-    * [[pqEncodeStored]] — one broadcast argmax scan, nothing
-    * persisted). PqStoreSpec pins the sample-train → full-encode
-    * path.
+    * Training state is the m·k·subDim-sized model on the driver; the
+    * corpus is scanned once per round and never cached. At corpus
+    * scale production still trains the codebooks on a sample (codebook
+    * quality converges long before corpus size — Jégou et al. train on
+    * subsets) and runs the full corpus through the frozen-codebook
+    * encode only ([[pqEncodeAgainst]] / [[pqEncodeStored]]); PqStoreSpec
+    * pins the sample-train → full-encode path.
     */
+  private def pqTrain(vecs: DataFrame, idCol: String, embCol: String,
+                      m: Int, subDim: Int, k: Int, iters: Int,
+                      quantScale: Double): Seq[Codebook] = {
+    require(m >= 1 && subDim >= 1 && k >= 1 && iters >= 1)
+    lloydTrain(vecs.filter(col(idCol).isNotNull), slicesOf(col(embCol), m, subDim),
+      pqSeeds(seedCodebook(pqSeedRows(vecs, idCol, k), idCol, embCol), m, subDim),
+      iters, quantScale)
+  }
+
+  /** [[pqTrain]] plus the corpus codes (vec_id, c_0..c_{m-1}). */
   private[graft] def pqModel(vecs: DataFrame, idCol: String, embCol: String,
                              m: Int, subDim: Int, k: Int, iters: Int,
-                             quantScale: Double): (Seq[DataFrame], DataFrame) = {
-    require(m >= 1 && subDim >= 1 && k >= 1 && iters >= 1)
-    // one slicing pass; cached across every Lloyd stage (library
-    // caching contract: callers clearCache between actions).
-    val sliced = vecs.select(col(idCol).cast("long").as("vec_id"),
-        posexplode(array((0 until m).map(s =>
-          slice(col(embCol), s * subDim + 1, subDim)): _*)).as(Seq("s", "semb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def assign(c: DataFrame): DataFrame =
-      sliced.join(broadcast(c), Seq("s"))
-        .withColumn("cos", GraftFunctions.cosine_sim(col("semb"), col("cemb")))
-        .groupBy("vec_id", "s")
-        .agg(max(struct(col("cos"), (-col("cell")).as("nc"))).as("mx"))
-        .select(col("vec_id"), col("s"), (-col("mx.nc")).as("cluster"))
-    var cents = sliced.filter(col("vec_id") < k)
-      .select(col("s"), col("vec_id").as("cell"), col("semb").as("cemb"))
-    var asg = assign(cents)
-    for (_ <- 2 to iters) {
-      val upd = sliced.join(asg, Seq("vec_id", "s"))
-        .select(col("s"), col("cluster"), posexplode(col("semb")))
-        .select(col("s"), col("cluster"),
-          (col("pos") + 1).cast("long").as("dim"),
-          floor(col("col").cast("double") * lit(quantScale) + lit(0.5))
-            .cast("long").as("qv"))
-        .groupBy("s", "cluster", "dim")
-        .agg(sum("qv").as("sq"), count(lit(1)).as("n"))
-        .select(col("s"), col("cluster").as("cell"), col("dim"),
-          expr("(sq - pmod(sq, n)) div n").as("cm"))
-      cents = upd.groupBy("s", "cell")
-        .agg(array_sort(collect_list(struct(col("dim"), col("cm")))).as("dm"))
-        .select(col("s"), col("cell"),
-          transform(col("dm"),
-            x => (x.getField("cm").cast("double") / lit(quantScale))
-              .cast("float")).as("cemb"))
-        // m·k-row table: truncate lineage per round, as lloydRounds does
-        .localCheckpoint(true)
-      asg = assign(cents)
-    }
-    val centsSeq = (0 until m).map(s => cents.filter(col("s") === s)
-      .select(col("cell").as(s"cell_$s"), col("cemb").as(s"se_$s")))
-    val codes = asg.groupBy("vec_id")
-      .agg((0 until m).map(s =>
-        max(when(col("s") === s, col("cluster"))).cast("long").as(s"c_$s")).head,
-        (1 until m).map(s =>
-          max(when(col("s") === s, col("cluster"))).cast("long").as(s"c_$s")): _*)
-    (centsSeq, codes)
+                             quantScale: Double): (Seq[Codebook], DataFrame) = {
+    val cbs = pqTrain(vecs, idCol, embCol, m, subDim, k, iters, quantScale)
+    (cbs, encodeWith(vecs, cbs, idCol, embCol, subDim))
   }
+
+  /** Frozen-codebook encode: (vec_id, c_0..c_{m-1}[, cell]), one
+    * narrow map — one output row per input row; with `coarse`, each
+    * row's coarse cell (cast to `cellType`) rides along.
+    */
+  private def encodeWith(batch: DataFrame, cbs: Seq[Codebook], idCol: String,
+                         embCol: String, subDim: Int,
+                         coarse: Option[(Codebook, DataType)] = None): DataFrame =
+    batch.select(col(idCol).cast("long").as("vec_id") +:
+      (codeCols(col(embCol), cbs, subDim) ++ coarse.map { case (cb, cellType) =>
+        nearestOf(col(embCol), cb).getField("cell").cast(cellType).as("cell") }): _*)
 
   /** L74 — INCREMENTAL PQ encoding: encode a NEW batch against
     * codebooks trained on the EXISTING corpus only — the d27 recrawl
@@ -488,46 +492,34 @@ object Ann {
     * append-only: the quantizer trains once (or per major refresh),
     * and every daily embedding batch encodes against the FROZEN
     * centroids — retraining per batch would silently re-map old codes.
-    * One broadcast argmax pass over the batch slices; the batch never
-    * touches the corpus rows (only the m·k-row codebook ships).
+    * The encode is one narrow map over the batch with the m·k-row
+    * codebooks as plan constants; the batch never touches the corpus.
     */
   def pqEncodeAgainst(corpus: DataFrame, batch: DataFrame, idCol: String,
                       embCol: String, m: Int = 4, subDim: Int = 16,
                       k: Int = 16, iters: Int = 2,
-                      quantScale: Double = 1e6): DataFrame = {
-    val (cents, _) = pqModel(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
-    encodeAgainstCodebooks(batch, stackCodebooks(cents), idCol, embCol, m, subDim)
-  }
+                      quantScale: Double = 1e6): DataFrame =
+    encodeWith(batch, pqTrain(corpus, idCol, embCol, m, subDim, k, iters, quantScale),
+      idCol, embCol, subDim)
 
-  /** The m per-subspace centroid tables stacked into one long-form
-    * codebook relation (s, cell, cemb) — the storable shape.
+  /** A quantizer as a (cell, vector) local table, cells cast to
+    * `cellType`.
     */
-  private def stackCodebooks(cents: Seq[DataFrame]): DataFrame =
-    cents.zipWithIndex.map { case (c, s) =>
-      c.select(lit(s).as("s"), col(s"cell_$s").as("cell"), col(s"se_$s").as("cemb"))
+  private def codebookFrame(spark: SparkSession, cb: Codebook, cellCol: String,
+                            vecCol: String, cellType: DataType): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(cb.ids.indices.map(j =>
+        Row(cb.ids(j), Codebook.boxed(cb.vecs(j)))): _*),
+      StructType(Seq(StructField(cellCol, LongType), StructField(vecCol, ArrayType(FloatType)))))
+      .withColumn(cellCol, col(cellCol).cast(cellType))
+
+  /** The m subspace codebooks stacked into one long-form codebook
+    * relation (s, cell, cemb) — the storable shape.
+    */
+  private def stackCodebooks(spark: SparkSession, cbs: Seq[Codebook]): DataFrame =
+    cbs.zipWithIndex.map { case (cb, s) =>
+      codebookFrame(spark, cb, "cell", "cemb", LongType).select(lit(s).as("s"), col("cell"), col("cemb"))
     }.reduce(_.unionByName(_))
-
-  /** Frozen-codebook batch encode shared by [[pqEncodeAgainst]] (which
-    * trains the codebooks first) and [[pqEncodeStored]] (which reads
-    * them from the persisted model): one broadcast argmax pass over
-    * the batch slices; only the m·k-row codebook ships.
-    */
-  private def encodeAgainstCodebooks(batch: DataFrame, codebooks: DataFrame,
-                                     idCol: String, embCol: String,
-                                     m: Int, subDim: Int): DataFrame =
-    batch.select(col(idCol).cast("long").as("vec_id"),
-        posexplode(array((0 until m).map(s =>
-          slice(col(embCol), s * subDim + 1, subDim)): _*)).as(Seq("s", "semb")))
-      .join(broadcast(codebooks), Seq("s"))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("semb"), col("cemb")))
-      .groupBy("vec_id", "s")
-      .agg(max(struct(col("cos"), (-col("cell")).as("nc"))).as("mx"))
-      .select(col("vec_id"), col("s"), (-col("mx.nc")).as("cluster"))
-      .groupBy("vec_id")
-      .agg((0 until m).map(s =>
-        max(when(col("s") === s, col("cluster"))).cast("long").as(s"c_$s")).head,
-        (1 until m).map(s =>
-          max(when(col("s") === s, col("cluster"))).cast("long").as(s"c_$s")): _*)
 
   /** L77 — the PERSISTED PQ model (the d29 pattern applied to
     * vectors): train once, write codebooks + codes as external
@@ -539,7 +531,7 @@ object Ann {
     * remembering to reuse a DataFrame.
     *
     *   - `<prefix>_codebooks`: (s, cell, cemb) — m·k rows, the whole
-    *     quantizer; broadcast at every encode.
+    *     quantizer; collected to the driver at every encode.
     *   - `<prefix>_codes`: (vec_id, c_0..c_{m-1}) bucketed on vec_id
     *     — the corpus at 2 B/vector; id-keyed joins (fetch codes for
     *     a doc set, append a new batch) read it Exchange-free.
@@ -552,35 +544,38 @@ object Ann {
                    tablePrefix: String, m: Int = 4, subDim: Int = 16,
                    k: Int = 16, iters: Int = 2, quantScale: Double = 1e6,
                    buckets: Int = 8, path: Option[String] = None): Unit = {
-    val (cents, codes) = pqModel(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
+    val cbs = pqTrain(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
     graft.sources.TidyIO.writeBucketedCols(
-      stackCodebooks(cents), s"${tablePrefix}_codebooks", Seq("s"), 1,
+      stackCodebooks(corpus.sparkSession, cbs), s"${tablePrefix}_codebooks", Seq("s"), 1,
       path = path.map(p => s"$p/codebooks"))
     graft.sources.TidyIO.writeBucketedCols(
-      codes, s"${tablePrefix}_codes", Seq("vec_id"), buckets,
-      path = path.map(p => s"$p/codes"))
+      encodeWith(corpus, cbs, idCol, embCol, subDim), s"${tablePrefix}_codes", Seq("vec_id"),
+      buckets, path = path.map(p => s"$p/codes"))
   }
 
   /** Encode a batch against a [[writePqModel]] store: the codebooks
-    * are READ, never retrained — the plan contains the codebook scan
-    * and the batch argmax, nothing else (PqStoreSpec asserts no Lloyd
-    * machinery: no checkpointed centroid RDDs, no corpus scan).
+    * are READ (one small collect), never retrained — the plan is the
+    * batch scan and one narrow encode map, nothing else (PqStoreSpec
+    * asserts no Lloyd machinery).
     */
   def pqEncodeStored(batch: DataFrame, idCol: String, embCol: String,
                      tablePrefix: String, m: Int = 4,
                      subDim: Int = 16): DataFrame =
-    encodeAgainstCodebooks(batch,
-      batch.sparkSession.table(s"${tablePrefix}_codebooks"),
-      idCol, embCol, m, subDim)
+    encodeWith(batch, readCodebooks(batch.sparkSession, tablePrefix, m),
+      idCol, embCol, subDim)
 
   /** Read a [[writePqModel]]/[[writeIvfAdcIndex]] codebook table back
-    * into the per-subspace shape [[adcRank]] consumes.
+    * into the m driver-held subspace codebooks.
     */
-  private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-                            tablePrefix: String, m: Int): Seq[DataFrame] = {
-    val cb = spark.table(s"${tablePrefix}_codebooks")
-    (0 until m).map(s => cb.filter(col("s") === s)
-      .select(col("cell").as(s"cell_$s"), col("cemb").as(s"se_$s")))
+  private def readCodebooks(spark: SparkSession, tablePrefix: String,
+                            m: Int): Seq[Codebook] = {
+    val rows = spark.table(s"${tablePrefix}_codebooks")
+      .select(col("s"), col("cell").cast("long"), col("cemb")).collect()
+      .groupBy(_.getInt(0))
+    (0 until m).map { s =>
+      val rs = rows.getOrElse(s, Array.empty[Row])
+      new Codebook(rs.map(_.getLong(1)), rs.map(r => Codebook.floats(r.getSeq[Any](2))))
+    }
   }
 
   /** L78a — ADC retrieval SERVED from a [[writePqModel]] store: the
@@ -595,11 +590,9 @@ object Ann {
                       tablePrefix: String, kTop: Int = 10, m: Int = 4,
                       subDim: Int = 16): DataFrame = {
     val spark = queries.sparkSession
-    val codes = spark.table(s"${tablePrefix}_codes")
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val cand = codes.crossJoin(broadcast(q.select(col("qid").as("qid_c"))))
-      .withColumnRenamed("qid_c", "qid")
-    adcRank(cand, q, readCodebooks(spark, tablePrefix, m), m, subDim, kTop)
+    adcRank(spark.table(s"${tablePrefix}_codes").crossJoin(broadcast(q)),
+      new AdcModel(subDim, readCodebooks(spark, tablePrefix, m).toArray, None), kTop)
   }
 
   /** L78b — the PERSISTED IVFADC index (the full FAISS-on-disk
@@ -613,28 +606,31 @@ object Ann {
     *     cell buckets, and at rest cell-partitioning turns the probe
     *     join into partition pruning.
     *
-    * All training cost lands here, once. [[ivfAdcTopKStored]] plans
-    * contain table scans, a broadcast probe join, and arithmetic —
-    * no Lloyd stage, no float-corpus scan.
+    * All training cost lands here, once: the coarse quantizer and the
+    * m PQ codebooks train TOGETHER ([[lloydTrain]]: one aggregate job
+    * per update round for all 1 + m quantizers), the codes and cells
+    * are one narrow map over the corpus, and the two model tables are
+    * written from the driver-held quantizers. [[ivfAdcTopKStored]]
+    * plans contain table scans, a broadcast probe join, and
+    * arithmetic — no Lloyd stage, no float-corpus scan.
     */
   def writeIvfAdcIndex(corpus: DataFrame, seeds: DataFrame, idCol: String,
                        embCol: String, tablePrefix: String, m: Int = 4,
                        subDim: Int = 16, k: Int = 16, iters: Int = 2,
                        quantScale: Double = 1e6, buckets: Int = 8,
                        path: Option[String] = None): Unit = {
-    val (coarse, assign) = lloydRounds(corpus, seeds, idCol, embCol, iters, quantScale)
-    val centroids = coarse.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-    val cells = assign.select(col("vec_id"), col("cluster").as("cell"))
-    val (cents, codes) = pqModel(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
+    val (coarse, cbs) = ivfAdcTrain(corpus, seeds, idCol, embCol, m, subDim, k, iters,
+      quantScale)
+    val cellType = seeds.schema(idCol).dataType
     graft.sources.TidyIO.writeBucketedCols(
-      centroids, s"${tablePrefix}_coarse", Seq("cell"), 1,
-      path = path.map(p => s"$p/coarse"))
+      codebookFrame(corpus.sparkSession, coarse, "cell", "centroid", cellType),
+      s"${tablePrefix}_coarse", Seq("cell"), 1, path = path.map(p => s"$p/coarse"))
     graft.sources.TidyIO.writeBucketedCols(
-      stackCodebooks(cents), s"${tablePrefix}_codebooks", Seq("s"), 1,
+      stackCodebooks(corpus.sparkSession, cbs), s"${tablePrefix}_codebooks", Seq("s"), 1,
       path = path.map(p => s"$p/codebooks"))
     graft.sources.TidyIO.writeBucketedCols(
-      codes.join(cells, Seq("vec_id")), s"${tablePrefix}_codes", Seq("cell"),
-      buckets, path = path.map(p => s"$p/codes"))
+      encodeWith(corpus, cbs, idCol, embCol, subDim, Some((coarse, cellType))),
+      s"${tablePrefix}_codes", Seq("cell"), buckets, path = path.map(p => s"$p/codes"))
   }
 
   /** IVFADC retrieval SERVED from a [[writeIvfAdcIndex]] store:
@@ -644,33 +640,32 @@ object Ann {
     * corpus/seeds/parameters — s17's oracle contract (s14's oracle
     * verbatim).
     *
-    * The probed-cell set is bounded by |queries|·nProbe BY
-    * CONSTRUCTION (row_number ≤ nProbe per query), so collecting it
-    * to the driver is a handful of longs, never a data-sized
-    * collect. That bounded set is pushed as a LITERAL `isin`
-    * predicate on the bucket column: a broadcast hash join on
-    * `cell` alone filters rows only AFTER every code file is read,
-    * while the literal In prunes buckets AT the scan
-    * (`SelectedBucketsCount: probed out of total` in the executed
-    * plan — PqStoreSpec asserts it), which is the FAISS
-    * inverted-list read: untouched cells cost zero IO. The probe
-    * pairs themselves come back as a LocalRelation for the residual
-    * (qid, cell) broadcast join, so the probe chain runs once.
+    * Scale shape: the coarse and PQ tables are collected to the
+    * driver (nCells and m·k rows); the probes are a narrow
+    * top-nProbe over the queries, collected as |queries|·nProbe rows
+    * — bounded BY CONSTRUCTION, never a data-sized collect. The
+    * probed-cell set is pushed as a LITERAL `isin` predicate on the
+    * bucket column: a broadcast hash join on `cell` alone filters
+    * rows only AFTER every code file is read, while the literal In
+    * prunes buckets AT the scan (`SelectedBucketsCount: probed out
+    * of total` in the executed plan — PqStoreSpec asserts it), which
+    * is the FAISS inverted-list read: untouched cells cost zero IO.
+    * The probe rows come back as a LocalRelation for the residual
+    * (qid, cell) broadcast join, and scoring is one narrow
+    * `adc_score` map over the surviving codes.
     */
   def ivfAdcTopKStored(queries: DataFrame, idCol: String, embCol: String,
                        tablePrefix: String, kTop: Int = 10, nProbe: Int = 4,
                        m: Int = 4, subDim: Int = 16): DataFrame = {
     val spark = queries.sparkSession
-    val centroids = spark.table(s"${tablePrefix}_coarse")
     val codes = spark.table(s"${tablePrefix}_codes")
+    val coarseRows = spark.table(s"${tablePrefix}_coarse")
+      .select(col("cell").cast("long"), col("centroid")).collect()
+    val coarse = new Codebook(coarseRows.map(_.getLong(0)),
+      coarseRows.map(r => Codebook.floats(r.getSeq[Any](1))))
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cdist").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cdist", GraftFunctions.cosine_sim(col("qemb"), col("centroid")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select("qid", "cell")
+    val probes = probesOf(q, coarse, nProbe)
+      .withColumn("cell", col("cell").cast(codes.schema("cell").dataType))
     val probeRows = probes.collect()
     val probedCells = probeRows.map(_.getAs[Any]("cell")).distinct.toSeq
     val probeLocal = spark.createDataFrame(
@@ -679,123 +674,82 @@ object Ann {
       if (probedCells.isEmpty) codes.filter(lit(false))
       else codes.filter(col("cell").isin(probedCells: _*))
     val cand = pruned.join(broadcast(probeLocal), Seq("cell")).drop("cell")
-    adcRank(cand, q, readCodebooks(spark, tablePrefix, m), m, subDim, kTop)
-  }
-
-  /** The per-subspace reference form of [[pqModel]] (m separate
-    * [[lloydRounds]] chains) — kept as the spec contract the fused
-    * trainer is pinned bit-equal to.
-    */
-  private[graft] def pqModelSequential(vecs: DataFrame, idCol: String, embCol: String,
-                                       m: Int, subDim: Int, k: Int, iters: Int,
-                                       quantScale: Double): (Seq[DataFrame], DataFrame) = {
-    require(m >= 1 && subDim >= 1 && k >= 1)
-    val parts = (0 until m).map { s =>
-      val sub = vecs.select(col(idCol),
-        slice(col(embCol), s * subDim + 1, subDim).as(embCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val seeds = sub.filter(col(idCol) < k)
-      val (cents, assign) = lloydRounds(sub, seeds, idCol, embCol, iters, quantScale)
-      (cents.select(col(idCol).as(s"cell_$s"), col(embCol).as(s"se_$s")),
-        assign.select(col("vec_id"), col("cluster").cast("long").as(s"c_$s")))
-    }
-    (parts.map(_._1), parts.map(_._2).reduce(_.join(_, Seq("vec_id"))))
-  }
-
-  def pqTrainEncode(vecs: DataFrame, idCol: String, embCol: String,
-                    m: Int = 4, subDim: Int = 16, k: Int = 16,
-                    iters: Int = 2, quantScale: Double = 1e6): DataFrame = {
-    val (cents, codes) = pqModel(vecs, idCol, embCol, m, subDim, k, iters, quantScale)
-    val withCents = cents.zipWithIndex.foldLeft(codes) { case (acc, (c, s)) =>
-      acc.join(broadcast(c), acc(s"c_$s") === c(s"cell_$s"))
-        .drop(s"cell_$s")
-    }
-    val recon = (0 until m).map(s => col(s"se_$s")).reduce(concat(_, _))
-    withCents
-      .join(vecs.select(col(idCol).as("vec_id"), col(embCol).as("orig")), Seq("vec_id"))
-      .select(col("vec_id") +:
-        (0 until m).map(s => col(s"c_$s")) :+
-        (floor(GraftFunctions.cosine_sim(col("orig"), recon) * lit(10000.0) +
-          lit(0.5)) / lit(10000.0)).as("recon_cos"): _*)
+    adcRank(cand, new AdcModel(subDim, readCodebooks(spark, tablePrefix, m).toArray, None),
+      kTop)
   }
 
   /** L73 — PQ asymmetric-distance top-k (the ADC query path of
     * Jégou et al.): score every corpus vector against a query FROM
-    * ITS CODES ALONE — per subspace the query precomputes one
-    * k-entry lookup table (query-slice · centroid, plus the
-    * centroid's self-dot), and a vector's score needs only m table
-    * lookups, never the decompressed floats. Because subspaces
-    * occupy disjoint coordinates, Σ qd_s is EXACTLY q·recon(x) and
-    * Σ ns_s is exactly |recon(x)|², so the ADC score here is the
-    * exact cosine between the query and the reconstruction — which
-    * is what makes it oracle-replayable.
+    * ITS CODES ALONE — per subspace the query's slice dots the code's
+    * centroid, plus the centroid's self-dot, and a vector's score
+    * needs only m such lookups, never the decompressed floats.
+    * Because subspaces occupy disjoint coordinates, Σ qd_s is EXACTLY
+    * q·recon(x) and Σ ns_s is exactly |recon(x)|², so the ADC score
+    * here is the exact cosine between the query and the
+    * reconstruction — which is what makes it oracle-replayable.
     *
-    * Scale shape: the m lookup tables are (|queries|·k)-row
-    * broadcasts; scoring is a narrow map over the code table (m
-    * broadcast-hash lookups + arithmetic per row, no floats fetched);
-    * top-k via rank ≤ kTop (WindowGroupLimit prunes map-side). The
-    * 256 B/vector float fetch the brute-force scan pays becomes a
-    * 2 B/vector code read — the entire point of PQ retrieval.
+    * Scale shape: the codebooks ride in the narrow `adc_score`
+    * expression as plan constants; the small query set is broadcast
+    * against the code table; top-k via rank ≤ kTop (WindowGroupLimit
+    * prunes map-side). The 256 B/vector float fetch the brute-force
+    * scan pays becomes a 2 B/vector code read — the entire point of
+    * PQ retrieval.
     */
   def pqAdcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 embCol: String, kTop: Int = 10, m: Int = 4, subDim: Int = 16,
                 k: Int = 16, iters: Int = 2,
                 quantScale: Double = 1e6): DataFrame = {
-    val (cents, codes) = pqModel(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
+    val (cbs, codes) = pqModel(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
     // exhaustive ADC: every (query, code) pair scores — the baseline
     // the cell-pruned [[ivfAdcTopK]] path is measured against.
-    val cand = codes.crossJoin(broadcast(q.select(col("qid").as("qid_c"))))
-      .withColumnRenamed("qid_c", "qid")
-    adcRank(cand, q, cents, m, subDim, kTop)
+    adcRank(codes.crossJoin(broadcast(q)), new AdcModel(subDim, cbs.toArray, None), kTop)
   }
 
-  /** ADC scoring + per-query ranking shared by [[pqAdcTopK]]
-    * (exhaustive) and [[ivfAdcTopK]] (cell-pruned): `cand` carries
-    * (qid, vec_id, c_0..c_{m-1}) — WHICH codes score against which
-    * query is the caller's candidate policy; the arithmetic here is
-    * identical, so the two paths rank any common candidate the same.
+  /** ADC scoring + per-query ranking shared by every ADC path:
+    * `cand` carries (qid, qemb, vec_id, c_0..c_{m-1}) plus `cell` for
+    * residual codes — WHICH codes score against which query is the
+    * caller's candidate policy; the arithmetic is one `adc_score` map
+    * (sum order qd_0 + … + qd_{m-1}; NULL when the query or the
+    * reconstruction norm is 0), so every path ranks a common candidate
+    * the same: by (adc DESC NULLS LAST, vec_id).
     */
-  private def adcRank(cand: DataFrame, q: DataFrame, cents: Seq[DataFrame],
-                      m: Int, subDim: Int, kTop: Int): DataFrame = {
-    val dists = (0 until m).map { s =>
-      q.select(col("qid"), slice(col("qemb"), s * subDim + 1, subDim).as("qs"))
-        .crossJoin(broadcast(cents(s)))
-        .select(col("qid").as(s"qid_$s"), col(s"cell_$s"),
-          GraftFunctions.dot_product(col("qs"), col(s"se_$s")).as(s"qd_$s"),
-          GraftFunctions.dot_product(col(s"se_$s"), col(s"se_$s")).as(s"ns_$s"))
-    }
-    val qn = q.select(col("qid").as("qid_n"),
-      GraftFunctions.dot_product(col("qemb"), col("qemb")).as("qn2"))
-    val base = cand.join(broadcast(qn), cand("qid") === qn("qid_n")).drop("qid_n")
-    val pairs = dists.zipWithIndex.foldLeft(base) {
-      case (acc, (d, s)) =>
-        acc.join(broadcast(d),
-            acc("qid") === d(s"qid_$s") && acc(s"c_$s") === d(s"cell_$s"))
-          .drop(s"qid_$s").drop(s"cell_$s")
-    }
-    val numer = (0 until m).map(s => col(s"qd_$s")).reduce(_ + _)
-    val den2 = (0 until m).map(s => col(s"ns_$s")).reduce(_ + _)
-    val adc = when(col("qn2") === 0.0 || den2 === 0.0, lit(null).cast("double"))
-      .otherwise(numer / (sqrt(col("qn2")) * sqrt(den2)))
+  private def adcRank(cand: DataFrame, model: AdcModel, kTop: Int): DataFrame = {
+    val keys = model.coarse.map(_ => col("cell")).toSeq ++
+      model.codebooks.indices.map(s => col(s"c_$s"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("adc").desc, col("vec_id"))
-    pairs.withColumn("adc", adc)
+    cand.withColumn("adc", GraftFunctions.adc_score(col("qemb"), keys, model))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= kTop)
       .select(col("qid"), col("rnk"), col("vec_id"),
         (floor(col("adc") * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("adc_cos"))
   }
 
+  /** Coarse quantizer and m PQ codebooks (raw codes) trained together
+    * by [[lloydTrain]]: one aggregate job per update round for all
+    * 1 + m quantizers.
+    */
+  private def ivfAdcTrain(corpus: DataFrame, seeds: DataFrame, idCol: String,
+                          embCol: String, m: Int, subDim: Int, k: Int, iters: Int,
+                          quantScale: Double): (Codebook, Seq[Codebook]) = {
+    require(m >= 1 && subDim >= 1 && k >= 1 && iters >= 1)
+    val Seq(coarseSeeds, pqSeedVecs) =
+      seedCodebooks(Seq(seeds, pqSeedRows(corpus, idCol, k)), idCol, embCol)
+    val trained = lloydTrain(corpus.filter(col(idCol).isNotNull),
+      col(embCol) +: slicesOf(col(embCol), m, subDim),
+      coarseSeeds +: pqSeeds(pqSeedVecs, m, subDim), iters, quantScale)
+    (trained.head, trained.tail)
+  }
+
   /** L76 — IVFADC retrieval (Jégou/Douze/Schmid 2011 §V): the actual
     * billion-vector serving path — the coarse quantizer prunes the
     * candidate set to the query's `nProbe` nearest cells, and ADC
-    * lookup tables score ONLY the codes inside probed cells. Both
-    * halves are the already-certified machinery: cells come from the
-    * deterministic [[lloydRounds]] coarse quantizer (the s03
-    * contract), codes and lookup tables from [[pqModel]] (the
-    * s11/s12 contract) — so the whole composition replays
-    * value-for-value in an external oracle.
+    * scores ONLY the codes inside probed cells. Both halves are the
+    * already-certified machinery: cells come from the deterministic
+    * coarse quantizer (the s03 contract), codes and scores from the
+    * PQ codebooks (the s11/s12 contract) — so the whole composition
+    * replays value-for-value in an external oracle.
     *
     * Codes here quantize the RAW vectors, not the residual
     * (x − coarse centroid): the FAISS `by_residual=false` flavor.
@@ -810,9 +764,9 @@ object Ann {
     * broadcast of |queries|·nProbe rows against the cell-keyed code
     * table — at rest, store codes partitioned by cell and this join
     * becomes partition pruning). Everything else is the s12 shape:
-    * m·k-row lookup broadcasts, a narrow map over surviving codes,
-    * rank ≤ kTop. The |corpus|-row float table is touched only at
-    * TRAIN time, never at query time.
+    * a narrow `adc_score` map over surviving codes, rank ≤ kTop. The
+    * |corpus|-row float table is touched only at TRAIN time (and by
+    * the narrow encode), never by scoring.
     *
     * @param seeds coarse-cell seed vectors (nCells rows, e.g.
     *              vec_id < nCells) — the s03 seeding convention.
@@ -835,27 +789,15 @@ object Ann {
                                  kTop: Int, nProbe: Int, m: Int, subDim: Int,
                                  k: Int, iters: Int,
                                  quantScale: Double): (DataFrame, DataFrame) = {
-    // coarse quantizer: deterministic cells + centroid table (s03)
-    val (coarse, assign) = lloydRounds(corpus, seeds, idCol, embCol, iters, quantScale)
-    val centroids = coarse.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-    val cells = assign.select(col("vec_id"), col("cluster").as("cell"))
-    // PQ codes over the raw vectors (s11)
-    val (cents, codes) = pqModel(corpus, idCol, embCol, m, subDim, k, iters, quantScale)
-    // per-query probe list: nProbe nearest cells by centroid cosine
+    val (coarse, cbs) = ivfAdcTrain(corpus, seeds, idCol, embCol, m, subDim, k, iters,
+      quantScale)
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cdist").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cdist", GraftFunctions.cosine_sim(col("qemb"), col("centroid")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select("qid", "cell")
-    // the pruning: codes pick up their coarse cell and survive only
-    // if that cell is probed by the query — BEFORE any ADC arithmetic
-    val cand = codes.join(cells, Seq("vec_id"))
-      .join(broadcast(probes), Seq("cell"))
+    // the pruning: codes carry their coarse cell and survive only if
+    // that cell is probed by the query — BEFORE any ADC arithmetic
+    val cand = encodeWith(corpus, cbs, idCol, embCol, subDim, Some((coarse, LongType)))
+      .join(broadcast(probesOf(q, coarse, nProbe)), Seq("cell"))
       .drop("cell")
-    (cand, adcRank(cand, q, cents, m, subDim, kTop))
+    (cand, adcRank(cand, new AdcModel(subDim, cbs.toArray, None), kTop))
   }
 
   /** L83 — int8 inner-product retrieval (MIPS over symmetric
@@ -1002,14 +944,8 @@ object Ann {
       .select("qid", "vec_id")
     // stage 2: |q|·shortlist point-lookups + exact full-dim cosines
     val c = corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb"))
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    c.join(broadcast(sl), Seq("vec_id"))
-      .join(broadcast(q.select("qid", "qemb")), Seq("qid"))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= kTop)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(c.join(broadcast(sl), Seq("vec_id"))
+      .join(broadcast(q.select("qid", "qemb")), Seq("qid")), kTop)
   }
 
   /** L86 — 1-bit sign-quantized Hamming retrieval + exact re-rank
@@ -1076,14 +1012,8 @@ object Ann {
       .filter(col("r1") <= shortlist)
       .select("qid", "vec_id")
     val c = corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb"))
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    c.join(broadcast(sl), Seq("vec_id"))
-      .join(broadcast(q.select("qid", "qemb")), Seq("qid"))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= kTop)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(c.join(broadcast(sl), Seq("vec_id"))
+      .join(broadcast(q.select("qid", "qemb")), Seq("qid")), kTop)
   }
 
   /** L80 — two-stage retrieval: IVFADC candidate generation + EXACT
@@ -1099,7 +1029,7 @@ object Ann {
     * brute-force-quality ordering at ADC-scan cost.
     *
     * Scale shape: stage 1 is [[ivfAdcTopK]] verbatim (probe-pruned
-    * code scan, broadcast lookup tables). Stage 2's vector fetch is a
+    * code scan, narrow ADC scoring). Stage 2's vector fetch is a
     * BROADCAST semi-join of |queries|·shortlist ids against the
     * vector store — with vectors stored bucketed by id this is a
     * pruned point-lookup, not a corpus scan — followed by |q|·
@@ -1122,14 +1052,7 @@ object Ann {
       .select(col("qid"), col("vec_id"))
     val c = corpus.select(col(idCol).as("vec_id"), col(embCol).as("cemb"))
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    c.join(broadcast(sl), Seq("vec_id"))
-      .join(broadcast(q), Seq("qid"))
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= kTop)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(c.join(broadcast(sl), Seq("vec_id")).join(broadcast(q), Seq("qid")), kTop)
   }
 
   /** L79 — RESIDUAL-coded IVFADC (Jégou et al. §V, `by_residual=
@@ -1150,83 +1073,36 @@ object Ann {
     * The ADC score stays EXACTLY cos(query, c + r̂): both the
     * numerator and ||c + r̂||² decompose per subspace —
     * num_s = q_s·c_s + q_s·r̂_s, den_s = ||c_s||² + 2·c_s·r̂_s +
-    * ||r̂_s||² — into (query, cell, code)-keyed lookup tables of
-    * |q|·nCells·k rows per subspace, all broadcast-sized. Everything
-    * is the certified float-fold arithmetic, so the whole
-    * composition (coarse chain, residuals, residual chains, probes,
-    * scoring) replays value-for-value in the external oracle.
+    * ||r̂_s||² — computed by `adc_score` from the row's cell and codes
+    * with the coarse centroids and residual codebooks as plan
+    * constants. Everything is the certified float-fold arithmetic, so
+    * the whole composition (coarse chain, residuals, residual chains,
+    * probes, scoring) replays value-for-value in the external oracle.
     *
-    * Scale shape: identical to [[ivfAdcTopK]] — candidates prune to
-    * probed cells BEFORE scoring; scoring is m broadcast-hash
-    * lookups + arithmetic per surviving code; the float corpus is
-    * touched only at train time (one extra narrow pass to form
-    * residuals).
+    * Scale shape: the coarse quantizer trains first (its final cells
+    * define the residuals), then the m residual codebooks train
+    * together; residuals, cells and codes are narrow maps; candidates
+    * prune to probed cells BEFORE scoring, as in [[ivfAdcTopK]].
     */
   def ivfAdcResidualTopK(corpus: DataFrame, queries: DataFrame, seeds: DataFrame,
                          idCol: String, embCol: String, kTop: Int = 10,
                          nProbe: Int = 4, m: Int = 4, subDim: Int = 16,
                          k: Int = 16, iters: Int = 2,
                          quantScale: Double = 1e6): DataFrame = {
-    val (coarse, assign) = lloydRounds(corpus, seeds, idCol, embCol, iters, quantScale)
-    val centroids = coarse.select(col(idCol).as("cell"), col(embCol).as("centroid"))
-    val cells = assign.select(col("vec_id"), col("cluster").as("cell"))
+    val coarse = coarseTrain(corpus, seeds, idCol, embCol, iters, quantScale)
     // residuals, double-subtracted then FLOAT-folded like any stored
     // embedding (exact-input float subtraction rounds identically)
-    val resid = corpus.select(col(idCol).cast("long").as("vec_id"), col(embCol).as("cemb"))
-      .join(cells, Seq("vec_id"))
-      .join(broadcast(centroids), Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(col("cemb"), col("centroid"),
+    val resid = corpus.select(col(idCol).cast("long").as("vec_id"), col(embCol).as("cemb"),
+        nearestOf(col(embCol), coarse).as("nc"))
+      .select(col("vec_id"), col("nc.cell").as("cell"),
+        zip_with(col("cemb"), col("nc.centroid"),
           (a, b) => (a.cast("double") - b.cast("double")).cast("float")).as("resid"))
-    val (cents, codes) = pqModel(resid, "vec_id", "resid", m, subDim, k, iters, quantScale)
+    val cbs = pqTrain(resid, "vec_id", "resid", m, subDim, k, iters, quantScale)
     val q = queries.select(col(idCol).as("qid"), col(embCol).as("qemb"))
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cdist").desc, col("cell"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("cdist", GraftFunctions.cosine_sim(col("qemb"), col("centroid")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select("qid", "cell")
-    val cand = codes.join(cells, Seq("vec_id"))
-      .join(broadcast(probes), Seq("cell"))
-    // per-subspace (query, cell, code) term tables: num_s and den_s
-    val terms = (0 until m).map { s =>
-      val qs = q.select(col("qid"), slice(col("qemb"), s * subDim + 1, subDim).as("qs"))
-      val cs = centroids.select(col("cell"),
-        slice(col("centroid"), s * subDim + 1, subDim).as("cs"))
-      val rb = cents(s).select(col(s"cell_$s").as("code"), col(s"se_$s").as("re"))
-      qs.crossJoin(broadcast(cs)).crossJoin(broadcast(rb))
-        .select(col("qid").as(s"qid_$s"), col("cell").as(s"cellt_$s"),
-          col("code").as(s"code_$s"),
-          (GraftFunctions.dot_product(col("qs"), col("cs")) +
-            GraftFunctions.dot_product(col("qs"), col("re"))).as(s"num_$s"),
-          (GraftFunctions.dot_product(col("cs"), col("cs")) +
-            lit(2.0) * GraftFunctions.dot_product(col("cs"), col("re")) +
-            GraftFunctions.dot_product(col("re"), col("re"))).as(s"den_$s"))
-    }
-    val qn = q.select(col("qid").as("qid_n"),
-      GraftFunctions.dot_product(col("qemb"), col("qemb")).as("qn2"))
-    val base = cand.join(broadcast(qn), cand("qid") === qn("qid_n")).drop("qid_n")
-    val pairs = terms.zipWithIndex.foldLeft(base) {
-      case (acc, (t, s)) =>
-        acc.join(broadcast(t),
-            acc("qid") === t(s"qid_$s") && acc("cell") === t(s"cellt_$s") &&
-              acc(s"c_$s") === t(s"code_$s"))
-          .drop(s"qid_$s").drop(s"cellt_$s").drop(s"code_$s")
-    }
-    val num = (0 until m).map(s => col(s"num_$s")).reduce(_ + _)
-    val den2 = (0 until m).map(s => col(s"den_$s")).reduce(_ + _)
-    val adc = when(col("qn2") === 0.0 || den2 === 0.0, lit(null).cast("double"))
-      .otherwise(num / (sqrt(col("qn2")) * sqrt(den2)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("adc").desc, col("vec_id"))
-    pairs.withColumn("adc", adc)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= kTop)
-      .select(col("qid"), col("rnk"), col("vec_id"),
-        (floor(col("adc") * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("adc_cos"))
+    val cand = resid.select(col("vec_id") +: col("cell") +: codeCols(col("resid"), cbs, subDim): _*)
+      .join(broadcast(probesOf(q, coarse, nProbe)), Seq("cell"))
+    adcRank(cand, new AdcModel(subDim, cbs.toArray, Some(coarse)), kTop)
   }
-
   /** Deterministic ±1 random-hyperplane weights (seeded). */
   private[graft] def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] = {
     val rnd = new Random(seed)
@@ -1264,12 +1140,6 @@ object Ann {
     val candidates = cb.join(broadcast(qb), Seq("band", "key"))
       .select("qid", "qemb", "vec_id", "cemb")
       .dropDuplicates("qid", "vec_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    candidates
-      .withColumn("cos", GraftFunctions.cosine_sim(col("qemb"), col("cemb")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("rnk"), col("vec_id"), round(col("cos"), 4).as("cos"))
+    rankByCos(candidates, k)
   }
 }

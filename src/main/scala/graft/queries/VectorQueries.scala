@@ -95,7 +95,7 @@ object VectorQueries {
     // end-to-end: s08's nearest-seed Voronoi assignment becomes the
     // blocking key, then exact cosine pairs are mined only inside
     // cells (cosinePairs with block = cluster; `cap` available for
-    // hot cells at scale). Corpus×k broadcast assign + per-cell
+    // hot cells at scale). Narrow driver-held-seed assign + per-cell
     // equi-join — no global all-pairs anywhere.
     "s09_cluster_pairs" -> ((s, dir) => {
       val e = emb(s, dir)
@@ -103,10 +103,9 @@ object VectorQueries {
           "vec_id", "embedding")
         .select(col("vec_id"), col("cluster"))
       // Persisted: cosinePairs self-joins this relation, and without
-      // the cache each branch recomputes the whole corpus×k
-      // assignment (plan-audited — the BroadcastNestedLoopJoin +
-      // argmax chain appeared twice). Verify/Bench clearCache
-      // between queries (the library caching contract).
+      // the cache each branch recomputes the assignment and its join.
+      // Verify/Bench clearCache between queries (the library caching
+      // contract).
       val withCluster = e.join(assign, "vec_id").persist()
       Ann.cosinePairs(withCluster, "vec_id", "embedding",
           "cluster", threshold = 0.2)
@@ -508,9 +507,9 @@ object VectorQueries {
 
     // L51: nearest-seed cluster assignment — the Voronoi/cluster
     // stage of SemDeDup-style curation and of IVF index builds:
-    // seeds (vec_id < 8) broadcast, one corpus pass scores, a
-    // map-side-combinable groupBy argmax assigns (ties → lowest
-    // seed). Raw-double comparisons → engine-exact assignment.
+    // seeds (vec_id < 8) collected to the driver, one narrow corpus
+    // pass scores and assigns (ties → lowest seed). Raw-double
+    // comparisons → engine-exact assignment.
     "s08_cluster_assign" -> ((s, dir) => {
       val e = emb(s, dir)
       Ann.assignToSeeds(e, e.filter(col("vec_id") < 8), "vec_id", "embedding")

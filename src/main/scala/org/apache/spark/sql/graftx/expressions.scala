@@ -1611,6 +1611,15 @@ object GraftExpressions {
 
   def fmix64(v: Column): Column = col(Fmix64(exp(v)))
 
+  def nearest_centroid(v: Column, codebook: Codebook, n: Int): Column =
+    col(NearestCentroid(exp(v), codebook, n))
+
+  def adc_score(q: Column, keys: Seq[Column], model: AdcModel): Column =
+    col(AdcScore(exp(q) +: keys.map(exp), model))
+
+  def lloyd_step(vs: Seq[Column], codebooks: Seq[Codebook], quantScale: Double): Column =
+    col(LloydStepAgg(vs.map(exp), codebooks, quantScale).toAggregateExpression())
+
   /** Bloom-filter build aggregate over xxhash64(key) — the same
     * sketch Spark's InjectRuntimeFilter plants, exposed so an
     * operator can prune a join's large side explicitly. Returns the
@@ -1689,94 +1698,17 @@ object GraftExpressions {
       cs.experimental.extraOptimizations =
         cs.experimental.extraOptimizations :+ V1ScanStatsForwardRule
     }
-    val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "asinh_scaled", es => AsinhScaled(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "logicle", es => Logicle(es.head, es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hash", es => RollingHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", es => CosineSim(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fmix64", es => Fmix64(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "mix_hash", es => MixHashLongs(es), "built-in")
-    reg.createOrReplaceTempFunction(
-      "zorder2", es => Zorder2(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "hilbert2", es => Hilbert2(es.head, es(1),
-        es(2).eval().asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction(
-      "theta_estimate", es => ThetaEstimate(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "theta_intersect_estimate",
-      es => ThetaIntersectEstimate(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "theta_a_not_b_estimate",
-      es => ThetaANotBEstimate(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "theta_sketch", {
-        case Seq(key) => ThetaSketchAgg(key, 14)
-        case Seq(key, Literal(lgK: Int, IntegerType)) => ThetaSketchAgg(key, lgK)
-        case es => throw new IllegalArgumentException(
-          s"theta_sketch(key[, lgK]) with literal lgK; got ${es.length} args")
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "kll_quantiles", {
-        case Seq(x, Literal(k: Int, IntegerType), arr) if arr.foldable =>
-          KllQuantiles(x, k, arr.eval()
-            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray().toList)
-        case es => throw new IllegalArgumentException(
-          s"kll_quantiles(x, k, array(probs...)) with literal k/probs; got ${es.length} args")
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "freq_items", {
-        case Seq(v, Literal(m: Int, IntegerType), Literal(k: Int, IntegerType)) =>
-          FreqItemsAgg(v, m, k)
-        case es => throw new IllegalArgumentException(
-          s"freq_items(x, maxMapSize, k) with literal sizes; got ${es.length} args")
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "blocklist_counts", {
-        case Seq(text, arr) if arr.foldable =>
-          val evaled = arr.eval()
-          if (evaled == null) throw new IllegalArgumentException(
-            "blocklist_counts(text, array(terms...)): terms array must not be NULL")
-          val elems = evaled
-            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-            .toObjectArray(StringType)
-          if (elems.exists(_ == null)) throw new IllegalArgumentException(
-            "blocklist_counts(text, array(terms...)): terms must not contain NULL")
-          BlocklistCounts(text, elems.map(_.toString).toSeq)
-        case es => throw new IllegalArgumentException(
-          s"blocklist_counts(text, array(terms...)) with literal terms; got ${es.length} args")
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "html_text", es => HtmlVisibleText(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "nfkc_lower", es => NfkcLower(es.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_fingerprints", {
-        case Seq(toks, Literal(n: Int, IntegerType), Literal(w: Int, IntegerType)) =>
-          WinnowFingerprints(toks, n, w)
-        case es => throw new IllegalArgumentException(
-          s"winnow_fingerprints(toks, n, w) with literal n/w; got ${es.length} args")
-      }, "built-in")
-    reg.createOrReplaceTempFunction(
-      "ngram_hashes", {
-        case Seq(toks, Literal(n: Int, IntegerType)) =>
-          NgramHashes(toks, n, dedupSort = true)
-        case Seq(toks, Literal(n: Int, IntegerType),
-                 Literal(d: Boolean, BooleanType)) =>
-          NgramHashes(toks, n, d)
-        case es => throw new IllegalArgumentException(
-          s"ngram_hashes(toks, n[, dedup_sort]) with literal n; got ${es.length} args")
-      }, "built-in")
+    registerFunctions(cs.sessionState.functionRegistry)
   }
+
+  /** Register every SQL function of graft's one function table
+    * (`graft.GraftSparkExtensions.functions`, the same table the
+    * session extension injects) into `reg`.
+    */
+  def registerFunctions(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit =
+    graft.GraftSparkExtensions.functions.foreach { case (name, info, builder) =>
+      reg.registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+    }
 }
 
 /** Distinct-count estimate of a serialized CPC sketch. */

@@ -19,35 +19,24 @@ class PlanAuditSpec extends AnyFunSuite {
   // construction — seeds/queries/planes/eval grams/1-row bounds or a
   // driver-small dim): every OTHER query must plan pure equi-joins.
   private val bnljAllowed = Set(
-    // s27: the recall audit's EXACT arm is s01's shape by design —
-    // tiny query-sample side broadcast against the corpus (the
-    // audit's deliberate cost; the served arm stays cell-bucketed)
-    "s27_ann_recall",
-    "s01_ann_brute", "s02_ann_lsh", "s03_ann_ivf", "s04_centroids",
-    "s06_pca_project", "s08_cluster_assign", "s09_cluster_pairs",
-    "s10_kmeans_refine", "s11_pq_encode", "s12_pq_adc", "s13_pq_incremental",
-    // s14/s16/s17: the s12-class broadcast attachments — probe
-    // centroids (nCells rows) and per-query lookup tables
-    // (|queries|·k rows) crossJoin the corpus/codes side by design
-    "s14_ivf_adc", "s16_pq_serve", "s17_ivfadc_serve", "s18_ivfadc_residual",
-    // s19: stage 1 is s14's plan verbatim; stage 2 adds only equi-joins
-    "s19_ivfadc_rerank",
-    // s20: the s01 shape — tiny query side broadcast against the corpus
-    "s20_int8_topk",
+    // s01/s20: tiny query side broadcast against the corpus; s27: the
+    // recall audit's EXACT arm is s01's shape by design (the audit's
+    // deliberate cost; the served arm stays cell-bucketed)
+    "s01_ann_brute", "s20_int8_topk", "s27_ann_recall",
+    // s12/s16: exhaustive ADC — the query set crossJoins the code
+    // table (the codebooks ride in adc_score as plan constants)
+    "s12_pq_adc", "s16_pq_serve",
     // s21/s22: stage 1 is the s01 shape (tiny query-side broadcast
     // scanning the prefix/code projection); stage 2 adds only
     // broadcast equi-joins for the shortlist fetch
     "s21_trunc_rerank", "s22_sign_hamming",
-    // s23: the s03 shape (centroid + probe-table broadcasts)
-    "s23_filtered_ivf",
+    // s25: the s20 shape — tiny encoded query side broadcast against
+    // the corpus code table; the dim-sized quantizer rides as
+    // literal arrays, not a join at all
+    "s25_sq8_topk",
     // t31: the class-skeleton crossJoin broadcasts the ≤C-row model dim
     "t31_trained_classifier",
-    "t29_rrf_hybrid", "d05_embed_neardup",
-    "d08_contamination", "d12_semantic_keep", "d17_fuzzy_decontam",
-    "q20_above_avg", "q33_bloom_join", "q47_dq_audit", "q48_group_quantiles",
-    "f16_spillover_fit", "t07_tfidf", "t17_lm_score", "t23_bm25",
-    "t25_vocab_growth", "t28_source_overlap", "d21_minhash_calib",
-    "d15_curation_pipeline", "d25_incremental_curation",
+    "t29_rrf_hybrid", "q47_dq_audit", "t23_bm25",
     // crossJoin(broadcast(<1-row corpus aggregate>)) attachments:
     "t12_vocab", "t13_bigram_lift", "d18_source_profile",
     // t34: the 1-row vocabulary-size broadcast (V) crossJoins the
@@ -60,11 +49,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "f21_hist_drift",
     // f22: f21's exact grid shape (samples × distinct-value list +
     // the 1-row total, both broadcast)
-    "f22_ks_drift",
-    // s25: the s20 shape — tiny encoded query side broadcast against
-    // the corpus code table; the dim-sized quantizer rides as
-    // literal arrays, not a join at all
-    "s25_sq8_topk")
+    "f22_ks_drift")
 
   // Global (unpartitioned) Window operators sort + stream the WHOLE
   // input through one task — fine iff the relation is provably bounded
@@ -86,6 +71,10 @@ class PlanAuditSpec extends AnyFunSuite {
   test("no CartesianProduct; BNLJ and global Window only where whitelisted") {
     val batch = SparkEntry.queries.filterNot(_._1.startsWith("st"))
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
+    // the allow-lists validate themselves: every entry names an audited
+    // query, and a BNLJ allowance must still be needed
+    (bnljAllowed ++ globalWindowAllowed).filterNot(batch.contains).toSeq.sorted
+      .foreach(name => offenders += s"$name: allow-listed but not an audited query")
     for ((name, fn) <- batch.toSeq.sortBy(_._1)) {
       val qe =
         try fn(spark, sfDir).queryExecution
@@ -95,6 +84,8 @@ class PlanAuditSpec extends AnyFunSuite {
         offenders += s"$name: CartesianProduct"
       if (plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name))
         offenders += s"$name: unexpected BroadcastNestedLoopJoin"
+      if (!plan.contains("BroadcastNestedLoopJoin") && bnljAllowed(name))
+        offenders += s"$name: BNLJ allow-listed but its plan has none"
       val hasGlobalWindow = qe.optimizedPlan.collect {
         case w: org.apache.spark.sql.catalyst.plans.logical.Window
           if w.partitionSpec.isEmpty => w

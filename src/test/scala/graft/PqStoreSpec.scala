@@ -7,11 +7,11 @@ import graft.operators.Ann
 /** Pins the persisted PQ model store (Ann.writePqModel /
   * pqEncodeStored — the d29 pattern applied to vectors): encoding
   * against the STORED codebooks equals the in-memory frozen-codebook
-  * form bit-for-bit, the encode plan is train-free (reads the
-  * codebook table, no Lloyd machinery), and the sampled-training
-  * contract — codebooks trained on a strict subset encode the full
-  * corpus — holds, which is what bounds pqModel's cache footprint at
-  * 100 TB.
+  * form bit-for-bit, the encode plan is train-free (the stored
+  * codebooks ride in a narrow encode map, no Lloyd machinery), and the
+  * sampled-training contract — codebooks trained on a strict subset
+  * encode the full corpus — holds, which is what bounds training cost
+  * at 100 TB.
   */
 class PqStoreSpec extends AnyFunSuite {
   import SharedSpark.{sfDir, spark}
@@ -32,13 +32,13 @@ class PqStoreSpec extends AnyFunSuite {
       m = 4, subDim = 16, k = 16, iters = 2, buckets = 4, path = Some(dir))
     spark.catalog.clearCache()
     val stored = Ann.pqEncodeStored(batch, "vec_id", "embedding", "pqs_spec")
-    // train-free plan: the codebooks are READ (their scan appears),
-    // and no Lloyd machinery survives — a training chain would show
-    // its localCheckpointed centroid tables as scanned RDDs.
+    // train-free plan: the stored codebooks are read at plan time and
+    // the encode is one narrow nearest_centroid map over the batch —
+    // no Lloyd aggregate, no exchange, no scanned RDD.
     val plan = stored.queryExecution.executedPlan.toString
-    assert(plan.contains("pqs_spec_codebooks") || plan.contains("codebooks"),
-      s"stored codebook scan missing:\n$plan")
-    assert(!plan.contains("Scan ExistingRDD"), s"Lloyd remnant in encode plan:\n$plan")
+    assert(plan.contains("nearest_centroid"), s"narrow encode missing:\n$plan")
+    Seq("lloyd_step", "Exchange", "Scan ExistingRDD").foreach(remnant =>
+      assert(!plan.contains(remnant), s"$remnant in encode plan:\n$plan"))
     // value contract: identical to training-then-encoding in memory
     // (s13's certified path) with the same parameters
     val inMem = Ann.pqEncodeAgainst(corpus, batch, "vec_id", "embedding",
@@ -101,7 +101,7 @@ class PqStoreSpec extends AnyFunSuite {
   }
 
   test("sampled training: codebooks from a strict subset encode the FULL corpus") {
-    // the pqModel cache-bound contract: at corpus scale codebooks
+    // the training-cost contract: at corpus scale codebooks
     // train on a sample (standard PQ practice) and the corpus-sized
     // work is only the frozen-codebook encode pass
     val sample = emb.filter(pmod(col("vec_id"), lit(2)) === 0) // half
