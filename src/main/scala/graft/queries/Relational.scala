@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 import graft.Graft
 
 /** Relational core — SURVEY.md §2.1 (R1–R22).
@@ -847,7 +848,7 @@ object Relational {
         catch { case _: IllegalArgumentException => 1L }
       TableLog.commit(accreted, root, expr("k div 500"), 8, "append",
         evolve = true)
-      val nV0Cols = TableLog.read(s, root, Some(0L)).schema.size.toLong
+      val nV0Cols = TableLog.read(s, root, asOf = Some(0L)).schema.size.toLong
       TableLog.read(s, root)
         .select(coalesce(col("prio"), lit("missing")).as("prio"), col("cents"))
         .groupBy("prio")
@@ -1027,8 +1028,9 @@ object Relational {
         (graft.operators.ZOrder.hkey(col("xb"), col("yb"), 8) / lit(4096))
           .cast("long"),
         numFiles = 16, mode = "overwrite")
-      TableLog.readRangeMulti(s, root,
-          Seq(("xb", 30L, 70L), ("yb", 32L, 159L)))
+      TableLog.read(s, root, Seq(
+          GreaterThanOrEqual("xb", 30L), LessThanOrEqual("xb", 70L),
+          GreaterThanOrEqual("yb", 32L), LessThanOrEqual("yb", 159L)))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("k")).as("n_keys"),
           sum("cents").as("sum_cents"))
@@ -1141,7 +1143,7 @@ object Relational {
       val d = feed.filter(col("_change_type") === "delete")
         .agg(count(lit(1)), sum("price")).collect()(0)
       val nIns = feed.filter(col("_change_type") === "insert").count()
-      val nAsOfV2 = TableLog.read(s, root, Some(2L)).count()
+      val nAsOfV2 = TableLog.read(s, root, asOf = Some(2L)).count()
       val hist = TableLog.history(s, root)
         .agg(count(lit(1)),
           sum(when(col("action").startsWith("restore="), 1L).otherwise(0L)))
@@ -1207,7 +1209,7 @@ object Relational {
       TableLog.vacuumOlderThan(root, 2500L)
       val nLive = TableLog.history(s, root).count()
       val v0Gone =
-        try { TableLog.read(s, root, Some(0L)).count(); 0L }
+        try { TableLog.read(s, root, asOf = Some(0L)).count(); 0L }
         catch { case _: IllegalArgumentException => 1L }
       TableLog.readAsOfTimestamp(s, root, 2500L)
         .agg(count(lit(1)).as("n_rows"),
@@ -1232,7 +1234,7 @@ object Relational {
     // can exclude. Drama: orders clustered by priority's first byte →
     // per-file prio zones are tight; a string RANGE read through the
     // API and a string EQUALITY through the DSv2 SQL surface both
-    // prune files (pruned=1 is the planFilesStr claim; exact file
+    // prune files (pruned=1 is the planFiles claim; exact file
     // counts live in TableLogSpec/GraftLogDsvSpec) and both equal the
     // raw-orders recompute — bytewise order is what Spark's
     // UTF8String AND DuckDB's collation-free VARCHAR use, so the
@@ -1253,11 +1255,11 @@ object Relational {
       // file, tight single-value string zones, no phantom empty files
       TableLog.commit(o, root, ascii(substring(col("prio"), 1, 1)),
         5, "overwrite")
-      val (sel, total) = TableLog.planFilesStr(root,
-        Seq(("prio", "2-HIGH", "3-MEDIUM")))
+      val prioRange = Seq(GreaterThanOrEqual("prio", "2-HIGH"),
+        LessThanOrEqual("prio", "3-MEDIUM"))
+      val (sel, total) = TableLog.planFiles(root, prioRange)
       val pruned = if (sel.size < total) 1L else 0L
-      val range = TableLog.readRangeStr(s, root,
-          Seq(("prio", "2-HIGH", "3-MEDIUM")))
+      val range = TableLog.read(s, root, prioRange)
         .agg(count(lit(1)).as("n"), sum("cents").as("sc")).collect()(0)
       s.read.format("graftlog").option("path", root).load()
         .createOrReplaceTempView("graft_strz")
@@ -1295,7 +1297,7 @@ object Relational {
       o.filter(!even).write.format("graftlog").option("path", root)
         .option("layout", "k div 500").option("numFiles", "4")
         .mode("append").save() // v1 via SQL
-      val v1 = TableLog.read(s, root, Some(1L))
+      val v1 = TableLog.read(s, root, asOf = Some(1L))
         .agg(count(lit(1)), sum("cents")).collect()(0)
       val rejected =
         try {
@@ -1504,7 +1506,7 @@ object Relational {
     // but a point probe on a key the layout scattered (here 'u'||k
     // under a k-div layout — lexicographic order ≠ numeric order, so
     // every file's string zone is wide) still reads every
-    // zone-overlapping file; commitIndexed(bloomStrCols=…) hashes
+    // zone-overlapping file; commit(bloomStrCols=…) hashes
     // each value through the portable rolling hash into the SAME
     // 4-bit double-hashed bloom pipeline long columns use (one
     // manifest format, one probe, no false negatives by
@@ -1527,14 +1529,14 @@ object Relational {
         // sizing rule the bloom docs prescribe, honored by the
         // query's own instance
         .withColumn("sk", concat(lit("u"), pmod(col("k"), lit(50000L))))
-      TableLog.commitIndexed(o, root, expr("k div 500"), 16, "overwrite",
+      TableLog.commit(o, root, expr("k div 500"), 16, "overwrite",
         bloomStrCols = Seq("sk"))
       val probe = "u" + (o.agg(max("k")).collect()(0).getLong(0) % 50000L)
-      val hit = TableLog.readPointStr(s, root, "sk", probe)
+      val hit = TableLog.read(s, root, Seq(EqualTo("sk", probe)))
         .agg(count(lit(1)), sum("cents")).collect()(0)
       // an in-zone miss ('u33a' sorts between real keys): zero rows
       // through the pruned read, structurally
-      val nMiss = TableLog.readPointStr(s, root, "sk", "u33a").count()
+      val nMiss = TableLog.read(s, root, Seq(EqualTo("sk", "u33a"))).count()
       val nSql = s.read.format("graftlog").option("path", root).load()
         .filter(col("sk") === probe).count()
       s.range(1).select(
@@ -1612,7 +1614,7 @@ object Relational {
       val headBefore = TableLog.currentVersion(dst)
       TableLog.syncShallow(src, dst) // fully synced: must be a no-op
       val noop = if (TableLog.currentVersion(dst) == headBefore) 1L else 0L
-      val nV1 = TableLog.read(s, dst, Some(1L)).count()
+      val nV1 = TableLog.read(s, dst, asOf = Some(1L)).count()
       TableLog.commit(o.filter(m === 0L), src, layout, 8, "overwrite",
         commitTs = Some(4000L)) // upstream reset
       TableLog.syncShallow(src, dst) // syncs exactly the delta
@@ -1767,9 +1769,9 @@ object Relational {
     // constraint TableChange (the catalog advertises
     // SUPPORT_TABLE_CONSTRAINT) or the CALL twin, persisted in the
     // manifest header, carried forward by every commit, and enforced
-    // on EVERY write path (commitChecked's R71 shape was per-call
-    // arguments — the round-14 missing-item 4). The query certifies:
-    // declaration validates existing rows, a violating MERGE and a
+    // on EVERY write path (commit's per-call `checks`, the R71 shape,
+    // cover one call only — the round-14 missing-item 4). The query
+    // certifies: declaration validates existing rows, a violating MERGE and a
     // violating streaming-sink batch both reject LOUDLY naming the
     // constraint and count, clean DML and sink batches land
     // unaffected, and the declaration survives the whole sequence.
@@ -2019,9 +2021,9 @@ object Relational {
       TableLog.dropColumn(root, "prio")
       // zone probes translate through the mapping: a range on the
       // RENAMED column still prunes files zoned under the old name
-      val (sel, total) = TableLog.planFilesMulti(root,
-        Seq(("k", 1L, 400L)))
-      val v0 = TableLog.read(s, root, Some(0L))
+      val (sel, total) = TableLog.planFiles(root,
+        Seq(GreaterThanOrEqual("k", 1L), LessThanOrEqual("k", 400L)))
+      val v0 = TableLog.read(s, root, asOf = Some(0L))
         .agg(sum("cents")).collect()(0)
       TableLog.read(s, root)
         .agg(count(lit(1)).as("n_rows"),
@@ -2258,13 +2260,13 @@ object Relational {
           expr("CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)")
             .as("cents"))
         .filter(col("k").isNotNull)
-      TableLog.commitIndexed(o, root, expr("cust div 100"), numFiles = 16,
+      TableLog.commit(o, root, expr("cust div 100"), numFiles = 16,
         mode = "overwrite", bloomCols = Seq("k"))
       // bounded driver lookup: the probe key (1 row)
       val maxK = o.agg(max("k")).collect()(0).getLong(0)
-      val hit = TableLog.readPoint(s, root, "k", maxK)
+      val hit = TableLog.read(s, root, Seq(EqualTo("k", maxK)))
         .agg(count(lit(1)).as("n_hit"), sum("cents").as("hit_cents"))
-      val nMiss = TableLog.readPoint(s, root, "k", maxK + 1L).count()
+      val nMiss = TableLog.read(s, root, Seq(EqualTo("k", maxK + 1L))).count()
       hit.select(col("n_hit"), col("hit_cents"), lit(nMiss).as("n_miss"))
     }),
 
@@ -2297,8 +2299,10 @@ object Relational {
         (graft.operators.ZOrder.zkey(col("xb"), col("yb"), 8) / lit(4096))
           .cast("long"), numFiles = 16)
       Seq(("v0_scattered", 0L), ("v1_zordered", 1L)).map { case (nm, v) =>
-        TableLog.readRangeMulti(s, root,
-            Seq(("xb", 40L, 90L), ("yb", 64L, 191L)), asOf = Some(v))
+        TableLog.read(s, root, Seq(
+            GreaterThanOrEqual("xb", 40L), LessThanOrEqual("xb", 90L),
+            GreaterThanOrEqual("yb", 64L), LessThanOrEqual("yb", 191L)),
+          asOf = Some(v))
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col("k")).as("n_keys"),
             sum("cents").as("sum_cents"))
@@ -2313,7 +2317,7 @@ object Relational {
     // that violate declared BUSINESS rules, Delta's ALTER TABLE ADD
     // CONSTRAINT): orders are split on the declared rule (cents in
     // (0, 2·10⁷] — high-value orders violate deterministically), the
-    // clean subset commits through commitChecked, the violating rows
+    // clean subset commits through commit's CHECK gate, the violating rows
     // land in a quarantine relation, and a commit of the UNSPLIT
     // batch is attempted and must be REJECTED with the store left
     // bit-identical (zero data/manifest IO before validation). The
@@ -2335,16 +2339,16 @@ object Relational {
       val ok = col("cents") > 0L && col("cents") <= 20000000L
       val clean = o.filter(ok)
       val quarantined = o.filter(!ok)
-      TableLog.commitChecked(clean, root, expr("k div 500"), 4,
-        "overwrite", checks)
+      TableLog.commit(clean, root, expr("k div 500"), 4,
+        "overwrite", checks = checks)
       // the dirty batch carries a sentinel violator (k=-1, cents=-5)
       // so the rejection is certified on EVERY corpus instance, even
       // one whose natural rows all satisfy the rule
       val dirty = o.unionByName(
         s.range(1).select(lit(-1L).as("k"), lit(-5L).as("cents")))
       val rejected =
-        try { TableLog.commitChecked(dirty, root, expr("k div 500"), 4,
-          "append", checks); 0L }
+        try { TableLog.commit(dirty, root, expr("k div 500"), 4,
+          "append", checks = checks); 0L }
         catch { case _: IllegalArgumentException => 1L }
       TableLog.read(s, root)
         .agg(count(lit(1)).as("n_clean"), sum("cents").as("sum_clean"))
@@ -2362,7 +2366,7 @@ object Relational {
     // 4096 — 16 files, each a Morton TILE whose per-file zones are
     // tight in BOTH dimensions (a single-key layout is tight in one,
     // 0..255-wide in the other) — and the read resolves a 2-D range
-    // via planFilesMulti's conjunctive zone intersect BEFORE any
+    // via planFiles' conjunctive zone intersect BEFORE any
     // scan. Oracle recomputes the filtered aggregate from raw
     // orders, so a zone that wrongly drops a file surfaces as a
     // value diff; the file-count claims (multi-dim prune strictly
@@ -2384,8 +2388,9 @@ object Relational {
         (graft.operators.ZOrder.zkey(col("xb"), col("yb"), 8) / lit(4096))
           .cast("long"),
         numFiles = 16, mode = "overwrite")
-      TableLog.readRangeMulti(s, root,
-          Seq(("xb", 40L, 90L), ("yb", 64L, 191L)))
+      TableLog.read(s, root, Seq(
+          GreaterThanOrEqual("xb", 40L), LessThanOrEqual("xb", 90L),
+          GreaterThanOrEqual("yb", 64L), LessThanOrEqual("yb", 191L)))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("k")).as("n_keys"),
           sum("cents").as("sum_cents"))
@@ -2426,9 +2431,9 @@ object Relational {
         smallRows = Long.MaxValue, checkpointInterval = 10) // v2: remove+add delta
       TableLog.commit(o.filter(pmod(col("k"), lit(3L)) === 2L), root,
         layout, 4, "append", checkpointInterval = 10) // v3: add-only delta
-      val headReplay = TableLog.read(s, root, Some(3L)) // delta replay to v0
+      val headReplay = TableLog.read(s, root, asOf = Some(3L)) // delta replay to v0
       TableLog.vacuum(root, keepFrom = 2L) // checkpoint v2, drop v0/v1
-      val asofCkpt = TableLog.read(s, root, Some(2L)) // via the checkpoint
+      val asofCkpt = TableLog.read(s, root, asOf = Some(2L)) // via the checkpoint
       Seq(("asof_checkpoint", asofCkpt), ("head_replay", headReplay))
         .map { case (nm, df) =>
           df.agg(count(lit(1)).as("n_rows"),
@@ -2517,10 +2522,10 @@ object Relational {
           .filter(pmod(col("k"), lit(3L)) === 2L && pmod(col("k"), lit(2L)) === 0L)
           .select(col("k"), lit(1L).as("ver"), lit("U").as("op"),
             (col("price") + lit(7L)).as("new_price")))
-      val v3 = TableLog.merge(a, root, changes, "k", layout, 4)
+      val v3 = TableLog.merge(root, changes, "k", layout, 4)
       Seq(("initial", v0), ("append", v1), ("compact", v2), ("merge", v3))
         .map { case (nm, v) =>
-          TableLog.read(s, root, Some(v)).agg(
+          TableLog.read(s, root, asOf = Some(v)).agg(
             count(lit(1)).as("n_rows"),
             countDistinct(col("k")).as("n_keys"),
             sum("price").as("sum_price"),

@@ -36,13 +36,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `pushedFilters` (the plan's `PushedFilters: [...]`) but returns
   * EVERY filter as residual, so Spark re-applies them row-level above
   * the scan — a false-positive file read costs IO, never correctness.
-  * A filter prunes when it constrains a LONG column the manifest
-  * zones (q61's skipping class): range predicates intersect the
-  * per-file [min,max] zone, equality and IN additionally probe the
-  * per-file bloom bitset when one rides the manifest (q72's class —
-  * no false negatives by construction), `IsNotNull` drops all-NULL
-  * chunks (absent zone on a long column means the file has no
-  * non-NULL value), and un-zoned files are kept conservatively.
+  * Which filters prune, and how, is the store's ONE planner
+  * ([[TableLog.planFiles]] — the same call the library read makes):
+  * zone ranges, bloom equality/IN probes and `IsNotNull` on integral
+  * columns, truncation-safe zones and blooms on STRING columns. The
+  * scan plans once; its statistics, its `EXPLAIN` description
+  * (`files=<kept>/<total>`) and the executed read all use that plan.
   * Column pruning flows through `pruneColumns` into the projection,
   * so the parquet scan reads only the required columns.
   *
@@ -345,10 +344,10 @@ object GraftLogProvider {
     new GraftLogTable(root, head, mounted)
   }
 
-  /** Last (selected, total) file plan — spec introspection only (the
-    * planFilesMulti return-pair contract surfaced through the SQL
-    * path, where the pruned parquet scan is nested inside the
-    * relation and invisible to the outer plan).
+  /** Last executed (selected, total) file plan — spec introspection
+    * only (the [[TableLog.planFiles]] return pair surfaced through the
+    * SQL path, where the pruned parquet scan is nested inside the
+    * relation; `EXPLAIN` shows the same pair as the scan's `files=`).
     */
   @volatile private[graft] var lastScanPlan: (Int, Int) = (0, 0)
 }
@@ -516,15 +515,12 @@ private[sources] final class GraftLogScanBuilder(root: String, version: Long,
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
 
-  private def colType(c: String): Option[org.apache.spark.sql.types.DataType] =
-    tableSchema.fields.find(_.name == c).map(_.dataType)
-
   /** Accept the file-prunable subset as "pushed" (plan visibility);
     * return ALL filters so Spark keeps the row-level Filter above the
     * scan — our pushdown SKIPS FILES, it never claims row exactness.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftLogScan.prunable(f, colType))
+    pushed = filters.filter(TableLog.prunable(_, tableSchema))
     filters
   }
 
@@ -540,14 +536,25 @@ private[sources] final class GraftLogScan(root: String, version: Long,
                                           required: StructType,
                                           pushed: Array[Filter])
     extends V1Scan with SupportsReportStatistics {
+  /** The scan's ONE file selection, planned once by
+    * [[TableLog.planFiles]] (metadata-sized IO, never a data scan) and
+    * read by the statistics, the description and the executed
+    * relation alike.
+    */
+  private lazy val planned: (TableLog.Manifest, Seq[TableLog.FileEntry]) = {
+    val m = TableLog.readManifest(root, version)
+    (m, TableLog.planFiles(m, pushed.toSeq))
+  }
+
   override def readSchema(): StructType = required
   override def description(): String =
     s"GraftLogScan root=$root version=$version " +
-      s"pushed=[${pushed.mkString(", ")}]"
+      s"pushed=[${pushed.mkString(", ")}] " +
+      s"files=${planned._2.size}/${planned._1.files.size}"
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T =
-    new GraftLogRelation(context, root, version, required, pushed)
-      .asInstanceOf[T]
+    new GraftLogRelation(context, root, planned._1, planned._2, required,
+      description()).asInstanceOf[T]
 
   /** PLANNER-native statistics (Delta reports the same pair): exact
     * live row count and on-disk bytes of the files the pushed filters
@@ -559,12 +566,10 @@ private[sources] final class GraftLogScan(root: String, version: Long,
     * reach the planner through [[org.apache.spark.sql.graftx
     * .V1ScanStatsJoinRule]], which unwraps the shim at each join.
     * Resolved lazily ONCE per scan (the rule's batch runs to fixed
-    * point) from the manifest — metadata-sized IO, never a data scan.
+    * point) from the planned selection.
     */
   private lazy val reported: Statistics = {
-    val m = TableLog.readManifest(root, version)
-    val sel = m.files.filter(f => pushed.forall(p =>
-      GraftLogScan.keeps(GraftLogScan.translate(p, m), f)))
+    val sel = planned._2
     val rows = sel.map(_.liveRows).sum
     val bytes = TableLog.dataBytes(root, sel)
     // COLUMN statistics from the ANALYZE artifact when one exists for
@@ -622,166 +627,25 @@ private[sources] final class GraftLogScan(root: String, version: Long,
   override def estimateStatistics(): Statistics = reported
 }
 
-private[sources] object GraftLogScan {
-  import org.apache.spark.sql.types.{DataType, StringType}
-
-  /** Rewrite a pushed filter's column names logical→physical (column
-    * mapping): zones/blooms are keyed by the PHYSICAL name. Only the
-    * shapes [[keeps]] understands need rewriting — anything else is
-    * conservatively kept anyway.
-    */
-  def translate(f: Filter, m: TableLog.Manifest): Filter =
-    if (m.colMap.isEmpty) f
-    else f match {
-      case EqualTo(c, v)            => EqualTo(m.physicalOf(c), v)
-      case GreaterThan(c, v)        => GreaterThan(m.physicalOf(c), v)
-      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(m.physicalOf(c), v)
-      case LessThan(c, v)           => LessThan(m.physicalOf(c), v)
-      case LessThanOrEqual(c, v)    => LessThanOrEqual(m.physicalOf(c), v)
-      case In(c, vs)                => In(m.physicalOf(c), vs)
-      case IsNotNull(c)             => IsNotNull(m.physicalOf(c))
-      case And(l, r)                => And(translate(l, m), translate(r, m))
-      case other                    => other
-    }
-
-  /** Integral literal → Long; anything else is not zone-comparable
-    * (fractional comparisons against a long column are rewritten by
-    * Catalyst before pushdown, so integral is the only shape seen).
-    */
-  private def asLong(v: Any): Option[Long] = v match {
-    case b: java.lang.Byte    => Some(b.longValue)
-    case s: java.lang.Short   => Some(s.longValue)
-    case i: java.lang.Integer => Some(i.longValue)
-    case l: java.lang.Long    => Some(l.longValue)
-    case _                    => None
-  }
-
-  /** Can this filter exclude FILES from the manifest alone? LONG
-    * columns prune through the integral zones (+ blooms); STRING
-    * columns through the truncated string zones (q83's class —
-    * source/lang/domain predicates over a text corpus). IsNotNull
-    * prunes only on longs: an absent integral zone proves all-NULL,
-    * an absent STRING zone doesn't (parquet's binary-stats size cap).
-    */
-  def prunable(f: Filter, colType: String => Option[DataType]): Boolean = {
-    def longCol(c: String) = colType(c).contains(LongType)
-    def strCol(c: String) = colType(c).contains(StringType)
-    def cmpable(c: String, v: Any) =
-      (longCol(c) && asLong(v).isDefined) ||
-        (strCol(c) && v.isInstanceOf[String])
-    f match {
-      case EqualTo(c, v)            => cmpable(c, v)
-      case GreaterThan(c, v)        => cmpable(c, v)
-      case GreaterThanOrEqual(c, v) => cmpable(c, v)
-      case LessThan(c, v)           => cmpable(c, v)
-      case LessThanOrEqual(c, v)    => cmpable(c, v)
-      case In(c, vs)                => vs.nonEmpty && vs.forall(cmpable(c, _))
-      case IsNotNull(c)             => longCol(c)
-      case And(l, r) => prunable(l, colType) && prunable(r, colType)
-      case _         => false
-    }
-  }
-
-  /** May file `e` contain a row satisfying `f`? Long-zone semantics
-    * match [[TableLog.planFilesMulti]] (absent integral zone on the
-    * filtered column = all-NULL chunk) with equality adding
-    * [[TableLog.planFilesPoint]]'s bloom probe; string semantics are
-    * [[TableLog.strZoneKeeps]]'s truncation-safe compare (the stored
-    * min is a hard lower bound; a truncated max only excludes when
-    * the probe's own prefix sorts above it; absent keeps).
-    */
-  def keeps(f: Filter, e: TableLog.FileEntry): Boolean = f match {
-    case EqualTo(c, v: String)            => strMayContain(e, c, v)
-    case GreaterThan(c, v: String)        => strAbove(e, c, v, strict = true)
-    case GreaterThanOrEqual(c, v: String) => strAbove(e, c, v, strict = false)
-    case LessThan(c, v: String)           => strBelow(e, c, v, strict = true)
-    case LessThanOrEqual(c, v: String)    => strBelow(e, c, v, strict = false)
-    case In(c, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-      vs.exists(v => strMayContain(e, c, v.asInstanceOf[String]))
-    case EqualTo(c, v)            => mayContain(e, c, asLong(v).get)
-    case GreaterThan(c, v)        => e.zMax.get(c).exists(_ > asLong(v).get)
-    case GreaterThanOrEqual(c, v) => e.zMax.get(c).exists(_ >= asLong(v).get)
-    case LessThan(c, v)           => e.zMin.get(c).exists(_ < asLong(v).get)
-    case LessThanOrEqual(c, v)    => e.zMin.get(c).exists(_ <= asLong(v).get)
-    case In(c, vs)                => vs.exists(v => mayContain(e, c, asLong(v).get))
-    case IsNotNull(c)             => e.zMin.contains(c)
-    case And(l, r)                => keeps(l, e) && keeps(r, e)
-    case _                        => true
-  }
-
-  /** May `e` hold a row of `c` ABOVE `v`? True max ≥ stored max; when
-    * the stored max is truncated it is a strict prefix of the true
-    * max (so the true max sorts above it), and only a probe whose own
-    * prefix sorts above the stored prefix is provably beyond it.
-    */
-  private def strAbove(e: TableLog.FileEntry, c: String, v: String,
-                       strict: Boolean): Boolean =
-    (e.sMax.get(c), e.sMaxTrunc(c)) match {
-      case (Some(zhi), true)  => TableLog.truncMaxKeeps(v, zhi)
-      case (Some(zhi), false) =>
-        if (strict) TableLog.cmpUtf8(zhi, v) > 0 else TableLog.cmpUtf8(zhi, v) >= 0
-      case _ => true // un-zoned string column: keep (stats size cap)
-    }
-
-  /** May `e` hold a row of `c` BELOW `v`? The stored min is ≤ the
-    * true min regardless of truncation, so min ≥ v excludes exactly.
-    */
-  private def strBelow(e: TableLog.FileEntry, c: String, v: String,
-                       strict: Boolean): Boolean =
-    e.sMin.get(c) match {
-      case Some(zlo) =>
-        if (strict) TableLog.cmpUtf8(zlo, v) < 0 else TableLog.cmpUtf8(zlo, v) <= 0
-      case None => true // un-zoned string column: keep
-    }
-
-  /** String equality probe: truncation-safe zone check plus the
-    * string bloom (rolling-hashed value) when one rides the manifest
-    * — [[TableLog.planFilesPointStr]]'s rule, shared.
-    */
-  private def strMayContain(e: TableLog.FileEntry, c: String, v: String): Boolean =
-    // probe only manifest-TAGGED string blooms — a bloom built via the
-    // long path over numeric-looking strings holds differently-keyed
-    // bits; probing it with the rolling-hash key would silently return
-    // empty results (TableLog.planFilesPointStr's rule, shared)
-    TableLog.strZoneKeeps(e, c, v, v) && (e.blooms.get(c) match {
-      case Some(bits) if e.strBlooms(c) =>
-        TableLog.bloomPositions(TableLog.strBloomKey(v), bits.length * 64)
-          .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-      case _ => true
-    })
-
-  private def mayContain(e: TableLog.FileEntry, c: String, v: Long): Boolean = {
-    val zoneOk = (e.zMin.get(c), e.zMax.get(c)) match {
-      case (Some(lo), Some(hi)) => lo <= v && v <= hi
-      case _                    => false
-    }
-    zoneOk && (e.blooms.get(c) match {
-      case Some(bits) if !e.strBlooms(c) =>
-        TableLog.bloomPositions(v, bits.length * 64)
-          .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-      case _ => true
-    })
-  }
-}
-
-/** The executed scan: plan files from the manifest under the pushed
-  * filters, then delegate to the store's one true read path (manifest
-  * DDL + DV suppression + vectorized parquet) projected to the pruned
-  * columns. `buildScan` runs driver-side at execution planning; the
-  * returned RDD is the parquet scan itself — nothing is collected.
+/** The executed scan: the scan's planned files (`sel` of manifest
+  * `m`) through the store's one true read path (manifest DDL + DV
+  * suppression + vectorized parquet) projected to the pruned columns.
+  * `buildScan` runs driver-side at execution planning; the returned
+  * RDD is the parquet scan itself — nothing is collected. The physical
+  * plan prints the relation, so it prints the scan's `description`
+  * (with its `files=<kept>/<total>` prune) — what `EXPLAIN` shows.
   */
 private[sources] final class GraftLogRelation(ctx: SQLContext, root: String,
-                                              version: Long,
+                                              m: TableLog.Manifest,
+                                              sel: Seq[TableLog.FileEntry],
                                               required: StructType,
-                                              pushed: Array[Filter])
+                                              description: String)
     extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = ctx
   override def schema: StructType = required
+  override def toString: String = description
 
   override def buildScan(): RDD[Row] = {
-    val m = TableLog.readManifest(root, version)
-    val sel = m.files.filter(f => pushed.forall(p =>
-      GraftLogScan.keeps(GraftLogScan.translate(p, m), f)))
     GraftLogProvider.lastScanPlan = (sel.size, m.files.size)
     val df = TableLog.readFiles(ctx.sparkSession, root, m, sel)
     val projected =

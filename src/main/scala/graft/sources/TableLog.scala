@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -166,22 +167,14 @@ object TableLog {
     * below it); the stored max is exact unless flagged truncated, in
     * which case only `lo`'s own prefix sorting ABOVE it can exclude
     * (prefix-equal is uncertain → keep). An absent string zone KEEPS
-    * the file — see the inline note on why string absence can't prune.
+    * the file: unlike the integral invariant, absence does NOT prove
+    * all-NULL — parquet drops binary stats above its 4 KB size cap, so
+    * a file of long strings is simply un-zoned (doc_text-class
+    * columns). The planner's own rule, for a physical column `c`.
     */
   private[graft] def strZoneKeeps(e: FileEntry, c: String,
                                   lo: String, hi: String): Boolean =
-    (e.sMin.get(c), e.sMax.get(c)) match {
-      case (Some(zlo), Some(zhi)) =>
-        cmpUtf8(hi, zlo) >= 0 && {
-          if (e.sMaxTrunc(c)) truncMaxKeeps(lo, zhi)
-          else cmpUtf8(lo, zhi) <= 0
-        }
-      // ABSENT keeps conservatively — unlike the integral invariant,
-      // absence does NOT prove all-NULL: parquet drops binary stats
-      // above its 4 KB size cap, so a file of long strings is simply
-      // un-zoned (doc_text-class columns).
-      case _ => true
-    }
+    keeps(GreaterThanOrEqual(c, lo), e) && keeps(LessThanOrEqual(c, hi), e)
 
   /** `kind` is how the version was WRITTEN: "full" manifests carry
     * the complete snapshot listing; "delta" manifests carry only
@@ -263,7 +256,7 @@ object TableLog {
 
   /** The 4 bit positions of `v` — h1/h2 are REDUCED before combining
     * so the arithmetic never overflows under ANSI; the Column-side
-    * build in [[commitIndexed]] mirrors this expression exactly.
+    * build in [[withBlooms]] mirrors this expression exactly.
     */
   private[graft] def bloomPositions(v: Long, mBits: Int): Array[Int] = {
     val f = org.apache.spark.sql.graftx.Fmix64
@@ -697,6 +690,12 @@ object TableLog {
 
   private[graft] def writeManifest(root: String, m: Manifest): Long = {
     Files.createDirectories(logDir(root))
+    // the txn high-water map carries forward on EVERY commit, data or
+    // metadata-only: the parent's map max-merged with this commit's
+    // own `+txn=<app>:<n>` action stamp, so no writer can drop a
+    // sink's exactly-once guard by forgetting it
+    val txns = txnTagOf(m.action).foldLeft(carriedTxns(root, m.parent)) {
+      case (acc, (app, n)) => acc + (app -> math.max(n, acc.getOrElse(app, -1L))) }
     // commit-timestamp stamp: a manifest arriving without one (ts < 0,
     // every writer that didn't inject an explicit clock) takes the
     // wall clock, and EITHER kind is clamped non-decreasing against
@@ -704,7 +703,7 @@ object TableLog {
     // applied once at write instead of on every read) — so
     // TIMESTAMP-AS-OF resolution is a clean boundary search even
     // under clock skew between writers.
-    val stamped = m.copy(ts =
+    val stamped = m.copy(txns = txns, ts =
       math.max(if (m.ts >= 0L) m.ts else System.currentTimeMillis(),
         headerTsOf(root, m.parent)),
       // declared CHECK constraints carry forward like the txn map:
@@ -714,13 +713,13 @@ object TableLog {
       // parent's — declaration is once, carriage is every commit
       checks =
         if (m.checks.nonEmpty || m.action.startsWith("constraint")) m.checks
-        else carriedChecks(root, m.parent),
+        else headerMap(root, m.parent, 9),
       // table properties carry exactly like the checks: a
       // "tblprops" action's map is authoritative even when empty
       // (UNSET down to none), everything else inherits the parent's
       props =
         if (m.props.nonEmpty || m.action.startsWith("tblprops")) m.props
-        else carriedProps(root, m.parent))
+        else headerMap(root, m.parent, 10))
     val claimed = commitStore.claim(manifestPath(root, m.version),
       renderManifest(stamped).getBytes(StandardCharsets.UTF_8))
     if (!claimed) {
@@ -960,9 +959,7 @@ object TableLog {
     */
   private def writeDataFiles(df: DataFrame, root: String, v: Long,
                              layout: Column, numFiles: Int): Seq[FileEntry] = {
-    val spark = df.sparkSession
     val rel = attemptRel(v)
-    val dir = s"$root/$rel"
     val n = math.max(1, numFiles)
     // the column-mapping write path pre-materializes the (logical)
     // layout value as __graft_lay before relabeling — consume and
@@ -974,8 +971,17 @@ object TableLog {
     // (the external-Row roundtrip of df.rdd costs a per-field
     // conversion on both sides of the shuffle)
     org.apache.spark.sql.graftx.SlotWrite.placed(keyed, new SlotPartitioner(n))
-      .write.mode("overwrite").parquet(dir)
-    val names = Files.list(Paths.get(dir)).iterator().asScala
+      .write.mode("overwrite").parquet(s"$root/$rel")
+    writtenFiles(df.sparkSession, root, rel)
+  }
+
+  /** The entries of the parquet files one write job left under the
+    * attempt directory `rel` — the one listing + footer-stat step
+    * every data write ends in (slot writes and compaction bins).
+    */
+  private def writtenFiles(spark: SparkSession, root: String,
+                           rel: String): Seq[FileEntry] = {
+    val names = Files.list(Paths.get(root, rel)).iterator().asScala
       .map(_.getFileName.toString)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
       .toSeq.sorted
@@ -1036,22 +1042,75 @@ object TableLog {
   private def fullDue(v: Long, checkpointInterval: Int): Boolean =
     checkpointInterval <= 1 || v % checkpointInterval == 0
 
-  /** Commit `df` as a new version. `mode` "overwrite" starts the
-    * snapshot from scratch; "append" carries the parent's files
-    * forward and adds the new ones (the only data IO is the NEW
+  /** The ONE manifest step every data commit ends in (Delta's single
+    * `OptimisticTransaction.commit`): `next` is the new version's
+    * header (version, parent, action, DDL, column mapping — its file
+    * list is ignored), `kept` the parent files the snapshot carries by
+    * reference, `added` the files this commit wrote, `removes` the
+    * parent paths it drops. A first version, or one [[fullDue]] under
+    * `checkpointInterval`, lists `kept ++ added` in full; every other
+    * version writes the delta (`added`, `removes`). `kept` and
+    * `removes` are by-name, so a delta append never resolves the
+    * parent listing. Txn, constraint and property carriage happen
+    * below, in [[writeManifest]], for data and metadata commits alike.
+    */
+  private def commitManifest(root: String, next: Manifest,
+                             kept: => Seq[FileEntry], added: Seq[FileEntry],
+                             removes: => Seq[String],
+                             checkpointInterval: Int): Long =
+    writeManifest(root,
+      if (next.parent < 0 || fullDue(next.version, checkpointInterval))
+        next.copy(files = kept ++ added)
+      else next.copy(files = added, kind = "delta", removes = removes))
+
+  /** A fresh full header for the version after `m`: same schema,
+    * column mapping, constraints and properties, `m`'s resolved file
+    * list, unstamped (ts and txns are resolved by [[writeManifest]]).
+    * Metadata commits adjust it with `copy`; data commits hand it to
+    * [[commitManifest]].
+    */
+  private def childOf(m: Manifest, action: String): Manifest =
+    Manifest(m.version + 1, m.version, action, m.schemaDdl, m.files,
+      colMap = m.colMap, droppedPhys = m.droppedPhys, checks = m.checks,
+      props = m.props)
+
+  /** Commit `df` as a new version — the ONE write path for new rows
+    * (library appends, SQL INSERT/`format("graftlog")` writes,
+    * TRUNCATE, the streaming sink, [[commitTxn]]). `mode` "overwrite"
+    * starts the snapshot from scratch; "append" carries the parent's
+    * files forward and adds the new ones (the only data IO is the NEW
     * rows — append never touches existing files; with
     * `checkpointInterval` > 1 the manifest write is also only
     * delta-sized except at checkpoints). `txnTag` stamps the
     * manifest's action field (`append+txn=<appId>:<n>`) — the
-    * [[commitTxn]] idempotency marker.
+    * [[commitTxn]] idempotency marker. `evolve` admits added columns
+    * and widened types; `commitTs` pins the commit clock.
+    *
+    * Gates, all before any data or manifest IO (a rejected commit
+    * leaves the store bit-identical): the append schema check, the
+    * per-call `checks` (name → SQL CHECK predicate; a row violates
+    * only when the predicate is FALSE, NULL passes) and the table's
+    * DECLARED constraints, each validated in one aggregate pass.
+    *
+    * `bloomCols` (long-typed) and `bloomStrCols` (strings, through the
+    * portable rolling hash) add a per-file BLOOM INDEX of `bloomBits`
+    * bits — Delta's bloom filter index: zones can't skip an EQUALITY
+    * probe on a column the layout scattered, 4 hash bits per distinct
+    * value can. Size `bloomBits` to ~7× the expected distinct-per-file
+    * for ~1% false positives; false negatives are impossible.
     */
   def commit(df: DataFrame, root: String, layout: Column,
              numFiles: Int = 8, mode: String = "append",
              checkpointInterval: Int = 1,
              txnTag: Option[String] = None,
              evolve: Boolean = false,
-             commitTs: Option[Long] = None): Long = {
+             commitTs: Option[Long] = None,
+             checks: Seq[(String, String)] = Nil,
+             bloomCols: Seq[String] = Nil,
+             bloomStrCols: Seq[String] = Nil,
+             bloomBits: Int = 1 << 16): Long = {
     require(mode == "append" || mode == "overwrite", s"bad mode $mode")
+    require(bloomBits >= 64 && bloomBits % 64 == 0, s"bad bloomBits $bloomBits")
     val tag = txnTag.map(parseTxnTag)
     // idempotency guard INSIDE the primitive (the commitTxn contract,
     // enforced here too so a direct txnTag call can never double-apply
@@ -1069,14 +1128,12 @@ object TableLog {
       if (mode == "append" && parent >= 0)
         validateAppendSchema(root, parent, df.schema.toDDL, evolve)
       else df.schema.toDDL
-    // DECLARED constraints gate every commit — an overwrite keeps the
-    // table's declarations (it replaces rows, not the contract)
+    // per-call checks, then the DECLARED constraints — an overwrite
+    // keeps the table's declarations (it replaces rows, not the
+    // contract)
+    enforceChecks(df, checks, "commit")
     enforceDeclared(root, parent, df, s"$mode commit")
     val action = txnTag.fold(mode)(t => s"$mode+txn=$t")
-    val carried = carriedTxns(root, parent)
-    val txns = carried ++ tag.map { case (app, n) =>
-      app -> math.max(n, carried.getOrElse(app, -1L)) }
-    val ts = commitTs.getOrElse(-1L)
     // COLUMN MAPPING: appends inherit the parent's logical→physical
     // map (an overwrite is a fresh snapshot — identity again). An
     // evolve-ACCRETED column whose name collides with a live or
@@ -1100,22 +1157,70 @@ object TableLog {
           else acc
         }
       }
+    def phys(c: String): String = cmap.getOrElse(c, c)
     val (physDf, physLayout) = toPhysical(df, layout, cmap)
-    val added = writeDataFiles(physDf, root, v, physLayout, numFiles)
-    if (mode == "overwrite" || parent < 0)
-      // an overwrite IS a full snapshot — a delta encoding of it
-      // would be remove-everything + add-everything, strictly worse
-      writeManifest(root, Manifest(v, parent, action, ddl, added,
-        txns = txns, ts = ts, colMap = cmap, droppedPhys = dropped))
-    else if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, action, ddl,
-        readManifest(root, parent).files ++ added, txns = txns, ts = ts,
-        colMap = cmap, droppedPhys = dropped))
-    else
-      writeManifest(root, Manifest(v, parent, action, ddl,
-        added, kind = "delta", txns = txns, ts = ts,
-        colMap = cmap, droppedPhys = dropped))
+    // files, zones and BLOOMS are all keyed by the physical name
+    val added = withBlooms(df.sparkSession, root,
+      writeDataFiles(physDf, root, v, physLayout, numFiles),
+      bloomCols.map(phys), bloomStrCols.map(phys), bloomBits)
+    // an overwrite IS a full snapshot — a delta encoding of it would
+    // be remove-everything + add-everything, strictly worse
+    val overwrite = mode == "overwrite"
+    commitManifest(root, Manifest(v, parent, action, ddl, Nil,
+        ts = commitTs.getOrElse(-1L), colMap = cmap, droppedPhys = dropped),
+      if (overwrite || parent < 0) Nil else readManifest(root, parent).files,
+      added, Nil, if (overwrite) 1 else checkpointInterval)
   }
+
+  /** Attach per-file bloom bitsets over the physical `longCols` and
+    * `strCols` to the just-written `added` entries: ONE column-pruned
+    * scan per column (explode to ≤4 positions per row, distinct) — the
+    * collected volume is bounded by files·min(4·distinct, mBits)
+    * positions, i.e. exactly the index being built, never row-sized.
+    */
+  private def withBlooms(spark: SparkSession, root: String,
+                         added: Seq[FileEntry], longCols: Seq[String],
+                         strCols: Seq[String], mB: Int): Seq[FileEntry] =
+    if ((longCols.isEmpty && strCols.isEmpty) || added.isEmpty) added
+    else {
+      val src = spark.read.parquet(added.map(f => s"$root/${f.path}"): _*)
+      // STRING columns bloom through the portable rolling hash (the
+      // value's UTF-8 bytes → one long), then ride the SAME
+      // double-hashed position pipeline as long columns — so the
+      // manifest format, probe, and false-negative-free contract
+      // are shared; only the value→long step differs (q89's class:
+      // point lookups on high-cardinality text keys — URLs, doc
+      // ids — that zones can't separate).
+      val hashed: Seq[(String, Column)] =
+        longCols.map(c => c -> col(c).cast("long")) ++
+          strCols.map(c => c -> graft.functions.GraftFunctions.rolling_hash(col(c)))
+      val perCol: Seq[(String, Map[String, Set[Int]])] = hashed.map { case (c, cv) =>
+        // mirror of bloomPositions: reduce h1/h2 BEFORE combining so
+        // the position arithmetic never overflows under ANSI
+        val h1 = pmod(graft.functions.GraftFunctions.fmix64(cv), lit(mB.toLong))
+        val h2 = pmod(graft.functions.GraftFunctions.fmix64(
+          cv.bitwiseXOR(lit(bloomGold))), lit((mB - 3).toLong)) + lit(1L)
+        val pos = (0 until 4).map(i =>
+          pmod(h1 + lit(i.toLong) * h2, lit(mB.toLong)).cast("int"))
+        val rows = src.filter(col(c).isNotNull)
+          .select(element_at(split(input_file_name(), "/"), -1).as("f"),
+            explode(array(pos: _*)).as("p"))
+          .distinct().collect()
+        c -> rows.groupBy(_.getString(0))
+          .map { case (f, rs) => f -> rs.map(_.getInt(1)).toSet }
+      }
+      added.map { fe =>
+        val name = fe.path.substring(fe.path.lastIndexOf('/') + 1)
+        val bl = perCol.flatMap { case (c, mp) =>
+          mp.get(name).map { s =>
+            val arr = new Array[Long](mB / 64)
+            s.foreach(p => arr(p / 64) |= 1L << (p % 64))
+            c -> arr
+          }
+        }.toMap
+        fe.copy(blooms = bl, strBlooms = strCols.toSet.intersect(bl.keySet))
+      }
+    }
 
   /** Column (name, type) signature of a DDL string — the schema-drift
     * comparison key: nullability is IGNORED (filters/aggregates flip
@@ -1160,7 +1265,7 @@ object TableLog {
     * of (parent, batch), batch order, accreted columns included —
     * which the commit must store instead of the raw batch DDL. Runs
     * BEFORE any data or manifest IO, so a rejected append leaves the
-    * store bit-identical (the commitChecked discipline).
+    * store bit-identical (the same discipline as the CHECK gates).
     */
   private def validateAppendSchema(root: String, parent: Long,
                                    newDdl: String, evolve: Boolean): String = {
@@ -1209,201 +1314,6 @@ object TableLog {
             }
           }).toDDL
     }
-  }
-
-  /** [[commit]] plus a per-file BLOOM INDEX over `bloomCols` (long-
-    * typed columns) — Delta's bloom filter index: zones can't skip an
-    * EQUALITY probe on a column the layout scattered (every file's
-    * range covers the value), but 4 hash bits per distinct value can.
-    * The bitsets are built from the just-written files with ONE
-    * column-pruned scan (explode to ≤4 positions per row, distinct) —
-    * the collected volume is bounded by files·min(4·distinct, mBits)
-    * positions, i.e. exactly the index being built, never row-sized.
-    * Size `bloomBits` to ~7× the expected distinct-per-file for ~1%
-    * false positives; a false positive costs one wasted file read,
-    * false negatives are impossible by construction.
-    */
-  def commitIndexed(df: DataFrame, root: String, layout: Column,
-                    numFiles: Int = 8, mode: String = "append",
-                    bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 16,
-                    checkpointInterval: Int = 1,
-                    bloomStrCols: Seq[String] = Nil): Long = {
-    require(mode == "append" || mode == "overwrite", s"bad mode $mode")
-    require(bloomBits >= 64 && bloomBits % 64 == 0, s"bad bloomBits $bloomBits")
-    val parent = currentVersion(root)
-    val v = parent + 1
-    if (mode == "append" && parent >= 0)
-      validateAppendSchema(root, parent, df.schema.toDDL, evolve = false)
-    val txns = carriedTxns(root, parent)
-    // column mapping: appends inherit the parent's map; files, zones
-    // and BLOOMS (below) are all keyed by the physical name
-    val (cmap, dropped) =
-      if (mode == "append" && parent >= 0) parentMaps(root, parent)
-      else (Map.empty[String, String], Set.empty[String])
-    def phys(c: String): String = cmap.getOrElse(c, c)
-    val (physDf, physLayout) = toPhysical(df, layout, cmap)
-    val added = writeDataFiles(physDf, root, v, physLayout, numFiles)
-    val spark = df.sparkSession
-    val enriched =
-      if ((bloomCols.isEmpty && bloomStrCols.isEmpty) || added.isEmpty) added
-      else {
-        val src = spark.read.parquet(added.map(f => s"$root/${f.path}"): _*)
-        val mB = bloomBits
-        // STRING columns bloom through the portable rolling hash (the
-        // value's UTF-8 bytes → one long), then ride the SAME
-        // double-hashed position pipeline as long columns — so the
-        // manifest format, probe, and false-negative-free contract
-        // are shared; only the value→long step differs (q89's class:
-        // point lookups on high-cardinality text keys — URLs, doc
-        // ids — that zones can't separate).
-        val hashed: Seq[(String, Column)] =
-          bloomCols.map(c => phys(c) -> col(phys(c)).cast("long")) ++
-            bloomStrCols.map(c => phys(c) ->
-              graft.functions.GraftFunctions.rolling_hash(col(phys(c))))
-        val perCol: Seq[(String, Map[String, Set[Int]])] = hashed.map { case (c, cv) =>
-          // mirror of bloomPositions: reduce h1/h2 BEFORE combining so
-          // the position arithmetic never overflows under ANSI
-          val h1 = pmod(graft.functions.GraftFunctions.fmix64(cv), lit(mB.toLong))
-          val h2 = pmod(graft.functions.GraftFunctions.fmix64(
-            cv.bitwiseXOR(lit(bloomGold))), lit((mB - 3).toLong)) + lit(1L)
-          val pos = (0 until 4).map(i =>
-            pmod(h1 + lit(i.toLong) * h2, lit(mB.toLong)).cast("int"))
-          val rows = src.filter(col(c).isNotNull)
-            .select(element_at(split(input_file_name(), "/"), -1).as("f"),
-              explode(array(pos: _*)).as("p"))
-            .distinct().collect()
-          c -> rows.groupBy(_.getString(0))
-            .map { case (f, rs) => f -> rs.map(_.getInt(1)).toSet }
-        }
-        added.map { fe =>
-          val name = fe.path.substring(fe.path.lastIndexOf('/') + 1)
-          val bl = perCol.flatMap { case (c, mp) =>
-            mp.get(name).map { s =>
-              val arr = new Array[Long](mB / 64)
-              s.foreach(p => arr(p / 64) |= 1L << (p % 64))
-              c -> arr
-            }
-          }.toMap
-          fe.copy(blooms = bl,
-            strBlooms = bloomStrCols.map(phys).toSet.intersect(bl.keySet))
-        }
-      }
-    if (mode == "overwrite" || parent < 0)
-      writeManifest(root, Manifest(v, parent, mode, df.schema.toDDL, enriched,
-        txns = txns, colMap = cmap, droppedPhys = dropped))
-    else if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, mode, df.schema.toDDL,
-        readManifest(root, parent).files ++ enriched, txns = txns,
-        colMap = cmap, droppedPhys = dropped))
-    else
-      writeManifest(root, Manifest(v, parent, mode, df.schema.toDDL,
-        enriched, kind = "delta", txns = txns,
-        colMap = cmap, droppedPhys = dropped))
-  }
-
-  /** Point-probe file plan: a file survives only if its zone covers
-    * the value AND (when bloom-indexed) all 4 bloom bits are set.
-    * Un-indexed files are conservatively kept — mixed old/new tables
-    * stay correct while the index backfills.
-    */
-  def planFilesPoint(root: String, colName: String, value: Long,
-                     asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val c = m.physicalOf(colName) // zones/blooms are keyed physical
-    val sel = m.files.filter { f =>
-      val zoneOk = (f.zMin.get(c), f.zMax.get(c)) match {
-        case (Some(lo), Some(hi)) => lo <= value && value <= hi
-        case _ => false // all-NULL chunk: no row can equal the value
-      }
-      // probe only LONG-keyed blooms: a string-hashed bitset holds
-      // different bits for the same logical value, so probing it with
-      // a long key would silently false-negative — keep instead
-      val bloomOk = f.blooms.get(c) match {
-        case Some(bits) if !f.strBlooms(c) =>
-          bloomPositions(value, bits.length * 64)
-            .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-        case _ => true
-      }
-      zoneOk && bloomOk
-    }
-    (sel, m.files.size)
-  }
-
-  /** Bloom+zone-pruned equality read: only may-contain files are
-    * scanned, then the row predicate applies inside the survivors.
-    */
-  def readPoint(spark: SparkSession, root: String, colName: String,
-                value: Long, asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesPoint(root, colName, value, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    readFiles(spark, root, m, sel)
-      .filter(col(colName) === lit(value))
-  }
-
-  /** The probe long a STRING bloom stores and checks: the portable
-    * rolling hash of the value's UTF-8 bytes — [[bloomPositions]]
-    * mixes it further, so the Column-side build (fmix64 ∘
-    * rolling_hash) and this probe agree bit-for-bit.
-    */
-  private[sources] def strBloomKey(value: String): Long =
-    org.apache.spark.sql.graftx.RollingHash.hash(
-      value.getBytes(StandardCharsets.UTF_8))
-
-  /** STRING point-probe file plan: truncation-safe zone check plus —
-    * when a string bloom rides the manifest — the 4-bit probe over
-    * the rolling-hashed value. Un-indexed files keep conservatively;
-    * no false negatives by construction (q89's class: "find this URL
-    * in 100 TB" without scanning a file per zone overlap).
-    */
-  def planFilesPointStr(root: String, colName: String, value: String,
-                        asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val key = strBloomKey(value)
-    val c = m.physicalOf(colName)
-    val sel = m.files.filter { f =>
-      // probe only blooms the manifest TAGS as string-hashed: a
-      // pre-existing bloom built via the long path (cast('long') over
-      // numeric-looking strings) holds differently-keyed bits, and
-      // probing it with the rolling-hash key would return
-      // guaranteed-empty results with no error — keep conservatively
-      strZoneKeeps(f, c, value, value) && (f.blooms.get(c) match {
-        case Some(bits) if f.strBlooms(c) =>
-          bloomPositions(key, bits.length * 64)
-            .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-        case _ => true
-      })
-    }
-    (sel, m.files.size)
-  }
-
-  /** String-bloom-pruned equality read — the [[readPoint]] twin. */
-  def readPointStr(spark: SparkSession, root: String, colName: String,
-                   value: String, asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesPointStr(root, colName, value, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    readFiles(spark, root, m, sel)
-      .filter(col(colName) === lit(value))
-  }
-
-  /** Commit-time CHECK constraints (Delta's table-constraint shape):
-    * each (name, boolean SQL expression) must hold for every row of
-    * the incoming batch — SQL CHECK semantics, a row violates only
-    * when the expression is FALSE (NULL passes). All constraints are
-    * validated in ONE aggregate pass over the batch (map-side
-    * partial counts; Delta pays the same extra scan), and a
-    * violating batch is rejected BEFORE any data or manifest IO —
-    * the store is bit-identical after a rejected commit, which
-    * TableLogSpec pins. The error lists per-constraint violation
-    * counts so the ingest pipeline can route to quarantine (q69
-    * composes exactly that: constraint split → clean commit +
-    * quarantine table, the q64/q66 posture with declared rules).
-    */
-  def commitChecked(df: DataFrame, root: String, layout: Column,
-                    numFiles: Int = 8, mode: String = "append",
-                    checks: Seq[(String, String)] = Nil,
-                    checkpointInterval: Int = 1): Long = {
-    enforceChecks(df, checks, "commit")
-    commit(df, root, layout, numFiles, mode, checkpointInterval)
   }
 
   /** Header-only read (first line) — never resolves the file list,
@@ -1475,7 +1385,7 @@ object TableLog {
     * [[versionAtTimestamp]]'s resolution.
     */
   def readAsOfTimestamp(spark: SparkSession, root: String, ts: Long): DataFrame =
-    read(spark, root, Some(versionAtTimestamp(root, ts)))
+    read(spark, root, asOf = Some(versionAtTimestamp(root, ts)))
 
   /** AGE-based retention (Delta's `VACUUM … RETAIN n HOURS` shape):
     * drop every version strictly older than the one current at
@@ -1505,47 +1415,26 @@ object TableLog {
     (kind, ddl, if (h.length >= 7) parseTxns(h(6)) else Map.empty)
   }
 
-  /** The declared CHECK constraints a child of `parent` inherits —
-    * one header line of text IO, like [[carriedTxns]].
+  /** Header field `i` of version `v` as a name → value map — the
+    * declared CHECK constraints (9) or the table properties (10); one
+    * header line of text IO, empty for v < 0 or an older header.
     */
-  private def carriedChecks(root: String, parent: Long): Map[String, String] =
-    if (parent < 0) Map.empty
+  private def headerMap(root: String, v: Long, i: Int): Map[String, String] =
+    if (v < 0L) Map.empty
     else {
-      val h = readHeader(root, parent)
-      if (h.length >= 10) parseChecks(h(9)) else Map.empty
+      val h = readHeader(root, v)
+      if (h.length > i) parseChecks(h(i)) else Map.empty
     }
 
   /** The table's declared CHECK constraints at version `v` (default
-    * head) — name → SQL predicate, one header line of text IO.
+    * head) — name → SQL predicate.
     */
-  def tableChecks(root: String, v: Long = -1L): Map[String, String] = {
-    val at = if (v >= 0L) v else currentVersion(root)
-    if (at < 0L) Map.empty
-    else {
-      val h = readHeader(root, at)
-      if (h.length >= 10) parseChecks(h(9)) else Map.empty
-    }
-  }
-
-  /** The table properties a child of `parent` inherits — one header
-    * line of text IO, like [[carriedChecks]].
-    */
-  private def carriedProps(root: String, parent: Long): Map[String, String] =
-    if (parent < 0) Map.empty
-    else {
-      val h = readHeader(root, parent)
-      if (h.length >= 11) parseChecks(h(10)) else Map.empty
-    }
+  def tableChecks(root: String, v: Long = -1L): Map[String, String] =
+    headerMap(root, if (v >= 0L) v else currentVersion(root), 9)
 
   /** The table's properties at version `v` (default head). */
-  def tableProperties(root: String, v: Long = -1L): Map[String, String] = {
-    val at = if (v >= 0L) v else currentVersion(root)
-    if (at < 0L) Map.empty
-    else {
-      val h = readHeader(root, at)
-      if (h.length >= 11) parseChecks(h(10)) else Map.empty
-    }
-  }
+  def tableProperties(root: String, v: Long = -1L): Map[String, String] =
+    headerMap(root, if (v >= 0L) v else currentVersion(root), 10)
 
   /** `ALTER TABLE … SET TBLPROPERTIES` — metadata-only commit;
     * existing keys overwrite, others carry.
@@ -1557,9 +1446,7 @@ object TableLog {
     val parent = currentVersion(root)
     require(parent >= 0, s"no committed table at $root")
     val m = readManifest(root, parent)
-    writeManifest(root, Manifest(parent + 1, parent, "tblprops-set",
-      m.schemaDdl, m.files, colMap = m.colMap, droppedPhys = m.droppedPhys,
-      checks = m.checks, props = m.props ++ kvs))
+    writeManifest(root, childOf(m, "tblprops-set").copy(props = m.props ++ kvs))
   }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES` — metadata-only commit;
@@ -1571,9 +1458,7 @@ object TableLog {
     val parent = currentVersion(root)
     require(parent >= 0, s"no committed table at $root")
     val m = readManifest(root, parent)
-    writeManifest(root, Manifest(parent + 1, parent, "tblprops-unset",
-      m.schemaDdl, m.files, colMap = m.colMap, droppedPhys = m.droppedPhys,
-      checks = m.checks, props = m.props -- keys))
+    writeManifest(root, childOf(m, "tblprops-unset").copy(props = m.props -- keys))
   }
 
   /** Range-bucketed layout for a DECLARED cluster key (R105's CLUSTER
@@ -1598,8 +1483,8 @@ object TableLog {
     }
   }
 
-  /** One-pass constraint validator (shared by [[commitChecked]]'s
-    * per-call checks and the declared-constraint enforcement): counts
+  /** One-pass constraint validator (shared by [[commit]]'s per-call
+    * `checks` and the declared-constraint enforcement): counts
     * violations per named predicate — SQL CHECK semantics, a row
     * violates only when the predicate is FALSE (NULL passes) — and
     * rejects loudly naming every violated constraint and its count.
@@ -1625,7 +1510,7 @@ object TableLog {
     */
   private def enforceDeclared(root: String, parent: Long, df: DataFrame,
                               what: String): Unit = {
-    val cks = carriedChecks(root, parent)
+    val cks = headerMap(root, parent, 9)
     if (cks.nonEmpty) enforceChecks(df, cks.toSeq.sortBy(_._1), what)
   }
 
@@ -1647,9 +1532,8 @@ object TableLog {
       s"constraint '$name' already declared: ${m.checks(name)}")
     enforceChecks(read(spark, root), Seq(name -> checkExpr),
       s"ADD CONSTRAINT $name")
-    writeManifest(root, Manifest(parent + 1, parent, "constraint-add",
-      m.schemaDdl, m.files, colMap = m.colMap, droppedPhys = m.droppedPhys,
-      checks = m.checks + (name -> checkExpr), props = m.props))
+    writeManifest(root, childOf(m, "constraint-add")
+      .copy(checks = m.checks + (name -> checkExpr)))
   }
 
   /** Retire a declared constraint — metadata-only commit. */
@@ -1660,9 +1544,7 @@ object TableLog {
     require(m.checks.contains(name),
       s"constraint '$name' is not declared " +
         s"(have: ${m.checks.keys.toSeq.sorted.mkString(", ")})")
-    writeManifest(root, Manifest(parent + 1, parent, "constraint-drop",
-      m.schemaDdl, m.files, colMap = m.colMap, droppedPhys = m.droppedPhys,
-      checks = m.checks - name, props = m.props))
+    writeManifest(root, childOf(m, "constraint-drop").copy(checks = m.checks - name))
   }
 
   /** The txn high-water map a child of `parent` must carry forward:
@@ -1686,12 +1568,7 @@ object TableLog {
     val head = currentVersion(root)
     (0L to head).filter(v => Files.exists(manifestPath(root, v)) ||
         checkpointExists(root, v))
-      .map(v => readHeader(root, v)(3))
-      .collect { case a if a.contains("+txn=") =>
-        val kv = a.substring(a.indexOf("+txn=") + 5)
-        val i = kv.lastIndexOf(':')
-        kv.substring(0, i) -> kv.substring(i + 1).toLong
-      }
+      .flatMap(v => txnTagOf(readHeader(root, v)(3)))
       .groupMapReduce(_._1)(_._2)(math.max)
   }
 
@@ -1709,15 +1586,8 @@ object TableLog {
     * setTransaction retention caveat, which this previously shared).
     * Legacy pre-map stores fall back to the historical header scan.
     */
-  def lastTxn(root: String, appId: String): Long = {
-    val head = currentVersion(root)
-    if (head < 0) -1L
-    else {
-      val h = readHeader(root, head)
-      if (h.length >= 7) parseTxns(h(6)).getOrElse(appId, -1L)
-      else legacyTxnMap(root).getOrElse(appId, -1L)
-    }
-  }
+  def lastTxn(root: String, appId: String): Long =
+    carriedTxns(root, currentVersion(root)).getOrElse(appId, -1L)
 
   /** Transactional append — the exactly-once sink primitive for
     * `foreachBatch` streaming ingest (st26): commit the batch as a
@@ -1730,15 +1600,11 @@ object TableLog {
     */
   def commitTxn(df: DataFrame, root: String, layout: Column,
                 numFiles: Int, appId: String, txn: Long,
-                checkpointInterval: Int = 1): Long = {
-    require(appId.nonEmpty &&
-        !appId.exists(c => c == '\t' || c == '\n' || c == ':' || c == ','),
-      s"appId must be non-empty and ':'/','/tab/newline-free: $appId")
-    // the duplicate-delivery no-op now lives inside commit's txnTag
-    // path itself (shared with mergeMor), so this is a plain delegate
+                checkpointInterval: Int = 1): Long =
+    // appId validation and the duplicate-delivery no-op both live on
+    // commit's txnTag path (shared with mergeMor): a plain delegate
     commit(df, root, layout, numFiles, "append", checkpointInterval,
       txnTag = Some(s"$appId:$txn"))
-  }
 
   /** Parse + validate an `<appId>:<txn>` tag — every txnTag entry
     * point shares this, so a tag without a separator (previously a
@@ -1753,6 +1619,15 @@ object TableLog {
     require(!app.exists(c => c == '\t' || c == '\n' || c == ':' || c == ','),
       s"appId must be ':'/','/tab/newline-free: $app")
     (app, t.substring(i + 1).toLong)
+  }
+
+  /** The `(appId, txn)` stamp an action string carries
+    * (`<action>+txn=<appId>:<txn>`), if any — what [[writeManifest]]
+    * max-merges into the carried high-water map.
+    */
+  private def txnTagOf(action: String): Option[(String, Long)] = {
+    val i = action.indexOf("+txn=")
+    if (i < 0) None else Some(parseTxnTag(action.substring(i + 5)))
   }
 
   // ---- read path -------------------------------------------------------
@@ -1897,105 +1772,201 @@ object TableLog {
     }
   }
 
-  /** The file listing a range predicate `lo <= zoneCol <= hi` must
-    * read, resolved PURELY from the manifest (zone intersect — no
-    * data IO): the q61 skipping report, executed. Returns
-    * (selected, total) so callers can assert the prune.
-    */
-  def planFiles(root: String, zoneCol: String, lo: Long, hi: Long,
-                asOf: Option[Long] = None): (Seq[FileEntry], Int) =
-    planFilesMulti(root, Seq((zoneCol, lo, hi)), asOf)
+  // ---- file planner ----------------------------------------------------
+  // ONE planner for every file prune: the library's [[planFiles]] /
+  // [[read]] and the SQL scan (GraftLogScan) both resolve data-source
+  // `Filter` trees against the manifest here. Integral columns prune
+  // through the long zones (+ long blooms); STRING columns through
+  // the truncated string zones (+ string blooms). Un-prunable filters
+  // keep every file — a kept file may still hold no match (the row
+  // predicate re-applies), an excluded file provably holds none.
 
-  /** Conjunctive multi-column zone plan: a file survives only if
-    * EVERY predicate's [lo,hi] intersects its zone for that column —
-    * the reason a Z-ORDER layout (ZOrder.zkey as the commit's layout
-    * column) beats single-key clustering: Morton tiles keep BOTH
-    * dimensions' per-file zones tight, so a 2-D range predicate
-    * prunes multiplicatively where a single-key layout prunes on one
-    * dimension and reads everything on the other (q68 certifies the
-    * values; TableLogSpec pins the file counts).
+  /** The probe long a STRING bloom stores and checks: the portable
+    * rolling hash of the value's UTF-8 bytes — [[bloomPositions]]
+    * mixes it further, so the Column-side build (fmix64 ∘
+    * rolling_hash) and this probe agree bit-for-bit.
     */
-  def planFilesMulti(root: String, preds: Seq[(String, Long, Long)],
-                     asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    require(preds.nonEmpty)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val sel = m.files.filter { f =>
-      preds.forall { case (c0, lo, hi) =>
-        val c = m.physicalOf(c0)
-        (f.zMin.get(c), f.zMax.get(c)) match {
-          case (Some(zlo), Some(zhi)) => zlo <= hi && zhi >= lo
-          case _ => false // all-NULL (or un-zoned) chunk: no row can match a range
-        }
-      }
+  private[sources] def strBloomKey(value: String): Long =
+    org.apache.spark.sql.graftx.RollingHash.hash(
+      value.getBytes(StandardCharsets.UTF_8))
+
+  /** Integral literal → Long; anything else is not zone-comparable
+    * (fractional comparisons against a long column are rewritten by
+    * Catalyst before pushdown, so integral is the only shape seen).
+    */
+  private def asLong(v: Any): Option[Long] = v match {
+    case b: java.lang.Byte    => Some(b.longValue)
+    case s: java.lang.Short   => Some(s.longValue)
+    case i: java.lang.Integer => Some(i.longValue)
+    case l: java.lang.Long    => Some(l.longValue)
+    case _                    => None
+  }
+
+  /** Can filter `f` exclude FILES from the manifest alone, given the
+    * (logical) `schema`? Comparisons, IN and conjunctions over
+    * INTEGRAL columns (zoned as longs) with integral literals or
+    * STRING columns with string literals. IsNotNull prunes only on
+    * integral columns: an absent integral zone proves all-NULL, an
+    * absent STRING zone doesn't (parquet drops binary stats above its
+    * size cap).
+    */
+  private[sources] def prunable(f: Filter,
+                                schema: org.apache.spark.sql.types.StructType): Boolean = {
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types._
+    def colType(c: String) = schema.fields.find(_.name == c).map(_.dataType)
+    def longCol(c: String) = colType(c).exists {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
     }
-    (sel, m.files.size)
+    def cmpable(c: String, v: Any) =
+      (longCol(c) && asLong(v).isDefined) ||
+        (colType(c).contains(StringType) && v.isInstanceOf[String])
+    f match {
+      case EqualTo(c, v)            => cmpable(c, v)
+      case GreaterThan(c, v)        => cmpable(c, v)
+      case GreaterThanOrEqual(c, v) => cmpable(c, v)
+      case LessThan(c, v)           => cmpable(c, v)
+      case LessThanOrEqual(c, v)    => cmpable(c, v)
+      case In(c, vs)                => vs.nonEmpty && vs.forall(cmpable(c, _))
+      case IsNotNull(c)             => longCol(c)
+      case And(l, r)                => prunable(l, schema) && prunable(r, schema)
+      case _                        => false
+    }
   }
 
-  /** STRING zone plan: the files a range predicate `lo <= col <= hi`
-    * (bytewise UTF-8 order — Spark's and DuckDB's string comparison)
-    * must read, resolved purely from the manifest's truncated string
-    * zones via [[strZoneKeeps]]. The columns a text corpus actually
-    * filters by (source, lang, url domain) are strings — without this
-    * every such WHERE scanned the whole table (round-12 missing-item
-    * 2). Same conservative contract as the long zones: a kept file
-    * may still contain no match (row predicate re-applies), an
-    * excluded file provably contains none.
+  /** Rewrite a prunable filter's column names logical→physical
+    * (column mapping): zones and blooms are keyed by the PHYSICAL
+    * name.
     */
-  def planFilesStr(root: String, preds: Seq[(String, String, String)],
-                   asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
-    require(preds.nonEmpty)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val sel = m.files.filter(f =>
-      preds.forall { case (c, lo, hi) =>
-        strZoneKeeps(f, m.physicalOf(c), lo, hi) })
-    (sel, m.files.size)
+  private def physicalFilter(f: Filter, m: Manifest): Filter = {
+    import org.apache.spark.sql.sources._
+    if (m.colMap.isEmpty) f
+    else f match {
+      case EqualTo(c, v)            => EqualTo(m.physicalOf(c), v)
+      case GreaterThan(c, v)        => GreaterThan(m.physicalOf(c), v)
+      case GreaterThanOrEqual(c, v) => GreaterThanOrEqual(m.physicalOf(c), v)
+      case LessThan(c, v)           => LessThan(m.physicalOf(c), v)
+      case LessThanOrEqual(c, v)    => LessThanOrEqual(m.physicalOf(c), v)
+      case In(c, vs)                => In(m.physicalOf(c), vs)
+      case IsNotNull(c)             => IsNotNull(m.physicalOf(c))
+      case And(l, r)                => And(physicalFilter(l, m), physicalFilter(r, m))
+      case other                    => other
+    }
   }
 
-  /** String-zone-pruned range read: only may-contain files are
-    * scanned, then the row predicates apply inside the survivors.
+  private def bloomHas(bits: Array[Long], key: Long): Boolean =
+    bloomPositions(key, bits.length * 64)
+      .forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
+
+  /** May file `e` contain a row satisfying the prunable, physical
+    * filter `f`? Long ranges intersect the integral zone (an absent
+    * zone = all-NULL chunk, which no comparison matches); equality
+    * and IN add the long bloom probe. Strings use the truncation-safe
+    * zone compare (an absent string zone keeps) plus the string
+    * bloom. A bloom is probed only under its own key scheme — a
+    * long-built bitset probed with a string key (or vice versa) would
+    * silently false-negative, so a mismatched bloom keeps.
     */
-  def readRangeStr(spark: SparkSession, root: String,
-                   preds: Seq[(String, String, String)],
-                   asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesStr(root, preds, asOf)
+  private def keeps(f: Filter, e: FileEntry): Boolean = {
+    import org.apache.spark.sql.sources._
+    def strEq(c: String, v: String) =
+      strAbove(c, v, strict = false) && strBelow(c, v, strict = false) &&
+        (e.blooms.get(c) match {
+          case Some(bits) if e.strBlooms(c) => bloomHas(bits, strBloomKey(v))
+          case _ => true
+        })
+    def longEq(c: String, v: Long) =
+      e.zMin.get(c).exists(_ <= v) && e.zMax.get(c).exists(_ >= v) &&
+        (e.blooms.get(c) match {
+          case Some(bits) if !e.strBlooms(c) => bloomHas(bits, v)
+          case _ => true
+        })
+    // the stored string max is exact unless flagged truncated; a
+    // truncated max is a prefix of the true one, so only a probe whose
+    // own prefix sorts above it is provably beyond the file
+    def strAbove(c: String, v: String, strict: Boolean) =
+      e.sMax.get(c).forall(zhi =>
+        if (e.sMaxTrunc(c)) truncMaxKeeps(v, zhi)
+        else if (strict) cmpUtf8(zhi, v) > 0 else cmpUtf8(zhi, v) >= 0)
+    // the stored string min is a hard lower bound even when truncated
+    def strBelow(c: String, v: String, strict: Boolean) =
+      e.sMin.get(c).forall(zlo =>
+        if (strict) cmpUtf8(zlo, v) < 0 else cmpUtf8(zlo, v) <= 0)
+    f match {
+      case EqualTo(c, v: String)            => strEq(c, v)
+      case GreaterThan(c, v: String)        => strAbove(c, v, strict = true)
+      case GreaterThanOrEqual(c, v: String) => strAbove(c, v, strict = false)
+      case LessThan(c, v: String)           => strBelow(c, v, strict = true)
+      case LessThanOrEqual(c, v: String)    => strBelow(c, v, strict = false)
+      case In(c, vs) if vs.forall(_.isInstanceOf[String]) =>
+        vs.exists(v => strEq(c, v.asInstanceOf[String]))
+      case EqualTo(c, v)            => longEq(c, asLong(v).get)
+      case GreaterThan(c, v)        => e.zMax.get(c).exists(_ > asLong(v).get)
+      case GreaterThanOrEqual(c, v) => e.zMax.get(c).exists(_ >= asLong(v).get)
+      case LessThan(c, v)           => e.zMin.get(c).exists(_ < asLong(v).get)
+      case LessThanOrEqual(c, v)    => e.zMin.get(c).exists(_ <= asLong(v).get)
+      case In(c, vs)                => vs.exists(v => longEq(c, asLong(v).get))
+      case IsNotNull(c)             => e.zMin.contains(c)
+      case And(l, r)                => keeps(l, e) && keeps(r, e)
+      case _                        => true
+    }
+  }
+
+  /** The ONE file planner: the files of `m` that may hold a row
+    * satisfying EVERY filter (conjunctive), resolved purely from the
+    * manifest — zones, string zones, blooms; no data IO. Filters name
+    * LOGICAL columns; un-prunable ones keep every file. The SQL scan
+    * and the library read both plan here, so their prunes can never
+    * drift.
+    */
+  def planFiles(m: Manifest, filters: Seq[Filter]): Seq[FileEntry] = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
+    val active = filters.filter(prunable(_, schema)).map(physicalFilter(_, m))
+    m.files.filter(e => active.forall(keeps(_, e)))
+  }
+
+  /** [[planFiles]] over version `asOf` (default head): (selected,
+    * total) so callers can assert the prune — the q61 skipping
+    * report, executed.
+    */
+  def planFiles(root: String, filters: Seq[Filter],
+                asOf: Option[Long] = None): (Seq[FileEntry], Int) = {
     val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val base = readFiles(spark, root, m, sel)
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+    (planFiles(m, filters), m.files.size)
+  }
+
+  /** The row form of a data-source filter — what [[read]] re-applies
+    * inside the surviving files; the shapes the planner reads.
+    */
+  private def rowPredicate(f: Filter): Column = {
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(c, v)            => col(c) === lit(v)
+      case GreaterThan(c, v)        => col(c) > lit(v)
+      case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
+      case LessThan(c, v)           => col(c) < lit(v)
+      case LessThanOrEqual(c, v)    => col(c) <= lit(v)
+      case In(c, vs)                => col(c).isin(vs.toIndexedSeq: _*)
+      case IsNotNull(c)             => col(c).isNotNull
+      case And(l, r)                => rowPredicate(l) && rowPredicate(r)
+      case other => throw new IllegalArgumentException(s"unsupported read filter $other")
     }
   }
 
   /** Snapshot read, optionally AS OF an older version (the q63
     * semantics through the store: the manifest IS the time machine —
     * old versions stay readable until vacuumed because their files
-    * are immutable).
+    * are immutable). `filters` prune FILES first ([[planFiles]] —
+    * skipped before any IO), then apply as row predicates inside the
+    * survivors, so the result equals the unpruned filter.
     */
-  def read(spark: SparkSession, root: String, asOf: Option[Long] = None): DataFrame = {
+  def read(spark: SparkSession, root: String,
+           filters: Seq[Filter] = Nil,
+           asOf: Option[Long] = None): DataFrame = {
     val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    readFiles(spark, root, m, m.files)
-  }
-
-  /** Zone-pruned range read: only files whose [min,max] intersects
-    * [lo,hi] are handed to the scan (file-level skip BEFORE any IO),
-    * then the row-level predicate still applies inside the survivors.
-    */
-  def readRange(spark: SparkSession, root: String, zoneCol: String,
-                lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame =
-    readRangeMulti(spark, root, Seq((zoneCol, lo, hi)), asOf)
-
-  /** Conjunctive zone-pruned read: only files whose zones intersect
-    * EVERY range are scanned, then the row-level predicates still
-    * apply inside the survivors.
-    */
-  def readRangeMulti(spark: SparkSession, root: String,
-                     preds: Seq[(String, Long, Long)],
-                     asOf: Option[Long] = None): DataFrame = {
-    val (sel, _) = planFilesMulti(root, preds, asOf)
-    val m = readManifest(root, asOf.getOrElse(currentVersion(root)))
-    val base = readFiles(spark, root, m, sel)
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(col(c).between(lo, hi))
-    }
+    filters.foldLeft(readFiles(spark, root, m, planFiles(m, filters)))(
+      (df, f) => df.filter(rowPredicate(f)))
   }
 
   // ---- change data feed ------------------------------------------------
@@ -2230,7 +2201,7 @@ object TableLog {
     // contract; recluster materializes all of them via read())
     def folds(f: FileEntry): Boolean = inScope(f) && f.liveRows < smallRows
     val small = m.files.filter(folds)
-      .sortBy(f => (f.zMin.getOrElse(orderCol, Long.MaxValue), f.path))
+      .sortBy(f => (f.zMin.getOrElse(ozc, Long.MaxValue), f.path))
     val keep = m.files.filterNot(folds)
     if (small.size < 2) return parent // nothing worth rewriting
     // q50 bin assignment: bin = floor(cumulative-rows-before / target)
@@ -2257,23 +2228,10 @@ object TableLog {
     val rel = attemptRel(v)
     withBin.repartition(nBins, col("__bin")).drop("__bin")
       .write.mode("overwrite").parquet(s"$root/$rel")
-    val names = Files.list(Paths.get(s"$root/$rel")).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-      .toSeq.sorted
-    val added = footerStats(spark, root, names.map(n => s"$rel/$n"))
-    val txns = carriedTxns(root, parent)
-    if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, "compact", m.schemaDdl,
-        keep ++ added, txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
-    else
-      // delta form: the folded small tail is the remove set, the bins
-      // are the adds — the manifest write is tail-sized, not
-      // table-sized
-      writeManifest(root, Manifest(v, parent, "compact", m.schemaDdl,
-        added, kind = "delta", removes = small.map(_.path), txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
+    // delta form: the folded small tail is the remove set, the bins
+    // are the adds — the manifest write is tail-sized, not table-sized
+    commitManifest(root, childOf(m, "compact"), keep,
+      writtenFiles(spark, root, rel), small.map(_.path), checkpointInterval)
   }
 
   /** OPTIMIZE/RECLUSTER as a COMMIT (Databricks' OPTIMIZE ZORDER BY,
@@ -2297,14 +2255,8 @@ object TableLog {
     val v = parent + 1
     val (physDf, physLayout) = toPhysical(read(spark, root), layout, m.colMap)
     val added = writeDataFiles(physDf, root, v, physLayout, numFiles)
-    val txns = carriedTxns(root, parent)
-    if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, "recluster", m.schemaDdl, added,
-        txns = txns, colMap = m.colMap, droppedPhys = m.droppedPhys))
-    else
-      writeManifest(root, Manifest(v, parent, "recluster", m.schemaDdl,
-        added, kind = "delta", removes = m.files.map(_.path), txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
+    commitManifest(root, childOf(m, "recluster"), Nil, added,
+      m.files.map(_.path), checkpointInterval)
   }
 
   /** CDC MERGE as a COMMIT — copy-on-write at FILE granularity (the
@@ -2373,26 +2325,23 @@ object TableLog {
       }.collect().toSet ++ unzoned
   }
 
-  /** String-key twin of [[affectedFileSet]]: prunes the affected set
-    * by the change keys' HULL [min, max] against the truncation-safe
-    * string zones — conservative (a kept file may hold no change key;
-    * the probe re-checks exactly), one 2-value aggregate instead of
-    * the per-key binary search the long zones afford. Un-zoned files
-    * keep (parquet's binary-stats size cap means absence proves
-    * nothing for strings).
+  /** String-key twin of [[affectedFileSet]]: the files [[planFiles]]
+    * keeps for the change keys' HULL [min, max] over the
+    * truncation-safe string zones — conservative (a kept file may hold
+    * no change key; the probe re-checks exactly), one 2-value
+    * aggregate instead of the per-key binary search the long zones
+    * afford.
     */
   private def affectedFileSetStr(m: Manifest, changes: DataFrame,
                                  keyCol: String): Set[String] = {
-    val zc = m.physicalOf(keyCol)
     val hull = changes.select(col(keyCol).cast("string").as(keyCol))
       .na.drop().agg(min(keyCol), max(keyCol)).head()
     if (hull.isNullAt(0)) Set.empty
-    else m.files.filter(f =>
-      strZoneKeeps(f, zc, hull.getString(0), hull.getString(1)))
-      .map(_.path).toSet
+    else planFiles(m, Seq(GreaterThanOrEqual(keyCol, hull.getString(0)),
+      LessThanOrEqual(keyCol, hull.getString(1)))).map(_.path).toSet
   }
 
-  def merge(base: DataFrame, root: String, changes: DataFrame,
+  def merge(root: String, changes: DataFrame,
             keyCol: String, layout: Column, numFiles: Int = 8,
             verCol: String = "ver", opCol: String = "op",
             valCol: String = "price", newValCol: String = "new_price",
@@ -2409,9 +2358,8 @@ object TableLog {
       .cleanWith(changes)(c => affectedFileSet(m, c, keyCol))
     val carried = m.files.filterNot(f => affectedPaths.contains(f.path))
     val v = parent + 1
-    // manifest-schema-resolved scan of the rewrite set (not `base`,
-    // kept only for API continuity): post-evolution old files
-    // null-fill accreted columns here exactly as in read()
+    // manifest-schema-resolved scan of the rewrite set: post-evolution
+    // old files null-fill accreted columns here exactly as in read()
     val affectedRows = readFiles(spark, root, m,
       m.files.filter(f => affectedPaths.contains(f.path)).sortBy(_.path))
     val merged = graft.operators.ChangeLog.latestState(
@@ -2420,16 +2368,9 @@ object TableLog {
     enforceDeclared(root, parent, merged, "merge")
     val (physMerged, physLayout) = toPhysical(merged, layout, m.colMap)
     val added = writeDataFiles(physMerged, root, v, physLayout, numFiles)
-    val txns = carriedTxns(root, parent)
-    if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, "merge", m.schemaDdl,
-        carried ++ added, txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
-    else
-      // delta form: only the zone-affected rewrite set is logged
-      writeManifest(root, Manifest(v, parent, "merge", m.schemaDdl,
-        added, kind = "delta", removes = affectedPaths.toSeq.sorted,
-        txns = txns, colMap = m.colMap, droppedPhys = m.droppedPhys))
+    // delta form: only the zone-affected rewrite set is logged
+    commitManifest(root, childOf(m, "merge"), carried, added,
+      affectedPaths.toSeq, checkpointInterval)
   }
 
   /** CDC MERGE as a COMMIT, MERGE-ON-READ (Delta's deletion-vector
@@ -2537,17 +2478,17 @@ object TableLog {
     val parent = currentVersion(root)
     require(parent >= 0, s"merge target $root has no committed version")
     val m = readManifest(root, parent)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
     // matched tuples are churn-sized; materialized ONCE (the same
     // source-materialization move as morApply) — the hull aggregate,
     // the hit-file probe semi join and the rewrite-carry anti join
     // below would otherwise each re-execute the statement's whole
     // key-derivation DAG
-    // conjunctive hull prune: a file survives only if EVERY key
-    // component's change hull intersects its zone (long: exact zone
-    // intersect; string: the truncation-safe compare; other types —
-    // un-zoned — keep). The hull aggregate is the materializing job
-    // (cleanWith): materialize+prune cost one job, not two.
+    // conjunctive hull prune through the one planner: a file survives
+    // only if EVERY key component's change hull [lo, hi] intersects
+    // its zone (an absent long zone is an all-NULL chunk, where no
+    // NULL-dropped tuple can live). The hull aggregate is the
+    // materializing job (cleanWith): materialize+prune cost one job,
+    // not two.
     val (matched, hullRow) = org.apache.spark.sql.graftx.Materialize.cleanWith(
       suppressKeys.select(keyCols.map(col): _*).na.drop().distinct()) { mm =>
       mm.agg(
@@ -2556,33 +2497,11 @@ object TableLog {
         keyCols.flatMap(c => Seq(min(col(c)).as(s"lo_$c"),
           max(col(c)).as(s"hi_$c"))).tail: _*).head()
     }
-    val anyKeys = !hullRow.isNullAt(0)
     val affected =
-      if (!anyKeys) Nil
-      else m.files.filter { f =>
-        keyCols.zipWithIndex.forall { case (c, i) =>
-          val zc = m.physicalOf(c)
-          schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType) match {
-            case Some(org.apache.spark.sql.types.LongType) =>
-              (f.zMin.get(zc), f.zMax.get(zc)) match {
-                case (Some(zlo), Some(zhi)) =>
-                  zlo <= hullRow.getLong(2 * i + 1) && zhi >= hullRow.getLong(2 * i)
-                // un-zoned: conservative KEEP, mirroring every other
-                // prune path — within this store an absent integral
-                // zone means an all-NULL chunk (no matched tuple can
-                // live there, the probe join just reads it for
-                // nothing), and keeping makes the DML affected set
-                // robust even against a foreign/stats-less file that
-                // violated the invariant
-                case _ => true
-              }
-            case Some(org.apache.spark.sql.types.StringType) =>
-              strZoneKeeps(f, zc, hullRow.getString(2 * i),
-                hullRow.getString(2 * i + 1))
-            case _ => true
-          }
-        }
-      }
+      if (hullRow.isNullAt(0)) Nil
+      else planFiles(m, keyCols.zipWithIndex.flatMap { case (c, i) =>
+        Seq(GreaterThanOrEqual(c, hullRow.get(2 * i)),
+          LessThanOrEqual(c, hullRow.get(2 * i + 1))) })
     // one distributed probe: which affected files actually HOLD a
     // matched tuple — only file NAMES come back
     val hitNames: Set[String] =
@@ -2600,7 +2519,7 @@ object TableLog {
     // the gate's aggregate as the materializing job; with no checks
     // the write is the ONLY consumer, so skip materialization (one
     // execution either way, one fewer job).
-    val cowChecks = carriedChecks(root, parent)
+    val cowChecks = headerMap(root, parent, 9)
     val upsertsM =
       if (cowChecks.isEmpty) upserts
       else org.apache.spark.sql.graftx.Materialize.cleanWith(upserts)(
@@ -2612,16 +2531,8 @@ object TableLog {
     val v = parent + 1
     val (physMerged, physLayout) = toPhysical(merged, layout, m.colMap)
     val added = writeDataFiles(physMerged, root, v, physLayout, numFiles)
-    val txns = carriedTxns(root, parent)
-    if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, action, m.schemaDdl,
-        carried ++ added, txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
-    else
-      writeManifest(root, Manifest(v, parent, action, m.schemaDdl,
-        added, kind = "delta",
-        removes = rewriteFiles.map(_.path).sorted, txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
+    commitManifest(root, childOf(m, action), carried, added,
+      rewriteFiles.map(_.path), checkpointInterval)
   }
 
   /** Shared merge-on-read core: `keySource` provides the change-key
@@ -2742,7 +2653,7 @@ object TableLog {
     // the materializing job (cleanWith) so gate + write read one
     // computation, and with no checks the write is the ONLY consumer
     // — skip materialization outright (one fewer job).
-    val morChecks = carriedChecks(root, parent)
+    val morChecks = headerMap(root, parent, 9)
     val newState =
       if (morChecks.isEmpty) newStateOf(hitRows)
       else org.apache.spark.sql.graftx.Materialize.cleanWith(newStateOf(hitRows))(
@@ -2829,27 +2740,17 @@ object TableLog {
             dvRef = f.dvRef + (physKey -> (rel, n)))
         }
       }
-    val dvUpdated = inlineUpdated ++ refUpdated
-    // txnTag mirrors [[commit]]'s: the action stamp + the carried
-    // high-water map (guarded + max-merged above) make a streaming
-    // CDC-APPLY sink exactly-once (st30)
-    val action = txnTag.fold(actionBase)(t => s"$actionBase+txn=$t")
-    val carried = carriedTxns(root, parent)
-    val txns = carried ++ tag.map { case (app, n) =>
-      app -> math.max(n, carried.getOrElse(app, -1L)) }
-    if (fullDue(v, checkpointInterval))
-      writeManifest(root, Manifest(v, parent, action, m.schemaDdl,
-        untouched ++ falsePos ++ dvUpdated ++ added, txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
-    else
-      // delta form: a dv update is remove+re-add of the SAME path
-      // with the grown vector — resolution order (removes, then
-      // adds) makes that exact, and versionDelta's path diff still
-      // sees it as neither added nor removed
-      writeManifest(root, Manifest(v, parent, action, m.schemaDdl,
-        dvUpdated ++ added, kind = "delta",
-        removes = (rewriteFiles ++ dvFiles).map(_.path).sorted, txns = txns,
-        colMap = m.colMap, droppedPhys = m.droppedPhys))
+    // txnTag mirrors [[commit]]'s: the action stamp (guarded above,
+    // max-merged into the carried high-water map by writeManifest)
+    // makes a streaming CDC-APPLY sink exactly-once (st30). In delta
+    // form a dv update is remove+re-add of the SAME path with the
+    // grown vector — resolution order (removes, then adds) makes that
+    // exact, and versionDelta's path diff still sees it as neither
+    // added nor removed.
+    commitManifest(root,
+      childOf(m, txnTag.fold(actionBase)(t => s"$actionBase+txn=$t")),
+      untouched ++ falsePos, inlineUpdated ++ refUpdated ++ added,
+      (rewriteFiles ++ dvFiles).map(_.path), checkpointInterval)
   }
 
   /** DESCRIBE HISTORY — the audit surface every lakehouse exposes:
@@ -2899,8 +2800,7 @@ object TableLog {
     // the column MAPPING follows toV like the schema: restoring below
     // a rename/drop boundary brings the old logical names back
     writeManifest(root, Manifest(head + 1, head, s"restore=$toV",
-      target.schemaDdl, target.files, txns = carriedTxns(root, head),
-      ts = commitTs.getOrElse(-1L),
+      target.schemaDdl, target.files, ts = commitTs.getOrElse(-1L),
       colMap = target.colMap, droppedPhys = target.droppedPhys))
   }
 
@@ -2942,8 +2842,7 @@ object TableLog {
       if (usedPhys.contains(name)) m.colMap + (name -> s"${name}__v${head + 1}")
       else m.colMap
     writeManifest(root, Manifest(head + 1, head, s"add-column=$name",
-      newDdl, Nil, kind = "delta", txns = carriedTxns(root, head),
-      ts = commitTs.getOrElse(-1L), colMap = cmap,
+      newDdl, Nil, kind = "delta", ts = commitTs.getOrElse(-1L), colMap = cmap,
       droppedPhys = m.droppedPhys))
   }
 
@@ -2976,7 +2875,7 @@ object TableLog {
     // parent's exact file list; only the header (DDL + mapping) moves
     writeManifest(root, Manifest(head + 1, head,
       s"rename-column=$from->$to", newDdl, Nil, kind = "delta",
-      txns = carriedTxns(root, head), ts = commitTs.getOrElse(-1L),
+      ts = commitTs.getOrElse(-1L),
       colMap = (m.colMap - from) + (to -> m.physicalOf(from)),
       droppedPhys = m.droppedPhys))
   }
@@ -3001,8 +2900,7 @@ object TableLog {
     val newDdl = org.apache.spark.sql.types.StructType(
       st.fields.filterNot(_.name == name)).toDDL
     writeManifest(root, Manifest(head + 1, head, s"drop-column=$name",
-      newDdl, Nil, kind = "delta",
-      txns = carriedTxns(root, head), ts = commitTs.getOrElse(-1L),
+      newDdl, Nil, kind = "delta", ts = commitTs.getOrElse(-1L),
       colMap = m.colMap - name,
       droppedPhys = m.droppedPhys + m.physicalOf(name)))
   }
@@ -3078,7 +2976,7 @@ object TableLog {
     // bounded by the upstream churn. A gap (vacuumed-prefix start,
     // first sync, missing intermediate) or the periodic checkpoint
     // interval falls back to a full listing so replica resolution
-    // depth stays bounded.
+    // depth stays bounded (both through the one manifest step).
     var prevSynced = last
     (math.max(last + 1, 0L) to srcHead).foreach { v =>
       // a vacuumed upstream prefix simply starts the replica at the
@@ -3087,40 +2985,34 @@ object TableLog {
           checkpointExists(srcRoot, v)) {
         val m = readManifest(srcRoot, v)
         val parent = currentVersion(dstRoot)
-        val carried = carriedTxns(dstRoot, parent)
+        // the action's txn stamp advances the replica's high-water map
         val action = s"sync=$absSrc@$v+txn=$appId:$v"
-        val txns = carried +
-          (appId -> math.max(v, carried.getOrElse(appId, -1L)))
-        val deltaOk = parent >= 0 && prevSynced == v - 1 &&
-          !fullDue(parent + 1, checkpointInterval) &&
+        val contiguous = parent >= 0 && prevSynced == v - 1 &&
           (Files.exists(manifestPath(srcRoot, v - 1)) ||
             checkpointExists(srcRoot, v - 1))
-        out =
-          if (deltaOk) {
-            // STRUCTURAL entry diff, not a path diff: a merge-on-read
-            // commit grows a file's deletion vector under the SAME
-            // path — versionDelta would miss it, silently diverging
-            // the replica. Changed entries remove-then-re-add.
+        // STRUCTURAL entry diff against upstream v-1, not a path diff:
+        // a merge-on-read commit grows a file's deletion vector under
+        // the SAME path — versionDelta would miss it, silently
+        // diverging the replica. Changed entries remove-then-re-add.
+        // Without a contiguous parent every entry is an add.
+        val (adds, removes) =
+          if (!contiguous) (m.files, Nil)
+          else {
             val p = readManifest(srcRoot, v - 1)
             val pRendered = p.files.map(f => f.path -> renderEntry("f", f)).toMap
             val mRendered = m.files.map(f => f.path -> renderEntry("f", f)).toMap
-            val adds = m.files.filter(f =>
-              !pRendered.get(f.path).contains(mRendered(f.path)))
-            val removes = p.files.filter(pf =>
-              !mRendered.get(pf.path).contains(pRendered(pf.path))).map(_.path)
-            writeManifest(dstRoot, Manifest(parent + 1, parent, action,
-              m.schemaDdl, adds.map(absolutize(_, absSrc)), kind = "delta",
-              removes = removes.map(pp => if (pp.startsWith("/")) pp
-                else s"$absSrc/$pp").sorted,
-              txns = txns, ts = m.ts,
-              colMap = m.colMap, droppedPhys = m.droppedPhys,
-              checks = m.checks, props = m.props))
-          } else
-            writeManifest(dstRoot, Manifest(parent + 1, parent, action,
-              m.schemaDdl, m.files.map(absolutize(_, absSrc)),
-              txns = txns, ts = m.ts,
-              colMap = m.colMap, droppedPhys = m.droppedPhys,
-              checks = m.checks, props = m.props))
+            (m.files.filter(f => !pRendered.get(f.path).contains(mRendered(f.path))),
+              p.files.filter(pf =>
+                !mRendered.get(pf.path).contains(pRendered(pf.path))).map(_.path))
+          }
+        val addPaths = adds.map(_.path).toSet
+        out = commitManifest(dstRoot, Manifest(parent + 1, parent, action,
+            m.schemaDdl, Nil, ts = m.ts, colMap = m.colMap,
+            droppedPhys = m.droppedPhys, checks = m.checks, props = m.props),
+          m.files.filterNot(f => addPaths(f.path)).map(absolutize(_, absSrc)),
+          adds.map(absolutize(_, absSrc)),
+          removes.map(pp => if (pp.startsWith("/")) pp else s"$absSrc/$pp"),
+          if (contiguous) checkpointInterval else 1)
         prevSynced = v
       }
     }
@@ -3291,7 +3183,7 @@ object TableLog {
   def readWithJoinHint(spark: SparkSession, root: String,
                        maxBroadcastRows: Long = 1000000L,
                        asOf: Option[Long] = None): DataFrame = {
-    val df = read(spark, root, asOf)
+    val df = read(spark, root, asOf = asOf)
     statsRowCount(spark, root, asOf) match {
       case Some(n) if n <= maxBroadcastRows => broadcast(df)
       case _ => df

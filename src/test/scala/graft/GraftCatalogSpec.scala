@@ -40,7 +40,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       s"CALL graft.system.vacuum(path => '$root', keep_from => 2, dry_run => true)")
       .collect().map(_.getString(0)).toSeq
     assert(dry.nonEmpty)
-    assert(TableLog.read(spark, root, Some(0L)).count() == 100L,
+    assert(TableLog.read(spark, root, asOf = Some(0L)).count() == 100L,
       "dry run must not delete")
     val real = spark.sql(
       s"CALL graft.system.vacuum(path => '$root', keep_from => 2)")
@@ -372,7 +372,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val cutoff = TableLog.headerTsOf(root, 1L)
     spark.sql(s"CALL graft.system.vacuum(path => '$root', " +
       s"older_than_millis => ${cutoff}L)")
-    intercept[Exception] { TableLog.read(spark, root, Some(0L)).collect() }
+    intercept[Exception] { TableLog.read(spark, root, asOf = Some(0L)).collect() }
     assert(TableLog.read(spark, root).count() == 20L)
     // keep_from / older_than_millis are mutually exclusive and one
     // is required

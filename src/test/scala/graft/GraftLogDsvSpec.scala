@@ -67,13 +67,17 @@ class GraftLogDsvSpec extends AnyFunSuite {
     val root = freshRoot("sql")
     TableLog.commit(mkDf(0L until 800L), root, expr("k div 100"), 8, "overwrite")
     sqlRead(root).createOrReplaceTempView("glog_t")
-    val n = spark.sql(
+    val q = spark.sql(
       "SELECT count(*) AS n, sum(cents) AS s FROM glog_t WHERE k >= 700")
-      .collect()(0)
+    val n = q.collect()(0)
     assert(n.getLong(0) == 100L)
     assert(n.getLong(1) == (700L until 800L).map(_ * 10 + 1).sum)
     val (selected, total) = GraftLogProvider.lastScanPlan
     assert(total == 8 && selected == 1, s"expected 1/8 files, got $selected/$total")
+    // the scan reports its prune where an operator looks: EXPLAIN
+    val explained = q.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExtendedMode)
+    assert(explained.contains("files=1/8"), explained)
   }
 
   test("bloom equality probe prunes beyond zones on a scattered column") {
@@ -82,12 +86,14 @@ class GraftLogDsvSpec extends AnyFunSuite {
     // spans nearly the whole domain → zones alone keep everything
     val df = (0L until 800L).map(k => (k, (k % 16) * 100 + k / 16))
       .toDF("k", "cents")
-    TableLog.commitIndexed(df, root, expr("cents div 100"), numFiles = 16,
+    TableLog.commit(df, root, expr("cents div 100"), numFiles = 16,
       mode = "overwrite", bloomCols = Seq("k"))
     val hit = sqlRead(root).filter(col("k") === 437L)
     assert(hit.collect().map(_.getLong(0)).toSeq == Seq(437L))
     val (selected, total) = GraftLogProvider.lastScanPlan
-    val (zoneOnly, _) = TableLog.planFiles(root, "k", 437L, 437L)
+    val (zoneOnly, _) = TableLog.planFiles(root, Seq(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("k", 437L),
+      org.apache.spark.sql.sources.LessThanOrEqual("k", 437L)))
     assert(selected < zoneOnly.size,
       s"bloom should out-prune zones: $selected vs ${zoneOnly.size}/$total")
     // guaranteed miss prunes to zero files
@@ -223,7 +229,7 @@ class GraftLogDsvSpec extends AnyFunSuite {
       .option("layout", "k div 25").mode("overwrite").save()
     assert(TableLog.currentVersion(root) == 3L)
     assert(rows(TableLog.read(spark, root)) == rows(mkDf(1000L until 1020L)))
-    assert(rows(TableLog.read(spark, root, Some(2L))) == before)
+    assert(rows(TableLog.read(spark, root, asOf = Some(2L))) == before)
     // writing to a time-traveled relation is loud (Delta's rule)
     intercept[Exception] {
       mkDf(0L until 5L).write.format("graftlog").option("path", root)

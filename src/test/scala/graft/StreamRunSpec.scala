@@ -636,7 +636,7 @@ class StreamRunSpec extends AnyFunSuite {
       "streamed per-batch merges must equal the full batch refresh")
     // intermediate versions stay readable (snapshot isolation across
     // refreshes): version 0 is the first batch's partial alone
-    val v0 = TableLog.read(spark, root, Some(0L))
+    val v0 = TableLog.read(spark, root, asOf = Some(0L))
     assert(v0.agg(sum("cnt")).head.getLong(0) < streamedState.agg(sum("cnt")).head.getLong(0))
   }
 

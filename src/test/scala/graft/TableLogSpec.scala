@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThanOrEqual}
 import graft.sources.TableLog
 
 /** Pins the versioned table-format commit log: commit/append/AS-OF
@@ -9,8 +10,9 @@ import graft.sources.TableLog
   * (file counts asserted from planFiles AND the scan's inputFiles),
   * content-preserving compaction, copy-on-write merge (only
   * zone-affected files rewritten; result equals a whole-table
-  * ChangeLog merge), vacuum retention, and the atomic-rename
-  * optimistic-concurrency commit point.
+  * ChangeLog merge), vacuum retention, and the hard-link claim
+  * (link(2) fails if the version exists) as the optimistic-concurrency
+  * commit point.
   */
 class TableLogSpec extends AnyFunSuite {
   import SharedSpark.spark
@@ -29,6 +31,10 @@ class TableLogSpec extends AnyFunSuite {
   private def mkDf(ks: Seq[Long]) =
     ks.map(k => (k, k * 10 + 1)).toDF("k", "cents")
 
+  /** `lo <= c <= hi` as the planner's filter pair. */
+  private def range(c: String, lo: Any, hi: Any): Seq[Filter] =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+
   test("commit/append/read + AS-OF: every version stays readable and exact") {
     val root = freshRoot("asof")
     val v0 = TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 4, "overwrite")
@@ -37,10 +43,10 @@ class TableLogSpec extends AnyFunSuite {
     assert(v1 == 1L && TableLog.currentVersion(root) == 1L)
     assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 160L)))
     // AS-OF v0 unchanged by the later append (time travel through the store)
-    assert(rows(TableLog.read(spark, root, Some(0L))) == rows(mkDf(0L until 100L)))
+    assert(rows(TableLog.read(spark, root, asOf = Some(0L))) == rows(mkDf(0L until 100L)))
     // manifest row counts are exact (footer stats, not estimates)
     assert(TableLog.readManifest(root, 1L).totalRows == 160L)
-    intercept[IllegalArgumentException] { TableLog.read(spark, root, Some(9L)) }
+    intercept[IllegalArgumentException] { TableLog.read(spark, root, asOf = Some(9L)) }
   }
 
   test("zone pruning: planFiles skips non-intersecting files and the scan reads only survivors") {
@@ -48,13 +54,13 @@ class TableLogSpec extends AnyFunSuite {
     // 8 files over keys 0..799, range-clustered by k div 100 => per-file
     // key zones are tight 100-wide ranges
     TableLog.commit(mkDf(0L until 800L), root, expr("k div 100"), 8, "overwrite")
-    val (sel, total) = TableLog.planFiles(root, "k", 150L, 249L)
+    val (sel, total) = TableLog.planFiles(root, range("k", 150L, 249L))
     assert(total == 8)
     assert(sel.nonEmpty && sel.size < total,
       s"expected a strict prune, got ${sel.size}/$total")
     // the zone intersect is conservative AND sufficient: pruned read
     // equals the full-table filter
-    val pruned = TableLog.readRange(spark, root, "k", 150L, 249L)
+    val pruned = TableLog.read(spark, root, range("k", 150L, 249L))
     assert(rows(pruned) == rows(mkDf(150L to 249L)))
     // the executed scan touches ONLY the selected files (prune happens
     // BEFORE the scan, not as a post-filter)
@@ -62,9 +68,14 @@ class TableLogSpec extends AnyFunSuite {
     assert(pruned.inputFiles.toSet
       .map((s: String) => new java.net.URI(s).getPath) == selAbs)
     // an out-of-zone range reads zero files
-    val (none, _) = TableLog.planFiles(root, "k", 5000L, 6000L)
+    val (none, _) = TableLog.planFiles(root, range("k", 5000L, 6000L))
     assert(none.isEmpty)
-    assert(TableLog.readRange(spark, root, "k", 5000L, 6000L).count() == 0L)
+    assert(TableLog.read(spark, root, range("k", 5000L, 6000L)).count() == 0L)
+    // narrower integral columns zone as longs and prune alike
+    val rootI = freshRoot("zones_int")
+    TableLog.commit(mkDf(0L until 800L).select(col("k").cast("int").as("k"),
+      col("cents")), rootI, expr("k div 100"), 8, "overwrite")
+    assert(TableLog.planFiles(rootI, range("k", 150, 249))._1.size == sel.size)
   }
 
   test("compact: content preserved, small tail folded, big files untouched") {
@@ -87,6 +98,31 @@ class TableLogSpec extends AnyFunSuite {
     assert(bigBefore.subsetOf(after.files.map(_.path).toSet))
   }
 
+  test("compact bins the small tail in logical-column order, renamed or not") {
+    // six 25-row appends land in NON-key order, so only a zone-ordered
+    // sweep bins adjacent key ranges together; path order would pair
+    // 525..549 with 475..499
+    def drive(root: String, rename: Boolean): Seq[(Long, Long)] = {
+      TableLog.commit(mkDf(0L until 400L), root, expr("k div 100"), 4, "overwrite")
+      Seq(5, 3, 1, 0, 2, 4).foreach { i =>
+        TableLog.commit(mkDf((400L + i * 25) until (400L + (i + 1) * 25)),
+          root, expr("k div 100"), 1, "append")
+      }
+      if (rename) TableLog.renameColumn(root, "k", "kk")
+      val v = TableLog.compact(spark, root, if (rename) "kk" else "k",
+        targetRows = 50L, smallRows = 50L)
+      // zones stay keyed by the physical name "k" on both tables (a
+      // bin-less hash partition leaves a zone-less empty file)
+      TableLog.readManifest(root, v).files.filter(_.rows > 0L)
+        .map(f => (f.zMin("k"), f.zMax("k"))).sorted
+    }
+    val twin = drive(freshRoot("compact_twin"), rename = false)
+    val renamed = drive(freshRoot("compact_renamed"), rename = true)
+    assert(renamed == twin, s"renamed $renamed vs twin $twin")
+    // every file covers its own key range: no two files' zones overlap
+    assert(twin.zip(twin.tail).forall { case (a, b) => a._2 < b._1 }, twin.toString)
+  }
+
   test("merge: copy-on-write rewrites only zone-affected files; equals whole-table ChangeLog") {
     val root = freshRoot("merge")
     val base = mkDf(0L until 400L).withColumnRenamed("cents", "price")
@@ -97,8 +133,7 @@ class TableLogSpec extends AnyFunSuite {
         (k, 1L, if (k % 5 == 0) "D" else "U", k * 10 + 2)) ++
       (1000L until 1010L).map(k => (k, 1L, "U", k)))
       .toDF("k", "ver", "op", "new_price")
-    val v = TableLog.merge(base.filter(lit(false)), root, changes,
-      "k", expr("k div 100"), 2)
+    val v = TableLog.merge(root, changes, "k", expr("k div 100"), 2)
     val after = TableLog.readManifest(root, v)
     assert(after.action == "merge")
     // untouched zones carried by reference
@@ -111,7 +146,7 @@ class TableLogSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == expect)
     // AS-OF v0 still shows the pre-merge table
-    assert(TableLog.read(spark, root, Some(0L)).count() == 400L)
+    assert(TableLog.read(spark, root, asOf = Some(0L)).count() == 400L)
   }
 
   test("vacuum: dead files deleted, shared files survive, retention boundary enforced") {
@@ -122,7 +157,7 @@ class TableLogSpec extends AnyFunSuite {
     val deleted = TableLog.vacuum(root, keepFrom = 2L)
     // v0/v1 manifests dropped; their files survive ONLY if referenced by v2
     assert(deleted.isEmpty, s"v2 references every file, nothing should die: $deleted")
-    intercept[IllegalArgumentException] { TableLog.read(spark, root, Some(0L)) }
+    intercept[IllegalArgumentException] { TableLog.read(spark, root, asOf = Some(0L)) }
     assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 200L)))
     // overwrite makes v0..v2's files dead, vacuum reclaims them
     TableLog.commit(mkDf(0L until 10L), root, expr("k div 50"), 1, "overwrite")
@@ -244,14 +279,14 @@ class TableLogSpec extends AnyFunSuite {
         before.files.map(f => (f.path, f.rows, f.zMin, f.zMax)))
       assert(after.schemaDdl == before.schemaDdl && after.ts == before.ts &&
         after.txns == before.txns)
-      assert(rows(TableLog.read(spark, root, Some(1L))) ==
+      assert(rows(TableLog.read(spark, root, asOf = Some(1L))) ==
         rows(mkDf(0L until 160L)))
       // a later vacuum retires the binary checkpoint like the text one
       TableLog.commit(mkDf(0L until 10L), root, expr("k div 25"), 1, "overwrite")
       TableLog.vacuum(root, 3L)
       assert(!Files.exists(Paths.get(root, "_log", "v00000001.checkpoint.parquet")),
         "dead binary checkpoints must retire")
-      intercept[IllegalArgumentException] { TableLog.read(spark, root, Some(1L)) }
+      intercept[IllegalArgumentException] { TableLog.read(spark, root, asOf = Some(1L)) }
     } finally TableLog.parquetCheckpointThreshold = prev
   }
 
@@ -362,6 +397,11 @@ class TableLogSpec extends AnyFunSuite {
       TableLog.commit(Seq((901L, -2L)).toDF("k", "cents"), root,
         expr("k div 25"), 1, "append", txnTag = Some("ckspec:0")) }
     assert(e4.getMessage.contains("c_pos=1"), e4.getMessage)
+    // 5. the bloom-indexed write (same commit, one more step on its files)
+    val e5 = intercept[IllegalArgumentException] {
+      TableLog.commit(Seq((905L, -5L)).toDF("k", "cents"), root,
+        expr("k div 25"), 1, "append", bloomCols = Seq("k"), bloomBits = 64) }
+    assert(e5.getMessage.contains("c_pos=1"), e5.getMessage)
     // nothing landed, and CLEAN writes are unaffected
     assert(TableLog.currentVersion(root) == 2L)
     TableLog.commit(Seq((902L, 7L)).toDF("k", "cents"), root,
@@ -385,10 +425,10 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.dropConstraint(root, "c_pos") // v6
     TableLog.commit(Seq((904L, -3L)).toDF("k", "cents"), root,
       expr("k div 25"), 1, "append") // now fine
-    val e5 = intercept[IllegalArgumentException] {
+    val e6 = intercept[IllegalArgumentException] {
       TableLog.commit(Seq((2000000L, 1L)).toDF("k", "cents"), root,
         expr("k div 25"), 1, "append") }
-    assert(e5.getMessage.contains("c_k=1"), e5.getMessage)
+    assert(e6.getMessage.contains("c_k=1"), e6.getMessage)
     intercept[IllegalArgumentException] {
       TableLog.dropConstraint(root, "nope") }
   }
@@ -406,13 +446,43 @@ class TableLogSpec extends AnyFunSuite {
         smallRows = Long.MaxValue, checkpointInterval = interval)
       TableLog.commit(mkDf(160L until 200L), root, expr("k div 25"), 2,
         "append", checkpointInterval = interval)
+      // every other data writer: v4 bloom-indexed commit, v5 CoW
+      // merge, v6 merge-on-read, v7 SQL UPDATE (single-key DML
+      // carrier), v8 composite-key UPDATE (copy-on-write DML carrier),
+      // v9 recluster
+      TableLog.commit(mkDf(200L until 240L), root, expr("k div 25"), 2,
+        "append", checkpointInterval = interval, bloomCols = Seq("k"),
+        bloomBits = 256)
+      def changes(ks: Seq[Long], bump: Long) =
+        ks.map(k => (k, 1L, if (k % 7 == 0) "D" else "U", k * 10 + bump))
+          .toDF("k", "ver", "op", "new_cents")
+      TableLog.merge(root, changes(Seq(3L, 14L, 150L, 300L), 2L), "k",
+        expr("k div 25"), 2, valCol = "cents", newValCol = "new_cents",
+        checkpointInterval = interval)
+      TableLog.mergeMor(spark, root, changes(Seq(5L, 21L, 180L, 301L), 3L),
+        "k", expr("k div 25"), 2, valCol = "cents", newValCol = "new_cents",
+        checkpointInterval = interval)
+      spark.read.format("graftlog").option("path", root).load()
+        .createOrReplaceTempView("t_delta_twin")
+      spark.sql("UPDATE t_delta_twin SET cents = cents + 4 WHERE k < 30")
+      spark.read.format("graftlog").option("path", root)
+        .option("primaryKey", "k, cents").load()
+        .createOrReplaceTempView("t_delta_twin_c")
+      spark.sql("UPDATE t_delta_twin_c SET cents = cents + 1000000 WHERE k >= 190")
+      TableLog.recluster(spark, root, expr("k div 50"), numFiles = 4,
+        checkpointInterval = interval)
     }
     drive(rootD, 10); drive(rootF, 1)
     // version-for-version, the delta chain resolves to the same
-    // CONTENT as the all-full twin
-    for (v <- 0L to 3L)
-      assert(rows(TableLog.read(spark, rootD, Some(v))) ==
-        rows(TableLog.read(spark, rootF, Some(v))), s"version $v")
+    // CONTENT, file count and live-row count as the all-full twin
+    assert(TableLog.currentVersion(rootD) == 9L && TableLog.currentVersion(rootF) == 9L)
+    for (v <- 0L to 9L) {
+      assert(rows(TableLog.read(spark, rootD, asOf = Some(v))) ==
+        rows(TableLog.read(spark, rootF, asOf = Some(v))), s"version $v")
+      val (mD, mF) = (TableLog.readManifest(rootD, v), TableLog.readManifest(rootF, v))
+      assert(mD.files.size == mF.files.size && mD.totalRows == mF.totalRows,
+        s"version $v: ${mD.files.size}/${mD.totalRows} vs ${mF.files.size}/${mF.totalRows}")
+    }
     // physical claim: v1/v3 manifests carry ONLY add lines, v2
     // (compaction) removes + adds — never a full listing
     def lines(v: Long) = Files.readAllLines(
@@ -453,10 +523,10 @@ class TableLogSpec extends AnyFunSuite {
     // v1 was a DELTA whose parent v0 is gone — the checkpoint vacuum
     // wrote at v1 keeps it (and v2's replay through it) resolvable
     assert(Files.exists(Paths.get(root, "_log", "v00000001.checkpoint")))
-    assert(rows(TableLog.read(spark, root, Some(1L))) == rows(mkDf(0L until 80L)))
-    assert(rows(TableLog.read(spark, root, Some(2L))) == rows(mkDf(0L until 90L)))
+    assert(rows(TableLog.read(spark, root, asOf = Some(1L))) == rows(mkDf(0L until 80L)))
+    assert(rows(TableLog.read(spark, root, asOf = Some(2L))) == rows(mkDf(0L until 90L)))
     // retention is real: v0 is gone, loudly
-    intercept[IllegalArgumentException] { TableLog.read(spark, root, Some(0L)) }
+    intercept[IllegalArgumentException] { TableLog.read(spark, root, asOf = Some(0L)) }
     // idempotent: a second vacuum at the same boundary changes nothing
     assert(TableLog.vacuum(root, keepFrom = 1L).isEmpty)
   }
@@ -484,17 +554,44 @@ class TableLogSpec extends AnyFunSuite {
     assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 70L)))
   }
 
-  test("commitChecked: violations reject before ANY IO, NULL passes (SQL CHECK), counts named") {
+  test("txn marks survive metadata-only commits: a re-delivered txn stays a no-op") {
+    val root = freshRoot("txnmeta")
+    TableLog.commitTxn(mkDf(0L until 40L), root, expr("k div 25"), 2,
+      appId = "sinkA", txn = 0L)
+    TableLog.commitTxn(mkDf(40L until 60L), root, expr("k div 25"), 1,
+      appId = "sinkA", txn = 1L)
+    // every metadata-only commit must carry the high-water map forward,
+    // or a re-delivered txn 1 lands twice and breaks exactly-once
+    val steps: Seq[(String, () => Long)] = Seq(
+      "setProperties" -> (() => TableLog.setProperties(root, Map("owner" -> "etl"))),
+      "unsetProperties" -> (() => TableLog.unsetProperties(root, Seq("owner"))),
+      "addConstraint" -> (() => TableLog.addConstraint(spark, root, "c_pos", "cents > 0")),
+      "dropConstraint" -> (() => TableLog.dropConstraint(root, "c_pos")),
+      "addColumn" -> (() => TableLog.addColumn(root, "note", "STRING")),
+      "restore" -> (() => TableLog.restore(root, 1L)))
+    steps.foreach { case (name, step) =>
+      val v = step()
+      assert(TableLog.lastTxn(root, "sinkA") == 1L, s"$name dropped the txn mark")
+      val before = rows(TableLog.read(spark, root))
+      assert(TableLog.commitTxn(mkDf(40L until 60L), root, expr("k div 25"), 1,
+        appId = "sinkA", txn = 1L) == v, s"re-delivery after $name landed")
+      assert(TableLog.currentVersion(root) == v &&
+        rows(TableLog.read(spark, root)) == before, s"re-delivery after $name")
+    }
+    assert(TableLog.read(spark, root).count() == 60L)
+  }
+
+  test("commit checks: violations reject before ANY IO, NULL passes (SQL CHECK), counts named") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val root = freshRoot("checked")
     val checks = Seq("pos" -> "cents > 0", "bounded" -> "cents <= 500")
-    assert(TableLog.commitChecked(mkDf(0L until 20L), root, expr("k div 25"), 2,
-      "overwrite", checks) == 0L)
+    assert(TableLog.commit(mkDf(0L until 20L), root, expr("k div 25"), 2,
+      "overwrite", checks = checks) == 0L)
     // violating batch: k=60..99 → cents 601..991 breaks `bounded`
     val ex = intercept[IllegalArgumentException] {
-      TableLog.commitChecked(mkDf(0L until 100L), root, expr("k div 25"), 2,
-        "append", checks)
+      TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 2,
+        "append", checks = checks)
     }
     assert(ex.getMessage.contains("bounded=50"), ex.getMessage)
     // rejected BEFORE any IO: version unchanged AND no v1 data dir
@@ -506,8 +603,8 @@ class TableLogSpec extends AnyFunSuite {
     // SQL CHECK semantics: a NULL expression result is NOT a violation
     val withNull = Seq((30L, Some(301L)), (31L, None))
       .toDF("k", "cents").select(col("k"), col("cents").cast("long"))
-    assert(TableLog.commitChecked(withNull, root, expr("k div 25"), 1,
-      "append", checks) == 1L)
+    assert(TableLog.commit(withNull, root, expr("k div 25"), 1,
+      "append", checks = checks) == 1L)
     assert(TableLog.read(spark, root).count() == 22L)
   }
 
@@ -519,13 +616,13 @@ class TableLogSpec extends AnyFunSuite {
     val df = (0L until 1600L)
       .map(k => (k, Math.floorMod(k * 2654435761L, 4096L)))
       .toDF("k", "v")
-    TableLog.commitIndexed(df, root, expr("k div 100"), numFiles = 16,
+    TableLog.commit(df, root, expr("k div 100"), numFiles = 16,
       mode = "overwrite", bloomCols = Seq("v"), bloomBits = 1 << 12)
     // no false negatives: for a sample of present values, the owning
     // file is always selected and the pruned read finds the row
     for (k <- Seq(0L, 7L, 123L, 999L, 1599L)) {
       val v = Math.floorMod(k * 2654435761L, 4096L)
-      val got = TableLog.readPoint(spark, root, "v", v)
+      val got = TableLog.read(spark, root, Seq(EqualTo("v", v)))
         .select("k").collect().map(_.getLong(0)).toSet
       val want = (0L until 1600L)
         .filter(x => Math.floorMod(x * 2654435761L, 4096L) == v).toSet
@@ -534,17 +631,17 @@ class TableLogSpec extends AnyFunSuite {
     // real pruning: a present value keeps strictly fewer files than
     // the zone-only plan (which keeps ~all — v is scattered)
     val v0 = Math.floorMod(123L * 2654435761L, 4096L)
-    val (pSel, pTot) = TableLog.planFilesPoint(root, "v", v0)
-    val (zSel, _) = TableLog.planFiles(root, "v", v0, v0)
+    val (pSel, pTot) = TableLog.planFiles(root, Seq(EqualTo("v", v0)))
+    val (zSel, _) = TableLog.planFiles(root, range("v", v0, v0))
     assert(pTot == 16 && zSel.size > 12,
       s"scattered column should defeat zones, zone plan kept ${zSel.size}")
     assert(pSel.size < zSel.size,
       s"bloom must out-prune zones: ${pSel.size} vs ${zSel.size}")
     // a value present nowhere prunes to (near) nothing and reads zero
     // rows; 4099 is outside the mod-4096 domain entirely
-    val (mSel, _) = TableLog.planFilesPoint(root, "v", 4099L)
+    val (mSel, _) = TableLog.planFiles(root, Seq(EqualTo("v", 4099L)))
     assert(mSel.isEmpty, s"out-of-zone miss should prune all, kept ${mSel.size}")
-    assert(TableLog.readPoint(spark, root, "v", 4099L).count() == 0L)
+    assert(TableLog.read(spark, root, Seq(EqualTo("v", 4099L))).count() == 0L)
     // blooms survive the manifest text roundtrip byte-exactly
     val fe = TableLog.readManifest(root, 0L).files.head
     assert(fe.blooms.contains("v") && fe.blooms("v").length == (1 << 12) / 64)
@@ -559,19 +656,19 @@ class TableLogSpec extends AnyFunSuite {
     // whole domain → zone pruning keeps everything
     TableLog.commit(df, root, pmod(col("k") * lit(2654435761L), lit(16L)),
       numFiles = 16, mode = "overwrite")
-    val (s0, t0) = TableLog.planFilesMulti(root,
-      Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val (s0, t0) = TableLog.planFiles(root,
+      range("xb", 10L, 20L) ++ range("yb", 10L, 20L))
     assert(t0 == 16 && s0.size == t0,
       s"scattered layout should prune nothing, kept ${s0.size}/$t0")
     TableLog.recluster(spark, root,
       (ZOrder.zkey(col("xb"), col("yb"), 8) / lit(256)).cast("long"),
       numFiles = 16)
-    val (s1, t1) = TableLog.planFilesMulti(root,
-      Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val (s1, t1) = TableLog.planFiles(root,
+      range("xb", 10L, 20L) ++ range("yb", 10L, 20L))
     assert(t1 == 16 && s1.size < s0.size,
       s"recluster must make the 2-D prune real: ${s1.size}/${s0.size}")
     // content-preserving + online: both versions read the same rows
-    def keys(v: Long) = TableLog.read(spark, root, Some(v))
+    def keys(v: Long) = TableLog.read(spark, root, asOf = Some(v))
       .select("k").collect().map(_.getLong(0)).toSet
     assert(keys(0L) == keys(1L) && keys(1L) == (0L until 4096L).toSet)
   }
@@ -588,10 +685,10 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.commit(df, root,
       (ZOrder.zkey(col("xb"), col("yb"), 8) / lit(256)).cast("long"),
       numFiles = 16, mode = "overwrite")
-    val (multi, total) = TableLog.planFilesMulti(root,
-      Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
-    val (sx, _) = TableLog.planFiles(root, "xb", 10L, 20L)
-    val (sy, _) = TableLog.planFiles(root, "yb", 10L, 20L)
+    val (multi, total) = TableLog.planFiles(root,
+      range("xb", 10L, 20L) ++ range("yb", 10L, 20L))
+    val (sx, _) = TableLog.planFiles(root, range("xb", 10L, 20L))
+    val (sy, _) = TableLog.planFiles(root, range("yb", 10L, 20L))
     assert(total == 16)
     // the tile query prunes MULTIPLICATIVELY: strictly fewer files
     // than either single-dimension plan, which in turn prune strictly
@@ -599,8 +696,8 @@ class TableLogSpec extends AnyFunSuite {
       s"multi=${multi.size} xb=${sx.size} yb=${sy.size}")
     assert(sx.size < total && sy.size < total)
     // correctness: the pruned read equals the brute-force filter
-    val got = TableLog.readRangeMulti(spark, root,
-        Seq(("xb", 10L, 20L), ("yb", 10L, 20L)))
+    val got = TableLog.read(spark, root,
+        range("xb", 10L, 20L) ++ range("yb", 10L, 20L))
       .select("k").collect().map(_.getLong(0)).toSet
     val want = (0L until 4096L)
       .filter(k => (k % 64) >= 10 && (k % 64) <= 20 && (k / 64) >= 10 && (k / 64) <= 20)
@@ -629,7 +726,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(!Files.exists(ck1), "v1's stale checkpoint must be deleted")
     assert(!Files.exists(Paths.get(root, "_log", "v00000001.manifest")))
     val ex = intercept[IllegalArgumentException] {
-      TableLog.read(spark, root, Some(1L))
+      TableLog.read(spark, root, asOf = Some(1L))
     }
     assert(ex.getMessage.contains("vacuumed or never committed"))
     // history can no longer resurrect v1, and surviving versions are intact
@@ -688,7 +785,7 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.commit(base, rootM, expr("k div 100"), 4, "overwrite")
     TableLog.commit(base, rootC, expr("k div 100"), 4, "overwrite")
     val vM = TableLog.mergeMor(spark, rootM, changes, "k", expr("k div 100"), 2)
-    val vC = TableLog.merge(base, rootC, changes, "k", expr("k div 100"), 2)
+    val vC = TableLog.merge(rootC, changes, "k", expr("k div 100"), 2)
     def kv(root: String) = TableLog.read(spark, root)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // dv read == rewrite read == direct latest-wins recompute
@@ -707,8 +804,8 @@ class TableLogSpec extends AnyFunSuite {
     // the CoW twin DID rewrite its hit files
     assert(TableLog.versionDelta(rootC, vC)._2.nonEmpty)
     // point reads honor the vector: a dv-deleted key vanishes
-    assert(TableLog.readPoint(spark, rootM, "k", 5L).count() == 0L)
-    assert(TableLog.readPoint(spark, rootM, "k", 7L)
+    assert(TableLog.read(spark, rootM, Seq(EqualTo("k", 5L))).count() == 0L)
+    assert(TableLog.read(spark, rootM, Seq(EqualTo("k", 7L)))
       .collect().map(_.getLong(1)).toSeq == Seq(169L))
     // change feed: dv growth = row-exact deletes of the OLD values
     val feed = TableLog.readChangeFeed(spark, rootM, vM, vM)
@@ -762,7 +859,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(byK(0L) == null && byK(55L) == "p55")
     assert(rows(head.select("k", "cents")) == rows(mkDf(0L until 60L)))
     // AS-OF the pre-evolution version keeps the OLD schema
-    assert(TableLog.read(spark, root, Some(0L)).schema.fieldNames.toSeq ==
+    assert(TableLog.read(spark, root, asOf = Some(0L)).schema.fieldNames.toSeq ==
       Seq("k", "cents"))
     // post-evolution appends must match the ACCRETED signature now
     intercept[IllegalArgumentException] {
@@ -890,14 +987,14 @@ class TableLogSpec extends AnyFunSuite {
     val a = new Thread(() => {
       aVersion = TableLog.commitWithRetry(action = "merge") {
         attempts += 1
-        TableLog.merge(spark.emptyDataFrame, mroot, change(1L, 701L), "k",
+        TableLog.merge(mroot, change(1L, 701L), "k",
           if (attempts == 1) gated(col("k")) else expr("k div 25"), 2)
       }
     })
     a.start()
     assert(RaceGate.started.await(60, TimeUnit.SECONDS), "A never started")
     // B's merge to the same key wins the contested version
-    TableLog.merge(null, mroot, change(1L, 777L), "k", expr("k div 25"), 2)
+    TableLog.merge(mroot, change(1L, 777L), "k", expr("k div 25"), 2)
     RaceGate.go.countDown()
     a.join(120000)
     assert(!a.isAlive, "merging writer hung")
@@ -1058,7 +1155,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.readManifest(root, 3L).files.map(_.path).sorted ==
       TableLog.readManifest(root, 0L).files.map(_.path).sorted)
     // rolled-back versions stay readable AS OF (history intact)
-    assert(rows(TableLog.read(spark, root, Some(2L))) == rows(mkDf(0L until 160L)))
+    assert(rows(TableLog.read(spark, root, asOf = Some(2L))) == rows(mkDf(0L until 160L)))
     // the txn high-water map carries FORWARD through the restore:
     // a replay of batch 0 after the rollback is still a no-op
     assert(TableLog.lastTxn(root, "app") == 0L)
@@ -1258,7 +1355,7 @@ class TableLogSpec extends AnyFunSuite {
     assert(head.schema("k").dataType == org.apache.spark.sql.types.LongType)
     assert(rows(head) == rows(mkDf(0L until 80L)))
     // v0 stays readable AS OF under its ORIGINAL narrow schema
-    assert(TableLog.read(spark, root, Some(0L))
+    assert(TableLog.read(spark, root, asOf = Some(0L))
       .schema("k").dataType == org.apache.spark.sql.types.IntegerType)
     // a NARROW straggler batch lands as-is under the wide DDL
     TableLog.commit(mkDf(80L until 90L)
@@ -1268,9 +1365,9 @@ class TableLogSpec extends AnyFunSuite {
     assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 90L)))
     // zone pruning stays exact across mixed-width files (footer stats
     // zone int32 and int64 identically as longs)
-    val (sel, total) = TableLog.planFiles(root, "k", 0L, 24L)
+    val (sel, total) = TableLog.planFiles(root, range("k", 0L, 24L))
     assert(sel.nonEmpty && sel.size < total)
-    assert(rows(TableLog.readRange(spark, root, "k", 0L, 24L)) ==
+    assert(rows(TableLog.read(spark, root, range("k", 0L, 24L))) ==
       rows(mkDf(0L until 25L)))
     // WITHOUT evolve, a widened batch is still drift — loud
     intercept[IllegalArgumentException] {
@@ -1305,8 +1402,8 @@ class TableLogSpec extends AnyFunSuite {
     // version-for-version content equality, all entries foreign
     assert(TableLog.currentVersion(dst) == 1L)
     (0L to 1L).foreach { v =>
-      assert(rows(TableLog.read(spark, dst, Some(v))) ==
-        rows(TableLog.read(spark, src, Some(v))), s"replica v$v drifted")
+      assert(rows(TableLog.read(spark, dst, asOf = Some(v))) ==
+        rows(TableLog.read(spark, src, asOf = Some(v))), s"replica v$v drifted")
       assert(TableLog.readManifest(dst, v).files.forall(_.path.startsWith("/")))
     }
     // upstream timestamps carry over (TIMESTAMP AS OF aligns)
@@ -1314,7 +1411,7 @@ class TableLogSpec extends AnyFunSuite {
       TableLog.headerTsOf(dst, 1L) == 2000L)
     // replica vacuum never touches upstream bytes
     assert(TableLog.vacuum(dst, 1L).isEmpty)
-    assert(rows(TableLog.read(spark, src, Some(0L))) == rows(mkDf(0L until 50L)))
+    assert(rows(TableLog.read(spark, src, asOf = Some(0L))) == rows(mkDf(0L until 50L)))
     // exactly-once: a fully-synced re-run is a no-op; an advanced
     // upstream syncs exactly the delta
     assert(TableLog.syncShallow(src, dst) == 1L)
@@ -1357,8 +1454,8 @@ class TableLogSpec extends AnyFunSuite {
     assert(deltaLines <= 3, s"delta replica manifest must be churn-sized: $deltaLines")
     // and the delta chain resolves to the exact upstream content
     (0L to 4L).foreach(v => assert(
-      rows(TableLog.read(spark, dst3, Some(v))) ==
-        rows(TableLog.read(spark, src3, Some(v))), s"replica v$v"))
+      rows(TableLog.read(spark, dst3, asOf = Some(v))) ==
+        rows(TableLog.read(spark, src3, asOf = Some(v))), s"replica v$v"))
     // a merge-on-read upstream version (DV growth under the SAME
     // path) must still replicate exactly — the structural entry diff,
     // where a path diff would silently skip the grown vector
@@ -1382,12 +1479,12 @@ class TableLogSpec extends AnyFunSuite {
     assert(dry.nonEmpty, "v0's exclusive files must be reported deletable")
     // ZERO mutation: nothing on disk moved, v0 still readable
     assert(Files.walk(Paths.get(root)).count() == before)
-    assert(rows(TableLog.read(spark, root, Some(0L))) == rows(mkDf(0L until 100L)))
+    assert(rows(TableLog.read(spark, root, asOf = Some(0L))) == rows(mkDf(0L until 100L)))
     // the real vacuum deletes EXACTLY the dry list
     val real = TableLog.vacuum(root, 1L)
     assert(real.sorted == dry.sorted,
       s"dry run must predict the real deletion: $dry vs $real")
-    intercept[IllegalArgumentException] { TableLog.read(spark, root, Some(0L)) }
+    intercept[IllegalArgumentException] { TableLog.read(spark, root, asOf = Some(0L)) }
   }
 
   test("column mapping: rename/drop are metadata-only, probes translate, re-add never resurrects") {
@@ -1405,7 +1502,7 @@ class TableLogSpec extends AnyFunSuite {
     // reads surface the NEW name; values untouched; AS-OF keeps OLD
     assert(TableLog.read(spark, root).select("price")
       .agg(sum("price")).head.getLong(0) == (0L until 400L).map(_ * 10 + 1).sum)
-    assert(TableLog.read(spark, root, Some(0L)).columns.toSeq ==
+    assert(TableLog.read(spark, root, asOf = Some(0L)).columns.toSeq ==
       Seq("k", "cents", "src"))
     // appends must use the new logical name (drift gate) and land
     // PHYSICALLY under the old name so one read schema covers all
@@ -1418,7 +1515,7 @@ class TableLogSpec extends AnyFunSuite {
       (0L until 500L).map(_ * 10 + 1).sum)
     // zone probes translate logical→physical: range pruning by the
     // NEW name still prunes (zones were written under 'cents')
-    val (sel, total) = TableLog.planFilesMulti(root, Seq(("price", 1L, 500L)))
+    val (sel, total) = TableLog.planFiles(root, range("price", 1L, 500L))
     assert(sel.size < total, s"rename must not break pruning: ${sel.size}/$total")
     // SQL pushdown under the new name: value-exact
     assert(spark.read.format("graftlog").option("path", root).load()
@@ -1548,7 +1645,7 @@ class TableLogSpec extends AnyFunSuite {
     val root = freshRoot("bloomscheme")
     val docs = (0L until 400L).map(k => (k, s"$k", k * 10 + 1))
       .toDF("k", "sk", "cents")
-    TableLog.commitIndexed(docs, root, expr("k div 100"), 4, "overwrite",
+    TableLog.commit(docs, root, expr("k div 100"), 4, "overwrite",
       bloomCols = Seq("sk"))
     val m = TableLog.readManifest(root, 0L)
     assert(m.files.forall(f => f.blooms.contains("sk") && !f.strBlooms("sk")),
@@ -1556,7 +1653,7 @@ class TableLogSpec extends AnyFunSuite {
     // every string point probe still finds its row (pre-fix: the
     // mis-keyed probe returned guaranteed-empty with no error)
     (0L until 400L by 37L).foreach { k =>
-      val got = TableLog.readPointStr(spark, root, "sk", s"$k")
+      val got = TableLog.read(spark, root, Seq(EqualTo("sk", s"$k")))
         .select("k").collect().map(_.getLong(0)).toSeq
       assert(got == Seq(k), s"string probe over a long bloom lost key $k")
     }
@@ -1567,7 +1664,7 @@ class TableLogSpec extends AnyFunSuite {
     // and the mirror: a STRING-built bloom is tagged, survives the
     // manifest roundtrip, and the LONG probe path refuses to probe it
     val root2 = freshRoot("bloomscheme2")
-    TableLog.commitIndexed(docs, root2, expr("k div 100"), 4, "overwrite",
+    TableLog.commit(docs, root2, expr("k div 100"), 4, "overwrite",
       bloomStrCols = Seq("sk"))
     val m2 = TableLog.readManifest(root2, 0L)
     assert(m2.files.forall(_.strBlooms("sk")),
@@ -1581,26 +1678,25 @@ class TableLogSpec extends AnyFunSuite {
     // prune a point probe; the bloom must
     val docs = (0L until 800L).map(k => (k, s"u$k", k * 10 + 1))
       .toDF("k", "sk", "cents")
-    TableLog.commitIndexed(docs, root, expr("k div 100"), 8, "overwrite",
+    TableLog.commit(docs, root, expr("k div 100"), 8, "overwrite",
       bloomStrCols = Seq("sk"))
     val m = TableLog.readManifest(root, 0L)
     assert(m.files.forall(_.blooms.contains("sk")))
     // NEVER false-negative: every real key's plan keeps its file and
     // the pruned read returns exactly its row
     (0L until 800L by 97L).foreach { k =>
-      val got = TableLog.readPointStr(spark, root, "sk", s"u$k")
+      val got = TableLog.read(spark, root, Seq(EqualTo("sk", s"u$k")))
         .select("k", "cents").collect()
       assert(got.toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
         Seq((k, k * 10 + 1)), s"lost key u$k")
     }
     // an in-zone miss prunes STRICTLY below the zone-only plan (the
     // bloom's contribution) and reads nothing
-    val (zoneOnly, total) = TableLog.planFilesStr(root,
-      Seq(("sk", "u33a", "u33a")))
-    val (bloomed, _) = TableLog.planFilesPointStr(root, "sk", "u33a")
+    val (zoneOnly, total) = TableLog.planFiles(root, range("sk", "u33a", "u33a"))
+    val (bloomed, _) = TableLog.planFiles(root, Seq(EqualTo("sk", "u33a")))
     assert(total == 8 && bloomed.size < zoneOnly.size,
       s"bloom must out-prune zones: ${bloomed.size} !< ${zoneOnly.size}")
-    assert(TableLog.readPointStr(spark, root, "sk", "u33a").count() == 0L)
+    assert(TableLog.read(spark, root, Seq(EqualTo("sk", "u33a"))).count() == 0L)
     // the SQL surface probes the same bloom: plan-level file counts
     spark.read.format("graftlog").option("path", root).load()
       .filter(col("sk") === "u33a").count()
@@ -1628,10 +1724,10 @@ class TableLogSpec extends AnyFunSuite {
       "overwrite")
     // ["blog","crawl"] keeps exactly 2 of 4 — arxiv sorts below the
     // range, docs above it
-    val (sel, total) = TableLog.planFilesStr(root, Seq(("source", "blog", "crawl")))
+    val (sel, total) = TableLog.planFiles(root, range("source", "blog", "crawl"))
     assert(total == 4 && sel.size == 2, s"expected 2/4 files, got ${sel.size}/$total")
     // the pruned read equals the full-table filter, value-for-value
-    val pruned = TableLog.readRangeStr(spark, root, Seq(("source", "blog", "crawl")))
+    val pruned = TableLog.read(spark, root, range("source", "blog", "crawl"))
     assert(pruned.count() == 200L)
     assert(pruned.agg(sum("cents")).collect()(0).getLong(0) ==
       docs.filter(col("source").isin("blog", "crawl"))
@@ -1682,8 +1778,8 @@ class TableLogSpec extends AnyFunSuite {
     val mt = TableLog.readManifest(rootT, 0L)
     assert(mt.files.head.sMaxTrunc("source") &&
       mt.files.head.sMax("source") == "12345678901234")
-    assert(TableLog.readRangeStr(spark, rootT,
-      Seq(("source", "12345678901234Z", "~"))).count() == 2L,
+    assert(TableLog.read(spark, rootT,
+      range("source", "12345678901234Z", "~")).count() == 2L,
       "range read anchored above the stored prefix must not lose rows")
     // an UN-truncated max excludes exactly
     val e2 = e.copy(sMaxTrunc = Set.empty)
