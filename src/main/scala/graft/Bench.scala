@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute load average, or 0.0 where /proc is unavailable. */
   private def loadAvg(): Double =
@@ -28,13 +27,7 @@ object Bench {
     val gateWaitedSec = (System.nanoTime() - gateT0) / 1e9
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=d03,q01 → bench just matching queries (debug).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit helper: print the formatted physical plan of one or
   * more SparkEntry queries without executing them.
@@ -14,14 +13,7 @@ object Explain {
         System.err.println("usage: graft.Explain <sfDir> <name>[,<name>...]")
         sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.split(",").foreach { n =>
       val fn = SparkEntry.queries.getOrElse(n,

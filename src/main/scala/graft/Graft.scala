@@ -13,9 +13,13 @@ object Graft {
   /** Build a local session tuned the way we'd tune a cluster job:
     * AQE on (runtime re-plan + skew-join), shuffle partitions sized to
     * the parallelism (not the 200 default), UTC for oracle parity, and
-    * our custom Catalyst expressions registered for SQL use.
+    * our custom Catalyst expressions registered for SQL use. The one
+    * session factory: every main and the test session build here.
+    * `overrides` carries deployment settings only — paths and the app
+    * name (e.g. the test warehouse dir) — applied last.
     */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def session(cores: Int = Runtime.getRuntime.availableProcessors(),
+              overrides: Map[String, String] = Map.empty): SparkSession = {
     val s = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -30,6 +34,7 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(overrides)
       .getOrCreate()
     registerFunctions(s)
     s

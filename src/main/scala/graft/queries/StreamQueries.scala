@@ -23,6 +23,55 @@ object StreamQueries {
   private def events(s: SparkSession, dir: String): DataFrame =
     Graft.table(s, dir, "events")
 
+  /** The click→purchase interval join st07/st13/st18/st19/st21 share:
+    * clicks (user_id, click_id, tc) joined to purchases (p_user_id,
+    * purchase_id, tp) of the same user at most 10 minutes later, each
+    * branch watermarked 30 minutes.
+    */
+  private def intervalJoin(e: DataFrame, joinType: String): DataFrame = {
+    val c = e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("click_id"),
+        col("ts").as("tc"))
+      .withWatermark("tc", "30 minutes")
+    val p = e.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
+        col("ts").as("tp"))
+      .withWatermark("tp", "30 minutes")
+    c.join(p, col("user_id") === col("p_user_id") &&
+        col("tc") <= col("tp") &&
+        col("tc") >= col("tp") - expr("interval 10 minutes"),
+      joinType)
+  }
+
+  /** Upper end (epoch micros) of an interval join's closed region:
+    * `minutes` before min(max click ts, max purchase ts). A side with
+    * no rows never advances its watermark, so the global min watermark
+    * stays at epoch and nothing is ever evicted/sealed: the closed
+    * region is empty (Long.MinValue) when EITHER side is empty. mc and
+    * mp are read separately because least() skips NULLs (in Spark AND
+    * DuckDB) — least(mc, NULL) = mc would claim a non-empty closed
+    * region on a purchase-free instance the engine never flushes.
+    */
+  private def closedUs(events: DataFrame, minutes: Long): Long = {
+    val extRow = events.agg(
+        max(when(col("event_type") === "click", unix_micros(col("ts")))).as("mc"),
+        max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("mp"))
+      .head()
+    if (extRow.isNullAt(0) || extRow.isNullAt(1)) Long.MinValue
+    else math.min(extRow.getLong(0), extRow.getLong(1)) - minutes * 60L * 1000000L
+  }
+
+  /** `df` written as 4 parquet files under the scratch dir `tag` and
+    * streamed back one file per trigger, so the engine genuinely
+    * delivers ≥4 micro-batches.
+    */
+  private def fileStream(s: SparkSession, df: DataFrame, tag: String): DataFrame = {
+    val src = graft.sources.TidyIO.scratchDir(tag)
+    df.repartition(4).write.mode("overwrite").parquet(src)
+    s.readStream.schema(s.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1: tumbling-window aggregate, driven through the streaming
     // engine. Complete mode: final sink state == batch aggregate
@@ -102,17 +151,7 @@ object StreamQueries {
     // completes the pair; watermarks only bound the state buffer.
     "st07_interval_join" -> ((s, dir) => {
       StreamRun.onEvents(s, dir, OutputMode.Append()) { e =>
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("tc"))
-          .withWatermark("tc", "30 minutes")
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("tp"))
-          .withWatermark("tp", "30 minutes")
-        c.join(p, col("user_id") === col("p_user_id") &&
-            col("tc") <= col("tp") &&
-            col("tc") >= col("tp") - expr("interval 10 minutes"))
+        intervalJoin(e, "inner")
           .select(col("user_id"), col("click_id"), col("purchase_id"),
             ((unix_micros(col("tp")) - unix_micros(col("tc"))) / lit(1000000L))
               .cast("long").as("lag_s"))
@@ -135,38 +174,14 @@ object StreamQueries {
     // computed from the batch table (a 1-row min/max aggregate) and
     // mirrored verbatim in the DuckDB oracle.
     "st13_interval_left" -> ((s, dir) => {
-      val extRow = events(s, dir).agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("mc"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("mp"))
-        .head()
-      // A side with no rows never advances its watermark, so the global
-      // min watermark stays at epoch and nothing is ever evicted/sealed:
-      // the closed region is empty when EITHER side is empty. mc and mp
-      // are read separately because least() skips NULLs (in Spark AND
-      // DuckDB) — least(mc, NULL) = mc would claim a non-empty closed
-      // region on a purchase-free instance the engine never flushes.
-      val closedUs =
-        if (extRow.isNullAt(0) || extRow.isNullAt(1)) Long.MinValue
-        else math.min(extRow.getLong(0), extRow.getLong(1)) -
-          (30L + 10L + 1L) * 60L * 1000000L
+      val closed = closedUs(events(s, dir), 30L + 10L + 1L)
       StreamRun.onEvents(s, dir, OutputMode.Append()) { e =>
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("tc"))
-          .withWatermark("tc", "30 minutes")
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("tp"))
-          .withWatermark("tp", "30 minutes")
-        c.join(p, col("user_id") === col("p_user_id") &&
-            col("tc") <= col("tp") &&
-            col("tc") >= col("tp") - expr("interval 10 minutes"),
-          "left_outer")
+        intervalJoin(e, "left_outer")
           .select(col("user_id"), col("click_id"), col("purchase_id"),
             ((unix_micros(col("tp")) - unix_micros(col("tc"))) / lit(1000000L))
               .cast("long").as("lag_s"),
             unix_micros(col("tc")).as("tc_us"))
-      }.filter(col("tc_us") <= lit(closedUs))
+      }.filter(col("tc_us") <= lit(closed))
         .orderBy("user_id", "click_id", "purchase_id")
     }),
 
@@ -184,18 +199,7 @@ object StreamQueries {
     // key semantics), mirrored by the oracle's correlated EXISTS.
     "st18_interval_semi" -> ((s, dir) => {
       StreamRun.onEvents(s, dir, OutputMode.Append()) { e =>
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("tc"))
-          .withWatermark("tc", "30 minutes")
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("tp"))
-          .withWatermark("tp", "30 minutes")
-        c.join(p, col("user_id") === col("p_user_id") &&
-            col("tc") <= col("tp") &&
-            col("tc") >= col("tp") - expr("interval 10 minutes"),
-          "left_semi")
+        intervalJoin(e, "left_semi")
           .select(col("user_id"), col("click_id"),
             unix_micros(col("tc")).as("tc_us"))
       }.orderBy("user_id", "click_id")
@@ -237,11 +241,10 @@ object StreamQueries {
       val tmp = graft.sources.TidyIO.scratchDir("graft_tar_stream")
       graft.sources.TarShards.write(
         VectorQueries.tarCorpusEntries(s, dir), "shard", "name", "payload", tmp)
-      StreamRun.onSource(s, graft.sources.TarShards.readStream(s, tmp),
-          OutputMode.Complete()) { parsed =>
-          VectorQueries.tarSampleStats(parsed)
-        }
-        .orderBy("doc_id")
+      StreamRun.run(s, graft.sources.TarShards.readStream(s, tmp),
+          StreamRun.Sink.Memory(OutputMode.Complete()),
+          VectorQueries.tarSampleStats)
+        .table.get.orderBy("doc_id")
     }),
 
     // S19/st21: FULL-OUTER stream-stream interval join through the
@@ -262,27 +265,9 @@ object StreamQueries {
     // never advances its watermark — the st13 least()-skips-NULLs
     // lesson).
     "st21_interval_full" -> ((s, dir) => {
-      val extRow = events(s, dir).agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("mc"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("mp"))
-        .head()
-      val closedUs =
-        if (extRow.isNullAt(0) || extRow.isNullAt(1)) Long.MinValue
-        else math.min(extRow.getLong(0), extRow.getLong(1)) -
-          (30L + 10L + 1L) * 60L * 1000000L
+      val closed = closedUs(events(s, dir), 30L + 10L + 1L)
       StreamRun.onEvents(s, dir, OutputMode.Append()) { e =>
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("tc"))
-          .withWatermark("tc", "30 minutes")
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("tp"))
-          .withWatermark("tp", "30 minutes")
-        c.join(p, col("user_id") === col("p_user_id") &&
-            col("tc") <= col("tp") &&
-            col("tc") >= col("tp") - expr("interval 10 minutes"),
-          "full_outer")
+        intervalJoin(e, "full_outer")
           .select(coalesce(col("user_id"), col("p_user_id")).as("uid"),
             col("click_id"), col("purchase_id"),
             ((unix_micros(col("tp")) - unix_micros(col("tc"))) / lit(1000000L))
@@ -290,8 +275,8 @@ object StreamQueries {
             unix_micros(col("tc")).as("tc_us"),
             unix_micros(col("tp")).as("tp_us"))
       }.filter(
-          (col("click_id").isNotNull && col("tc_us") <= lit(closedUs)) ||
-          (col("click_id").isNull && col("tp_us") <= lit(closedUs)))
+          (col("click_id").isNotNull && col("tc_us") <= lit(closed)) ||
+          (col("click_id").isNull && col("tp_us") <= lit(closed)))
         .select("uid", "click_id", "purchase_id", "lag_s")
         .orderBy("uid", "click_id", "purchase_id")
     }),
@@ -312,32 +297,15 @@ object StreamQueries {
     // lesson). Pair emission inside it is exact (inner join), sums
     // are integer seconds.
     "st19_join_agg" -> ((s, dir) => {
-      val extRow = events(s, dir).agg(
-          max(when(col("event_type") === "click", unix_micros(col("ts")))).as("mc"),
-          max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("mp"))
-        .head()
-      val closedUs =
-        if (extRow.isNullAt(0) || extRow.isNullAt(1)) Long.MinValue
-        else math.min(extRow.getLong(0), extRow.getLong(1)) -
-          (30L + 10L + 2L) * 60L * 1000000L
+      val closed = closedUs(events(s, dir), 30L + 10L + 2L)
       StreamRun.onEvents(s, dir, OutputMode.Append()) { e =>
-        val c = e.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("tc"))
-          .withWatermark("tc", "30 minutes")
-        val p = e.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("tp"))
-          .withWatermark("tp", "30 minutes")
-        c.join(p, col("user_id") === col("p_user_id") &&
-            col("tc") <= col("tp") &&
-            col("tc") >= col("tp") - expr("interval 10 minutes"))
+        intervalJoin(e, "inner")
           .groupBy(window(col("tc"), "1 hour").as("w"))
           .agg(count(lit(1)).as("n_pairs"),
             sum(((unix_micros(col("tp")) - unix_micros(col("tc"))) /
               lit(1000000L)).cast("long")).as("sum_lag_s"))
       }
-        .filter(unix_micros(col("w.end")) <= lit(closedUs))
+        .filter(unix_micros(col("w.end")) <= lit(closed))
         .select(unix_micros(col("w.start")).as("hour_start_us"),
           col("n_pairs"), col("sum_lag_s"))
         .orderBy("hour_start_us")
@@ -439,13 +407,9 @@ object StreamQueries {
         expr("CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)")
           .as("cents"))
       val keys = Seq("o_custkey"); val ms = Seq("cents")
-      val src = graft.sources.TidyIO.scratchDir("st25_src")
-      o.repartition(4).write.mode("overwrite").parquet(src)
+      val stream = fileStream(s, o, "st25_src")
       val root = graft.sources.TidyIO.scratchDir("st25_mv")
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      StreamRun.runForeachBatch(s, stream) { (batch, id) =>
+      StreamRun.run(s, stream, StreamRun.Sink.ForeachBatch { (batch, id) =>
         // txn guard = exactly-once: foreachBatch re-delivers a batch
         // with the SAME id on recovery, and re-merging the same delta
         // would double-count — skip ids at or below the store's
@@ -462,7 +426,7 @@ object StreamQueries {
           graft.sources.TableLog.commit(state, root, col("o_custkey"),
             numFiles = 2, mode = "overwrite", txnTag = Some(s"st25:$id"))
         }
-      }
+      })
       graft.sources.TableLog.read(s, root)
         .select(col("o_custkey"), col("cnt").as("n_orders"),
           col("sum_cents"), col("min_cents"), col("max_cents"),
@@ -551,18 +515,14 @@ object StreamQueries {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)")
           .as("cents"))
-      val src = TidyIO.scratchDir("st26_src")
-      o.repartition(4).write.mode("overwrite").parquet(src)
+      val stream = fileStream(s, o, "st26_src")
       val root = TidyIO.scratchDir("st26_tbl")
       val layout = expr("k div 500")
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      StreamRun.runForeachBatch(s, stream) { (batch, id) =>
+      StreamRun.run(s, stream, StreamRun.Sink.ForeachBatch { (batch, id) =>
         if (!batch.isEmpty)
           TableLog.commitTxn(batch, root, layout, numFiles = 2,
             appId = "st26", txn = id, checkpointInterval = 4)
-      }
+      })
       // failure-recovery path: batch 0 re-delivered after the run —
       // MUST be skipped by the txn high-water mark
       TableLog.commitTxn(o, root, layout, numFiles = 2,
@@ -594,15 +554,11 @@ object StreamQueries {
         col("o_orderkey").cast("long").as("k"),
         expr("CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT)")
           .as("cents"))
-      val src = TidyIO.scratchDir("st33_src")
-      o.repartition(4).write.mode("overwrite").parquet(src)
+      val stream = fileStream(s, o, "st33_src")
       val root = TidyIO.scratchDir("st33_tbl")
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-      StreamRun.runToSink(s, stream, "graftlog", Map(
+      StreamRun.run(s, stream, StreamRun.Sink.Format("graftlog", Map(
         "path" -> root, "layout" -> "k div 500", "numFiles" -> "2",
-        "appId" -> "st33", "checkpointInterval" -> "4"))
+        "appId" -> "st33", "checkpointInterval" -> "4")))
       val headBefore = TableLog.currentVersion(root)
       // recovery replay: batch 0 re-delivered under the same appId
       TableLog.commit(o, root, expr("k div 500"), 2, "append", 4,
@@ -619,9 +575,9 @@ object StreamQueries {
 
     // S32/st34: the FULL LAKEHOUSE PIPE — table-to-table streaming
     // replication composed ENTIRELY from the two native connectors:
-    // `readStream.format(graftlog-cdf)` tails the upstream commit
-    // log, a stateless transform keeps the insert images and drops
-    // the CDF stamps, and `writeStream.format("graftlog")` lands each
+    // `readStream.format("graftlog")` with readChangeFeed tails the
+    // upstream commit log, a stateless transform keeps the insert
+    // images and drops the CDF stamps, and `writeStream.format("graftlog")` lands each
     // micro-batch as one exactly-once commit on the downstream table
     // (appId:batchId) — Delta's "stream one table into another"
     // composition, zero user code in the loop (st29 certified the
@@ -645,14 +601,15 @@ object StreamQueries {
       TableLog.commit(o.filter(r === 0L), src, layout, 8, "overwrite")
       TableLog.commit(o.filter(r === 1L), src, layout, 4, "append")
       TableLog.commit(o.filter(r === 2L), src, layout, 4, "append")
-      val feed = s.readStream.format("graft.sources.GraftLogCdfProvider")
+      val feed = s.readStream.format("graftlog")
+        .option("readChangeFeed", "true")
         .option("path", src).option("startingVersion", "0")
         .option("maxVersionsPerBatch", "1").load()
         .filter(col("_change_type") === "insert")
         .drop("_change_type", "_commit_version")
-      StreamRun.runToSink(s, feed, "graftlog", Map(
+      StreamRun.run(s, feed, StreamRun.Sink.Format("graftlog", Map(
         "path" -> dst, "layout" -> "k div 500", "numFiles" -> "4",
-        "appId" -> "st34"))
+        "appId" -> "st34")))
       TableLog.read(s, dst)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("k")).as("n_keys"),
@@ -695,8 +652,8 @@ object StreamQueries {
       val feed = s.readStream
         .option("startingVersion", "0").option("maxVersionsPerBatch", "1")
         .table("graft.st35db.src")
-      StreamRun.runToTable(s, feed, "graft.st35db.dst",
-        Map("layout" -> "k div 500", "numFiles" -> "4", "appId" -> "st35"))
+      StreamRun.run(s, feed, StreamRun.Sink.Table("graft.st35db.dst",
+        Map("layout" -> "k div 500", "numFiles" -> "4", "appId" -> "st35")))
       val cat = s.sessionState.catalogManager.catalog("graft")
         .asInstanceOf[graft.sources.GraftCatalog]
       val dst = cat.tableLocation(Identifier.of(Array("st35db"), "dst"))
@@ -737,14 +694,15 @@ object StreamQueries {
         layout, 4, "append")
       TableLog.commit(o.filter(pmod(col("k"), lit(3L)) === 2L), root,
         layout, 4, "append")
-      val src = s.readStream.format("graft.sources.GraftLogCdfProvider")
+      val src = s.readStream.format("graftlog")
+        .option("readChangeFeed", "true")
         .option("path", root).option("startingVersion", "0").load()
-      StreamRun.onSource(s, src, OutputMode.Complete()) { feed =>
-        feed.groupBy(col("_commit_version").as("version"),
+      StreamRun.run(s, src, StreamRun.Sink.Memory(OutputMode.Complete()),
+        _.groupBy(col("_commit_version").as("version"),
             col("_change_type").as("change_type"))
           .agg(count(lit(1)).as("n_rows"),
-            sum("cents").as("sum_cents"))
-      }.orderBy("version", "change_type")
+            sum("cents").as("sum_cents")))
+        .table.get.orderBy("version", "change_type")
     }),
 
     // S28/st30: streaming CDC-APPLY sink — the upsert twin of st26's
@@ -783,16 +741,12 @@ object StreamQueries {
         .select(col("k"), lit(1L).as("ver"),
           when(col("r") === 0L, "D").otherwise("U").as("op"),
           (col("price") + lit(100L) * col("r")).as("new_price"))
-      val src = TidyIO.scratchDir("st30_src")
-      changes.repartition(4).write.mode("overwrite").parquet(src)
-      val schema = s.read.parquet(src).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
+      val stream = fileStream(s, changes, "st30_src")
       def applyBatch(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
         if (!batch.isEmpty && id > TableLog.lastTxn(root, "st30"))
           TableLog.mergeMor(s, root, batch, "k", layout, numFiles = 2,
             dvMaxFrac = 1.0, txnTag = Some(s"st30:$id"))
-      StreamRun.runForeachBatch(s, stream)(applyBatch)
+      StreamRun.run(s, stream, StreamRun.Sink.ForeachBatch(applyBatch))
       // failure-recovery path: batch 0 re-delivered after the run
       // with the FULL change set — must be skipped by the guard
       // (replay_noop: the head version is unchanged by the replay)
@@ -847,9 +801,10 @@ object StreamQueries {
       TableLog.commit(o.filter(m === 1L), srcRoot, layout, 4, "append")
       // snapshot reset: m1's rows leave — the feed carries the deletes
       TableLog.commit(o.filter(m === 0L), srcRoot, layout, 8, "overwrite")
-      val src = s.readStream.format("graft.sources.GraftLogCdfProvider")
+      val src = s.readStream.format("graftlog")
+        .option("readChangeFeed", "true")
         .option("path", srcRoot).option("startingVersion", "0").load()
-      StreamRun.runForeachBatch(s, src) { (batch, id) =>
+      StreamRun.run(s, src, StreamRun.Sink.ForeachBatch { (batch, id) =>
         if (!batch.isEmpty && id > TableLog.lastTxn(mvRoot, "st31")) {
           val sgn = when(col("_change_type") === "insert", 1L).otherwise(-1L)
           val delta = batch
@@ -864,7 +819,7 @@ object StreamQueries {
           TableLog.commit(state.filter(col("cnt") =!= 0L), mvRoot,
             col("cust"), 2, "overwrite", txnTag = Some(s"st31:$id"))
         }
-      }
+      })
       TableLog.read(s, mvRoot)
         .select(col("cust"), col("cnt").as("n_orders"), col("sum_cents"))
         .orderBy("cust")
@@ -904,14 +859,15 @@ object StreamQueries {
         commitTs = Some(2000L))
       TableLog.commit(o.filter(m === 2L), root, layout, 4, "append",
         commitTs = Some(3000L))
-      val src = s.readStream.format("graft.sources.GraftLogCdfProvider")
+      val src = s.readStream.format("graftlog")
+        .option("readChangeFeed", "true")
         .option("path", root)
         .option("startingTimestamp", "1500")
         .option("maxVersionsPerBatch", "1").load()
-      StreamRun.onSource(s, src, OutputMode.Complete()) { feed =>
-        feed.groupBy(col("_commit_version").as("version"))
-          .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents"))
-      }.orderBy("version")
+      StreamRun.run(s, src, StreamRun.Sink.Memory(OutputMode.Complete()),
+        _.groupBy(col("_commit_version").as("version"))
+          .agg(count(lit(1)).as("n_rows"), sum("cents").as("sum_cents")))
+        .table.get.orderBy("version")
     }),
 
     // S8: streaming windowed DISTINCT count — the per-window unique-

@@ -1,11 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
-import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow, Offset => OffsetV2}
-import org.apache.spark.sql.execution.streaming.{Offset, Source}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graftx.StreamBridge
-import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** S27/st29 — streaming read FROM the commit log: the change-data-feed
@@ -16,20 +12,20 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * incrementally processes exactly the rows each commit changed,
   * never rescanning the snapshot.
   *
-  * Wire-up: a DSv1 `StreamSourceProvider` (the stable batch-DataFrame
-  * `Source` API — the right fit here because each micro-batch IS a
-  * driver-planned batch read of manifest-listed files, exactly what
-  * [[TableLog.readChangeFeed]] builds). Offsets are COMMIT VERSIONS:
-  * `getOffset` reports the table head, and `getBatch((a, b])` replays
-  * versions a+1..b through the change feed — so micro-batch
-  * boundaries always fall on commit boundaries and a recovered query
-  * resumes from the last committed version (the offset WAL stores the
-  * version number; replay is deterministic because manifests are
-  * immutable).
+  * Wire-up: `readStream.format("graftlog").option("readChangeFeed",
+  * "true")` — [[GraftLogProvider]] serves plain and change-feed
+  * streams under one format name, as Delta's source does. A DSv1
+  * `Source` (the stable batch-DataFrame API — the right fit here
+  * because each micro-batch IS a driver-planned batch read of
+  * manifest-listed files, exactly what [[TableLog.readChangeFeed]]
+  * builds); offsets, pacing and the drift guard are the shared
+  * [[CommitVersionSource]] path, and a window `(a, b]` replays
+  * versions a+1..b through the change feed.
   *
   * Options: `path` (table root, required), `startingVersion` (first
   * version the FIRST batch includes; default 0 = replay the initial
-  * snapshot as inserts, Delta's startingVersion contract).
+  * snapshot as inserts, Delta's startingVersion contract),
+  * `startingTimestamp`, `maxVersionsPerBatch`.
   *
   * Scale shape: each micro-batch scans only the files its commit
   * window churned (two column-pruned scans — adds and removes), and
@@ -38,186 +34,18 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * composes downstream (st29 drives a grouped aggregate over it
   * through real MicroBatchExecution).
   */
-class GraftLogCdfProvider extends StreamSourceProvider {
-
-  private def norm(params: Map[String, String]): Map[String, String] =
-    params.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-
-  /** Head DDL resolved ONCE per (provider, path) — `sourceSchema` and
-    * `createSource` are two engine calls on the same provider
-    * instance, and resolving the head in each is a TOCTOU: an
-    * `evolve=true` commit landing between them leaves the ANALYZED
-    * schema and the source's runtime schema diverged (the drift guard
-    * protects batches vs the source's DDL, not vs the schema the
-    * query was analyzed under). Same class as the DSv2 single-
-    * resolution rule in [[GraftLogProvider]].
-    */
-  private val resolvedDdl =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ddlFor(root: String): String =
-    resolvedDdl.computeIfAbsent(root, r => {
-      val head = TableLog.currentVersion(r)
-      require(head >= 0L, s"graftlog-cdf source needs a committed table at $r")
-      TableLog.schemaDdlOf(r, head)
-    })
-
-  override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String]): (String, StructType) = {
-    val p = norm(parameters)
-    ("graftlog-cdf", GraftLogCdfSource.cdfSchemaFromDdl(ddlFor(p("path"))))
-  }
-
-  override def createSource(ctx: SQLContext, metadataPath: String,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String]): Source = {
-    val p = norm(parameters)
-    val root = p("path")
-    require(!(p.contains("startingversion") && p.contains("startingtimestamp")),
-      "graftlog-cdf: startingVersion and startingTimestamp are mutually exclusive")
-    // startingTimestamp (epoch millis, Delta's option): the stream
-    // begins at the EARLIEST version committed at or after the
-    // instant — a commit before the stream's start was already part
-    // of some snapshot the consumer could have batch-read; a
-    // timestamp beyond the last commit starts at head+1 (wait for
-    // future commits).
-    val startV = p.get("startingtimestamp").map { t =>
-      GraftLogCdfSource.firstVersionAtOrAfter(root, t.toLong)
-    }.getOrElse(p.getOrElse("startingversion", "0").toLong)
-    new GraftLogCdfSource(ctx, root, startV,
-      p.get("maxversionsperbatch").map(_.toLong), Some(ddlFor(root)))
-  }
-}
-
 class GraftLogCdfSource(ctx: SQLContext, root: String, startV: Long,
                         maxVersionsPerBatch: Option[Long] = None,
                         boundDdl: Option[String] = None)
-    extends Source with SupportsTriggerAvailableNow {
-
-  require(maxVersionsPerBatch.forall(_ >= 1L),
-    s"graftlog-cdf: maxVersionsPerBatch must be >= 1, got $maxVersionsPerBatch")
-
-  /** Head captured by [[prepareForTriggerAvailableNow]] — the bound an
-    * AvailableNow run drains to (commits landing mid-run wait for the
-    * next run). Long.MaxValue until prepared: continuous triggers pace
-    * toward the LIVE head.
-    */
-  @volatile private var availableNowTarget: Long = Long.MaxValue
-
-  /** Implementing the trait ourselves (instead of letting the engine
-    * wrap the source in AvailableNowSourceWrapper) is what makes the
-    * PER-BATCH VERSION CAP work under Trigger.AvailableNow: the
-    * wrapper freezes ONE offset at prepare time, so a capped getOffset
-    * would freeze the first window and the run would stop
-    * maxVersionsPerBatch versions in. With the admission-control path
-    * the engine hands [[latestOffset]] the last committed offset every
-    * trigger, and the run drains to the prepared head in bounded
-    * steps — Delta's maxFilesPerTrigger-under-AvailableNow semantics
-    * at commit granularity.
-    */
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = TableLog.currentVersion(root)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  /** Paced offset for the admission-control engine path: at most
-    * `maxVersionsPerBatch` commit versions beyond the engine's last
-    * committed offset (`start` — WAL-recovered, so pacing is
-    * restart-exact), never beyond the live head or the AvailableNow
-    * target. Returning the base itself signals no-new-data.
-    */
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val head = math.min(TableLog.currentVersion(root), availableNowTarget)
-    if (head < 0L) null
-    else {
-      val base = Option(start).map(_.json.trim.toLong).getOrElse(startV - 1L)
-      val capped = maxVersionsPerBatch
-        .map(m => math.min(head, base + m)).getOrElse(head)
-      if (capped < 0L) null else LongOffset(math.max(base, capped))
-    }
-  }
-
-  override def reportLatestOffset(): OffsetV2 = {
-    val head = TableLog.currentVersion(root)
-    if (head < 0L) null else LongOffset(head)
-  }
-
-  /** The table DDL captured ONCE at stream start — the schema every
-    * micro-batch is bound under (positionally, via the StreamBridge).
-    * [[getBatch]] requires each window's head DDL to still equal it:
-    * after a mid-stream `evolve=true` commit the feed's column order
-    * shifts (the accreted column lands BEFORE the CDF stamps), so
-    * binding the new window under the stale schema would read the
-    * accreted column as `_change_type` — garbage, not an error. Delta
-    * fails an evolved streaming read loudly and asks for a restart;
-    * so do we.
-    */
-  private val createdDdl: String = boundDdl.getOrElse {
-    val head = TableLog.currentVersion(root)
-    require(head >= 0L, s"graftlog-cdf source needs a committed table at $root")
-    TableLog.schemaDdlOf(root, head)
-  }
+    extends CommitVersionSource(ctx, root, Some(startV), maxVersionsPerBatch,
+      boundDdl, "graftlog-cdf") {
 
   override val schema: StructType = GraftLogCdfSource.cdfSchemaFromDdl(createdDdl)
 
-  /** Last batch window's end — advanced by [[getBatch]]; the base the
-    * per-batch version cap paces from. Instance state only (a
-    * restarted source re-learns it from the first recovered batch):
-    * the cap is a RATE LIMIT, not a correctness input — replay
-    * correctness rides the offset WAL alone.
-    */
-  @volatile private var lastBatchEnd: Long = startV - 1L
-
-  /** The table head IS the offset — commit versions are the stream's
-    * clock. No head yet (empty store) → no offset, engine waits.
-    * With `maxVersionsPerBatch` the reported offset is capped at
-    * `lastBatchEnd + max` (Delta's maxFilesPerTrigger shape at
-    * version granularity): a backlog of thousands of commits — a
-    * consumer starting from version 0 on a year-old table — replays
-    * as bounded micro-batches instead of one giant catch-up batch
-    * whose state update the sink must absorb in one transaction.
-    */
-  override def getOffset: Option[Offset] = {
-    val head = TableLog.currentVersion(root)
-    if (head < 0L) None
-    else {
-      val capped = maxVersionsPerBatch
-        .map(m => math.min(head, math.max(lastBatchEnd, startV - 1L) + m))
-        .getOrElse(head)
-      if (capped < 0L) None else Some(LongOffset(capped))
-    }
-  }
-
-  // recovery hands back a SerializedOffset whose json is the number
-  private def ver(o: Offset): Long = o match {
-    case LongOffset(v) => v
-    case other => other.json.trim.toLong
-  }
-
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val fromV = start.map(ver(_) + 1L).getOrElse(startV)
-    val toV = ver(end)
-    lastBatchEnd = math.max(lastBatchEnd, toV)
-    if (fromV > toV) StreamBridge.emptyStreaming(ctx, schema)
-    else {
-      // schema-drift guard: the window resolves under toV's manifest
-      // DDL, and the micro-batch binds POSITIONALLY under the schema
-      // captured at stream start — they must agree or the stamps
-      // mis-bind. Loud restart error, never garbage.
-      val ddlAtEnd = TableLog.schemaDdlOf(root, toV)
-      if (!GraftLogCdfSource.sameShape(ddlAtEnd, createdDdl))
-        throw new IllegalStateException(
-          s"graftlog-cdf: table schema changed within the stream " +
-            s"(started under [$createdDdl], version $toV has " +
-            s"[$ddlAtEnd]) — restart the streaming query to pick up " +
-            "the new schema")
-      StreamBridge.asStreaming(ctx,
-        TableLog.readChangeFeed(ctx.sparkSession, root, fromV, toV), schema)
-    }
-  }
-
-  override def stop(): Unit = ()
+  override protected def window(snapshot: Boolean, fromV: Long,
+                                toV: Long): DataFrame =
+    StreamBridge.asStreaming(ctx,
+      TableLog.readChangeFeed(ctx.sparkSession, root, fromV, toV), schema)
 }
 
 object GraftLogCdfSource {
@@ -233,18 +61,6 @@ object GraftLogCdfSource {
     def shape(d: String) = StructType.fromDDL(d)
       .fields.map(f => (f.name, f.dataType)).toSeq
     shape(ddlA) == shape(ddlB)
-  }
-
-  /** The feed's schema: the HEAD manifest's DDL (nullable — files
-    * written before an evolution null-fill) plus the two CDF stamps.
-    * Must match [[TableLog.readChangeFeed]]'s column order exactly:
-    * the source declares it and every micro-batch is re-planned
-    * under it verbatim.
-    */
-  def cdfSchema(root: String): StructType = {
-    val head = TableLog.currentVersion(root)
-    require(head >= 0L, s"graftlog-cdf source needs a committed table at $root")
-    cdfSchemaFromDdl(TableLog.schemaDdlOf(root, head))
   }
 
   /** EARLIEST live version committed at or after `ts` — the

@@ -119,21 +119,23 @@ class GraftLogProvider extends TableProvider with DataSourceRegister
     require(!(p.contains("startingversion") && p.contains("startingtimestamp")),
       "graftlog stream: startingVersion and startingTimestamp are mutually exclusive")
     val maxV = p.get("maxversionsperbatch").map(_.toLong)
-    if (isCdfStream(p)) {
-      val startV = p.get("startingtimestamp").map { t =>
-        GraftLogCdfSource.firstVersionAtOrAfter(root, t.toLong)
-      }.getOrElse(p.getOrElse("startingversion", "0").toLong)
-      new GraftLogCdfSource(ctx, root, startV, maxV,
+    // startingTimestamp (epoch millis, Delta's option): the stream
+    // begins at the EARLIEST version committed at or after the
+    // instant — a commit before the stream's start was already part
+    // of some snapshot the consumer could have batch-read; a
+    // timestamp beyond the last commit starts at head+1 (wait for
+    // future commits).
+    val startV = p.get("startingtimestamp").map { t =>
+      GraftLogCdfSource.firstVersionAtOrAfter(root, t.toLong)
+    }.orElse(p.get("startingversion").map(_.toLong))
+    if (isCdfStream(p))
+      new GraftLogCdfSource(ctx, root, startV.getOrElse(0L), maxV,
         Some(streamDdlFor(root)))
-    } else {
-      val startV = p.get("startingtimestamp").map { t =>
-        GraftLogCdfSource.firstVersionAtOrAfter(root, t.toLong)
-      }.orElse(p.get("startingversion").map(_.toLong))
+    else
       new GraftLogStreamSource(ctx, root, startV,
         skipChangeCommits =
           p.get("skipchangecommits").exists(_.equalsIgnoreCase("true")),
         maxVersionsPerBatch = maxV, boundDdl = Some(streamDdlFor(root)))
-    }
   }
 
   /** S31/st33 — the NATIVE streaming sink: `writeStream

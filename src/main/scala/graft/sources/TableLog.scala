@@ -977,7 +977,9 @@ object TableLog {
 
   /** The entries of the parquet files one write job left under the
     * attempt directory `rel` — the one listing + footer-stat step
-    * every data write ends in (slot writes and compaction bins).
+    * every data write ends in. A 0-row file (an empty slot, or the
+    * empty frame of a delete-only merge) is left out: no manifest
+    * lists a file that holds no rows for every later scan to open.
     */
   private def writtenFiles(spark: SparkSession, root: String,
                            rel: String): Seq[FileEntry] = {
@@ -985,7 +987,7 @@ object TableLog {
       .map(_.getFileName.toString)
       .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
       .toSeq.sorted
-    footerStats(spark, root, names.map(n => s"$rel/$n"))
+    footerStats(spark, root, names.map(n => s"$rel/$n")).filter(_.rows > 0L)
   }
 
   /** Write a (f: file basename, k: suppressed key) frame as a DV
@@ -2204,34 +2206,35 @@ object TableLog {
       .sortBy(f => (f.zMin.getOrElse(ozc, Long.MaxValue), f.path))
     val keep = m.files.filterNot(folds)
     if (small.size < 2) return parent // nothing worth rewriting
-    // q50 bin assignment: bin = floor(cumulative-rows-before / target)
-    val bins = small.zip(small.scanLeft(0L)(_ + _.liveRows))
+    // q50 bin assignment: bin = floor(cumulative-rows-before / target),
+    // renumbered densely (one small file spanning more than targetRows
+    // skips raw ids) so each bin is its own exact slot 0..nBins-1
+    val raw = small.zip(small.scanLeft(0L)(_ + _.liveRows))
       .map { case (f, before) => (f.path, before / targetRows) }
-    val v = parent + 1
+    val dense = raw.map(_._2).distinct.zipWithIndex.toMap
+    val nBins = dense.size
     // file-name -> bin as a literal map column: codegen'd O(1) lookup
     // per row (names are part-<idx>-<jobUUID> — unique across versions)
-    val binByName: Map[String, Long] = bins.map { case (rel, b) =>
-      rel.substring(rel.lastIndexOf('/') + 1) -> b
+    val binByName: Map[String, Long] = raw.map { case (rel, b) =>
+      rel.substring(rel.lastIndexOf('/') + 1) -> dense(b).toLong
     }.toMap
-    val nBins = bins.map(_._2).distinct.size
     val srcPaths = small.map(f => resolvePath(root, f.path))
-    // __bin and the DV file column materialize BEFORE applyDv: the
+    // the bin and the DV file column materialize BEFORE applyDv: the
     // side-file DV branch may anti-join, after which
-    // input_file_name() is no longer valid
+    // input_file_name() is no longer valid. The bin rides as the
+    // __graft_lay layout carrier, which writeDataFiles consumes.
     val withBin = applyDv(root, spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(m.physicalDdl))
       .parquet(srcPaths: _*)
       .withColumn("__graft_file", input_file_name())
-      .withColumn("__bin", element_at(typedlit(binByName),
+      .withColumn("__graft_lay", element_at(typedlit(binByName),
         element_at(split(col("__graft_file"), "/"), -1))), small)
       .drop("__graft_file")
-    val rel = attemptRel(v)
-    withBin.repartition(nBins, col("__bin")).drop("__bin")
-      .write.mode("overwrite").parquet(s"$root/$rel")
     // delta form: the folded small tail is the remove set, the bins
     // are the adds — the manifest write is tail-sized, not table-sized
     commitManifest(root, childOf(m, "compact"), keep,
-      writtenFiles(spark, root, rel), small.map(_.path), checkpointInterval)
+      writeDataFiles(withBin, root, parent + 1, col("__graft_lay"), nBins),
+      small.map(_.path), checkpointInterval)
   }
 
   /** OPTIMIZE/RECLUSTER as a COMMIT (Databricks' OPTIMIZE ZORDER BY,

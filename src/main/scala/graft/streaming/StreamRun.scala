@@ -1,21 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.LongType
 
-/** Drive a transform through the REAL Structured Streaming engine and
-  * hand the result back as a batch DataFrame.
+/** Drive a stream through the REAL Structured Streaming engine.
   *
-  * `events` is re-read as a file-source stream (explicit schema — file
-  * streams don't infer), the transform's plan runs under
+  * [[run]] is the one runner: it starts `transform(src)` under
   * MicroBatchExecution with `Trigger.AvailableNow()` (process all
-  * files that exist now, then stop), and the output lands in a memory
-  * sink whose table we return. This is what lets the driver's DuckDB
-  * oracle check the *incremental* execution path — the executed plan
-  * is a MicroBatchWrite epoch over StateStoreSave/StreamingDeduplicate
-  * /StreamingSymmetricHashJoin operators (see StreamRunSpec).
+  * input that exists now, then stop) into one of four [[Sink]]s — the
+  * memory sink (whose table it hands back as a batch DataFrame), a
+  * format sink, a catalog table, or a `foreachBatch` function. Every
+  * run gets a fresh checkpoint that is deleted when the run ends,
+  * fails or not, and records the executed plan in [[lastPlan]]. This
+  * is what lets the driver's DuckDB oracle check the *incremental*
+  * execution path — the executed plan is a MicroBatchWrite epoch over
+  * StateStoreSave/StreamingDeduplicate/StreamingSymmetricHashJoin
+  * operators (see StreamRunSpec). [[onTable]]/[[onEvents]] are the
+  * memory-sink runs over one `<dir>/<table>.parquet`.
   *
   * Determinism contract (what makes these oracle-checkable):
   *   - Complete-mode aggregations re-emit the whole state each
@@ -39,18 +42,141 @@ import org.apache.spark.sql.types.LongType
   */
 object StreamRun {
 
-  /** Physical plan of the most recent micro-batch execution — evidence
-    * for specs/PERF audits that the incremental engine (MicroBatchScan
-    * + StateStore operators) ran, not a batch rewrite. Captured via the
-    * public `StreamingQuery.explain()` (prints lastExecution).
+  /** Physical plan of the most recent run — evidence for specs/PERF
+    * audits that the incremental engine (MicroBatchScan + StateStore
+    * operators) ran, not a batch rewrite. Captured via the public
+    * `StreamingQuery.explain()` (prints lastExecution).
     */
   @volatile var lastPlan: String = ""
 
-  /** Sink description of the most recent [[runToSink]] query — spec
-    * evidence that the ENGINE drove the named sink (not a foreachBatch
-    * shim).
+  /** Sink description of the most recent run — spec evidence that the
+    * ENGINE drove the named sink (not a foreachBatch shim).
     */
   @volatile var lastSinkDescription: String = ""
+
+  /** Where a [[run]] delivers its rows. */
+  sealed trait Sink
+  object Sink {
+    /** The engine's memory sink; [[Run.table]] holds its contents. */
+    final case class Memory(mode: OutputMode) extends Sink
+
+    /** A format sink (st33's native graftlog sink) with writer options. */
+    final case class Format(fmt: String, options: Map[String, String],
+                            mode: OutputMode = OutputMode.Append()) extends Sink
+
+    /** A CATALOG TABLE by name (`writeStream.format("graftlog")
+      * .toTable(name)` — the fmt is required because Spark's
+      * V1-fallback sink path insists the writer's format match the
+      * table's provider, Delta's documented shape too).
+      */
+    final case class Table(name: String, options: Map[String, String] = Map.empty,
+                           mode: OutputMode = OutputMode.Append()) extends Sink
+
+    /** `fn` per micro-batch — the Structured Streaming pattern for
+      * sinks the built-in writers can't express (MERGE upkeep,
+      * multi-table writes, upserts into a store). Each micro-batch's
+      * DataFrame is handed to `fn` on the driver with its batch id;
+      * the engine guarantees ids are monotonically increasing and,
+      * under a checkpoint, that a batch is re-delivered with the SAME
+      * id on recovery — so `fn` must be idempotent per id (the
+      * commit-version-per-batch discipline st25 uses gets this for
+      * free: re-running batch k just re-creates version k's state
+      * from the same inputs).
+      */
+    final case class ForeachBatch(fn: (DataFrame, Long) => Unit) extends Sink
+  }
+
+  /** What a [[run]] leaves: the memory sink's table (memory sinks
+    * only), the checkpoint location it used — deleted by the time
+    * `run` returns; a format sink's default appId input, so callers
+    * can replay a batch against the same identity — and the number of
+    * micro-batches the engine executed.
+    */
+  final case class Run(table: Option[DataFrame], checkpoint: Option[String],
+                       batches: Long)
+
+  /** Shuffle partitions every stream runs with. Stateful streaming cost
+    * here is dominated by per-partition state stores (each maintains,
+    * snapshots, and commits one HDFS-backed map per trigger — the
+    * interval join keeps FOUR stores per partition), not by CPU: run
+    * the stream with fewer shuffle partitions than the batch queries
+    * use. On a real cluster this is the knob you size to state volume,
+    * not to core count.
+    */
+  private val StreamPartitions = "8"
+
+  /** Checkpoint base (offset WAL + per-partition state snapshots +
+    * commit log — fsync'd once per store per trigger):
+    * `SPARK_GRAFT_STREAM_CKPT`, else tmpfs when the host has one:
+    * these runs are verification runs whose checkpoints are deleted
+    * on completion, so durability buys nothing and the disk fsyncs
+    * are pure fixed cost. With neither, the engine's own temporary
+    * checkpoint is used. A production deployment points this at
+    * durable storage — that knob is exactly what `checkpointLocation`
+    * is.
+    */
+  private[graft] def checkpointBase: Option[String] =
+    sys.env.get("SPARK_GRAFT_STREAM_CKPT").orElse {
+      val shm = new java.io.File("/dev/shm")
+      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-ckpt") else None
+    }
+
+  /** Run `transform(src)` into `sink` through the real engine under
+    * Trigger.AvailableNow and wait for it to finish. The transform is
+    * built under the stream's partition count, which is restored
+    * before `run` returns or throws.
+    */
+  def run(s: SparkSession, src: DataFrame, sink: Sink,
+          transform: DataFrame => DataFrame = identity): Run = {
+    val name = "graft_sink_" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StreamPartitions)
+    val ckptDir = checkpointBase.map(b => s"$b/$name")
+    val q = try {
+      val w = transform(src).writeStream.queryName(name)
+        .trigger(Trigger.AvailableNow())
+      ckptDir.foreach(d => w.option("checkpointLocation", d))
+      sink match {
+        case Sink.Memory(mode) => w.format("memory").outputMode(mode).start()
+        case Sink.Format(fmt, options, mode) =>
+          w.format(fmt).outputMode(mode).options(options).start()
+        case Sink.Table(table, options, mode) =>
+          w.format("graftlog").outputMode(mode).options(options).toTable(table)
+        case Sink.ForeachBatch(fn) =>
+          w.foreachBatch((df: Dataset[Row], id: Long) => fn(df, id)).start()
+      }
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    // explicit checkpoint locations are not auto-deleted (unlike the
+    // engine's temporary ones) — clean up in finally so tmpfs never
+    // accumulates even when the run fails or is killed mid-stream.
+    // (The dir name embeds this run's UUID, so a failed run can never
+    // be *resumed* by a later one — the finally guards leakage only.)
+    try q.awaitTermination()
+    finally ckptDir.foreach(d =>
+      graft.sources.TidyIO.deleteRecursively(java.nio.file.Path.of(d)))
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf)) { q.explain() }
+      lastPlan = buf.toString
+    } catch { case _: Throwable => lastPlan = "" }
+    lastSinkDescription =
+      Option(q.lastProgress).map(_.sink.description).getOrElse("")
+    // a fresh checkpoint numbers batches from 0; idle triggers report
+    // progress too, but only executed batches time an addBatch
+    val batches = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+      .lastOption.map(_.batchId + 1L).getOrElse(0L)
+    // Dataset construction analyzes eagerly, so the memory-sink
+    // relation is captured in the plan and the temp view can go.
+    val table = sink match {
+      case _: Sink.Memory =>
+        val out = s.table(name)
+        s.catalog.dropTempView(name)
+        Some(out)
+      case _ => None
+    }
+    Run(table, ckptDir, batches)
+  }
 
   /** Streamed read of `<dir>/<table>.parquet`: explicit schema from a
     * metadata-only batch read (file streams don't infer); the events
@@ -80,225 +206,12 @@ object StreamRun {
     }
   }
 
-  /** Run `transform` on a streamed read of `<dir>/<table>.parquet`,
-    * collect into a memory sink, return the sink contents.
-    */
+  /** Memory-sink [[run]] of `transform` over `<dir>/<table>.parquet`. */
   def onTable(s: SparkSession, dir: String, table: String, mode: OutputMode)
              (transform: DataFrame => DataFrame): DataFrame =
-    onSource(s, source(s, dir, table), mode)(transform)
-
-  /** Run `transform` over an ARBITRARY streaming source DataFrame
-    * (e.g. a binaryFile stream over tar shards — st22) through the
-    * real engine; same memory-sink/checkpoint/plan-capture contract
-    * as [[onTable]].
-    */
-  def onSource(s: SparkSession, src: DataFrame, mode: OutputMode)
-              (transform: DataFrame => DataFrame): DataFrame = {
-    val name = "graft_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    // Stateful streaming cost here is dominated by per-partition state
-    // stores (each maintains, snapshots, and commits one HDFS-backed
-    // map per trigger — the interval join keeps FOUR stores per
-    // partition), not by CPU: run the stream with fewer shuffle
-    // partitions than the batch queries use. On a real cluster this is
-    // the knob you size to state volume, not to core count.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    // Checkpoint (offset WAL + per-partition state snapshots + commit
-    // log — fsync'd once per store per trigger) goes to tmpfs when the
-    // host has one: this harness's streams are verification runs whose
-    // checkpoints are deleted on completion, so durability buys
-    // nothing and the disk fsyncs are pure fixed cost. A production
-    // deployment points this at durable storage — that knob is exactly
-    // what `checkpointLocation` is.
-    val ckptBase = sys.env.get("SPARK_GRAFT_STREAM_CKPT").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-ckpt") else None
-    }
-    val ckptDir = ckptBase.map(b => s"$b/$name")
-    val q = try {
-      val w = transform(src).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-      ckptDir.foreach(d => w.option("checkpointLocation", d))
-      w.start()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // explicit checkpoint locations are not auto-deleted (unlike the
-    // engine's temporary ones) — clean up in finally so tmpfs never
-    // accumulates even when the run fails or is killed mid-stream.
-    // (The dir name embeds this run's UUID, so a failed run can never
-    // be *resumed* by a later one — the finally guards leakage only.)
-    try q.awaitTermination()
-    finally ckptDir.foreach { d =>
-      try {
-        import java.nio.file.{Files, Path}
-        import scala.jdk.CollectionConverters._
-        val root = Path.of(d)
-        if (Files.exists(root)) {
-          Files.walk(root).iterator().asScala.toSeq.reverseIterator
-            .foreach(p => Files.deleteIfExists(p))
-        }
-      } catch { case _: Throwable => () }
-    }
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf)) { q.explain() }
-      lastPlan = buf.toString
-    } catch { case _: Throwable => lastPlan = "" }
-    // Dataset construction analyzes eagerly, so the memory-sink
-    // relation is captured in the plan and the temp view can go.
-    val out = s.table(name)
-    s.catalog.dropTempView(name)
-    out
-  }
+    run(s, source(s, dir, table), Sink.Memory(mode), transform).table.get
 
   def onEvents(s: SparkSession, dir: String, mode: OutputMode)
               (transform: DataFrame => DataFrame): DataFrame =
     onTable(s, dir, "events", mode)(transform)
-
-  /** Run `fn` as a `foreachBatch` sink over a streaming source — the
-    * Structured Streaming pattern for sinks the built-in writers
-    * can't express (MERGE upkeep, multi-table writes, upserts into a
-    * store). Each micro-batch's DataFrame is handed to `fn` on the
-    * driver with its batch id; the engine guarantees ids are
-    * monotonically increasing and, under a checkpoint, that a batch
-    * is re-delivered with the SAME id on recovery — so `fn` must be
-    * idempotent per id (the commit-version-per-batch discipline st25
-    * uses gets this for free: re-running batch k just re-creates
-    * version k's state from the same inputs).
-    *
-    * Same checkpoint/trigger/plan-capture/cleanup contract as
-    * [[onSource]]; returns the number of micro-batches executed.
-    */
-  /** Drive `src` into a format SINK (st33's native graftlog sink)
-    * through the real engine under Trigger.AvailableNow — the
-    * no-user-code twin of [[runForeachBatch]]. Returns the sink's
-    * appId default input (the checkpoint location used), so callers
-    * can replay a batch against the same identity.
-    */
-  def runToSink(s: SparkSession, src: DataFrame, fmt: String,
-                options: Map[String, String],
-                mode: OutputMode = OutputMode.Append()): Option[String] = {
-    val name = "graft_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    val ckptBase = sys.env.get("SPARK_GRAFT_STREAM_CKPT").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-ckpt") else None
-    }
-    val ckptDir = ckptBase.map(b => s"$b/$name")
-    val q = try {
-      val w = src.writeStream.queryName(name).format(fmt)
-        .outputMode(mode).trigger(Trigger.AvailableNow())
-      options.foreach { case (k, v) => w.option(k, v) }
-      ckptDir.foreach(d => w.option("checkpointLocation", d))
-      w.start()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.awaitTermination()
-    finally ckptDir.foreach { d =>
-      try {
-        import java.nio.file.{Files, Path}
-        import scala.jdk.CollectionConverters._
-        val root = Path.of(d)
-        if (Files.exists(root))
-          Files.walk(root).iterator().asScala.toSeq.reverseIterator
-            .foreach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf)) { q.explain() }
-      lastPlan = buf.toString
-    } catch { case _: Throwable => lastPlan = "" }
-    lastSinkDescription =
-      Option(q.lastProgress).map(_.sink.description).getOrElse("")
-    ckptDir
-  }
-
-  /** Drive `src` into a CATALOG TABLE by name through the real engine
-    * (`writeStream.format("graftlog").toTable(name)` — the fmt is
-    * required because Spark's V1-fallback sink path insists the
-    * writer's format match the table's provider, Delta's documented
-    * shape too). Same checkpoint/trigger contract as [[runToSink]].
-    */
-  def runToTable(s: SparkSession, src: DataFrame, table: String,
-                 options: Map[String, String] = Map.empty,
-                 mode: OutputMode = OutputMode.Append()): Unit = {
-    val name = "graft_tbl_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    val ckptBase = sys.env.get("SPARK_GRAFT_STREAM_CKPT").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-ckpt") else None
-    }
-    val ckptDir = ckptBase.map(b => s"$b/$name")
-    val q = try {
-      val w = src.writeStream.queryName(name).format("graftlog")
-        .outputMode(mode).trigger(Trigger.AvailableNow())
-      options.foreach { case (k, v) => w.option(k, v) }
-      ckptDir.foreach(d => w.option("checkpointLocation", d))
-      w.toTable(table)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.awaitTermination()
-    finally ckptDir.foreach { d =>
-      try {
-        import java.nio.file.{Files, Path}
-        import scala.jdk.CollectionConverters._
-        val root = Path.of(d)
-        if (Files.exists(root))
-          Files.walk(root).iterator().asScala.toSeq.reverseIterator
-            .foreach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-    }
-  }
-
-  def runForeachBatch(s: SparkSession, src: DataFrame)
-                     (fn: (DataFrame, Long) => Unit): Long = {
-    val name = "graft_feb_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    val ckptBase = sys.env.get("SPARK_GRAFT_STREAM_CKPT").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-ckpt") else None
-    }
-    val ckptDir = ckptBase.map(b => s"$b/$name")
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = try {
-      val w = src.writeStream
-        .queryName(name)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          batches.incrementAndGet(); fn(df, id)
-        }
-        .trigger(Trigger.AvailableNow())
-      ckptDir.foreach(d => w.option("checkpointLocation", d))
-      w.start()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try q.awaitTermination()
-    finally ckptDir.foreach { d =>
-      try {
-        import java.nio.file.{Files, Path}
-        import scala.jdk.CollectionConverters._
-        val root = Path.of(d)
-        if (Files.exists(root)) {
-          Files.walk(root).iterator().asScala.toSeq.reverseIterator
-            .foreach(p => Files.deleteIfExists(p))
-        }
-      } catch { case _: Throwable => () }
-    }
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(buf)) { q.explain() }
-      lastPlan = buf.toString
-    } catch { case _: Throwable => lastPlan = "" }
-    batches.get()
-  }
 }

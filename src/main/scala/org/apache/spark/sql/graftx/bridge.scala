@@ -7,7 +7,8 @@
  * for a DSv1 `Source.getBatch` to hand the engine a DataFrame whose
  * logical plan is marked isStreaming (MicroBatchExecution asserts it)
  * — is private[sql] in Spark 4. Same approach as ../graftx
- * expressions; the graft-facing API is GraftLogCdfProvider.
+ * expressions; the graft-facing API is GraftLogProvider's stream
+ * sources.
  */
 package org.apache.spark.sql.graftx
 

@@ -45,7 +45,7 @@ class GraftTableStreamSpec extends AnyFunSuite {
     val src = spark.readStream
       .option("startingVersion", "0").option("maxVersionsPerBatch", "1")
       .table("graft.tsdb.t_plain")
-    val out = StreamRun.onSource(spark, src, OutputMode.Append())(df => df)
+    val out = StreamRun.run(spark, src, StreamRun.Sink.Memory(OutputMode.Append())).table.get
     assert(rows(out) == Set((0L, 1L), (1L, 11L), (2L, 21L), (3L, 31L)))
     spark.sql("DROP TABLE graft.tsdb.t_plain")
   }
@@ -55,9 +55,9 @@ class GraftTableStreamSpec extends AnyFunSuite {
     TableLog.commit(mkDf(0L until 20L), root, expr("k div 10"), 2, "overwrite")
     TableLog.commit(mkDf(20L until 25L), root, expr("k div 10"), 1, "append")
     // no startingVersion: ONE snapshot batch at the stream-start head
-    val snap = StreamRun.onSource(spark,
+    val snap = StreamRun.run(spark,
       spark.readStream.format("graftlog").option("path", root).load(),
-      OutputMode.Append())(df => df)
+      StreamRun.Sink.Memory(OutputMode.Append())).table.get
     assert(rows(snap) == rows(TableLog.read(spark, root)))
     // a merge-on-read delete makes the next window a change commit:
     // plain stream fails LOUDLY...
@@ -66,19 +66,19 @@ class GraftTableStreamSpec extends AnyFunSuite {
       "k", expr("k div 10"), 1, valCol = "cents", newValCol = "new_cents")
     TableLog.commit(mkDf(25L until 27L), root, expr("k div 10"), 1, "append")
     val e = intercept[Exception] {
-      StreamRun.onSource(spark,
+      StreamRun.run(spark,
         spark.readStream.format("graftlog").option("path", root)
           .option("startingVersion", "0").load(),
-        OutputMode.Append())(df => df)
+        StreamRun.Sink.Memory(OutputMode.Append()))
     }
     assert(e.getMessage != null && (e.getMessage.contains("suppresses rows")
       || e.getCause != null), s"unexpected: ${e.getMessage}")
     // ...and skipChangeCommits replays everything EXCEPT the merge
-    val skipped = StreamRun.onSource(spark,
+    val skipped = StreamRun.run(spark,
       spark.readStream.format("graftlog").option("path", root)
         .option("startingVersion", "0").option("skipChangeCommits", "true")
         .load(),
-      OutputMode.Append())(df => df)
+      StreamRun.Sink.Memory(OutputMode.Append())).table.get
     assert(rows(skipped) == rows(mkDf(0L until 27L).toDF("k", "cents")))
   }
 
@@ -89,7 +89,7 @@ class GraftTableStreamSpec extends AnyFunSuite {
     spark.sql("INSERT INTO graft.tsdb.t_cdf SELECT * FROM VALUES (3L, 30L) AS v(k, cents)")
     val feed = spark.readStream.option("readChangeFeed", "true")
       .option("startingVersion", "1").table("graft.tsdb.t_cdf")
-    val out = StreamRun.onSource(spark, feed, OutputMode.Append())(df => df)
+    val out = StreamRun.run(spark, feed, StreamRun.Sink.Memory(OutputMode.Append())).table.get
     val got = out.select("k", "_change_type", "_commit_version").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got == Set((1L, "insert", 1L), (2L, "insert", 1L), (3L, "insert", 2L)))
@@ -107,8 +107,8 @@ class GraftTableStreamSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE graft.tsdb.t_dst (k BIGINT, cents BIGINT)")
     val src = spark.readStream.option("startingVersion", "0")
       .option("maxVersionsPerBatch", "1").table("graft.tsdb.t_src")
-    StreamRun.runToTable(spark, src, "graft.tsdb.t_dst",
-      Map("layout" -> "k", "appId" -> "tsdst"))
+    StreamRun.run(spark, src, StreamRun.Sink.Table("graft.tsdb.t_dst",
+      Map("layout" -> "k", "appId" -> "tsdst")))
     assert(rows(spark.table("graft.tsdb.t_dst")) ==
       rows(spark.table("graft.tsdb.t_src")))
     val cat = spark.sessionState.catalogManager.catalog("graft")

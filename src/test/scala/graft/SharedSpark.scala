@@ -5,21 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** One session for the whole forked test JVM. */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = Graft.session(4, Map(
+      "spark.app.name" -> "graft-test",
       // managed tables (bucketed-join spec) land in a temp warehouse,
       // not ./spark-warehouse inside the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .getOrCreate()
+      "spark.sql.warehouse.dir" ->
+        java.nio.file.Files.createTempDirectory("graft_wh_").toString))
     s.sparkContext.setLogLevel("WARN")
-    Graft.registerFunctions(s)
     s
   }
   val sfDir = "/root/testdata/sf0.001"

@@ -249,9 +249,9 @@ class StreamRunSpec extends AnyFunSuite {
     def agg(df: org.apache.spark.sql.DataFrame) =
       df.groupBy("shard").agg(count(lit(1)).as("n"),
         sum(length(col("payload"))).as("bytes"))
-    val streamed = StreamRun.onSource(spark, TarShards.readStream(spark, dir2),
-        OutputMode.Complete())(agg)
-      .orderBy("shard").collect().map(_.toSeq).toSeq
+    val streamed = StreamRun.run(spark, TarShards.readStream(spark, dir2),
+        StreamRun.Sink.Memory(OutputMode.Complete()), agg)
+      .table.get.orderBy("shard").collect().map(_.toSeq).toSeq
     assert(StreamRun.lastPlan.contains("MicroBatchScan") ||
       StreamRun.lastPlan.toLowerCase.contains("microbatch"),
       s"expected an incremental-source plan in:\n${StreamRun.lastPlan}")
@@ -261,7 +261,7 @@ class StreamRunSpec extends AnyFunSuite {
   }
 
   test("graftlog CDF source: version-sliced windows compose, offsets track head, engine runs it") {
-    import graft.sources.{GraftLogCdfProvider, TableLog}
+    import graft.sources.{GraftLogProvider, TableLog}
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("cdfsrc").toString
@@ -279,8 +279,8 @@ class StreamRunSpec extends AnyFunSuite {
     assert(feedRows(0L, 2L).size == 90)
     // the DSv1 source contract: offset tracks the head; batches are
     // streaming-tagged plans (MicroBatchExecution asserts this)
-    val src = new GraftLogCdfProvider().createSource(spark.sqlContext,
-      "", None, "graftlog-cdf", Map("path" -> root))
+    val src = new GraftLogProvider().createSource(spark.sqlContext,
+      "", None, "graftlog", Map("path" -> root, "readChangeFeed" -> "true"))
     assert(src.getOffset.contains(LongOffset(2L)))
     assert(src.schema.fieldNames.toSeq ==
       Seq("k", "cents", "_change_type", "_commit_version"))
@@ -291,12 +291,13 @@ class StreamRunSpec extends AnyFunSuite {
     assert(src.getOffset.contains(LongOffset(3L)))
     // end-to-end through the real engine: the replayed feed's grouped
     // sums equal the direct batch feed's
-    val streamed = StreamRun.onSource(spark,
-        spark.readStream.format("graft.sources.GraftLogCdfProvider")
-          .option("path", root).load(), OutputMode.Complete()) { f =>
-        f.groupBy("_commit_version").agg(count(lit(1)).as("n"),
-          sum("cents").as("s"))
-      }.orderBy("_commit_version").collect().map(_.toSeq).toSeq
+    val streamed = StreamRun.run(spark,
+        spark.readStream.format("graftlog").option("readChangeFeed", "true")
+          .option("path", root).load(),
+        StreamRun.Sink.Memory(OutputMode.Complete()),
+        _.groupBy("_commit_version").agg(count(lit(1)).as("n"),
+          sum("cents").as("s")))
+      .table.get.orderBy("_commit_version").collect().map(_.toSeq).toSeq
     assert(StreamRun.lastPlan.contains("StateStoreSave"),
       s"expected stateful aggregation in:\n${StreamRun.lastPlan}")
     val batch = TableLog.readChangeFeed(spark, root, 0L, 3L)
@@ -314,14 +315,14 @@ class StreamRunSpec extends AnyFunSuite {
     // _change_type (a ClassCastException at best, silently wrong stamps
     // at worst). Delta fails evolved streaming reads loudly and asks
     // for a restart; pin that exact behavior.
-    import graft.sources.{GraftLogCdfProvider, TableLog}
+    import graft.sources.{GraftLogProvider, TableLog}
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("cdfevolve").toString
     def mk(ks: Range) = ks.map(k => (k.toLong, k.toLong * 2 + 1)).toDF("k", "cents")
     TableLog.commit(mk(0 until 40), root, expr("k div 20"), 2, "overwrite")
-    val src = new GraftLogCdfProvider().createSource(spark.sqlContext,
-      "", None, "graftlog-cdf", Map("path" -> root))
+    val src = new GraftLogProvider().createSource(spark.sqlContext,
+      "", None, "graftlog", Map("path" -> root, "readChangeFeed" -> "true"))
     // pre-evolution window binds fine
     assert(src.getBatch(None, LongOffset(0L)).isStreaming)
     // mid-stream evolution: the accreted column shifts the feed layout
@@ -336,8 +337,8 @@ class StreamRunSpec extends AnyFunSuite {
     // windows ENTIRELY below the evolution still replay exactly
     assert(src.getBatch(None, LongOffset(0L)).isStreaming)
     // a RESTARTED stream (fresh source) reads the evolved table fine
-    val src2 = new GraftLogCdfProvider().createSource(spark.sqlContext,
-      "", None, "graftlog-cdf", Map("path" -> root))
+    val src2 = new GraftLogProvider().createSource(spark.sqlContext,
+      "", None, "graftlog", Map("path" -> root, "readChangeFeed" -> "true"))
     assert(src2.schema.fieldNames.toSeq ==
       Seq("k", "cents", "extra", "_change_type", "_commit_version"))
     assert(src2.getBatch(None, LongOffset(1L)).isStreaming)
@@ -350,20 +351,21 @@ class StreamRunSpec extends AnyFunSuite {
     // between the two must not leave the analyzed schema and the
     // source's runtime schema diverged — both derive from the ONE DDL
     // the provider resolved first.
-    import graft.sources.{GraftLogCdfProvider, GraftLogCdfSource, TableLog}
+    import graft.sources.{GraftLogCdfSource, GraftLogProvider, TableLog}
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("cdftoctou").toString
     def mk(ks: Range) = ks.map(k => (k.toLong, k.toLong * 2 + 1)).toDF("k", "cents")
     TableLog.commit(mk(0 until 40), root, expr("k div 20"), 2, "overwrite")
-    val prov = new GraftLogCdfProvider()
+    val prov = new GraftLogProvider()
+    val cdf = Map("path" -> root, "readChangeFeed" -> "true")
     val (_, analyzed) = prov.sourceSchema(spark.sqlContext, None,
-      "graftlog-cdf", Map("path" -> root))
+      "graftlog", cdf)
     // the race: an evolution lands between the two provider calls
     TableLog.commit(mk(40 until 50).withColumn("extra", lit(9L)),
       root, expr("k div 20"), 1, "append", evolve = true)
     val src = prov.createSource(spark.sqlContext, "", None,
-      "graftlog-cdf", Map("path" -> root)).asInstanceOf[GraftLogCdfSource]
+      "graftlog", cdf).asInstanceOf[GraftLogCdfSource]
     assert(src.schema == analyzed,
       s"runtime schema must equal the analyzed schema: ${src.schema} vs $analyzed")
     // and the drift guard still fires for the window that crossed the
@@ -374,7 +376,7 @@ class StreamRunSpec extends AnyFunSuite {
   }
 
   test("graftlog CDF pacing + startingTimestamp: bounded batches under AvailableNow, exact boundaries") {
-    import graft.sources.{GraftLogCdfProvider, GraftLogCdfSource, TableLog}
+    import graft.sources.{GraftLogCdfSource, GraftLogProvider, TableLog}
     import org.apache.spark.sql.execution.streaming.runtime.LongOffset
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("cdfpaced").toString
@@ -394,9 +396,9 @@ class StreamRunSpec extends AnyFunSuite {
     assert(GraftLogCdfSource.firstVersionAtOrAfter(root, 3001L) == 3L)
     // admission control paces from the ENGINE's committed offset (the
     // start param — restart-exact), capped at the live head
-    val src = new GraftLogCdfProvider().createSource(spark.sqlContext,
-      "", None, "graftlog-cdf",
-      Map("path" -> root, "maxVersionsPerBatch" -> "1"))
+    val src = new GraftLogProvider().createSource(spark.sqlContext,
+      "", None, "graftlog", Map("path" -> root, "readChangeFeed" -> "true",
+        "maxVersionsPerBatch" -> "1"))
       .asInstanceOf[GraftLogCdfSource]
     assert(src.latestOffset(null, null) == LongOffset(0L))
     assert(src.latestOffset(LongOffset(0L), null) == LongOffset(1L))
@@ -408,15 +410,15 @@ class StreamRunSpec extends AnyFunSuite {
     // capped window — implementing SupportsTriggerAvailableNow is what
     // makes this work), and the union of batches is the exact feed
     val seen = scala.collection.mutable.ArrayBuffer[Set[Long]]()
-    val paced = spark.readStream.format("graft.sources.GraftLogCdfProvider")
+    val paced = spark.readStream.format("graftlog").option("readChangeFeed", "true")
       .option("path", root).option("maxVersionsPerBatch", "1").load()
-    val nBatches = StreamRun.runForeachBatch(spark, paced) { (batch, _) =>
+    val nBatches = StreamRun.run(spark, paced, StreamRun.Sink.ForeachBatch { (batch, _) =>
       if (!batch.isEmpty)
         seen.synchronized {
           seen += batch.select("_commit_version").distinct()
             .collect().map(_.getLong(0)).toSet
         }
-    }
+    }).batches
     assert(seen.forall(_.size == 1),
       s"each batch must carry exactly ONE commit version, got $seen")
     assert(seen.flatten.toSet == Set(0L, 1L, 2L) && nBatches >= 3L,
@@ -612,7 +614,7 @@ class StreamRunSpec extends AnyFunSuite {
     val schema = spark.read.parquet(src).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
-    val nBatches = StreamRun.runForeachBatch(spark, stream) { (b, _) =>
+    val nBatches = StreamRun.run(spark, stream, StreamRun.Sink.ForeachBatch { (b, _) =>
       if (!b.isEmpty) {
         val part = IncrementalAgg.partial(b, keys, ms)
         val cur = TableLog.currentVersion(root)
@@ -621,7 +623,7 @@ class StreamRunSpec extends AnyFunSuite {
           else IncrementalAgg.merge(Seq(TableLog.read(spark, root), part), keys, ms)
         TableLog.commit(state, root, col("k"), numFiles = 2, mode = "overwrite")
       }
-    }
+    }).batches
     // one-file-per-trigger over 3 files: the engine must actually
     // deliver multiple micro-batches (the incremental path), and each
     // data batch commits exactly one MV version — the per-batch merge
@@ -651,8 +653,8 @@ class StreamRunSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     // APPEND: one commit per micro-batch through the REAL engine
     val root = java.nio.file.Files.createTempDirectory("sinktbl").toString + "/t"
-    StreamRun.runToSink(spark, stream, "graftlog", Map(
-      "path" -> root, "layout" -> "k div 50", "appId" -> "sinkspec"))
+    StreamRun.run(spark, stream, StreamRun.Sink.Format("graftlog", Map(
+      "path" -> root, "layout" -> "k div 50", "appId" -> "sinkspec")))
     assert(StreamRun.lastSinkDescription.contains("GraftLogSink"),
       s"engine must drive the named sink: ${StreamRun.lastSinkDescription}")
     assert(TableLog.currentVersion(root) == 2L, "3 files → 3 commits")
@@ -668,9 +670,9 @@ class StreamRunSpec extends AnyFunSuite {
     val root2 = java.nio.file.Files.createTempDirectory("sinktbl2").toString + "/t"
     val agg = stream.groupBy(expr("k div 40").as("g"))
       .agg(sum("cents").as("sum_cents"), count(lit(1)).as("n"))
-    StreamRun.runToSink(spark, agg, "graftlog",
+    StreamRun.run(spark, agg, StreamRun.Sink.Format("graftlog",
       Map("path" -> root2, "layout" -> "g", "appId" -> "sinkmv"),
-      OutputMode.Complete())
+      OutputMode.Complete()))
     val got = TableLog.read(spark, root2).orderBy("g").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val want = rows.groupBy(expr("k div 40").as("g"))
@@ -684,8 +686,8 @@ class StreamRunSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .withColumnRenamed("cents", "price")
     val e = intercept[Exception] {
-      StreamRun.runToSink(spark, drifted, "graftlog",
-        Map("path" -> root, "appId" -> "sinkdrift"))
+      StreamRun.run(spark, drifted, StreamRun.Sink.Format("graftlog",
+        Map("path" -> root, "appId" -> "sinkdrift")))
     }
     assert(e.getMessage != null)
   }
@@ -701,16 +703,16 @@ class StreamRunSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val root = java.nio.file.Files.createTempDirectory("sinkidtbl").toString + "/t"
     // NO explicit appId: identity must come from the streaming query's
-    // persistent id. runToSink uses a FRESH checkpoint per call, so the
+    // persistent id. StreamRun.run uses a FRESH checkpoint per call, so the
     // second run is the deleted-checkpoint reprocess scenario — under a
     // checkpoint-path/root-derived identity its batchIds restart at 0
     // and the high-water guard would silently no-op every batch.
-    StreamRun.runToSink(spark, stream, "graftlog",
-      Map("path" -> root, "layout" -> "k div 20"))
+    StreamRun.run(spark, stream, StreamRun.Sink.Format("graftlog",
+      Map("path" -> root, "layout" -> "k div 20")))
     val n1 = TableLog.read(spark, root).count()
     assert(n1 == 40L)
-    StreamRun.runToSink(spark, stream, "graftlog",
-      Map("path" -> root, "layout" -> "k div 20"))
+    StreamRun.run(spark, stream, StreamRun.Sink.Format("graftlog",
+      Map("path" -> root, "layout" -> "k div 20")))
     assert(TableLog.read(spark, root).count() == 2 * n1,
       "a deliberately fresh checkpoint must REPROCESS, never silently no-op")
     // Complete mode: an empty batch is a real state — the MV must stop
@@ -724,5 +726,57 @@ class StreamRunSpec extends AnyFunSuite {
     sink.addBatch(1L, rows.limit(0))
     assert(TableLog.read(spark, root2).count() == 0L,
       "an empty Complete-mode batch must overwrite to the empty snapshot")
+  }
+
+  test("run contract: a failed run restores shuffle partitions and leaves no checkpoint; every sink kind records its plan") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val callers = spark.conf.get(key)
+    def entries: Set[String] = StreamRun.checkpointBase.toSeq.flatMap(b =>
+      Option(new java.io.File(b).list()).toSeq.flatMap(_.toSeq)).toSet
+    val before = entries
+    def events = StreamRun.source(spark, dir, "events")
+    def failed(what: String)(run: => Unit): Unit = {
+      intercept[Exception](run)
+      assert(spark.conf.get(key) == callers,
+        s"$what: shuffle partitions ${spark.conf.get(key)}, caller had $callers")
+      assert((entries -- before).isEmpty,
+        s"$what: checkpoint entries left behind: ${entries -- before}")
+    }
+    failed("memory sink, transform throws") {
+      StreamRun.run(spark, events, StreamRun.Sink.Memory(OutputMode.Append()),
+        _ => throw new IllegalStateException("transform"))
+    }
+    failed("memory sink, plan fails mid-run") {
+      StreamRun.run(spark, events, StreamRun.Sink.Memory(OutputMode.Append()),
+        _.select(raise_error(lit("plan")).as("x")))
+    }
+    failed("foreachBatch sink, fn throws") {
+      StreamRun.run(spark, events,
+        StreamRun.Sink.ForeachBatch((_, _) => throw new IllegalStateException("fn")))
+    }
+    // each sink kind's successful run records its executed plan
+    val srcDir = java.nio.file.Files.createTempDirectory("runplan").toString
+    (0L until 20L).map(k => (k, k + 1)).toDF("k", "cents")
+      .repartition(2).write.mode("overwrite").parquet(srcDir)
+    val schema = spark.read.parquet(srcDir).schema
+    def stream = spark.readStream.schema(schema).parquet(srcDir)
+    val root = java.nio.file.Files.createTempDirectory("runplantbl").toString + "/t"
+    spark.sql("DROP TABLE IF EXISTS graft.tsdb.t_runplan")
+    spark.sql("CREATE TABLE graft.tsdb.t_runplan (k BIGINT, cents BIGINT)")
+    Seq(StreamRun.Sink.Memory(OutputMode.Append()),
+        StreamRun.Sink.Format("graftlog", Map("path" -> root, "layout" -> "k")),
+        StreamRun.Sink.Table("graft.tsdb.t_runplan", Map("layout" -> "k")),
+        StreamRun.Sink.ForeachBatch((b, _) => b.count())).foreach { sink =>
+      StreamRun.lastPlan = ""
+      val r = StreamRun.run(spark, stream, sink)
+      assert(StreamRun.lastPlan.contains("Physical Plan"),
+        s"$sink left no plan: ${StreamRun.lastPlan}")
+      assert(r.batches == 1L, s"$sink ran ${r.batches} batches")
+      assert(r.table.map(_.count()) ==
+        (if (sink.isInstanceOf[StreamRun.Sink.Memory]) Some(20L) else None))
+    }
+    assert(spark.table("graft.tsdb.t_runplan").count() == 20L)
+    spark.sql("DROP TABLE graft.tsdb.t_runplan")
   }
 }

@@ -111,9 +111,11 @@ class TableLogSpec extends AnyFunSuite {
       if (rename) TableLog.renameColumn(root, "k", "kk")
       val v = TableLog.compact(spark, root, if (rename) "kk" else "k",
         targetRows = 50L, smallRows = 50L)
-      // zones stay keyed by the physical name "k" on both tables (a
-      // bin-less hash partition leaves a zone-less empty file)
-      TableLog.readManifest(root, v).files.filter(_.rows > 0L)
+      // each of the three bins is its own file: no shared, no empty one
+      val added = TableLog.versionDelta(root, v)._1.map(_.rows)
+      assert(added == Seq(50L, 50L, 50L), s"compacted files' rows: $added")
+      // zones stay keyed by the physical name "k" on both tables
+      TableLog.readManifest(root, v).files
         .map(f => (f.zMin("k"), f.zMax("k"))).sorted
     }
     val twin = drive(freshRoot("compact_twin"), rename = false)
@@ -254,6 +256,9 @@ class TableLogSpec extends AnyFunSuite {
       s"reads must stay exact under promotion: ${got.size} rows")
     // liveRows stays exact through both carriers
     assert(headM.totalRows == n - deleted.size)
+    // a delete-only merge writes no rows, so it adds no file either
+    assert(!headM.files.exists(_.rows == 0L),
+      s"0-row files listed: ${headM.files.filter(_.rows == 0L).map(_.path)}")
   }
 
   test("parquet checkpoints: large manifests round-trip binary with identical resolution") {
