@@ -12,8 +12,10 @@ object Graft {
 
   /** Build a local session tuned the way we'd tune a cluster job:
     * AQE on (runtime re-plan + skew-join), shuffle partitions sized to
-    * the parallelism (not the 200 default), UTC for oracle parity, and
-    * our custom Catalyst expressions registered for SQL use. The one
+    * the parallelism (not the 200 default), UTC for oracle parity,
+    * stream checkpoints on local paths written without process forks
+    * ([[graft.streaming.LocalCheckpointFileManager]]), and our custom
+    * Catalyst expressions registered for SQL use. The one
     * session factory: every main and the test session build here.
     * `overrides` carries deployment settings only — paths and the app
     * name (e.g. the test warehouse dir) — applied last.
@@ -34,6 +36,10 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // local stream checkpoints through java.nio: Hadoop's local file
+      // system forks readlink/chmod per checkpoint file otherwise
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config(overrides)
       .getOrCreate()
     registerFunctions(s)

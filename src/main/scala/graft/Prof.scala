@@ -1,11 +1,15 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
 
 /** Per-job wall-clock profiler for one or more SparkEntry queries:
   * prints every Spark job's duration with its call site, so a
   * multi-action operator (DML commits, store lifecycles) can be
-  * attributed line-by-line. Warmup run first (JIT/codegen), then the
-  * timed run — mirrors the bench's steady-state methodology.
+  * attributed line-by-line, and the processes the timed run forked,
+  * counted by program — a fork costs milliseconds, and Hadoop's local
+  * file system shells out for some file operations. Warmup run first
+  * (JIT/codegen), then the timed run — mirrors the bench's
+  * steady-state methodology.
   *
   * Usage: runMain graft.Prof <sfDir> <name>[,<name>...]
   */
@@ -49,12 +53,35 @@ object Prof {
       println(s"==== $n ====")
       resetEpoch()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      val forks = forkedCommands { fn(spark, sfDir).count() }
       val dt = (System.nanoTime() - t0) / 1e9
       Thread.sleep(500)
       println(f"[prof] TOTAL $n $dt%.3f s")
+      val byProgram = forks.groupBy(_.takeWhile(_ != ' ').split('/').last)
+        .toSeq.sortBy { case (p, cs) => (-cs.size, p) }
+        .map { case (p, cs) => s"$p=${cs.size}" }
+      println(s"[prof] forks ${forks.size} ${byProgram.mkString(" ")}".trim)
       spark.catalog.clearCache()
     }
     spark.stop()
+  }
+
+  /** Command lines of the processes this JVM started while `body` ran,
+    * from the JFR `jdk.ProcessStart` event.
+    */
+  def forkedCommands(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withoutStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val f = java.nio.file.Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(f)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala
+        .map(_.getString("command")).toSeq
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(f)
+    }
   }
 }

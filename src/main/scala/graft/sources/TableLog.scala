@@ -1004,6 +1004,19 @@ object TableLog {
     rel
   }
 
+  /** A DML statement's new files: none when [[provablyEmpty]] (a
+    * delete whose hits all ride deletion vectors lands no row), which
+    * saves the write job, its footer-stats job and a 0-row file.
+    */
+  private def writeUnlessEmpty(merged: DataFrame, root: String, v: Long,
+                               layout: Column, colMap: Map[String, String],
+                               numFiles: Int): Seq[FileEntry] =
+    if (provablyEmpty(merged)) Nil
+    else {
+      val (physMerged, physLayout) = toPhysical(merged, layout, colMap)
+      writeDataFiles(physMerged, root, v, physLayout, numFiles)
+    }
+
   /** Relabel a LOGICAL batch to the table's PHYSICAL column names for
     * writing (column mapping). The caller's layout expression
     * references logical names, so its VALUE is materialized first and
@@ -1676,6 +1689,17 @@ object TableLog {
       if (Files.exists(p)) Files.size(p) else 0L
     }.sum
 
+  /** The optimizer proves `df` holds no rows: its plan folds to an
+    * empty local relation (an empty [[readFiles]], a LIMIT 0, and the
+    * joins and unions over them). Planning only — no job runs.
+    */
+  private def provablyEmpty(df: DataFrame): Boolean =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r.data.isEmpty
+      case _ => false
+    }
+
   /** The one read path. `fileCol` — when a caller needs the source
     * file per row (version stamping, probe scans, ANALYZE keys) — is
     * materialized from input_file_name() BEFORE deletion-vector
@@ -1688,8 +1712,10 @@ object TableLog {
                         fileCol: Option[String] = None): DataFrame = {
     val logical = org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
     if (files.isEmpty) {
+      // an empty LOCAL relation, which the optimizer can see is empty:
+      // joins and unions over it fold away (see [[provablyEmpty]])
       val base = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), logical)
       fileCol.fold(base)(n => base.withColumn(n, lit("")))
     } else {
       // files are PHYSICALLY named; read under the physical schema,
@@ -2409,13 +2435,20 @@ object TableLog {
                dvMaxFrac: Double = 0.10, checkpointInterval: Int = 1,
                txnTag: Option[String] = None,
                dvInlineMax: Int = 4096,
-               dvInlineBudget: Long = dvInlineBudgetDefault): Long =
+               dvInlineBudget: Long = dvInlineBudgetDefault): Long = {
+    // only a non-delete change row can land a row; when the optimizer
+    // sees there is none (a local delete-only batch), the new state is
+    // an empty relation it can see too, and no data file is written
+    val deleteOnly = provablyEmpty(changes.filter(coalesce(col(opCol), lit("")) =!= "D"))
     morApply(spark, root, changes,
-      hitRows => graft.operators.ChangeLog.latestState(
-        hitRows, changes, keyCol, verCol, opCol, valCol, newValCol)
-        .drop("action"),
+      hitRows => {
+        val state = graft.operators.ChangeLog.latestState(
+          hitRows, changes, keyCol, verCol, opCol, valCol, newValCol).drop("action")
+        if (deleteOnly) state.limit(0) else state
+      },
       keyCol, layout, numFiles, dvMaxFrac, checkpointInterval, txnTag,
       "merge-mor", dvInlineMax, dvInlineBudget)
+  }
 
   /** GLOBAL inline-DV budget per key column (total keys across ALL
     * manifest lines): dvInlineMax bounds one FILE's vector, but a
@@ -2524,7 +2557,7 @@ object TableLog {
     // execution either way, one fewer job).
     val cowChecks = headerMap(root, parent, 9)
     val upsertsM =
-      if (cowChecks.isEmpty) upserts
+      if (cowChecks.isEmpty || provablyEmpty(upserts)) upserts
       else org.apache.spark.sql.graftx.Materialize.cleanWith(upserts)(
         u => enforceChecks(u, cowChecks.toSeq.sortBy(_._1), action))._1
     // rewritten files keep their non-hit rows alongside the new state
@@ -2532,8 +2565,7 @@ object TableLog {
       .join(matched, keyCols, "left_anti")
     val merged = upsertsM.unionByName(carry.select(upsertsM.columns.map(col): _*))
     val v = parent + 1
-    val (physMerged, physLayout) = toPhysical(merged, layout, m.colMap)
-    val added = writeDataFiles(physMerged, root, v, physLayout, numFiles)
+    val added = writeUnlessEmpty(merged, root, v, layout, m.colMap, numFiles)
     commitManifest(root, childOf(m, action), carried, added,
       rewriteFiles.map(_.path), checkpointInterval)
   }
@@ -2657,9 +2689,10 @@ object TableLog {
     // computation, and with no checks the write is the ONLY consumer
     // — skip materialization outright (one fewer job).
     val morChecks = headerMap(root, parent, 9)
+    val newState0 = newStateOf(hitRows)
     val newState =
-      if (morChecks.isEmpty) newStateOf(hitRows)
-      else org.apache.spark.sql.graftx.Materialize.cleanWith(newStateOf(hitRows))(
+      if (morChecks.isEmpty || provablyEmpty(newState0)) newState0
+      else org.apache.spark.sql.graftx.Materialize.cleanWith(newState0)(
         ns => enforceChecks(ns, morChecks.toSeq.sortBy(_._1), actionBase))._1
     // rewritten files keep their non-hit rows alongside the new state
     val rewriteCarry = readFiles(spark, root, m, rewriteFiles)
@@ -2667,8 +2700,7 @@ object TableLog {
     val merged = newState.unionByName(rewriteCarry
       .select(newState.columns.map(col): _*))
     val v = parent + 1
-    val (physMerged, physLayout) = toPhysical(merged, layout, m.colMap)
-    val added = writeDataFiles(physMerged, root, v, physLayout, numFiles)
+    val added = writeUnlessEmpty(merged, root, v, layout, m.colMap, numFiles)
     // DV carrier decision per file: a combined vector (prior inline +
     // prior side-file + fresh hits — disjoint by construction, the
     // probe reads merge-on-read so already-suppressed keys never

@@ -779,4 +779,18 @@ class StreamRunSpec extends AnyFunSuite {
     assert(spark.table("graft.tsdb.t_runplan").count() == 20L)
     spark.sql("DROP TABLE graft.tsdb.t_runplan")
   }
+
+  test("stream checkpoints fork no process: st07's offset log, commit log and state stores write through java.nio") {
+    // Hadoop's local file system forks readlink per rename and chmod per
+    // create/mkdir without the native library; the session's checkpoint
+    // manager must keep every one of those off the checkpoint
+    val base = StreamRun.checkpointBase.getOrElse(
+      cancel("no checkpoint base on this host: the engine's temp checkpoint is used"))
+    val st07 = SparkEntry.queries("st07_interval_join")
+    val forks = Prof.forkedCommands { assert(st07(spark, dir).count() > 0L) }
+    assert(StreamRun.lastPlan.contains("StreamingSymmetricHashJoin"))
+    val onCheckpoint = forks.filter(_.contains(base))
+    assert(onCheckpoint.size == 0,
+      s"${onCheckpoint.size} of ${forks.size} forks touch $base, e.g. ${onCheckpoint.take(3)}")
+  }
 }

@@ -31,6 +31,30 @@ class TableLogSpec extends AnyFunSuite {
   private def mkDf(ks: Seq[Long]) =
     ks.map(k => (k, k * 10 + 1)).toDF("k", "cents")
 
+  /** Data parquet files under `files/`, deletion-vector side-files excluded. */
+  private def dataFiles(root: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "files"))
+    try all.iterator.asScala.map(_.toString)
+      .filter(p => p.endsWith(".parquet") && !p.contains("_dv/")).toSet
+    finally all.close()
+  }
+
+  /** Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get()
+  }
+
   /** `lo <= c <= hi` as the planner's filter pair. */
   private def range(c: String, lo: Any, hi: Any): Seq[Filter] =
     Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
@@ -229,6 +253,7 @@ class TableLogSpec extends AnyFunSuite {
     // decision never rewrites, yet the corpus-wide inline mass would
     // reach 160 without the global budget)
     import spark.implicits._
+    val dataFilesBefore = dataFiles(root)
     (0 until 8).foreach { i =>
       val keys = (0 until 20).map(f => (f * 100 + i).toLong)
       TableLog.mergeMor(spark, root,
@@ -256,9 +281,30 @@ class TableLogSpec extends AnyFunSuite {
       s"reads must stay exact under promotion: ${got.size} rows")
     // liveRows stays exact through both carriers
     assert(headM.totalRows == n - deleted.size)
-    // a delete-only merge writes no rows, so it adds no file either
+    // a delete-only merge writes no rows, so it adds no file either:
+    // none listed, and none left on disk under files/ (side-file
+    // vectors are the only new parquet)
     assert(!headM.files.exists(_.rows == 0L),
       s"0-row files listed: ${headM.files.filter(_.rows == 0L).map(_.path)}")
+    val orphans = dataFiles(root) -- dataFilesBefore
+    assert(orphans.size == 0, s"new data files, e.g. ${orphans.take(2)}")
+  }
+
+  test("a delete-only applyDml runs no write job and no footer-stats job") {
+    val root = freshRoot("deljobs")
+    TableLog.commit(mkDf(0L until 2000L), root, expr("k div 100"), 20, "overwrite")
+    val empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), mkDf(Nil).schema)
+    // one key per file, 1% of each file: every hit rides a deletion vector
+    def delete(i: Int): Unit = TableLog.applyDml(spark, root,
+      (0 until 20).map(f => (f * 100 + i).toLong).toDF("k"), empty,
+      "k", expr("k div 100"), 2)
+    delete(0) // first-use costs stay out of the count
+    val jobs = jobsOf(delete(1))
+    info(s"one delete-only applyDml ran $jobs Spark jobs")
+    assert(jobs == 8, s"one delete-only applyDml ran $jobs Spark jobs")
+    assert(TableLog.readManifest(root, TableLog.currentVersion(root)).files.size == 20)
+    assert(rows(TableLog.read(spark, root)).size == 2000 - 40)
   }
 
   test("parquet checkpoints: large manifests round-trip binary with identical resolution") {
