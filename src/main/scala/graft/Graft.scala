@@ -13,10 +13,11 @@ object Graft {
   /** Build a local session tuned the way we'd tune a cluster job:
     * AQE on (runtime re-plan + skew-join), shuffle partitions sized to
     * the parallelism (not the 200 default), UTC for oracle parity,
-    * stream checkpoints on local paths written without process forks
-    * ([[graft.streaming.LocalCheckpointFileManager]]), and our custom
-    * Catalyst expressions registered for SQL use. The one
-    * session factory: every main and the test session build here.
+    * local checkpoints and data files written without process forks
+    * ([[graft.streaming.LocalCheckpointFileManager]],
+    * [[graft.sources.NioLocalFileSystem]]), and our custom Catalyst
+    * expressions registered for SQL use. The one session factory:
+    * every main and the test session build here.
     * `overrides` carries deployment settings only — paths and the app
     * name (e.g. the test warehouse dir) — applied last.
     */
@@ -36,10 +37,12 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // local stream checkpoints through java.nio: Hadoop's local file
-      // system forks readlink/chmod per checkpoint file otherwise
+      // local checkpoints and files through java.nio: Hadoop's local
+      // file system forks readlink/chmod per file and directory otherwise
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
       .config(overrides)
       .getOrCreate()
     registerFunctions(s)

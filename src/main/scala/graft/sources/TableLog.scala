@@ -56,13 +56,13 @@ import scala.jdk.CollectionConverters._
   * create-if-absent this step becomes a conditional PUT / a commit
   * service — same contract, different primitive.
   *
-  * Zone stats come from the parquet FOOTERS of the just-written
-  * files — a metadata-only pass (what Iceberg does at commit),
-  * distributed over the executors so a commit of 10^5 files never
-  * serializes through the driver. Long-typed (int/long/date-as-days)
-  * columns are zoned; a file whose chunk is all-NULL simply carries
-  * no zone for that column and is skipped by range predicates (a
-  * NULL never satisfies a range).
+  * Zone stats come from the write itself (Delta's write-time stats):
+  * each task reads back the footer of the file it wrote, so a data
+  * commit is ONE Spark job and 10^5 files never pass the driver.
+  * INT32/INT64 columns get long zones (the planner prunes on the
+  * integral ones), STRING columns byte-wise zones; a file whose chunk
+  * is all-NULL carries no zone for that column and is skipped by range
+  * predicates (a NULL never satisfies a range).
   *
   * Scale notes: a manifest holds one line per live file — index-sized
   * (≤ a few 10^6 lines at 100 TB), never data-sized; reading it is a
@@ -854,140 +854,94 @@ object TableLog {
       } else "?"
     } catch { case _: Exception => "?" }
 
-  // ---- footer stats ----------------------------------------------------
+  // ---- data files ----------------------------------------------------
 
-  /** Per-file (rows, zones) from parquet footers — metadata-only IO,
-    * distributed: the file list is parallelized over the executors
-    * and only the index-sized stat tuples come back to the driver.
+  /** The manifest entry of the data file at `$root/$rel` from its
+    * parquet footer: exact row count, long zones of the INT32/INT64
+    * columns and string zones. Runs in the task that wrote the file
+    * ([[writeDataFiles]]), so no job reopens it.
     */
-  private def footerStats(spark: SparkSession, root: String,
-                          relPaths: Seq[String]): Seq[FileEntry] = {
-    if (relPaths.isEmpty) return Nil
-    val rootAbs = root
-    val slices = math.max(1, math.min(relPaths.size, 64))
-    spark.sparkContext.parallelize(relPaths, slices).map { rel =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$rootAbs/$rel"), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val footer = r.getFooter
-        var rows = 0L
-        val mins = scala.collection.mutable.Map[String, Long]()
-        val maxs = scala.collection.mutable.Map[String, Long]()
-        val sMins = scala.collection.mutable.Map[String, Array[Byte]]()
-        val sMaxs = scala.collection.mutable.Map[String, Array[Byte]]()
-        footer.getBlocks.asScala.foreach { blk =>
-          rows += blk.getRowCount
-          blk.getColumns.asScala.foreach { cc =>
-            val st = cc.getStatistics
-            if (st != null && st.hasNonNullValue) {
-              val isString = cc.getPrimitiveType.getLogicalTypeAnnotation
-                .isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation
-                  .StringLogicalTypeAnnotation]
-              (st.genericGetMin, st.genericGetMax) match {
-                case (lo: java.lang.Long, hi: java.lang.Long) =>
-                  val c = cc.getPath.toDotString
-                  mins.update(c, math.min(lo.longValue,
-                    mins.getOrElse(c, Long.MaxValue)))
-                  maxs.update(c, math.max(hi.longValue,
-                    maxs.getOrElse(c, Long.MinValue)))
-                case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                  val c = cc.getPath.toDotString
-                  mins.update(c, math.min(lo.longValue,
-                    mins.getOrElse(c, Long.MaxValue)))
-                  maxs.update(c, math.max(hi.longValue,
-                    maxs.getOrElse(c, Long.MinValue)))
-                // STRING-logical binary: zone bytewise min/max (the
-                // order parquet stats use). Raw binary blobs stay
-                // un-zoned — their bytes aren't valid UTF-8.
-                case (lo: org.apache.parquet.io.api.Binary,
-                      hi: org.apache.parquet.io.api.Binary) if isString =>
-                  val c = cc.getPath.toDotString
-                  val lb = lo.getBytes; val hb = hi.getBytes
-                  if (!sMins.contains(c) ||
-                      java.util.Arrays.compareUnsigned(lb, sMins(c)) < 0)
-                    sMins.update(c, lb)
-                  if (!sMaxs.contains(c) ||
-                      java.util.Arrays.compareUnsigned(hb, sMaxs(c)) > 0)
-                    sMaxs.update(c, hb)
-                case _ => () // other types: not zoned
-              }
-            }
-          }
-        }
-        // truncate string zones ONCE over the file-level min/max; a
-        // truncated max flips the flag the reader's comparison needs
-        val sTrip = sMins.keys.toSeq.sorted.map { c =>
-          val (mn, _) = utf8Prefix(
-            new String(sMins(c), StandardCharsets.UTF_8))
-          val (mx, cut) = utf8Prefix(
-            new String(sMaxs(c), StandardCharsets.UTF_8))
-          (c, mn, mx, cut)
-        }
-        FileEntry(rel, rows, mins.toMap, maxs.toMap,
-          sMin = sTrip.map(t => t._1 -> t._2).toMap,
-          sMax = sTrip.map(t => t._1 -> t._3).toMap,
-          sMaxTrunc = sTrip.collect { case (c, _, _, true) => c }.toSet)
-      } finally r.close()
-    }.collect().toSeq
+  private def footerEntry(conf: org.apache.hadoop.conf.Configuration,
+                          root: String, rel: String): FileEntry = {
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$root/$rel"), conf))
+    try {
+      val blocks = r.getFooter.getBlocks.asScala.toSeq
+      // per column, the chunk stats that saw a non-NULL value: an
+      // all-NULL column gets no zone
+      val stats = blocks.flatMap(_.getColumns.asScala)
+        .filter(cc => cc.getStatistics != null && cc.getStatistics.hasNonNullValue)
+        .groupBy(_.getPath.toDotString)
+      def zones[T](of: PrimitiveType => Boolean)(v: Any => T)(implicit o: Ordering[T]) =
+        stats.filter(cs => of(cs._2.head.getPrimitiveType)).map { case (c, cs) =>
+          c -> (cs.map(cc => v(cc.getStatistics.genericGetMin)).min,
+            cs.map(cc => v(cc.getStatistics.genericGetMax)).max) }
+      val longs = zones(t => t.getPrimitiveTypeName == INT32 ||
+        t.getPrimitiveTypeName == INT64)(_.asInstanceOf[Number].longValue)
+      // STRING-logical binary zones bytewise (the order parquet stats
+      // use), truncated once over the file-level min/max; raw binary
+      // stays un-zoned — its bytes aren't valid UTF-8
+      val bytewise: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
+      val strs = zones(_.getLogicalTypeAnnotation.isInstanceOf[StringLogicalTypeAnnotation])(
+        _.asInstanceOf[Binary].getBytes)(bytewise).map { case (c, (lo, hi)) =>
+        c -> (utf8Prefix(new String(lo, StandardCharsets.UTF_8))._1,
+          utf8Prefix(new String(hi, StandardCharsets.UTF_8))) }
+      FileEntry(rel, blocks.map(_.getRowCount).sum,
+        longs.map { case (c, (lo, _)) => c -> lo }, longs.map { case (c, (_, hi)) => c -> hi },
+        sMin = strs.map { case (c, (lo, _)) => c -> lo },
+        sMax = strs.map { case (c, (_, (hi, _))) => c -> hi },
+        sMaxTrunc = strs.collect { case (c, (_, (_, true))) => c }.toSet)
+    } finally r.close()
   }
 
   /** File slot = the layout value itself (mod numFiles) — an EXACT
     * partitioner, not a hash: `repartition(n, col)` murmur3-hashes,
     * which collides distinct layout values into shared files and
-    * scatters key ranges across them, wrecking zone tightness. With
-    * value-as-slot, `layout = key div K` produces range-CLUSTERED
-    * files whose key zones are tight, disjoint intervals — the whole
-    * point of zone pruning (and what makes the merge stabbing probe
-    * O(log files)).
+    * scatters key ranges across them. With value-as-slot, a layout
+    * like `key div K` whose distinct values number at most `numFiles`
+    * puts each value in its own file, so key zones are tight,
+    * disjoint intervals — what zone pruning and the merge stabbing
+    * probe rely on. Past `numFiles` distinct values the slots WRAP:
+    * values v and v + numFiles share a file, whose zone then spans
+    * both ranges.
     */
   private final class SlotPartitioner(n: Int) extends org.apache.spark.Partitioner {
     def numPartitions: Int = n
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** Write `df`'s rows as the data files of version `v` under
-    * `files/v<k>/` and return their footer-stat entries. `layout`
-    * clusters rows into files (e.g. `key div 200` — co-ranged keys
-    * land together; see [[SlotPartitioner]]); deterministic: the
-    * slot is a pure function of the row, so reruns produce identical
-    * file CONTENTS (names carry a job UUID; identity is the manifest
-    * listing, not the name). The one-pass RDD detour exists solely
-    * to place each row in an EXACT slot — parquet encode dominates
-    * the write cost either way.
+  /** Write the LOGICAL `df` (relabeled by `colMap`, [[toPhysical]]) as
+    * data files of version `v` in a fresh attempt directory and return
+    * their manifest entries: ONE Spark job whose tasks each return
+    * their file's [[footerEntry]]. `layout` clusters rows into files
+    * (see [[SlotPartitioner]]); a pure function of the row, so reruns
+    * write identical file CONTENTS. A frame the optimizer can see is
+    * empty runs no job, an empty one leaves no directory, and a failed
+    * job's directory is left to the vacuum orphan sweep.
     */
-  private def writeDataFiles(df: DataFrame, root: String, v: Long,
-                             layout: Column, numFiles: Int): Seq[FileEntry] = {
-    val rel = attemptRel(v)
+  private def writeDataFiles(df: DataFrame, root: String, v: Long, layout: Column,
+                             numFiles: Int, colMap: Map[String, String] = Map.empty)
+      : Seq[FileEntry] = {
+    val (phys, physLayout) = toPhysical(df, layout, colMap)
     val n = math.max(1, numFiles)
-    // the column-mapping write path pre-materializes the (logical)
-    // layout value as __graft_lay before relabeling — consume and
-    // drop it here so physical files never carry it
-    val keyed = df.withColumn("__graft_slot",
-      pmod(coalesce(layout.cast("long"), lit(0L)), lit(n.toLong)).cast("int"))
+    // the __graft_lay layout carrier never reaches a file
+    val keyed = phys.withColumn("__graft_slot",
+      pmod(coalesce(physLayout.cast("long"), lit(0L)), lit(n.toLong)).cast("int"))
       .drop("__graft_lay")
-    // exact slot→partition placement in Spark's INTERNAL row format
-    // (the external-Row roundtrip of df.rdd costs a per-field
-    // conversion on both sides of the shuffle)
-    org.apache.spark.sql.graftx.SlotWrite.placed(keyed, new SlotPartitioner(n))
-      .write.mode("overwrite").parquet(s"$root/$rel")
-    writtenFiles(df.sparkSession, root, rel)
-  }
-
-  /** The entries of the parquet files one write job left under the
-    * attempt directory `rel` — the one listing + footer-stat step
-    * every data write ends in. A 0-row file (an empty slot, or the
-    * empty frame of a delete-only merge) is left out: no manifest
-    * lists a file that holds no rows for every later scan to open.
-    */
-  private def writtenFiles(spark: SparkSession, root: String,
-                           rel: String): Seq[FileEntry] = {
-    val names = Files.list(Paths.get(root, rel)).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-      .toSeq.sorted
-    footerStats(spark, root, names.map(n => s"$rel/$n")).filter(_.rows > 0L)
+    if (provablyEmpty(keyed)) return Nil
+    val rel = attemptRel(v)
+    val dir = Files.createDirectories(Paths.get(root, rel))
+    val added = org.apache.spark.sql.graftx.SlotWrite.write(
+      keyed, new SlotPartitioner(n), s"$root/$rel") { (conf, name) =>
+      footerEntry(conf, root, s"$rel/$name")
+    }
+    if (added.isEmpty) Files.delete(dir)
+    added
   }
 
   /** Write a (f: file basename, k: suppressed key) frame as a DV
@@ -1003,19 +957,6 @@ object TableLog {
     hits.write.mode("overwrite").parquet(s"$root/$rel")
     rel
   }
-
-  /** A DML statement's new files: none when [[provablyEmpty]] (a
-    * delete whose hits all ride deletion vectors lands no row), which
-    * saves the write job, its footer-stats job and a 0-row file.
-    */
-  private def writeUnlessEmpty(merged: DataFrame, root: String, v: Long,
-                               layout: Column, colMap: Map[String, String],
-                               numFiles: Int): Seq[FileEntry] =
-    if (provablyEmpty(merged)) Nil
-    else {
-      val (physMerged, physLayout) = toPhysical(merged, layout, colMap)
-      writeDataFiles(physMerged, root, v, physLayout, numFiles)
-    }
 
   /** Relabel a LOGICAL batch to the table's PHYSICAL column names for
     * writing (column mapping). The caller's layout expression
@@ -1173,10 +1114,9 @@ object TableLog {
         }
       }
     def phys(c: String): String = cmap.getOrElse(c, c)
-    val (physDf, physLayout) = toPhysical(df, layout, cmap)
     // files, zones and BLOOMS are all keyed by the physical name
     val added = withBlooms(df.sparkSession, root,
-      writeDataFiles(physDf, root, v, physLayout, numFiles),
+      writeDataFiles(df, root, v, layout, numFiles, cmap),
       bloomCols.map(phys), bloomStrCols.map(phys), bloomBits)
     // an overwrite IS a full snapshot — a delta encoding of it would
     // be remove-everything + add-everything, strictly worse
@@ -2240,7 +2180,7 @@ object TableLog {
     val dense = raw.map(_._2).distinct.zipWithIndex.toMap
     val nBins = dense.size
     // file-name -> bin as a literal map column: codegen'd O(1) lookup
-    // per row (names are part-<idx>-<jobUUID> — unique across versions)
+    // per row (file names carry a write UUID — unique across versions)
     val binByName: Map[String, Long] = raw.map { case (rel, b) =>
       rel.substring(rel.lastIndexOf('/') + 1) -> dense(b).toLong
     }.toMap
@@ -2282,8 +2222,7 @@ object TableLog {
     require(parent >= 0, s"nothing to recluster at $root")
     val m = readManifest(root, parent)
     val v = parent + 1
-    val (physDf, physLayout) = toPhysical(read(spark, root), layout, m.colMap)
-    val added = writeDataFiles(physDf, root, v, physLayout, numFiles)
+    val added = writeDataFiles(read(spark, root), root, v, layout, numFiles, m.colMap)
     commitManifest(root, childOf(m, "recluster"), Nil, added,
       m.files.map(_.path), checkpointInterval)
   }
@@ -2395,8 +2334,7 @@ object TableLog {
         affectedRows, changesM, keyCol, verCol, opCol, valCol, newValCol)
       .drop("action")
     enforceDeclared(root, parent, merged, "merge")
-    val (physMerged, physLayout) = toPhysical(merged, layout, m.colMap)
-    val added = writeDataFiles(physMerged, root, v, physLayout, numFiles)
+    val added = writeDataFiles(merged, root, v, layout, numFiles, m.colMap)
     // delta form: only the zone-affected rewrite set is logged
     commitManifest(root, childOf(m, "merge"), carried, added,
       affectedPaths.toSeq, checkpointInterval)
@@ -2565,7 +2503,7 @@ object TableLog {
       .join(matched, keyCols, "left_anti")
     val merged = upsertsM.unionByName(carry.select(upsertsM.columns.map(col): _*))
     val v = parent + 1
-    val added = writeUnlessEmpty(merged, root, v, layout, m.colMap, numFiles)
+    val added = writeDataFiles(merged, root, v, layout, numFiles, m.colMap)
     commitManifest(root, childOf(m, action), carried, added,
       rewriteFiles.map(_.path), checkpointInterval)
   }
@@ -2700,7 +2638,7 @@ object TableLog {
     val merged = newState.unionByName(rewriteCarry
       .select(newState.columns.map(col): _*))
     val v = parent + 1
-    val added = writeUnlessEmpty(merged, root, v, layout, m.colMap, numFiles)
+    val added = writeDataFiles(merged, root, v, layout, numFiles, m.colMap)
     // DV carrier decision per file: a combined vector (prior inline +
     // prior side-file + fresh hits — disjoint by construction, the
     // probe reads merge-on-read so already-suppressed keys never
@@ -3227,20 +3165,15 @@ object TableLog {
 
   // ---- retention -------------------------------------------------------
 
-  /** Drop history: delete manifests below `keepFrom` and every data
-    * file referenced ONLY by them (files shared with surviving
-    * versions stay — immutability makes the reference set exact).
-    * Returns the deleted data-file paths. AS-OF reads below
-    * `keepFrom` fail loudly afterwards — the retention contract.
-    */
   /** The retention decision, shared by [[vacuum]] and its dry run:
-    * (dead versions, live versions, live file paths, deletable data
-    * files). Enumerates by manifest OR checkpoint (the round-11
-    * stale-checkpoint lesson); files shared with survivors and
-    * FOREIGN (absolute, clone-referenced) files are never deletable.
+    * (dead versions, live versions, deletable data files, directories
+    * to sweep, what vacuum reports). Enumerates by manifest OR
+    * checkpoint (the round-11 stale-checkpoint lesson); files shared
+    * with survivors and FOREIGN (absolute, clone-referenced) files are
+    * never deletable.
     */
   private def retentionPlan(root: String, keepFrom: Long)
-      : (Seq[Long], Seq[Long], Set[String], Seq[String]) = {
+      : (Seq[Long], Seq[Long], Seq[String], Seq[String], Seq[String]) = {
     val head = currentVersion(root)
     require(keepFrom <= head, s"keepFrom $keepFrom beyond head $head")
     val versions = (0L to head).filter(v =>
@@ -3255,19 +3188,38 @@ object TableLog {
     val deadFiles = dead.flatMap(v =>
       readManifest(root, v).files.flatMap(artifacts))
       .distinct.filterNot(p => liveFiles(p) || p.startsWith("/"))
-    (dead, live, liveFiles, deadFiles)
+    // a DV side-file reference IS a directory path (no trailing part
+    // file), so a file's directory and the raw ref both count
+    def dirsOf(ps: Iterable[String]): Set[String] =
+      ps.map(p => p.substring(0, p.lastIndexOf('/'))).toSet ++ ps
+    // ORPHAN SWEEP: a data dir no surviving manifest references, below
+    // the line, is a losing/failed/crashed attempt's or a vacuumed
+    // version's; an IN-FLIGHT commit targets head+1 > head ≥ keepFrom.
+    // A swept dir is reported unless its dead files already are.
+    val liveDirs = dirsOf(liveFiles)
+    val sweep = Option(Paths.get(root, "files").toFile.listFiles).toSeq.flatten
+      .filter(_.isDirectory).map(d => s"files/${d.getName}")
+      .filter(d => !liveDirs(d) && dirVersion(d).exists(_ < keepFrom)).sorted
+    (dead, live, deadFiles, sweep, deadFiles ++ sweep.filterNot(dirsOf(deadFiles)))
   }
 
-  /** DRY-RUN retention (Delta's `VACUUM … DRY RUN`): exactly the data
-    * files [[vacuum]](keepFrom) would delete — same enumeration and
-    * shared-file/foreign-file exclusions — with ZERO mutation: no
-    * checkpoint materialization, no manifest or stats retirement, no
-    * orphan sweep. The operational pre-check before an irreversible
+  /** DRY-RUN retention (Delta's `VACUUM … DRY RUN`): exactly what
+    * [[vacuum]](keepFrom) would delete and report, with ZERO mutation:
+    * no checkpoint materialization, no manifest or stats retirement,
+    * no sweep. The operational pre-check before an irreversible
     * retention drop.
     */
   def vacuumDryRun(root: String, keepFrom: Long): Seq[String] =
-    retentionPlan(root, keepFrom)._4
+    retentionPlan(root, keepFrom)._5
 
+  /** Drop history: delete manifests below `keepFrom` and every data
+    * file referenced ONLY by them (files shared with surviving
+    * versions stay — immutability makes the reference set exact),
+    * then sweep the orphan directories below the line. Returns the
+    * deleted data-file paths, then the swept directories that held
+    * none of them. AS-OF reads below `keepFrom` fail loudly
+    * afterwards — the retention contract.
+    */
   def vacuum(root: String, keepFrom: Long): Seq[String] = {
     // Enumerate by manifest OR checkpoint: a version may be
     // checkpoint-only (materialized by an earlier vacuum) and must
@@ -3276,7 +3228,7 @@ object TableLog {
     // stale-checkpoint leak: dropping only manifests left a dead
     // version 'readable' through its orphaned checkpoint, pointing at
     // deleted data files).
-    val (dead, live, liveFiles, deadFiles) = retentionPlan(root, keepFrom)
+    val (dead, live, deadFiles, sweep, reported) = retentionPlan(root, keepFrom)
     // A surviving DELTA manifest replays through its parent chain,
     // which may dip below the retention line — materialize the
     // LOWEST surviving version as a checkpoint FIRST (its resolved
@@ -3324,27 +3276,7 @@ object TableLog {
       val stats = Paths.get(f"$root/_stats/v$v%08d")
       if (Files.isDirectory(stats)) TidyIO.deleteRecursively(stats)
     }
-    // ORPHAN SWEEP: a data directory referenced by NO surviving
-    // manifest, targeting a version below the retention line, is the
-    // leftover of a losing/aborted commit that crashed before its
-    // self-cleanup (or the now-empty dir of a vacuumed version) —
-    // reclaim it. An IN-FLIGHT commit targets head+1 > head ≥
-    // keepFrom and is never touched; a dir the line can't judge
-    // (unparseable, or version ≥ keepFrom) is kept conservatively.
-    // a DV side-file reference IS a directory path (no trailing part
-    // file), so liveness checks both the mapped parent and the raw ref
-    val liveDirs = liveFiles.map(p => p.substring(0, p.lastIndexOf('/'))) ++
-      liveFiles
-    val filesRoot = Paths.get(root, "files")
-    if (Files.isDirectory(filesRoot))
-      Files.list(filesRoot).iterator().asScala.toSeq
-        .filter(Files.isDirectory(_))
-        .foreach { d =>
-          val relDir = s"files/${d.getFileName}"
-          if (!liveDirs.contains(relDir) &&
-              dirVersion(relDir).exists(_ < keepFrom))
-            TidyIO.deleteRecursively(d)
-        }
-    deadFiles
+    sweep.foreach(d => TidyIO.deleteRecursively(Paths.get(root, d)))
+    reported
   }
 }

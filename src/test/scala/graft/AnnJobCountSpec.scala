@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Job-count ceiling for IVF-ADC serving: one s17 execution (index
@@ -12,20 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * deterministic number before it shows on any clock.
   */
 class AnnJobCountSpec extends AnyFunSuite {
-  import SharedSpark.{sfDir, spark}
-
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get()
-  }
+  import SharedSpark.{jobsOf, sfDir, spark}
 
   test("one s17 execution (build + write) runs at most 20 Spark jobs") {
     val fn = SparkEntry.queries("s17_ivfadc_serve")

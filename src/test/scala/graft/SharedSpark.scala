@@ -15,4 +15,19 @@ object SharedSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts on the shared session. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get()
+  }
 }

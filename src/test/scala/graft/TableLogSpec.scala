@@ -15,7 +15,7 @@ import graft.sources.TableLog
   * commit point.
   */
 class TableLogSpec extends AnyFunSuite {
-  import SharedSpark.spark
+  import SharedSpark.{jobsOf, spark}
   import spark.implicits._
 
   private def freshRoot(tag: String): String = {
@@ -40,19 +40,45 @@ class TableLogSpec extends AnyFunSuite {
     finally all.close()
   }
 
-  /** Spark jobs `body` starts. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get()
+  /** Reference stats of one parquet file from its footer, read on the
+    * driver: (rows, long zones min/max, string zones min/max, truncated
+    * string maxima) — the form a manifest entry carries.
+    */
+  private def footerOf(path: String) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.io.api.Binary
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+    try {
+      val blocks = r.getFooter.getBlocks.asScala.toSeq
+      val chunks = blocks.flatMap(_.getColumns.asScala)
+        .filter(c => c.getStatistics != null && c.getStatistics.hasNonNullValue)
+        .groupBy(_.getPath.toDotString)
+      def longs(f: Any => Option[Long]) = chunks.flatMap { case (c, cs) =>
+        val lo = cs.flatMap(cc => f(cc.getStatistics.genericGetMin))
+        val hi = cs.flatMap(cc => f(cc.getStatistics.genericGetMax))
+        if (lo.isEmpty) None else Some(c -> (lo.min, hi.max))
+      }
+      val lz = longs {
+        case v: java.lang.Long => Some(v.longValue)
+        case v: java.lang.Integer => Some(v.longValue)
+        case _ => None
+      }
+      val isString = chunks.filter { case (_, cs) =>
+        cs.head.getPrimitiveType.getLogicalTypeAnnotation.isInstanceOf[
+          org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation] }
+      val ord: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
+      val sz = isString.map { case (c, cs) =>
+        val lo = cs.map(_.getStatistics.genericGetMin.asInstanceOf[Binary].getBytes).min(ord)
+        val hi = cs.map(_.getStatistics.genericGetMax.asInstanceOf[Binary].getBytes).max(ord)
+        c -> (TableLog.utf8Prefix(new String(lo, "UTF-8")),
+          TableLog.utf8Prefix(new String(hi, "UTF-8")))
+      }
+      (blocks.map(_.getRowCount).sum, lz.map { case (c, z) => c -> z._1 },
+        lz.map { case (c, z) => c -> z._2 }, sz.map { case (c, z) => c -> z._1._1 },
+        sz.map { case (c, z) => c -> z._2._1 }, sz.collect { case (c, z) if z._2._2 => c }.toSet)
+    } finally r.close()
   }
 
   /** `lo <= c <= hi` as the planner's filter pair. */
@@ -305,6 +331,92 @@ class TableLogSpec extends AnyFunSuite {
     assert(jobs == 8, s"one delete-only applyDml ran $jobs Spark jobs")
     assert(TableLog.readManifest(root, TableLog.currentVersion(root)).files.size == 20)
     assert(rows(TableLog.read(spark, root)).size == 2000 - 40)
+  }
+
+  test("a data commit runs one Spark job") {
+    val root = freshRoot("onejob")
+    TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 4, "overwrite")
+    val jobs = jobsOf(TableLog.commit(mkDf(100L until 200L), root,
+      expr("k div 25"), 4, "append"))
+    info(s"one local-frame append ran $jobs Spark jobs")
+    assert(jobs == 1, s"one local-frame append ran $jobs Spark jobs")
+    assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 200L)))
+  }
+
+  test("data writes fork no chmod: one q84 execution") {
+    val q84 = SparkEntry.queries("q84_sql_write")
+    val forks = graft.Prof.forkedCommands {
+      assert(q84(spark, SharedSpark.sfDir).count() == 1L) }
+    val chmods = forks.filter(_.contains("chmod"))
+    assert(chmods.size == 0,
+      s"${chmods.size} of ${forks.size} forks are chmod, e.g. ${chmods.take(2)}")
+  }
+
+  test("write-time stats equal a footer read of the written files; an empty frame lists none") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.types.DecimalType
+    val root = freshRoot("statsparity")
+    // 30 UTF-8 bytes, past the zone prefix, and the files' maximum
+    val long = "\uD83D\uDE00überlong-ключ-ärger-"
+    val df = (0 until 90).map(i => (i, i.toLong * 1000L, i % 7, i)).toDF("i", "l", "sh", "day")
+      .select(col("i"), col("l"), col("sh").cast("short").as("sh"),
+        date_add(lit("2024-01-01").cast("date"), col("day")).as("d"),
+        timestamp_micros(col("l") + 1700000000000000L).as("ts"),
+        (col("l") / 100).cast(DecimalType(10, 2)).as("dec"),
+        when(col("i") % 3 === 0, concat(lit(long), col("i").cast("string")))
+          .when(col("i") % 3 === 1, concat(lit("日本"), col("i").cast("string")))
+          .otherwise(col("i").cast("string")).as("s"),
+        col("i").cast("string").cast("binary").as("b"),
+        lit(null).cast("long").as("n"))
+    TableLog.commit(df, root, expr("i div 30"), 3, "overwrite")
+    val written = TableLog.readManifest(root, 0L).files
+    assert(written.size == 3 && written.map(_.rows).sum == 90L)
+    written.foreach { fe =>
+      val ref = footerOf(s"$root/${fe.path}")
+      assert((fe.rows, fe.zMin, fe.zMax, fe.sMin, fe.sMax, fe.sMaxTrunc) == ref,
+        s"${fe.path}: write-time stats differ from its footer")
+    }
+    // the zones are not vacuous: every INT32/INT64 column is zoned and
+    // the string zone is truncated; INT96 timestamps, binary and
+    // all-NULL columns are not zoned
+    val e = written.head
+    assert(e.zMin.keySet == Set("i", "l", "sh", "d", "dec"), e.zMin.keySet)
+    assert(e.sMin.keySet == Set("s") && e.sMaxTrunc("s"))
+    // an all-empty frame: a version with no file and no directory
+    val dirsBefore = Files.list(Paths.get(root, "files")).count()
+    TableLog.commit(df.filter(lit(false)), root, expr("i div 30"), 3, "append")
+    assert(TableLog.readManifest(root, 1L).files == written)
+    assert(Files.list(Paths.get(root, "files")).count() == dirsBefore)
+  }
+
+  test("a failed write job commits nothing; the dry run names its attempt directory") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = freshRoot("failedwrite")
+    TableLog.commit(mkDf(0L until 100L), root, expr("k div 25"), 4, "overwrite")
+    def dirs(): Set[String] = Files.list(Paths.get(root, "files")).iterator().asScala
+      .map(d => s"files/${d.getFileName}").toSet
+    val before = dirs()
+    val failing = spark.range(0L, 100L, 1L, 4).select((col("id") + 1000L).as("k"),
+      when(col("id") === 57L, raise_error(lit("injected write failure")))
+        .otherwise(col("id") * 10L + 1L).as("cents"))
+    val err = intercept[Exception] {
+      TableLog.commit(failing, root, expr("k div 25"), 4, "append") }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected write failure")))
+    assert(TableLog.currentVersion(root) == 0L)
+    assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 100L)))
+    val attempt = dirs() -- before
+    assert(attempt.size == 1, s"the failed attempt's directory: $attempt")
+    // once two commits move the retention line past its version, the
+    // dry run names the attempt directory and vacuum reclaims it
+    TableLog.commit(mkDf(100L until 110L), root, expr("k div 25"), 1, "append")
+    TableLog.commit(mkDf(110L until 120L), root, expr("k div 25"), 1, "append")
+    val dry = TableLog.vacuumDryRun(root, 2L)
+    assert(dry == attempt.toSeq, s"dry run: $dry")
+    assert(TableLog.vacuum(root, 2L) == dry)
+    assert(!Files.exists(Paths.get(root, attempt.head)))
+    assert(rows(TableLog.read(spark, root)) == rows(mkDf(0L until 120L)))
   }
 
   test("parquet checkpoints: large manifests round-trip binary with identical resolution") {
