@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Exact Spark job counts per execution of the store queries of the
-  * `dml_stream` benchmark workload, at sf0.001 on the shared session.
+  * `dml_stream` benchmark workload and of the two other MERGE queries
+  * (q65, q92), at sf0.001 on the shared session.
   * An execution builds the query (its eager commits, MERGEs and SQL
   * writes) and emits the result as parquet, as the benchmark does; the
   * first execution pays schema inference and first-use costs and is
@@ -21,7 +22,9 @@ class JobBudgetSpec extends AnyFunSuite {
     "q84_sql_write" -> 8,
     "q95_catalog_tables" -> 13,
     "q97_merge_general" -> 25,
-    "q83_string_zones" -> 5)
+    "q83_string_zones" -> 5,
+    "q65_table_log" -> 17,
+    "q92_sql_merge" -> 40)
 
   budget.foreach { case (name, expected) =>
     test(s"one $name execution keeps its job budget") {
