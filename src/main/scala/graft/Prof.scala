@@ -3,7 +3,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import scala.jdk.CollectionConverters._
 
 /** Per-job wall-clock profiler for one or more SparkEntry queries:
-  * prints every Spark job's duration with its call site, so a
+  * prints every Spark job's duration with its call site, its SQL
+  * execution id and the operator scopes its stages ran, so a
   * multi-action operator (DML commits, store lifecycles) can be
   * attributed line-by-line, and the processes the timed run forked,
   * counted by program — a fork costs milliseconds, and Hadoop's local
@@ -32,7 +33,14 @@ object Prof {
         val site = js.stageInfos.sortBy(_.stageId).lastOption
           .map(_.name).getOrElse("?")
         val nTasks = js.stageInfos.map(_.numTasks).sum
-        starts.put(js.jobId, (js.time, s"$site tasks=$nTasks"))
+        // an AQE stage job's call site is a thread-pool frame; its SQL
+        // execution and operator scopes say what it ran
+        val sql = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .fold("")(id => s" sql=$id")
+        val scopes = org.apache.spark.sql.graftx.JobScopes.of(js.stageInfos)
+        starts.put(js.jobId, (js.time,
+          s"$site tasks=$nTasks$sql ${scopes.mkString(",")}".trim))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         Option(starts.get(je.jobId)).foreach { case (t0, site) =>

@@ -902,8 +902,9 @@ object Relational {
 
     // R77/q75: MERGE-ON-READ deletion vectors — the sparse-delete
     // shape copy-on-write can't afford (round-11 missing-item 3; a
-    // ~2%-density change batch under q65's CoW merge rewrites every
-    // zone-hit file): mergeMor keeps hit files byte-identical and
+    // ~2%-density change batch under q65's copy-on-write merge
+    // rewrites every file holding a changed key): mergeMor keeps hit
+    // files byte-identical and
     // rides their freshly deleted KEYS on the manifest as deletion
     // vectors, writing only the new state (updates) as data files.
     // Certified value-for-value three ways in one row: the head
@@ -1703,16 +1704,17 @@ object Relational {
     // ON predicates (the round-14 top-next after the catalog: Delta
     // accepts any ON shape and any key; the R96 trio required a
     // single long key pinned by an ON equality). The table keys on
-    // the TUPLE (ck, ok) via the multi-column primaryKey option and
-    // rides the exact COPY-ON-WRITE carrier (tuple identity can't sit
-    // in a single-column deletion vector; hashed-tuple DVs are the
-    // documented evolution sharing this write path); the MERGE's ON
-    // carries a RANGE conjunct (t.price < THR), so matched-but-
-    // over-threshold rows take no action and the insert path keeps
-    // its key-existence probe on. Physical claims ride as literals:
-    // the CoW rewrite touched a strict subset of the files (the
-    // change hull prunes on the ok zone — hits concentrate in the
-    // low-ok quarter) and the statement was ONE commit. The oracle
+    // the TUPLE (ck, ok) via the multi-column primaryKey option, so
+    // the one DML core rewrites the files holding a changed key
+    // instead of taking deletion vectors (tuple identity can't sit in
+    // a single-column vector; hashed-tuple DVs are the documented
+    // evolution sharing this write path); the MERGE's ON carries a
+    // RANGE conjunct (t.price < THR), so matched-but-over-threshold
+    // rows take no action and the insert path keeps its key-existence
+    // probe on. Physical claims ride as literals: the rewrite touched
+    // a strict subset of the files (the change hull prunes on the ok
+    // zone — hits concentrate in the low-ok quarter) and the
+    // statement was ONE commit. The oracle
     // replays the clause semantics tuple-for-tuple from raw orders.
     "q97_merge_general" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}
@@ -2488,12 +2490,13 @@ object Relational {
     // whole snapshot compacted as v2 (content-preserving, the q50
     // planner executed), a CDC batch (deletes ≡0 mod 10, updates ≡5
     // mod 10, inserts from the mod-3≡2 subset) merged COPY-ON-WRITE
-    // as v3 — only zone-affected files rewritten. Each step is then
+    // as v3 — only the files holding a changed key rewritten, every
+    // other file carried by reference. Each step is then
     // read back AS OF its version from the manifest store and
     // aggregated; the oracle recomputes all four snapshots from raw
     // orders by set algebra + the q51 latest-wins merge, so any
     // corruption in commit, footer stats, manifest resolution,
-    // compaction binning, zone-based rewrite selection, or the
+    // compaction binning, key-based rewrite selection, or the
     // as-of read shows up value-for-value. TableLogSpec separately
     // pins the physical claims (zone file pruning before the scan,
     // carried-by-reference files, OCC commit point, vacuum).
@@ -2522,7 +2525,7 @@ object Relational {
           .filter(pmod(col("k"), lit(3L)) === 2L && pmod(col("k"), lit(2L)) === 0L)
           .select(col("k"), lit(1L).as("ver"), lit("U").as("op"),
             (col("price") + lit(7L)).as("new_price")))
-      val v3 = TableLog.merge(root, changes, "k", layout, 4)
+      val v3 = TableLog.mergeMor(s, root, changes, "k", layout, 4, dvMaxFrac = 0.0)
       Seq(("initial", v0), ("append", v1), ("compact", v2), ("merge", v3))
         .map { case (nm, v) =>
           TableLog.read(s, root, asOf = Some(v)).agg(

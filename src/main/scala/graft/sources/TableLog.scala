@@ -1904,6 +1904,57 @@ object TableLog {
     (planFiles(m, filters), m.files.size)
   }
 
+  /** The key-set prune, [[planFiles]]'s rule for a frame of change
+    * keys: the files of `m` whose zones may hold a key tuple of `keys`
+    * (distinct, NULL-free, one column per `keyCols` part). It reads
+    * every partition of `keys`, so it can be the materializing job of
+    * [[org.apache.spark.sql.graftx.Materialize.cleanWith]].
+    *
+    * A single long key takes the stabbing search: the zone intervals
+    * come to the driver (manifest-sized) sorted by zMin with a prefix
+    * max of zHi, and each key probes them in one `mapPartitions` pass
+    * with no join — a binary search plus the overlap depth, so a
+    * range-clustered layout costs O(log files) per key. Every other
+    * key shape (a string key, a composite key) prunes by the
+    * per-column hull [min, max] through [[planFiles]]. Both are
+    * conservative: un-zoned files are always kept, and the DML core's
+    * probe checks which kept files really hold a key.
+    */
+  private def planKeys(m: Manifest, keys: DataFrame,
+                       keyCols: Seq[String]): Seq[FileEntry] =
+    if (keyCols.size == 1 &&
+        keys.schema.head.dataType == org.apache.spark.sql.types.LongType) {
+      val zc = m.physicalOf(keyCols.head) // zones are keyed by PHYSICAL name
+      val (zoned, unzoned) = m.files.partition(_.zMin.contains(zc))
+      val sorted = zoned.sortBy(f => (f.zMin(zc), f.path))
+      val zlos = sorted.map(_.zMin(zc)).toArray
+      val zhis = sorted.map(_.zMax(zc)).toArray
+      val prefMaxHi = zhis.scanLeft(Long.MinValue)((a, b) => math.max(a, b)).tail
+      import keys.sparkSession.implicits._
+      val hit = keys.as[Long].mapPartitions { it =>
+        val hit = scala.collection.mutable.Set[Int]()
+        it.foreach { k =>
+          // first index with zMin > k: candidates are strictly left of it
+          val i = java.util.Arrays.binarySearch(zlos, k) match {
+            case neg if neg < 0 => -neg - 1
+            case pos => // walk right over equal zMins
+              var p = pos; while (p < zlos.length && zlos(p) == k) p += 1; p
+          }
+          var j = i - 1
+          while (j >= 0 && prefMaxHi(j) >= k) { if (zhis(j) >= k) hit += j; j -= 1 }
+        }
+        hit.iterator
+      }.collect().toSet
+      unzoned ++ sorted.indices.filter(hit).map(sorted)
+    } else {
+      val bounds = keyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
+      val hull = keys.agg(bounds.head, bounds.tail: _*).head()
+      if (hull.isNullAt(0)) Nil
+      else planFiles(m, keyCols.zipWithIndex.flatMap { case (c, i) =>
+        Seq(GreaterThanOrEqual(c, hull.get(2 * i)),
+          LessThanOrEqual(c, hull.get(2 * i + 1))) })
+    }
+
   /** The row form of a data-source filter — what [[read]] re-applies
     * inside the surviving files; the shapes the planner reads.
     */
@@ -2227,144 +2278,23 @@ object TableLog {
       m.files.map(_.path), checkpointInterval)
   }
 
-  /** CDC MERGE as a COMMIT — copy-on-write at FILE granularity (the
-    * Delta/Iceberg MERGE shape): only files whose key zone could
-    * contain a changed key are rewritten; everything else carries
-    * forward by manifest reference, zero IO. The rewrite itself is
-    * [[graft.operators.ChangeLog.latestState]] over the affected
-    * rows — deletes drop, upserts override, inserts (keys in no
-    * file's zone) land in the new files.
+  /** CDC MERGE as a COMMIT (Delta's MERGE executor): the change batch
+    * (`keyCol`, `verCol`, `opCol`, `newValCol`) collapses latest-wins
+    * over the rows it hits ([[graft.operators.ChangeLog.latestState]])
+    * — deletes drop, upserts and inserts land in new files. The table
+    * must be primary-keyed on `keyCol`. Physically this is the one DML
+    * core, [[morApply]]: a file that holds a change key keeps its bytes
+    * and takes the hit keys into its DELETION VECTOR when they are at
+    * most `dvMaxFrac` of its live rows (merge-on-read), and is
+    * rewritten without them otherwise; every other file carries by
+    * reference. `dvMaxFrac = 0` is copy-on-write of exactly the files
+    * that hold a changed key.
     *
-    * Affected-file detection: zone intervals come to the driver
-    * (manifest-sized, bounded by construction) and each DISTINCT
-    * change key probes them via a broadcast sorted array — one
-    * linear pass over the changes, no join. Intervals are scanned
-    * from the first candidate (sorted by zMin, early-exit on zMin >
-    * key); with a range-clustered layout intervals are near-disjoint
-    * and this is effectively a binary search. The returned affected
-    * set is file-path-sized.
-    */
-  /** The stabbing probe shared by [[merge]] and [[mergeMor]]: which
-    * live files' key ZONES could contain any change key. Zone
-    * intervals come to the driver (manifest-sized, bounded by
-    * construction) and each DISTINCT change key probes them via a
-    * broadcast sorted array — one linear pass over the changes, no
-    * join. Intervals are scanned from the first candidate using a
-    * prefix-max of zHi over the zMin-sorted order (early-exit as soon
-    * as no earlier interval can still reach k), so with a
-    * range-clustered (near-disjoint) layout each probe is binary
-    * search + O(overlap depth), not O(files). Un-zoned (all-NULL-key)
-    * files are always affected.
-    */
-  private def affectedFileSet(m: Manifest, changes: DataFrame,
-                              keyCol: String): Set[String] = {
-    val spark = changes.sparkSession
-    val zc = m.physicalOf(keyCol) // zones are keyed by PHYSICAL name
-    val zoned = m.files
-      .filter(f => f.zMin.contains(zc))
-      .map(f => (f.zMin(zc), f.zMax(zc), f.path))
-      .sortBy(z => (z._1, z._3))
-    val unzoned = m.files.filterNot(f => f.zMin.contains(zc)).map(_.path)
-    val zlos = zoned.map(_._1).toArray
-    val zhis = zoned.map(_._2).toArray
-    val zpaths = zoned.map(_._3).toArray
-    val prefMaxHi = new Array[Long](zhis.length)
-    var pi = 0
-    while (pi < zhis.length) {
-      prefMaxHi(pi) = if (pi == 0) zhis(0) else math.max(prefMaxHi(pi - 1), zhis(pi))
-      pi += 1
-    }
-    import spark.implicits._
-    changes.select(col(keyCol).cast("long"))
-      .na.drop().distinct().as[Long]
-      .mapPartitions { it =>
-        val hit = scala.collection.mutable.Set[Int]()
-        it.foreach { k =>
-          // first index with zMin > k: candidates are strictly left of it
-          var i = java.util.Arrays.binarySearch(zlos, k) match {
-            case neg if neg < 0 => -neg - 1
-            case pos => // walk right over equal zMins
-              var p = pos; while (p < zlos.length && zlos(p) == k) p += 1; p
-          }
-          var j = i - 1
-          while (j >= 0 && prefMaxHi(j) >= k) { if (zhis(j) >= k) hit += j; j -= 1 }
-        }
-        hit.iterator.map(zpaths)
-      }.collect().toSet ++ unzoned
-  }
-
-  /** String-key twin of [[affectedFileSet]]: the files [[planFiles]]
-    * keeps for the change keys' HULL [min, max] over the
-    * truncation-safe string zones — conservative (a kept file may hold
-    * no change key; the probe re-checks exactly), one 2-value
-    * aggregate instead of the per-key binary search the long zones
-    * afford.
-    */
-  private def affectedFileSetStr(m: Manifest, changes: DataFrame,
-                                 keyCol: String): Set[String] = {
-    val hull = changes.select(col(keyCol).cast("string").as(keyCol))
-      .na.drop().agg(min(keyCol), max(keyCol)).head()
-    if (hull.isNullAt(0)) Set.empty
-    else planFiles(m, Seq(GreaterThanOrEqual(keyCol, hull.getString(0)),
-      LessThanOrEqual(keyCol, hull.getString(1)))).map(_.path).toSet
-  }
-
-  def merge(root: String, changes: DataFrame,
-            keyCol: String, layout: Column, numFiles: Int = 8,
-            verCol: String = "ver", opCol: String = "op",
-            valCol: String = "price", newValCol: String = "new_price",
-            checkpointInterval: Int = 1): Long = {
-    val spark = changes.sparkSession
-    val parent = currentVersion(root)
-    require(parent >= 0, s"merge target $root has no committed version")
-    val m = readManifest(root, parent)
-    // change batch is churn-sized; materialize once — the zone prune
-    // and the latest-state collapse both consume it. The zone prune's
-    // hull aggregate IS the materializing job (cleanWith), so
-    // materialize+prune cost one job, not two.
-    val (changesM, affectedPaths) = org.apache.spark.sql.graftx.Materialize
-      .cleanWith(changes)(c => affectedFileSet(m, c, keyCol))
-    val carried = m.files.filterNot(f => affectedPaths.contains(f.path))
-    val v = parent + 1
-    // manifest-schema-resolved scan of the rewrite set: post-evolution
-    // old files null-fill accreted columns here exactly as in read()
-    val affectedRows = readFiles(spark, root, m,
-      m.files.filter(f => affectedPaths.contains(f.path)).sortBy(_.path))
-    val merged = graft.operators.ChangeLog.latestState(
-        affectedRows, changesM, keyCol, verCol, opCol, valCol, newValCol)
-      .drop("action")
-    enforceDeclared(root, parent, merged, "merge")
-    val added = writeDataFiles(merged, root, v, layout, numFiles, m.colMap)
-    // delta form: only the zone-affected rewrite set is logged
-    commitManifest(root, childOf(m, "merge"), carried, added,
-      affectedPaths.toSeq, checkpointInterval)
-  }
-
-  /** CDC MERGE as a COMMIT, MERGE-ON-READ (Delta's deletion-vector
-    * merge; [[merge]] is the copy-on-write twin): a SPARSE change
-    * batch should not rewrite whole files — per affected file, if the
-    * fraction of its live rows actually hit by change keys is at most
-    * `dvMaxFrac`, the file is kept byte-identical and its hit keys
-    * join the file's DELETION VECTOR in the manifest; only files
-    * above the threshold (or the density a future compact
-    * materializes) rewrite. New row STATE — upserts and inserts, the
-    * [[graft.operators.ChangeLog.latestState]] collapse over exactly
-    * the hit rows — always lands in new files; deletes are pure dv
-    * entries (or drop out of a rewrite). The table must be
-    * primary-keyed on `keyCol` (the existing merge contract): dv keys
-    * are recorded only for keys VERIFIED present in their file (one
-    * column-pruned probe scan of the affected files, collected volume
-    * bounded by the change-set size), which keeps `liveRows` and the
-    * change feed exact.
-    *
-    * IO shape at 100 TB: the probe scan + rewrite IO proportional to
-    * the DENSE-hit tail only — a 0.1%-density delete batch over a
-    * 10^4-file table writes one manifest and ~no data files, where
-    * copy-on-write rewrites every zone-hit file. Reads pay the
-    * [[applyDv]] probe until a compact/recluster materializes the
-    * DVs away. [[readChangeFeed]] surfaces dv GROWTH as row-level
-    * deletes — sparse deletes stream out exactly, not as file-level
-    * delete+reinsert.
+    * IO shape at 100 TB: a 0.1%-density delete batch over a 10^4-file
+    * table writes one manifest and ~no data files, where copy-on-write
+    * rewrites every hit file. Reads pay the [[applyDv]] probe until a
+    * compact/recluster materializes the vectors away, and
+    * [[readChangeFeed]] surfaces vector growth as row-level deletes.
     */
   def mergeMor(spark: SparkSession, root: String, changes: DataFrame,
                keyCol: String, layout: Column, numFiles: Int = 8,
@@ -2384,7 +2314,7 @@ object TableLog {
           hitRows, changes, keyCol, verCol, opCol, valCol, newValCol).drop("action")
         if (deleteOnly) state.limit(0) else state
       },
-      keyCol, layout, numFiles, dvMaxFrac, checkpointInterval, txnTag,
+      Seq(keyCol), layout, numFiles, dvMaxFrac, checkpointInterval, txnTag,
       "merge-mor", dvInlineMax, dvInlineBudget)
   }
 
@@ -2401,127 +2331,52 @@ object TableLog {
     */
   val dvInlineBudgetDefault: Long = 1L << 18
 
-  /** The SQL-DML entry onto the merge-on-read carrier (R96: MERGE
-    * INTO / UPDATE / DELETE lowered by [[org.apache.spark.sql.graftx
-    * .GraftDmlRule]]): `suppressKeys` (ONE column named `keyCol`) are
-    * the keys whose CURRENT rows the statement retires — updated and
-    * deleted keys — and `upserts` (table schema) are the rows the
-    * statement lands — post-update images and inserts. Same physical
-    * contract as [[mergeMor]]: sparse hits ride deletion vectors,
-    * dense files rewrite, inserts only ever write new files; ONE
-    * write path, so SQL DML and the programmatic API can never
-    * drift.
+  /** The SQL-DML entry onto the one DML core (MERGE INTO / UPDATE /
+    * DELETE lowered by [[org.apache.spark.sql.graftx.GraftDmlRule]]):
+    * `suppressKeys` (one column per `keyCols` part) are the keys whose
+    * CURRENT rows the statement retires — updated and deleted keys —
+    * and `upserts` (table schema) are the rows it lands — post-update
+    * images and inserts. Same physical contract as [[mergeMor]], so
+    * SQL DML and the programmatic API can never drift. A composite key
+    * never takes a deletion vector (a vector is keyed by one column):
+    * its hit files are rewritten.
     */
   def applyDml(spark: SparkSession, root: String, suppressKeys: DataFrame,
-               upserts: DataFrame, keyCol: String, layout: Column,
+               upserts: DataFrame, keyCols: Seq[String], layout: Column,
                numFiles: Int = 8, dvMaxFrac: Double = 0.10,
                checkpointInterval: Int = 1,
                action: String = "sql-dml",
                dvInlineMax: Int = 4096,
                dvInlineBudget: Long = dvInlineBudgetDefault): Long =
-    morApply(spark, root, suppressKeys, _ => upserts, keyCol, layout,
+    morApply(spark, root, suppressKeys, _ => upserts, keyCols, layout,
       numFiles, dvMaxFrac, checkpointInterval, None, action, dvInlineMax,
       dvInlineBudget)
 
-  /** COMPOSITE-key DML carrier (R101 — the key shapes [[applyDml]]'s
-    * single-column merge-on-read path can't address): suppression is
-    * COPY-ON-WRITE of exactly the hit files — the deletion-vector
-    * manifest line is keyed by one column, so a multi-column key
-    * retires old images by rewriting the files that hold them
-    * (Delta's shape with deletion vectors disabled; tuple-hash dv
-    * vectors are the documented evolution, sharing this write path).
-    *
-    * Physical shape at 100 TB: `suppressKeys` (the statement's
-    * matched key TUPLES, one column per key part) prunes the probe to
-    * files whose zones intersect the change hull on every LONG/STRING
-    * key component, the probe is one distributed column-pruned
-    * semi-join collecting only HIT FILE NAMES (bounded by the file
-    * count, never the key count), and the rewrite reads/writes only
-    * hit files — untouched files carry by reference. Inserts land in
-    * new files either way; never a whole-table rewrite unless every
-    * file holds a hit.
-    */
-  def applyDmlCow(spark: SparkSession, root: String,
-                  suppressKeys: DataFrame, upserts: DataFrame,
-                  keyCols: Seq[String], layout: Column,
-                  numFiles: Int = 8, checkpointInterval: Int = 1,
-                  action: String = "sql-dml"): Long = {
-    require(keyCols.size >= 2,
-      s"applyDmlCow is the composite-key carrier; single-column keys " +
-        s"take applyDml's merge-on-read path (got $keyCols)")
-    val parent = currentVersion(root)
-    require(parent >= 0, s"merge target $root has no committed version")
-    val m = readManifest(root, parent)
-    // matched tuples are churn-sized; materialized ONCE (the same
-    // source-materialization move as morApply) — the hull aggregate,
-    // the hit-file probe semi join and the rewrite-carry anti join
-    // below would otherwise each re-execute the statement's whole
-    // key-derivation DAG
-    // conjunctive hull prune through the one planner: a file survives
-    // only if EVERY key component's change hull [lo, hi] intersects
-    // its zone (an absent long zone is an all-NULL chunk, where no
-    // NULL-dropped tuple can live). The hull aggregate is the
-    // materializing job (cleanWith): materialize+prune cost one job,
-    // not two.
-    val (matched, hullRow) = org.apache.spark.sql.graftx.Materialize.cleanWith(
-      suppressKeys.select(keyCols.map(col): _*).na.drop().distinct()) { mm =>
-      mm.agg(
-        keyCols.flatMap(c => Seq(min(col(c)).as(s"lo_$c"),
-          max(col(c)).as(s"hi_$c"))).head,
-        keyCols.flatMap(c => Seq(min(col(c)).as(s"lo_$c"),
-          max(col(c)).as(s"hi_$c"))).tail: _*).head()
-    }
-    val affected =
-      if (hullRow.isNullAt(0)) Nil
-      else planFiles(m, keyCols.zipWithIndex.flatMap { case (c, i) =>
-        Seq(GreaterThanOrEqual(c, hullRow.get(2 * i)),
-          LessThanOrEqual(c, hullRow.get(2 * i + 1))) })
-    // one distributed probe: which affected files actually HOLD a
-    // matched tuple — only file NAMES come back
-    val hitNames: Set[String] =
-      if (affected.isEmpty) Set.empty
-      else readFiles(spark, root, m, affected, fileCol = Some("__fp"))
-        .join(matched, keyCols, "left_semi")
-        .select(element_at(split(col("__fp"), "/"), -1).as("__f"))
-        .distinct().collect().map(_.getString(0)).toSet
-    def baseName(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val rewriteFiles = affected.filter(f => hitNames(baseName(f.path)))
-    val carried = m.files.filterNot(f =>
-      rewriteFiles.exists(_.path == f.path))
-    // upserts are churn-sized. With declared checks the constraint
-    // gate AND the write both consume them — materialize once, with
-    // the gate's aggregate as the materializing job; with no checks
-    // the write is the ONLY consumer, so skip materialization (one
-    // execution either way, one fewer job).
-    val cowChecks = headerMap(root, parent, 9)
-    val upsertsM =
-      if (cowChecks.isEmpty || provablyEmpty(upserts)) upserts
-      else org.apache.spark.sql.graftx.Materialize.cleanWith(upserts)(
-        u => enforceChecks(u, cowChecks.toSeq.sortBy(_._1), action))._1
-    // rewritten files keep their non-hit rows alongside the new state
-    val carry = readFiles(spark, root, m, rewriteFiles)
-      .join(matched, keyCols, "left_anti")
-    val merged = upsertsM.unionByName(carry.select(upsertsM.columns.map(col): _*))
-    val v = parent + 1
-    val added = writeDataFiles(merged, root, v, layout, numFiles, m.colMap)
-    commitManifest(root, childOf(m, action), carried, added,
-      rewriteFiles.map(_.path), checkpointInterval)
-  }
-
-  /** Shared merge-on-read core: `keySource` provides the change-key
-    * set (any frame carrying `keyCol`), `newStateOf(hitRows)` the
-    * post-change rows to land in new files. Everything physical —
-    * probe scan, DV-vs-rewrite partition, carry logic, manifest
-    * delta — lives here exactly once.
+  /** The one DML core under [[mergeMor]] and [[applyDml]]: `keySource`
+    * carries the change keys (one column per `keyCols` part),
+    * `newStateOf(hitRows)` the post-change rows to land in new files.
+    *  - Prune: the churn-sized distinct key set is materialized once,
+    *    and its materializing job is the key prune ([[planKeys]]).
+    *  - Probe: one column-pruned `left_semi` join of the pruned files
+    *    with the keys counts the keys each file holds (one row per
+    *    (key, file) under the primary-key contract). A pruned file
+    *    that holds none carries by reference.
+    *  - Per hit file: a deletion vector (single-column key, hits at
+    *    most `dvMaxFrac` of its live rows) or a rewrite that keeps its
+    *    other rows.
+    *  - Write: the new state passes the declared constraints and lands,
+    *    with the rewrite carry, in one write; one manifest delta
+    *    commits it. `txnTag` makes a re-delivered batch a no-op.
     */
   private def morApply(spark: SparkSession, root: String,
                        keySource: DataFrame,
                        newStateOf: DataFrame => DataFrame,
-                       keyCol: String, layout: Column, numFiles: Int,
+                       keyCols: Seq[String], layout: Column, numFiles: Int,
                        dvMaxFrac: Double, checkpointInterval: Int,
                        txnTag: Option[String], actionBase: String,
                        dvInlineMax: Int = 4096,
                        dvInlineBudget: Long = dvInlineBudgetDefault): Long = {
+    require(keyCols.nonEmpty, "DML needs a key column")
     require(dvMaxFrac >= 0.0 && dvMaxFrac <= 1.0, s"bad dvMaxFrac $dvMaxFrac")
     require(dvInlineMax >= 0, s"bad dvInlineMax $dvInlineMax")
     require(dvInlineBudget >= 0L, s"bad dvInlineBudget $dvInlineBudget")
@@ -2536,6 +2391,7 @@ object TableLog {
     val parent = currentVersion(root)
     require(parent >= 0, s"merge target $root has no committed version")
     val m = readManifest(root, parent)
+    val keyCol = keyCols.head
     // STRING primary keys (R101): the deletion-vector carrier stays a
     // long array — the key's portable rolling hash (the same hash the
     // string blooms store), computed by the codegen'd expression on
@@ -2552,42 +2408,33 @@ object TableLog {
     def dvHash(c: Column): Column =
       if (isStrKey) org.apache.spark.sql.graftx.GraftExpressions.rolling_hash(c)
       else c.cast("long")
+    // the key columns as the probe and the joins see them: a single
+    // non-string key as a long (the deletion vector's type), composite
+    // parts as they are
+    val keyProj: Seq[Column] =
+      if (keyCols.size == 1 && !isStrKey) Seq(col(keyCol).cast("long").as(keyCol))
+      else keyCols.map(col)
     // Materialize the churn-sized change-key set ONCE (the Delta
     // MERGE source-materialization move): without it, every consumer
-    // below — the zone prune, the probe join, the hit-row semi join,
-    // the rewrite-carry anti join — re-executes the caller's whole
+    // below — the prune, the probe join, the hit-row semi join, the
+    // rewrite-carry anti join — re-executes the caller's whole
     // key-derivation DAG (for SQL DML that is the full target⋈source
     // join tree), each with its own broadcast/AQE stage jobs.
-    // Key-set size is the statement's churn, never the table.
-    // The zone prune's hull aggregate is the materializing job
-    // (cleanWith): materialize+prune cost one job, not two.
-    val (changeKeys, affectedPaths) = org.apache.spark.sql.graftx.Materialize
-      .cleanWith(keySource
-        .select((if (isStrKey) col(keyCol) else col(keyCol).cast("long")).as(keyCol))
-        .na.drop().distinct()) { ck =>
-        if (isStrKey) affectedFileSetStr(m, ck, keyCol)
-        else affectedFileSet(m, ck, keyCol)
-      }
-    val affected = m.files.filter(f => affectedPaths.contains(f.path)).sortBy(_.path)
-    val untouched = m.files.filterNot(f => affectedPaths.contains(f.path))
-    // which change keys are PRESENT in which affected file — the probe
-    // scan: column-pruned to (key, file), semi-restricted to change
-    // keys, DISTRIBUTED end to end. Only per-file COUNTS (bounded by
-    // the affected-file count, never the key count) and the
-    // inline-bound vectors ever reach the driver — a 10⁸-key CDC
-    // day-batch builds its deletion vectors as a side-file parquet
-    // without materializing keys driver-side.
-    // probed once; reused for counts + inline + side-file. The
-    // per-file hit-count collect is the materializing job (cleanWith):
-    // probe materialization + counts cost one job, not two.
+    val (changeKeys, pruned) = org.apache.spark.sql.graftx.Materialize
+      .cleanWith(keySource.select(keyProj: _*).na.drop().distinct())(
+        planKeys(m, _, keyCols))
+    val affected = pruned.sortBy(_.path)
+    // which change keys are PRESENT in which pruned file — DISTRIBUTED
+    // end to end. Only per-file COUNTS (bounded by the file count,
+    // never the key count) and the inline-bound vectors ever reach the
+    // driver — a 10⁸-key CDC day-batch builds its deletion vectors as
+    // a side-file parquet without materializing keys driver-side. The
+    // per-file count collect is the materializing job (cleanWith).
     val (probe, hitCountRows) = org.apache.spark.sql.graftx.Materialize
-      .cleanWith(readFiles(spark, root, m, affected,
-          fileCol = Some("__fp"))
-        .select((if (isStrKey) col(keyCol) else col(keyCol).cast("long"))
-            .as(keyCol),
-          element_at(split(col("__fp"), "/"), -1).as("__f"))
-        .join(changeKeys, Seq(keyCol))
-        .distinct())(p => p.groupBy("__f").count().collect())
+      .cleanWith(readFiles(spark, root, m, affected, fileCol = Some("__fp"))
+        .select(keyProj :+ element_at(split(col("__fp"), "/"), -1).as("__f"): _*)
+        .join(changeKeys, keyCols, "left_semi"))(
+        p => p.groupBy("__f").count().collect())
     val hitCounts: Map[String, Long] =
       hitCountRows.map(r => r.getString(0) -> r.getLong(1)).toMap
     def baseName(p: String) = p.substring(p.lastIndexOf('/') + 1)
@@ -2597,29 +2444,28 @@ object TableLog {
     // must stay distinct in hash space so liveRows is exact). One
     // column-pruned distributed aggregate; on the ~2^-32 failure the
     // hit files rewrite instead (exact either way).
-    val dvSafe = !isStrKey || hitCounts.isEmpty || dvMaxFrac <= 0.0 || {
-      val g = readFiles(spark, root, m, affected)
-        .select(col(keyCol)).na.drop()
-        .agg(countDistinct(col(keyCol)),
-          countDistinct(dvHash(col(keyCol)))).head()
-      g.getLong(0) == g.getLong(1)
-    }
+    val dvSafe = keyCols.size == 1 && (!isStrKey || hitCounts.isEmpty ||
+      dvMaxFrac <= 0.0 || {
+        val g = readFiles(spark, root, m, affected)
+          .select(col(keyCol)).na.drop()
+          .agg(countDistinct(col(keyCol)),
+            countDistinct(dvHash(col(keyCol)))).head()
+        g.getLong(0) == g.getLong(1)
+      })
     val (dvFiles, rewriteFiles) = affected
       .filter(f => hitCounts.contains(baseName(f.path)))
       .partition { f =>
         val hits = hitCounts(baseName(f.path))
         dvSafe && f.liveRows > 0L && hits.toDouble / f.liveRows <= dvMaxFrac
       }
-    // zone-hit files with NO present key carry forward untouched
-    val falsePos = affected.filter(f => !hitCounts.contains(baseName(f.path)))
+    // every file that holds no change key carries forward untouched
+    val touched = (dvFiles ++ rewriteFiles).map(_.path).toSet
+    val carried = m.files.filterNot(f => touched(f.path))
     // final state for every key the changes touch: base = the hit
     // rows (read merge-on-read, so prior DVs apply), collapsed by
     // latest-wins; deletes drop, upserts/inserts land in new files
     val hitRows = readFiles(spark, root, m, dvFiles ++ rewriteFiles)
-      .join(changeKeys, Seq(keyCol), "left_semi")
-    // output keys are exactly the change keys (hit rows are
-    // semi-restricted to them and inserts come FROM them) minus
-    // deletes — no further restriction needed
+      .join(changeKeys, keyCols, "left_semi")
     // new state is churn-sized too. DECLARED constraints gate the
     // statement's new rows (carried and rewrite-carried rows were
     // validated when they landed); with checks the gate aggregate is
@@ -2634,7 +2480,7 @@ object TableLog {
         ns => enforceChecks(ns, morChecks.toSeq.sortBy(_._1), actionBase))._1
     // rewritten files keep their non-hit rows alongside the new state
     val rewriteCarry = readFiles(spark, root, m, rewriteFiles)
-      .join(changeKeys, Seq(keyCol), "left_anti")
+      .join(changeKeys, keyCols, "left_anti")
     val merged = newState.unionByName(rewriteCarry
       .select(newState.columns.map(col): _*))
     val v = parent + 1
@@ -2648,13 +2494,12 @@ object TableLog {
     // manifest then carries only (path, count), so its line size is
     // independent of the deleted-key count. Promotion is one-way:
     // ref vectors only grow.
+    val physKey = m.physicalOf(keyCol)
     val dvSized = dvFiles.map { f =>
-      val pk = m.physicalOf(keyCol)
-      val prior = f.dv.getOrElse(pk, Array.empty[Long]).length.toLong +
-        f.dvRef.get(pk).map(_._2).getOrElse(0L)
+      val prior = f.dv.getOrElse(physKey, Array.empty[Long]).length.toLong +
+        f.dvRef.get(physKey).map(_._2).getOrElse(0L)
       (f, prior + hitCounts(baseName(f.path)))
     }
-    val physKey = m.physicalOf(keyCol)
     // one-way promotion: a file that already carries a side-file ref
     // NEVER comes back inline (a small follow-up merge would
     // otherwise leave BOTH carriers on one line) — previously implied
@@ -2669,7 +2514,7 @@ object TableLog {
     // side-file refs even though each is under the per-file bound,
     // keeping the scan-plan literal map and the build-time collect
     // bounded no matter how many small sparse merges accumulate.
-    val carriedInlineMass = (untouched ++ falsePos)
+    val carriedInlineMass = carried
       .map(_.dv.getOrElse(physKey, Array.empty[Long]).length.toLong).sum
     val thisInlineMass = inlinePerFile.map(_._2).sum
     val overBudget = carriedInlineMass + thisInlineMass > dvInlineBudget
@@ -2722,7 +2567,7 @@ object TableLog {
     // added nor removed.
     commitManifest(root,
       childOf(m, txnTag.fold(actionBase)(t => s"$actionBase+txn=$t")),
-      untouched ++ falsePos, inlineUpdated ++ refUpdated ++ added,
+      carried, inlineUpdated ++ refUpdated ++ added,
       (rewriteFiles ++ dvFiles).map(_.path), checkpointInterval)
   }
 

@@ -2,8 +2,8 @@
  * SQL DML lowering for the graftlog table format: MERGE INTO /
  * UPDATE / DELETE statements over a graftlog DSv2 relation are
  * rewritten at the end of analysis into eager commands that execute
- * through TableLog's ONE merge-on-read write path (applyDml →
- * morApply — the same carrier mergeMor uses), so SQL mutations and
+ * through TableLog's ONE DML core (applyDml → morApply — the same
+ * core mergeMor uses), so SQL mutations and
  * the programmatic API can never drift. Delta ships the same trio as
  * its headline mutation surface; Spark's own row-level-operation
  * rewrites require SupportsRowLevelOperations group/delta plumbing
@@ -46,10 +46,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Scalars the lowered command needs from the relation (extracted at
   * rule time so commands hold no connector objects): table root, the
-  * primary-key column LIST (single long/string column rides the
-  * merge-on-read deletion-vector carrier — string keys as portable
-  * rolling hashes; composite keys ride the exact copy-on-write
-  * carrier), and the write knobs the relation's options can override
+  * primary-key column LIST (a single long/string column may ride
+  * deletion vectors — string keys as portable rolling hashes;
+  * composite keys rewrite their hit files), and the write knobs the
+  * relation's options can override
   * (`layout`, `numFiles`, `dvMaxFrac` — defaults mirror the SQL
   * INSERT surface).
   */
@@ -93,8 +93,8 @@ object GraftDmlRule extends Rule[LogicalPlan] {
       }
       // `primaryKey` may be a comma-separated COMPOSITE key; default
       // stays the first long-typed column. Components must be BIGINT
-      // or STRING — the shapes the carriers (dv hash / CoW zones)
-      // address exactly.
+      // or STRING — the shapes the key prune and the deletion
+      // vector (long or string hash) address exactly.
       val keyCols: Seq[String] = knob("primaryKey")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         .orElse(r.schema.fields.find(_.dataType == LongType)
@@ -193,23 +193,18 @@ private[graftx] object GraftDml {
       }
     }
 
-  /** ONE suppress/upsert write: single-column keys ride the
-    * merge-on-read deletion-vector carrier (TableLog.applyDml —
-    * string keys hash through the portable rolling hash the string
-    * blooms already use); composite keys ride the exact copy-on-write
-    * carrier (TableLog.applyDmlCow). Same statement semantics either
-    * way.
+  /** ONE suppress/upsert write for every key shape: the statement's
+    * retired keys and landed rows go to TableLog.applyDml, the one DML
+    * core (single-column keys may ride deletion vectors, string keys
+    * through the portable rolling hash the string blooms already use;
+    * composite keys rewrite their hit files).
     */
   def route(spark: SparkSession, ctx: GraftDmlTarget, target: LogicalPlan,
             suppress: org.apache.spark.sql.DataFrame,
             upserts: org.apache.spark.sql.DataFrame, action: String): Unit =
-    if (ctx.keyCols.size == 1)
-      graft.sources.TableLog.applyDml(spark, ctx.root, suppress, upserts,
-        ctx.keyCols.head, layoutCol(ctx, target), ctx.numFiles,
-        ctx.dvMaxFrac, action = action)
-    else
-      graft.sources.TableLog.applyDmlCow(spark, ctx.root, suppress, upserts,
-        ctx.keyCols, layoutCol(ctx, target), ctx.numFiles, action = action)
+    graft.sources.TableLog.applyDml(spark, ctx.root, suppress, upserts,
+      ctx.keyCols, layoutCol(ctx, target), ctx.numFiles, ctx.dvMaxFrac,
+      action = action)
 
   private def castTo(e: Expression, dt: DataType): Expression =
     if (e.dataType == dt) e else Cast(e, dt)

@@ -253,6 +253,31 @@ class GraftSqlDmlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("already exists"), e.getMessage)
   }
 
+  test("an UPDATE whose new rows fail commits nothing, single and composite key") {
+    Seq("k", "g, k").foreach { key =>
+      val root = java.nio.file.Files.createTempDirectory("sqldmlfail").toString
+      val df = (0L until 100L).map(k => (k / 25L, k, k * 3 + 1)).toDF("g", "k", "cents")
+      TableLog.commit(df, root, expr("k div 25"), 4, "overwrite")
+      spark.read.format("graftlog").option("path", root)
+        .option("primaryKey", key).load()
+        .createOrReplaceTempView("t_fail")
+      val head = TableLog.currentVersion(root)
+      def rows = TableLog.read(spark, root).collect().map(_.toSeq).toSet
+      val before = rows
+      // one hit per file: a single key would take deletion vectors, a
+      // composite key rewrites; the new image of k = 42 raises
+      val e = intercept[Exception] {
+        spark.sql("UPDATE t_fail SET cents = IF(k = 42, " +
+          "raise_error('injected update failure'), cents + 1) WHERE k IN (2, 42, 77)")
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected update failure")),
+        s"key ($key): $e")
+      assert(TableLog.currentVersion(root) == head, s"key ($key) committed")
+      assert(rows == before, s"key ($key) changed the head rows")
+    }
+  }
+
   test("STRING primary key: DML rides the merge-on-read carrier with rolling-hash deletion vectors") {
     val root = java.nio.file.Files.createTempDirectory("sqldmls").toString
     val df = (0L until 100L).map(i => (f"doc_$i%03d", i * 2 + 1))

@@ -20,11 +20,11 @@ class JobBudgetSpec extends AnyFunSuite {
     */
   private val budget: Seq[(String, Int)] = Seq(
     "q84_sql_write" -> 8,
-    "q95_catalog_tables" -> 13,
+    "q95_catalog_tables" -> 11,
     "q97_merge_general" -> 25,
     "q83_string_zones" -> 5,
-    "q65_table_log" -> 17,
-    "q92_sql_merge" -> 40)
+    "q65_table_log" -> 21,
+    "q92_sql_merge" -> 34)
 
   budget.foreach { case (name, expected) =>
     test(s"one $name execution keeps its job budget") {

@@ -8,9 +8,9 @@ import graft.sources.TableLog
 /** Pins the versioned table-format commit log: commit/append/AS-OF
   * reads through the manifest, zone-map file pruning BEFORE the scan
   * (file counts asserted from planFiles AND the scan's inputFiles),
-  * content-preserving compaction, copy-on-write merge (only
-  * zone-affected files rewritten; result equals a whole-table
-  * ChangeLog merge), vacuum retention, and the hard-link claim
+  * content-preserving compaction, copy-on-write merge (only the
+  * files holding a changed key rewritten; result equals a
+  * whole-table ChangeLog merge), vacuum retention, and the hard-link claim
   * (link(2) fails if the version exists) as the optimistic-concurrency
   * commit point.
   */
@@ -177,20 +177,30 @@ class TableLogSpec extends AnyFunSuite {
 
   test("merge: copy-on-write rewrites only zone-affected files; equals whole-table ChangeLog") {
     val root = freshRoot("merge")
-    val base = mkDf(0L until 400L).withColumnRenamed("cents", "price")
+    // key 250 is missing: it lies inside the [200, 299] file's zone
+    // without being held by that file
+    val base = mkDf((0L until 400L).filter(_ != 250L)).withColumnRenamed("cents", "price")
     TableLog.commit(base, root, expr("k div 100"), 4, "overwrite")
     val before = TableLog.readManifest(root, 0L)
     // changes touch ONLY keys 0..49 (one zone) plus inserts 1000..1009
+    // and the zone-hit, key-free insert 250
     val changes = ((0L until 50L).map(k =>
         (k, 1L, if (k % 5 == 0) "D" else "U", k * 10 + 2)) ++
-      (1000L until 1010L).map(k => (k, 1L, "U", k)))
+      (1000L until 1010L).map(k => (k, 1L, "U", k)) :+ ((250L, 1L, "U", 7L)))
       .toDF("k", "ver", "op", "new_price")
-    val v = TableLog.merge(root, changes, "k", expr("k div 100"), 2)
+    val v = TableLog.mergeMor(spark, root, changes, "k", expr("k div 100"), 2,
+      dvMaxFrac = 0.0)
     val after = TableLog.readManifest(root, v)
-    assert(after.action == "merge")
+    assert(after.action == "merge-mor")
     // untouched zones carried by reference
     val carried = after.files.map(_.path).toSet intersect before.files.map(_.path).toSet
     assert(carried.nonEmpty && carried.size < before.files.size)
+    // only the file that holds a changed key is rewritten; the file
+    // whose zone holds 250 but not the key itself is carried
+    def holding(k: Long) = before.files.filter(f =>
+      f.zMin("k") <= k && f.zMax("k") >= k).map(_.path)
+    assert(TableLog.versionDelta(root, v)._2.map(_.path) == holding(0L))
+    assert(holding(250L).size == 1 && carried.contains(holding(250L).head))
     // result equals the reference merge over the WHOLE table
     val expect = graft.operators.ChangeLog.latestState(base, changes).drop("action")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -198,7 +208,7 @@ class TableLogSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == expect)
     // AS-OF v0 still shows the pre-merge table
-    assert(TableLog.read(spark, root, asOf = Some(0L)).count() == 400L)
+    assert(TableLog.read(spark, root, asOf = Some(0L)).count() == 399L)
   }
 
   test("vacuum: dead files deleted, shared files survive, retention boundary enforced") {
@@ -324,11 +334,11 @@ class TableLogSpec extends AnyFunSuite {
     // one key per file, 1% of each file: every hit rides a deletion vector
     def delete(i: Int): Unit = TableLog.applyDml(spark, root,
       (0 until 20).map(f => (f * 100 + i).toLong).toDF("k"), empty,
-      "k", expr("k div 100"), 2)
+      Seq("k"), expr("k div 100"), 2)
     delete(0) // first-use costs stay out of the count
     val jobs = jobsOf(delete(1))
     info(s"one delete-only applyDml ran $jobs Spark jobs")
-    assert(jobs == 8, s"one delete-only applyDml ran $jobs Spark jobs")
+    assert(jobs == 6, s"one delete-only applyDml ran $jobs Spark jobs")
     assert(TableLog.readManifest(root, TableLog.currentVersion(root)).files.size == 20)
     assert(rows(TableLog.read(spark, root)).size == 2000 - 40)
   }
@@ -619,9 +629,9 @@ class TableLogSpec extends AnyFunSuite {
       def changes(ks: Seq[Long], bump: Long) =
         ks.map(k => (k, 1L, if (k % 7 == 0) "D" else "U", k * 10 + bump))
           .toDF("k", "ver", "op", "new_cents")
-      TableLog.merge(root, changes(Seq(3L, 14L, 150L, 300L), 2L), "k",
+      TableLog.mergeMor(spark, root, changes(Seq(3L, 14L, 150L, 300L), 2L), "k",
         expr("k div 25"), 2, valCol = "cents", newValCol = "new_cents",
-        checkpointInterval = interval)
+        dvMaxFrac = 0.0, checkpointInterval = interval)
       TableLog.mergeMor(spark, root, changes(Seq(5L, 21L, 180L, 301L), 3L),
         "k", expr("k div 25"), 2, valCol = "cents", newValCol = "new_cents",
         checkpointInterval = interval)
@@ -948,7 +958,8 @@ class TableLogSpec extends AnyFunSuite {
     TableLog.commit(base, rootM, expr("k div 100"), 4, "overwrite")
     TableLog.commit(base, rootC, expr("k div 100"), 4, "overwrite")
     val vM = TableLog.mergeMor(spark, rootM, changes, "k", expr("k div 100"), 2)
-    val vC = TableLog.merge(rootC, changes, "k", expr("k div 100"), 2)
+    val vC = TableLog.mergeMor(spark, rootC, changes, "k", expr("k div 100"), 2,
+      dvMaxFrac = 0.0)
     def kv(root: String) = TableLog.read(spark, root)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // dv read == rewrite read == direct latest-wins recompute
@@ -1150,14 +1161,16 @@ class TableLogSpec extends AnyFunSuite {
     val a = new Thread(() => {
       aVersion = TableLog.commitWithRetry(action = "merge") {
         attempts += 1
-        TableLog.merge(mroot, change(1L, 701L), "k",
-          if (attempts == 1) gated(col("k")) else expr("k div 25"), 2)
+        TableLog.mergeMor(spark, mroot, change(1L, 701L), "k",
+          if (attempts == 1) gated(col("k")) else expr("k div 25"), 2,
+          dvMaxFrac = 0.0)
       }
     })
     a.start()
     assert(RaceGate.started.await(60, TimeUnit.SECONDS), "A never started")
     // B's merge to the same key wins the contested version
-    TableLog.merge(mroot, change(1L, 777L), "k", expr("k div 25"), 2)
+    TableLog.mergeMor(spark, mroot, change(1L, 777L), "k", expr("k div 25"), 2,
+      dvMaxFrac = 0.0)
     RaceGate.go.countDown()
     a.join(120000)
     assert(!a.isAlive, "merging writer hung")
