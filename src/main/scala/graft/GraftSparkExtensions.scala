@@ -19,14 +19,9 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectOptimizerRule(_ => PolygonGateBBoxRule)
-    ext.injectOptimizerRule(_ => V1ScanStatsJoinRule)
-    // user-provided batch (post-pushdown — the V1ScanWrapper only
-    // exists after V2ScanRelationPushDown, which runs AFTER the
-    // Pre-CBO batch): plan-level stats are computed lazily on the
-    // FINAL optimized plan, so physical planning (JoinSelection
-    // build-side/broadcast choice) and every downstream stats
-    // consumer see the forwarded row/byte/NDV numbers
-    ext.injectOptimizerRule(_ => V1ScanStatsForwardRule)
+    // a graftlog scan that reaches physical planning (the validation
+    // query of ALTER TABLE … ADD CONSTRAINT) reads natively too
+    ext.injectPlannerStrategy(_ => graft.sources.GraftLogScanStrategy)
     // SQL DML (MERGE INTO / UPDATE / DELETE) over graftlog relations:
     // lowered at the end of analysis onto TableLog's one merge-on-read
     // write path. Analyzer rules cannot be added to a built session,

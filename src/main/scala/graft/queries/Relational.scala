@@ -956,9 +956,9 @@ object Relational {
     // R78/q76: the SQL SURFACE for the commit log — a DSv2
     // TableProvider (`spark.read.format("graftlog")`, the Delta
     // `format("delta")` shape; round-11 missing-item 4: the store
-    // was API-only) whose scan hands row IO back to the store's one
-    // DV-/evolution-aware read path through the official V1Scan
-    // shim, with WHERE clauses pushed down as FILE pruning (zone
+    // was API-only) whose scan plans as the store's one
+    // DV-/evolution-aware read path, a parquet file scan over the
+    // manifest, with WHERE clauses pushed down as FILE pruning (zone
     // ranges + bloom equality; every filter still re-applied
     // row-level, so a false-positive file costs IO never
     // correctness). The query mounts the store twice — head and
@@ -967,9 +967,8 @@ object Relational {
     // subquery counting the SAME range at v0, so schema resolution,
     // version pinning, pushdown, and the time-travel option are all
     // certified through the SQL entry point against a raw-orders
-    // oracle. File-count prune assertions live in GraftLogDsvSpec
-    // (the parquet scan nests inside the relation, invisible to the
-    // outer plan). Scale: plan cost is one manifest read; the scan
+    // oracle. File-count prune assertions live in GraftLogDsvSpec.
+    // Scale: plan cost is one manifest read; the scan
     // reads exactly the files the range could not exclude.
     "q76_sql_store" -> ((s, dir) => {
       import graft.sources.{TableLog, TidyIO}

@@ -2,15 +2,23 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics, CatalogStorageFormat, CatalogTable, CatalogTableType}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** R78/q76 — the SQL surface for the commit log: a DataSource V2
@@ -21,19 +29,22 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * API-only — `VERSION AS OF`, zone pruning and the bloom index
   * existed as Scala calls; this exposes them to SQL.
   *
-  * Architecture: the v2 connector handles CATALOG + PUSHDOWN, and the
-  * scan hands row IO back to the store's existing DV-aware manifest
-  * read through the official [[V1Scan]] migration shim (the public
-  * connector API Spark's own JDBC v2 source uses) — so there is
-  * exactly ONE read path ([[TableLog.readFiles]]): schema resolution
-  * from the manifest DDL (evolution-safe: pre-evolution files
-  * null-fill), deletion-vector suppression, and parquet vectorized
-  * scanning are all shared with the programmatic API, and the two can
-  * never drift.
+  * Architecture: the v2 connector handles CATALOG + PUSHDOWN (time
+  * travel, the DML rule, writes, the one file prune per scan), and the
+  * read is the store's own: once pushdown has planned the scan,
+  * [[GraftLogScanRule]] replaces the scan relation with
+  * [[TableLog.readFiles]] over the planned files — a parquet
+  * `HadoopFsRelation` over a [[ManifestFileIndex]], with the
+  * deletion-vector filter and the column-mapping relabel above it. So
+  * there is exactly ONE read path for SQL and the programmatic API:
+  * schema resolution from the manifest DDL (evolution-safe:
+  * pre-evolution files null-fill), deletion-vector suppression and
+  * Spark's vectorized parquet scan with pushed data filters, planned
+  * once inside the query that reads it.
   *
   * Pushdown contract — FILE-granularity skipping, never row
-  * filtering: `pushFilters` keeps the prunable subset visible as
-  * `pushedFilters` (the plan's `PushedFilters: [...]`) but returns
+  * filtering: `pushFilters` keeps the prunable subset as
+  * `pushedFilters` (the file planner's input) but returns
   * EVERY filter as residual, so Spark re-applies them row-level above
   * the scan — a false-positive file read costs IO, never correctness.
   * Which filters prune, and how, is the store's ONE planner
@@ -41,9 +52,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * zone ranges, bloom equality/IN probes and `IsNotNull` on integral
   * columns, truncation-safe zones and blooms on STRING columns. The
   * scan plans once; its statistics, its `EXPLAIN` description
-  * (`files=<kept>/<total>`) and the executed read all use that plan.
-  * Column pruning flows through `pruneColumns` into the projection,
-  * so the parquet scan reads only the required columns.
+  * (`files=<kept>/<total>`, shown on the parquet scan) and the
+  * executed read all use that plan. Column pruning flows through
+  * `pruneColumns` into the projection, so the parquet scan reads only
+  * the required columns, and the row filters Spark keeps above the
+  * scan reach the parquet reader as pushed data filters.
   *
   * Options: `path` (table root, required), `versionAsOf` (snapshot
   * version; default head — Delta's time-travel option name, so
@@ -346,10 +359,10 @@ object GraftLogProvider {
     new GraftLogTable(root, head, mounted)
   }
 
-  /** Last executed (selected, total) file plan — spec introspection
-    * only (the [[TableLog.planFiles]] return pair surfaced through the
-    * SQL path, where the pruned parquet scan is nested inside the
-    * relation; `EXPLAIN` shows the same pair as the scan's `files=`).
+  /** Last planned (selected, total) file plan — spec introspection
+    * only (the [[TableLog.planFiles]] return pair of the last SQL scan
+    * [[GraftLogScanRule]] replaced; `EXPLAIN` shows the same pair as
+    * the parquet scan's `files=`).
     */
   @volatile private[graft] var lastScanPlan: (Int, Int) = (0, 0)
 }
@@ -534,127 +547,83 @@ private[sources] final class GraftLogScanBuilder(root: String, version: Long,
   override def build(): Scan = new GraftLogScan(root, version, required, pushed)
 }
 
+/** A graftlog scan that Spark plans no read from: [[GraftLogScanRule]]
+  * puts [[read]], a library read of the store, in place of its
+  * relation.
+  */
+private[sources] trait GraftLogRead extends Scan {
+  def read(spark: SparkSession): LogicalPlan
+
+  /** The analyzed plan of `df` projected to the scan's columns. */
+  protected def projected(df: DataFrame): LogicalPlan =
+    df.select(readSchema().fieldNames.toSeq.map(n => df(s"`$n`")): _*)
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
+}
+
+/** The scan's ONE file selection is planned once by
+  * [[TableLog.planFiles]] (metadata-sized IO, never a data scan) and
+  * read by the statistics, the EXPLAIN name and the executed read.
+  */
 private[sources] final class GraftLogScan(root: String, version: Long,
                                           required: StructType,
                                           pushed: Array[Filter])
-    extends V1Scan with SupportsReportStatistics {
-  /** The scan's ONE file selection, planned once by
-    * [[TableLog.planFiles]] (metadata-sized IO, never a data scan) and
-    * read by the statistics, the description and the executed
-    * relation alike.
-    */
-  private lazy val planned: (TableLog.Manifest, Seq[TableLog.FileEntry]) = {
-    val m = TableLog.readManifest(root, version)
-    (m, TableLog.planFiles(m, pushed.toSeq))
-  }
-
+    extends GraftLogRead {
   override def readSchema(): StructType = required
-  override def description(): String =
-    s"GraftLogScan root=$root version=$version " +
-      s"pushed=[${pushed.mkString(", ")}] " +
-      s"files=${planned._2.size}/${planned._1.files.size}"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftLogRelation(context, root, planned._1, planned._2, required,
-      description()).asInstanceOf[T]
 
-  /** PLANNER-native statistics (Delta reports the same pair): exact
-    * live row count and on-disk bytes of the files the pushed filters
-    * could not exclude — so Catalyst's join planning sees the
-    * POST-PRUNE size of a graftlog relation and auto-broadcasts a
-    * filtered dimension under the ordinary threshold, no hint needed
-    * (the q85 hint remains the artifact-driven form for API reads).
-    * Spark's V1ScanWrapper does NOT forward this trait, so the values
-    * reach the planner through [[org.apache.spark.sql.graftx
-    * .V1ScanStatsJoinRule]], which unwraps the shim at each join.
-    * Resolved lazily ONCE per scan (the rule's batch runs to fixed
-    * point) from the planned selection.
+  /** [[TableLog.readFiles]] over the planned files, projected to the
+    * required columns. Its relation carries the selection's exact live
+    * rows and on-disk bytes as catalog statistics, so the planner sizes
+    * joins by the POST-PRUNE table and auto-broadcasts a filtered
+    * dimension under the ordinary threshold, no hint needed. When an
+    * ANALYZE artifact exists for this version, its column statistics
+    * ride along (the NDV→CBO bridge). The relation's name carries the
+    * prune (`files=<kept>/<total>`), so EXPLAIN shows it on the scan.
     */
-  private lazy val reported: Statistics = {
-    val sel = planned._2
-    val rows = sel.map(_.liveRows).sum
-    val bytes = TableLog.dataBytes(root, sel)
-    // COLUMN statistics from the ANALYZE artifact when one exists for
-    // this version (the NDV→CBO bridge): Catalyst's cost-based join
-    // planning reads distinctCount/min/max/nullCount through
-    // DataSourceV2ScanRelation.computeStats once the
-    // stats-forwarding wrapper swap (rules.scala) makes this trait
-    // visible past the V1 shim. Advisory by construction: no
-    // artifact → the pair-only form, never an error.
-    val colStats: java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
-                                org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-      val out = new java.util.HashMap[org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      try {
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(f"$root/_stats/v$version%08d"))) {
-          val spark = org.apache.spark.sql.SparkSession.active
-          TableLog.tableStats(spark, root, Some(version)).collect().foreach { r =>
-            val name = r.getString(0)
-            val nulls = r.getLong(2)
-            val mn = if (r.isNullAt(3)) None else Some(r.getLong(3))
-            val mx = if (r.isNullAt(4)) None else Some(r.getLong(4))
-            val ndv = r.getLong(7)
-            out.put(
-              org.apache.spark.sql.connector.expressions.Expressions.column(name),
-              new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-                override def distinctCount(): java.util.OptionalLong =
-                  java.util.OptionalLong.of(ndv)
-                override def nullCount(): java.util.OptionalLong =
-                  java.util.OptionalLong.of(nulls)
-                override def min(): java.util.Optional[Object] =
-                  mn.map(v => java.util.Optional.of(v.asInstanceOf[Object]))
-                    .getOrElse(java.util.Optional.empty[Object]())
-                override def max(): java.util.Optional[Object] =
-                  mx.map(v => java.util.Optional.of(v.asInstanceOf[Object]))
-                    .getOrElse(java.util.Optional.empty[Object]())
-              })
-          }
-        }
-      } catch { case _: Throwable => () } // stats stay advisory
-      out
-    }
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(1L, bytes))
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-        colStats
-    }
-  }
-
-  override def estimateStatistics(): Statistics = reported
-}
-
-/** The executed scan: the scan's planned files (`sel` of manifest
-  * `m`) through the store's one true read path (manifest DDL + DV
-  * suppression + vectorized parquet) projected to the pruned columns.
-  * `buildScan` runs driver-side at execution planning; the returned
-  * RDD is the parquet scan itself — nothing is collected. The physical
-  * plan prints the relation, so it prints the scan's `description`
-  * (with its `files=<kept>/<total>` prune) — what `EXPLAIN` shows.
-  */
-private[sources] final class GraftLogRelation(ctx: SQLContext, root: String,
-                                              m: TableLog.Manifest,
-                                              sel: Seq[TableLog.FileEntry],
-                                              required: StructType,
-                                              description: String)
-    extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-  override def toString: String = description
-
-  override def buildScan(): RDD[Row] = {
+  override def read(spark: SparkSession): LogicalPlan = {
+    val m = TableLog.readManifest(root, version)
+    val sel = TableLog.planFiles(m, pushed.toSeq)
     GraftLogProvider.lastScanPlan = (sel.size, m.files.size)
-    val df = TableLog.readFiles(ctx.sparkSession, root, m, sel)
-    val projected =
-      if (required.isEmpty) df.select()
-      else df.select(required.fieldNames.toSeq.map(col): _*)
-    projected.rdd
+    val df = TableLog.readFiles(spark, root, m, sel)
+    val table = CatalogTable(
+      identifier = TableIdentifier(
+        s"graftlog.`$root` VERSION AS OF $version files=${sel.size}/${m.files.size}"),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty,
+      schema = StructType.fromDDL(m.physicalDdl),
+      provider = Some("graftlog"),
+      stats = Some(CatalogStatistics(
+        sizeInBytes = BigInt(math.max(1L, TableLog.dataBytes(root, sel))),
+        rowCount = Some(BigInt(sel.map(_.liveRows).sum)),
+        colStats = columnStats(spark, m))))
+    projected(df).transform {
+      case l @ LogicalRelation(h: HadoopFsRelation, _, None, _, _)
+          if h.location.isInstanceOf[ManifestFileIndex] =>
+        l.copy(catalogTable = Some(table))
+    }
   }
+
+  /** ANALYZE column statistics keyed by PHYSICAL column name (the
+    * relation's attribute names); min/max only on integral columns,
+    * whose long lanes the artifact fills. Advisory: no artifact, or an
+    * unreadable one, leaves rows and bytes only.
+    */
+  private def columnStats(spark: SparkSession,
+                          m: TableLog.Manifest): Map[String, CatalogColumnStat] =
+    if (!java.nio.file.Files.isDirectory(
+        java.nio.file.Paths.get(f"$root/_stats/v$version%08d"))) Map.empty
+    else try {
+      val integral = StructType.fromDDL(m.schemaDdl).fields.collect {
+        case f if Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType) => f.name
+      }.toSet
+      TableLog.tableStats(spark, root, Some(version)).collect().toSeq.map { r =>
+        val name = r.getString(0)
+        def bound(i: Int): Option[String] =
+          if (r.isNullAt(i) || !integral(name)) None else Some(r.getLong(i).toString)
+        m.physicalOf(name) -> CatalogColumnStat(
+          distinctCount = Some(BigInt(r.getLong(7))), min = bound(3), max = bound(4),
+          nullCount = Some(BigInt(r.getLong(2))))
+      }.toMap
+    } catch { case _: Exception => Map.empty }
 }
 
 /** CDF mode (`changeFeed=true`): the commit window's row-level
@@ -687,28 +656,54 @@ private[sources] final class GraftLogCdfScanBuilder(root: String, fromV: Long,
 
 private[sources] final class GraftLogCdfScan(root: String, fromV: Long,
                                              toV: Long, required: StructType)
-    extends V1Scan {
+    extends GraftLogRead {
   override def readSchema(): StructType = required
-  override def description(): String =
-    s"GraftLogCdfScan root=$root window=[$fromV,$toV]"
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftLogCdfRelation(context, root, fromV, toV, required)
-      .asInstanceOf[T]
+
+  /** [[TableLog.readChangeFeed]] over the window. */
+  override def read(spark: SparkSession): LogicalPlan =
+    projected(TableLog.readChangeFeed(spark, root, fromV, toV))
 }
 
-private[sources] final class GraftLogCdfRelation(ctx: SQLContext, root: String,
-                                                 fromV: Long, toV: Long,
-                                                 required: StructType)
-    extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
+/** Plans every graftlog SQL read as the library read: once scan
+  * pushdown has pruned its columns and planned its files, each
+  * [[GraftLogRead]] relation becomes the scan's `read` plan under the
+  * relation's own output attributes. That read is
+  * a parquet file scan over a [[ManifestFileIndex]], so it is planned
+  * once, inside the query that reads it. Runs in the user-provided
+  * optimizer batch, the first point after `V2ScanRelationPushDown`;
+  * `Graft.registerFunctions` registers it. An `ALTER TABLE … ADD
+  * CONSTRAINT` plan is left whole: Spark plans its validation query
+  * from the V2 relation, whose scan [[GraftLogScanStrategy]] reads.
+  */
+object GraftLogScanRule extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: AddCheckConstraint => plan
+    case _ => plan.transformUpWithSubqueries {
+      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftLogRead] => splice(r)
+    }
+  }
 
-  override def buildScan(): RDD[Row] = {
-    val df = TableLog.readChangeFeed(ctx.sparkSession, root, fromV, toV)
-    val projected =
-      if (required.isEmpty) df.select()
-      else df.select(required.fieldNames.toSeq.map(col): _*)
-    projected.rdd
+  private[sources] def splice(r: DataSourceV2ScanRelation): LogicalPlan = {
+    val read = r.scan.asInstanceOf[GraftLogRead].read(SparkSession.active)
+    val byName = read.output.map(a => a.name -> a).toMap
+    Project(r.output.map(a => Alias(byName(a.name), a.name)(
+      exprId = a.exprId, qualifier = a.qualifier, explicitMetadata = Some(a.metadata))), read)
+  }
+}
+
+/** Plans a graftlog scan relation that reaches physical planning, the
+  * validation query of `ALTER TABLE … ADD CONSTRAINT`, as the same
+  * splice [[GraftLogScanRule]] makes.
+  */
+object GraftLogScanStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    // the whole project/filter chain, which Spark's own V2 strategy
+    // would otherwise plan over the relation
+    case PhysicalOperation(_, _, r: DataSourceV2ScanRelation)
+        if r.scan.isInstanceOf[GraftLogRead] =>
+      planLater(plan.transformUp {
+        case s: DataSourceV2ScanRelation if s eq r => GraftLogScanRule.splice(r)
+      }) :: Nil
+    case _ => Nil
   }
 }

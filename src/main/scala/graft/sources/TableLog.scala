@@ -96,6 +96,9 @@ object TableLog {
     * crosses `dvInlineMax` and never demotes. Side-files live in
     * attempt-unique `files/v…_dv` dirs so the vacuum orphan sweep and
     * retention liveness treat them like data files.
+    * `bytes` is the file's size, recorded by the writing task; -1 on
+    * entries written before sizes were recorded ([[fileBytes]] stats
+    * those once).
     */
   final case class FileEntry(path: String, rows: Long,
                              zMin: Map[String, Long], zMax: Map[String, Long],
@@ -105,7 +108,8 @@ object TableLog {
                              sMax: Map[String, String] = Map.empty,
                              sMaxTrunc: Set[String] = Set.empty,
                              strBlooms: Set[String] = Set.empty,
-                             dvRef: Map[String, (String, Long)] = Map.empty) {
+                             dvRef: Map[String, (String, Long)] = Map.empty,
+                             bytes: Long = -1L) {
     def liveRows: Long = rows - dv.valuesIterator.map(_.length.toLong).sum -
       dvRef.valuesIterator.map(_._2).sum
   }
@@ -381,6 +385,8 @@ object TableLog {
   //          (a 5-field header is read as legacy "full" with no txns;
   //          6 = kind-aware, no txns; 7 = txns, no ts — ts reads -1)
   // line 2+: full manifest:  f\t<relpath>\t<rows>\t<col>=<min>:<max>[;...]
+  //          (<rows> is <rows>:<bytes> once the file's byte size is
+  //          recorded; older entries carry the row count alone)
   //          delta manifest: a\t<relpath>\t<rows>\t<zones>   added file
   //                          r\t<relpath>                    removed file
   // Tab-free fields by construction (schema DDL never contains tabs for
@@ -440,7 +446,8 @@ object TableLog {
     }.mkString(";")
     val fields = Seq(zones, bl, dv, sz, dvr)
     val kept = fields.take(math.max(1, fields.lastIndexWhere(_.nonEmpty) + 1))
-    s"$tag\t${f.path}\t${f.rows}\t" + kept.mkString("\t") + "\n"
+    val size = if (f.bytes >= 0L) s"${f.rows}:${f.bytes}" else f.rows.toString
+    s"$tag\t${f.path}\t$size\t" + kept.mkString("\t") + "\n"
   }
 
   private def renderColMap(m: Manifest): String =
@@ -525,14 +532,15 @@ object TableLog {
         require(i > 0, s"malformed dvref in $p: $ln")
         c -> (unhexBytes(body.substring(i + 1)), body.substring(0, i).toLong)
       }.toMap
-    FileEntry(f(1), f(2).toLong,
+    val size = f(2).split(":", 2)
+    FileEntry(f(1), size(0).toLong,
       zones.map(z => z._1 -> z._2).toMap, zones.map(z => z._1 -> z._3).toMap,
       blooms, dv,
       szones.map(z => z._1 -> z._2).toMap,
       szones.map(z => z._1 -> z._3).toMap,
       szones.collect { case (c, _, _, true) => c }.toSet,
       if (f.length < 5) Set.empty else parseStrTags(f(4)),
-      dvr)
+      dvr, if (size.length == 2) size(1).toLong else -1L)
   }
 
   /** Read + RESOLVE version `version`: a checkpoint side-file or a
@@ -856,20 +864,21 @@ object TableLog {
 
   // ---- data files ----------------------------------------------------
 
-  /** The manifest entry of the data file at `$root/$rel` from its
-    * parquet footer: exact row count, long zones of the INT32/INT64
-    * columns and string zones. Runs in the task that wrote the file
-    * ([[writeDataFiles]]), so no job reopens it.
+  /** The manifest entry of the data file `status` (at `rel` under the
+    * root) from its parquet footer: exact row count, long zones of the
+    * INT32/INT64 columns, string zones and the file's byte size. Runs
+    * in the task that wrote the file ([[writeDataFiles]]), so no job
+    * reopens it.
     */
   private def footerEntry(conf: org.apache.hadoop.conf.Configuration,
-                          root: String, rel: String): FileEntry = {
+                          status: org.apache.hadoop.fs.FileStatus,
+                          rel: String): FileEntry = {
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$root/$rel"), conf))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf))
     try {
       val blocks = r.getFooter.getBlocks.asScala.toSeq
       // per column, the chunk stats that saw a non-NULL value: an
@@ -895,7 +904,8 @@ object TableLog {
         longs.map { case (c, (lo, _)) => c -> lo }, longs.map { case (c, (_, hi)) => c -> hi },
         sMin = strs.map { case (c, (lo, _)) => c -> lo },
         sMax = strs.map { case (c, (_, (hi, _))) => c -> hi },
-        sMaxTrunc = strs.collect { case (c, (_, (_, true))) => c }.toSet)
+        sMaxTrunc = strs.collect { case (c, (_, (_, true))) => c }.toSet,
+        bytes = status.getLen)
     } finally r.close()
   }
 
@@ -937,8 +947,8 @@ object TableLog {
     val rel = attemptRel(v)
     val dir = Files.createDirectories(Paths.get(root, rel))
     val added = org.apache.spark.sql.graftx.SlotWrite.write(
-      keyed, new SlotPartitioner(n), s"$root/$rel") { (conf, name) =>
-      footerEntry(conf, root, s"$rel/$name")
+      keyed, new SlotPartitioner(n), s"$root/$rel") { (conf, name, status) =>
+      footerEntry(conf, status, s"$rel/$name")
     }
     if (added.isEmpty) Files.delete(dir)
     added
@@ -968,7 +978,8 @@ object TableLog {
     if (colMap.isEmpty) (df, layout)
     else {
       val tagged = df.withColumn("__graft_lay", layout)
-      val renamed = tagged.select((df.schema.fields.toSeq.map(f =>
+      val renamed = tagged.select((df.schema.fields.toSeq
+        .filterNot(_.name == "__graft_lay").map(f =>
         tagged(f.name).as(colMap.getOrElse(f.name, f.name))) :+
         tagged("__graft_lay")): _*)
       (renamed, col("__graft_lay"))
@@ -1616,18 +1627,20 @@ object TableLog {
       c -> (if (path.startsWith("/")) (path, n) else (s"$absSrc/$path", n)) })
   }
 
-  /** On-disk bytes of `files` — driver-side stat calls bounded by the
-    * (already pruned) selection; the DSv2 statistics surface reads
-    * this. At 10^6-file scale the manifest should carry byte sizes
-    * alongside row counts (the Delta-log evolution, same contract);
-    * a missing file (vacuumed foreign reference) counts 0 here and
-    * fails loudly at scan time instead.
+  /** On-disk bytes of `f`: the size its manifest entry records, or
+    * one stat for an entry written before sizes were recorded. A
+    * missing file (vacuumed foreign reference) counts 0 here and fails
+    * loudly at scan time instead.
     */
-  private[sources] def dataBytes(root: String, files: Seq[FileEntry]): Long =
-    files.map { f =>
+  private[sources] def fileBytes(root: String, f: FileEntry): Long =
+    if (f.bytes >= 0L) f.bytes
+    else {
       val p = Paths.get(resolvePath(root, f.path))
       if (Files.exists(p)) Files.size(p) else 0L
-    }.sum
+    }
+
+  private[sources] def dataBytes(root: String, files: Seq[FileEntry]): Long =
+    files.map(fileBytes(root, _)).sum
 
   /** The optimizer proves `df` holds no rows: its plan folds to an
     * empty local relation (an empty [[readFiles]], a LIMIT 0, and the
@@ -1640,12 +1653,12 @@ object TableLog {
       case _ => false
     }
 
-  /** The one read path. `fileCol` — when a caller needs the source
-    * file per row (version stamping, probe scans, ANALYZE keys) — is
-    * materialized from input_file_name() BEFORE deletion-vector
-    * suppression: the side-file DV branch is an anti JOIN, after
-    * which input_file_name() is invalid (multi-source). The column
-    * carries the FULL path; basename consumers split it themselves.
+  /** The one read path: a parquet `HadoopFsRelation` over a
+    * [[ManifestFileIndex]] of `files`, built straight into the plan, so
+    * nothing is listed or resolved again. `fileCol`, when a caller
+    * needs the source file per row (version stamping, probe scans,
+    * ANALYZE keys), is the scan's `_metadata.file_path`: the FULL
+    * path, whose basename consumers split off themselves.
     */
   private[sources] def readFiles(spark: SparkSession, root: String,
                         m: Manifest, files: Seq[FileEntry],
@@ -1661,20 +1674,46 @@ object TableLog {
       // files are PHYSICALLY named; read under the physical schema,
       // suppress deletion vectors (keyed physical), then relabel to
       // the logical names the manifest DDL promises (column mapping)
-      val physical = org.apache.spark.sql.types.StructType.fromDDL(m.physicalDdl)
-      val base = spark.read.schema(physical)
-        .parquet(files.map(f => resolvePath(root, f.path)): _*)
-        .withColumn("__graft_file", input_file_name())
-      val sup = applyDv(root, base, files)
-      val renamed =
-        if (m.colMap.isEmpty) sup
-        else sup.select((logical.fields.toSeq.map(f =>
-          sup(m.physicalOf(f.name)).as(f.name)) :+ sup("__graft_file")): _*)
-      fileCol match {
-        case Some(n) => renamed.withColumnRenamed("__graft_file", n)
-        case None    => renamed.drop("__graft_file")
+      val scan = parquetScan(spark, root, files,
+        org.apache.spark.sql.types.StructType.fromDDL(m.physicalDdl))
+      val hasDv = files.exists(f => f.dv.nonEmpty || f.dvRef.nonEmpty)
+      if (!hasDv && m.colMap.isEmpty && fileCol.isEmpty) scan
+      else {
+        val meta = scan.metadataColumn("_metadata")
+        val named = scan.select(scan.columns.toSeq.map(c => scan(s"`$c`")) ++
+          Option.when(hasDv)(meta.getField("file_name").as("__graft_file")) ++
+          fileCol.map(meta.getField("file_path").as(_)): _*)
+        val sup = if (hasDv) applyDv(root, named, files) else named
+        sup.select(logical.fields.toSeq.map(f =>
+          sup(s"`${m.physicalOf(f.name)}`").as(f.name)) ++ fileCol.map(n => sup(n)): _*)
       }
     }
+  }
+
+  /** `files` under `schema` as a parquet `HadoopFsRelation` over a
+    * [[ManifestFileIndex]]: the plan holds the relation itself, so
+    * nothing is listed, inferred or resolved.
+    */
+  private def parquetScan(spark: SparkSession, root: String, files: Seq[FileEntry],
+                          schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        new ManifestFileIndex(root, files), new org.apache.spark.sql.types.StructType(),
+        schema, None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty)(spark))
+
+  /** The (f: file basename, k: suppressed key) rows of the deletion-
+    * vector side-file directory `rel` ([[writeDvSideFile]]): one
+    * listing of the directory, no schema inference.
+    */
+  private def dvSideFile(spark: SparkSession, root: String, rel: String): DataFrame = {
+    val parts = scala.util.Using.resource(Files.list(Paths.get(resolvePath(root, rel)))) {
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq.sorted
+    }
+    parquetScan(spark, root, parts.map(n => FileEntry(s"$rel/$n", -1L, Map.empty, Map.empty)),
+      org.apache.spark.sql.types.StructType.fromDDL("f STRING, k BIGINT"))
   }
 
   /** Merge-on-read: suppress each file's deletion-vector keys inside
@@ -1687,13 +1726,13 @@ object TableLog {
     * documented evolution, same contract). A NULL key is never
     * suppressed — dv keys come from change batches, which are keyed.
     */
-  /** Requires `df` to carry a `__graft_file` column (the full source
-    * path, materialized pre-join — see [[readFiles]]).
+  /** Requires `df` to carry a `__graft_file` column: the source file's
+    * name, the scan's `_metadata.file_name` (see [[readFiles]]).
     */
   private def applyDv(root: String, df: DataFrame,
                       files: Seq[FileEntry]): DataFrame = {
     val dvCols = files.flatMap(_.dv.keys).distinct.sorted
-    val fname = element_at(split(col("__graft_file"), "/"), -1)
+    val fname = col("__graft_file")
     // a STRING key's dv vector stores the portable rolling hash of
     // the key (the carrier stays a long array); the scan-side probe
     // computes the same hash via the codegen'd expression — the write
@@ -1717,9 +1756,7 @@ object TableLog {
     // referenced parquet (f, k) frames — the probe cost is a hash
     // lookup per row, independent of vector size, and the side frame
     // broadcasts while the manifest-recorded counts stay under the
-    // usual threshold. input_file_name() materializes as a column
-    // BEFORE the join: evaluated inside the join condition it would
-    // be empty on the post-shuffle side.
+    // usual threshold.
     val refCols = files.flatMap(_.dvRef.keys).distinct.sorted
     if (refCols.isEmpty) inlined
     else {
@@ -1728,7 +1765,7 @@ object TableLog {
         val refs = files.flatMap(f => f.dvRef.get(c).map { case (p, _) =>
           (p, f.path.substring(f.path.lastIndexOf('/') + 1)) })
         val side = refs.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, fs) =>
-          spark.read.parquet(resolvePath(root, p))
+          dvSideFile(spark, root, p)
             .filter(col("f").isin(fs.map(_._2): _*))
             .select(col("f").as("__dv_f"), col("k").as("__dv_k"))
         }.reduce(_ unionByName _)
@@ -2143,11 +2180,11 @@ object TableLog {
               if (pf.dvRef.get(c).exists(_._1 == path)) Nil // unchanged ref
               else {
                 val base = f.path.substring(f.path.lastIndexOf('/') + 1)
-                var fresh = spark.read.parquet(resolvePath(root, path))
+                var fresh = dvSideFile(spark, root, path)
                   .filter(col("f") === base).select("f", "k")
                 pf.dvRef.get(c).foreach { case (op, _) =>
                   fresh = fresh.exceptAll(
-                    spark.read.parquet(resolvePath(root, op))
+                    dvSideFile(spark, root, op)
                       .filter(col("f") === base).select("f", "k")) }
                 val oldInline = pf.dv.getOrElse(c, Array.empty[Long])
                 if (oldInline.nonEmpty)
@@ -2235,22 +2272,18 @@ object TableLog {
     val binByName: Map[String, Long] = raw.map { case (rel, b) =>
       rel.substring(rel.lastIndexOf('/') + 1) -> dense(b).toLong
     }.toMap
-    val srcPaths = small.map(f => resolvePath(root, f.path))
-    // the bin and the DV file column materialize BEFORE applyDv: the
-    // side-file DV branch may anti-join, after which
-    // input_file_name() is no longer valid. The bin rides as the
-    // __graft_lay layout carrier, which writeDataFiles consumes.
-    val withBin = applyDv(root, spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(m.physicalDdl))
-      .parquet(srcPaths: _*)
-      .withColumn("__graft_file", input_file_name())
+    // the bin rides as the __graft_lay layout carrier, which
+    // writeDataFiles consumes; the read relabels to the logical names,
+    // and the write maps them back to the physical ones
+    val withBin = readFiles(spark, root, m, small, fileCol = Some("__gf"))
       .withColumn("__graft_lay", element_at(typedlit(binByName),
-        element_at(split(col("__graft_file"), "/"), -1))), small)
-      .drop("__graft_file")
+        element_at(split(col("__gf"), "/"), -1)))
+      .drop("__gf")
     // delta form: the folded small tail is the remove set, the bins
     // are the adds — the manifest write is tail-sized, not table-sized
     commitManifest(root, childOf(m, "compact"), keep,
-      writeDataFiles(withBin, root, parent + 1, col("__graft_lay"), nBins),
+      writeDataFiles(withBin, root, parent + 1, col("__graft_lay"), nBins,
+        m.colMap),
       small.map(_.path), checkpointInterval)
   }
 
@@ -2547,7 +2580,7 @@ object TableLog {
         val priorRefDfs = refF.flatMap { case (f, _) =>
           f.dvRef.get(physKey).map { case (p, _) => (p, baseName(f.path)) } }
           .groupBy(_._1).toSeq.sortBy(_._1).map { case (p, fs) =>
-            spark.read.parquet(resolvePath(root, p))
+            dvSideFile(spark, root, p)
               .filter(col("f").isin(fs.map(_._2): _*)).select("f", "k")
           }
         val combined = (Seq(fresh, priorInline.toDF("f", "k")) ++ priorRefDfs)

@@ -1690,13 +1690,11 @@ object GraftExpressions {
       cs.experimental.extraOptimizations =
         cs.experimental.extraOptimizations :+ PolygonGateBBoxRule
     }
-    if (!cs.experimental.extraOptimizations.contains(V1ScanStatsJoinRule)) {
+    // the graftlog read splice must run after scan pushdown, which
+    // only this batch does (an extension's optimizer rules run before)
+    if (!cs.experimental.extraOptimizations.contains(graft.sources.GraftLogScanRule)) {
       cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ V1ScanStatsJoinRule
-    }
-    if (!cs.experimental.extraOptimizations.contains(V1ScanStatsForwardRule)) {
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ V1ScanStatsForwardRule
+        cs.experimental.extraOptimizations :+ graft.sources.GraftLogScanRule
     }
     registerFunctions(cs.sessionState.functionRegistry)
   }

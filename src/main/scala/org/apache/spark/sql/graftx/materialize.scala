@@ -45,13 +45,14 @@ object Materialize {
     * effect — and the returned frame plans over the stored blocks.
     * One job where clean-then-consume was two.
     *
-    * CONTRACT: `first` must be a FULL-SCAN action — an aggregate, a
+    * CONTRACT: `first` should be a FULL-SCAN action — an aggregate, a
     * grouped collect, anything whose map side reads every input
-    * partition. An action that can short-circuit input partitions
-    * (`limit` directly over the frame, `isEmpty`, `head` without a
-    * shuffle in between) would leave blocks unstored, and a later
-    * consumer of the truncated-lineage RDD dies on the missing
-    * blocks.
+    * partition — or the saving is lost. An action that can
+    * short-circuit input partitions (`limit` directly over the frame,
+    * `isEmpty`, `head` without a shuffle in between) computes only
+    * some blocks; Spark 4.1's `LocalRDDCheckpointData.doCheckpoint`
+    * then computes the skipped partitions in an extra job, so no block
+    * is missing, but the one-job saving becomes two jobs again.
     */
   def cleanWith[T](df: DataFrame)(first: DataFrame => T): (DataFrame, T) = {
     val cp = df.localCheckpoint(eager = false)

@@ -41,105 +41,3 @@ object PolygonGateBBoxRule extends Rule[LogicalPlan] {
       else Filter(missing.foldLeft(cond)(And(_, _)), child)
   }
 }
-
-/** CBO bridge for V1-shim DSv2 relations (the graftlog connector):
-  * the store's scan reports exact post-prune statistics through
-  * `SupportsReportStatistics`, but Spark's `V1ScanWrapper` — the
-  * wrapper every `V1Scan` acquires during pushdown — does not forward
-  * the trait, so `DataSourceV2ScanRelation.computeStats` falls back to
-  * the 8-EiB default and an un-hinted join over the SQL surface
-  * always shuffles both sides, no matter how small the (possibly
-  * WHERE-pruned) store side really is.
-  *
-  * This rule re-derives the decision where it matters — at each JOIN:
-  * a side that is a pure Project/Filter shape over such a wrapped
-  * scan, whose REPORTED bytes sit at or under
-  * `spark.sql.autoBroadcastJoinThreshold`, gets the BROADCAST join
-  * hint. Runs in the User Provided Optimizers batch (after scan
-  * pushdown, so the stats reflect file pruning); idempotent because
-  * an existing side hint always wins; disabled joins-wise when the
-  * threshold is ≤ 0 (the user turned auto-broadcast off). Statistics
-  * stay advisory: a hint can change the plan, never a value.
-  */
-/** The NDV→CBO bridge: Spark's `V1ScanWrapper` (the shim every
-  * V1Scan acquires during pushdown) does not implement
-  * `SupportsReportStatistics`, so a graftlog scan's exact rows/bytes
-  * AND its ANALYZE-artifact column statistics (distinctCount /
-  * min / max / nullCount) never reach
-  * `DataSourceV2ScanRelation.computeStats`. This rule swaps the shim
-  * for a subclass that forwards the trait — after which Catalyst's
-  * OWN machinery consumes the store's statistics: plan-level
-  * `stats.attributeStats` carry the NDVs (CBO estimates) and
-  * JoinSelection's build-side/broadcast choice sees real sizeInBytes
-  * without the hint detour. Runs in the user-provided optimizer
-  * batch — the earliest point AFTER V2ScanRelationPushDown creates
-  * the wrapper (the Pre-CBO batch precedes pushdown); plan stats are
-  * computed lazily on the final optimized plan, so every consumer
-  * from physical planning onward sees the forwarded numbers.
-  * Idempotent (the subclass is itself the trait).
-  */
-object V1ScanStatsForwardRule extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
-  import org.apache.spark.sql.connector.read.SupportsReportStatistics
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case r: DataSourceV2ScanRelation => r.scan match {
-      case w: V1ScanWrapper if !w.isInstanceOf[SupportsReportStatistics] &&
-          w.v1Scan.isInstanceOf[SupportsReportStatistics] =>
-        r.copy(scan = new StatsForwardingV1ScanWrapper(w))
-      case _ => r
-    }
-  }
-}
-
-/** [[org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper]]
-  * plus the statistics trait, delegating to the wrapped V1 scan.
-  */
-final class StatsForwardingV1ScanWrapper(
-    w: org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper)
-  extends org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(
-    w.v1Scan, w.handledFilters, w.pushedDownOperators)
-  with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
-    w.v1Scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
-      .estimateStatistics()
-}
-
-object V1ScanStatsJoinRule extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, HintInfo, Project, BROADCAST}
-  import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
-  import org.apache.spark.sql.connector.read.SupportsReportStatistics
-
-  private def reportedBytes(p: LogicalPlan): Option[BigInt] = p match {
-    case pr: Project => reportedBytes(pr.child)
-    case f: Filter   => reportedBytes(f.child)
-    case r: DataSourceV2ScanRelation =>
-      r.scan match {
-        case w: V1ScanWrapper => w.v1Scan match {
-          case s: SupportsReportStatistics =>
-            val st = s.estimateStatistics()
-            if (st.sizeInBytes().isPresent) Some(BigInt(st.sizeInBytes().getAsLong))
-            else None
-          case _ => None
-        }
-        case _ => None
-      }
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val threshold = conf.autoBroadcastJoinThreshold
-    if (threshold <= 0) plan
-    else plan.transformUp {
-      case j @ Join(l, r, _, _, hint) =>
-        def derive(side: LogicalPlan, existing: Option[HintInfo]): Option[HintInfo] =
-          existing.orElse(
-            reportedBytes(side).filter(_ <= threshold)
-              .map(_ => HintInfo(strategy = Some(BROADCAST))))
-        val lh = derive(l, hint.leftHint)
-        val rh = derive(r, hint.rightHint)
-        if ((lh eq hint.leftHint) && (rh eq hint.rightHint)) j
-        else j.copy(hint = JoinHint(lh, rh))
-    }
-  }
-}

@@ -15,7 +15,7 @@ package org.apache.spark.sql.graftx
 import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.{Partitioner, TaskContext}
@@ -34,11 +34,11 @@ object SlotWrite {
     * file per non-empty partition: partition i holds the rows whose
     * LAST column (an int slot in [0, partitioner.n)) is i, written
     * without that column. Each writing task reports its bytes and
-    * records as output metrics and returns `describe(conf, fileName)`
-    * of its closed file; results come back in slot order.
+    * records as output metrics and returns `describe(conf, fileName,
+    * status)` of its closed file; results come back in slot order.
     */
   def write[T: ClassTag](df: DataFrame, partitioner: Partitioner, dir: String)
-                        (describe: (Configuration, String) => T): Seq[T] = {
+                        (describe: (Configuration, String, FileStatus) => T): Seq[T] = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val schema = StructType(df.schema.fields.dropRight(1))
     val format = new ParquetFileFormat
@@ -75,10 +75,11 @@ object SlotWrite {
             Utils.tryWithSafeFinally {
               placed.foreach { kv => writer.write(proj(kv._2)); n += 1 }
             }(writer.close())
+            val status = path.getFileSystem(hadoopConf).getFileStatus(path)
             val metrics = task.taskMetrics().outputMetrics
-            metrics.setBytesWritten(path.getFileSystem(hadoopConf).getFileStatus(path).getLen)
+            metrics.setBytesWritten(status.getLen)
             metrics.setRecordsWritten(n)
-            Iterator.single(describe(hadoopConf, name))
+            Iterator.single(describe(hadoopConf, name, status))
           }
         }
         .collect().toSeq

@@ -271,19 +271,16 @@ class GraftLogDsvSpec extends AnyFunSuite {
   }
 
   test("DSv2 statistics: post-prune rows/bytes reach the planner, filtered dim auto-broadcasts") {
-    import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
-    import org.apache.spark.sql.connector.read.SupportsReportStatistics
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
     val root = freshRoot("stats")
     TableLog.commit(mkDf(0L until 800L), root, expr("k div 100"), 8, "overwrite")
-    // the scan reports exact rows + real on-disk bytes (post-prune);
-    // Spark's V1ScanWrapper hides the trait, so read them the way the
-    // join rule does — through the wrapper
+    // the scan reports exact rows + real on-disk bytes (post-prune) as
+    // the catalog statistics of the parquet relation it plans as
     def scanStats(df: org.apache.spark.sql.DataFrame): (Long, Long) =
       df.queryExecution.optimizedPlan.collectLeaves().collectFirst {
-        case r: DataSourceV2ScanRelation =>
-          val s = r.scan.asInstanceOf[V1ScanWrapper]
-            .v1Scan.asInstanceOf[SupportsReportStatistics].estimateStatistics()
-          (s.numRows().getAsLong, s.sizeInBytes().getAsLong)
+        case r: LogicalRelation if r.catalogTable.exists(_.stats.isDefined) =>
+          val s = r.catalogTable.get.stats.get
+          (s.rowCount.get.toLong, s.sizeInBytes.toLong)
       }.get
     val (fullRows, fullBytes) = scanStats(sqlRead(root))
     assert(fullRows == 800L && fullBytes > 0L && fullBytes < (10L << 20),

@@ -38,10 +38,10 @@ abstract class JobBudgetSuite(budget: Seq[(String, Int)]) extends AnyFunSuite {
 class JobBudgetSpec extends JobBudgetSuite(Seq(
   "q84_sql_write" -> 8,
   "q95_catalog_tables" -> 11,
-  "q97_merge_general" -> 25,
+  "q97_merge_general" -> 24,
   "q83_string_zones" -> 5,
   "q65_table_log" -> 21,
-  "q92_sql_merge" -> 34,
+  "q92_sql_merge" -> 33,
   "st03_session_window" -> 4,
   "st07_interval_join" -> 5))
 
