@@ -554,10 +554,15 @@ private[sources] final class GraftLogScanBuilder(root: String, version: Long,
 private[sources] trait GraftLogRead extends Scan {
   def read(spark: SparkSession): LogicalPlan
 
-  /** The analyzed plan of `df` projected to the scan's columns. */
+  /** The optimized plan of `df` projected to the scan's columns. The
+    * splice lands after the optimizer's rewrite batches, so it must be
+    * optimized already: an analyzed plan would bring operators only the
+    * optimizer replaces (`EXCEPT ALL`) and hints it resolves
+    * (`broadcast`) to the physical planner.
+    */
   protected def projected(df: DataFrame): LogicalPlan =
     df.select(readSchema().fieldNames.toSeq.map(n => df(s"`$n`")): _*)
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.optimizedPlan
 }
 
 /** The scan's ONE file selection is planned once by
@@ -595,9 +600,11 @@ private[sources] final class GraftLogScan(root: String, version: Long,
         sizeInBytes = BigInt(math.max(1L, TableLog.dataBytes(root, sel))),
         rowCount = Some(BigInt(sel.map(_.liveRows).sum)),
         colStats = columnStats(spark, m))))
+    // the data-file relation only: a deletion-vector side-file scan
+    // keeps its own size, so its anti join still broadcasts
+    val data = new ManifestFileIndex(root, sel)
     projected(df).transform {
-      case l @ LogicalRelation(h: HadoopFsRelation, _, None, _, _)
-          if h.location.isInstanceOf[ManifestFileIndex] =>
+      case l @ LogicalRelation(h: HadoopFsRelation, _, None, _, _) if h.location == data =>
         l.copy(catalogTable = Some(table))
     }
   }
@@ -672,8 +679,11 @@ private[sources] final class GraftLogCdfScan(root: String, fromV: Long,
   * once, inside the query that reads it. Runs in the user-provided
   * optimizer batch, the first point after `V2ScanRelationPushDown`;
   * `Graft.registerFunctions` registers it. An `ALTER TABLE … ADD
-  * CONSTRAINT` plan is left whole: Spark plans its validation query
-  * from the V2 relation, whose scan [[GraftLogScanStrategy]] reads.
+  * CONSTRAINT` plan is left whole: Spark's `DataSourceV2Strategy`
+  * plans that command only over a validation query that still ends in
+  * the V2 scan relation, and fails with "No plan for
+  * AddCheckConstraint" over a spliced one. [[GraftLogScanStrategy]]
+  * reads that relation instead.
   */
 object GraftLogScanRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {

@@ -106,6 +106,50 @@ class NativeScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .as[(Long, Long)].collect().toSet == Set((5L, 7L), (1000L, 9L)))
   }
 
+  test("SQL snapshot and change-feed reads over side-file deletion vectors match the library") {
+    val root = freshRoot("dvside")
+    // 5% of each file deleted per merge with dvInlineMax = 8: the
+    // vectors ride side-files, and the second merge grows them
+    TableLog.commit(mkDf(0L until 8000L), root, expr("k div 2000"), 4, "overwrite")
+    Seq(0L until 8000L by 20L, 10L until 8000L by 40L).zipWithIndex.foreach { case (ks, i) =>
+      TableLog.mergeMor(spark, root,
+        ks.map(k => (k, i + 1L, "D", 0L)).toDF("k", "ver", "op", "new_price"),
+        "k", expr("k div 2000"), 2, valCol = "cents", dvInlineMax = 8)
+    }
+    assert(TableLog.readManifest(root, 2L).files.forall(_.dvRef.contains("k")))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "cents").as[(Long, Long)].collect().toSet
+    val sqlRead = spark.read.format("graftlog").option("path", root).load()
+    var sqlPairs = Set.empty[(Long, Long)]
+    val qes = executions { sqlPairs = pairs(sqlRead) }
+    assert(sqlPairs == pairs(TableLog.read(spark, root)) && sqlPairs.size == 7400)
+    // only the data-file relation carries the table's statistics; each
+    // side-file scan keeps its own size, so the side frame broadcasts
+    val tagged = qes.flatMap(_.optimizedPlan.collect {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+          h: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, Some(_), _, _) =>
+        h.location.inputFiles.toSeq
+    })
+    assert(tagged.nonEmpty && tagged.flatten.forall(!_.contains("_dv/")),
+      s"relations with the table's statistics: $tagged")
+    // the read's own broadcast hint reaches the anti join
+    assert(qes.exists(_.optimizedPlan.exists {
+      case j: Join => j.joinType == LeftAnti && j.hint.rightHint.exists(_.strategy.contains(BROADCAST))
+      case _ => false
+    }), "the side-file anti join lost its BROADCAST hint")
+    assert(nodes(qes).exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+      "the side-file anti join must broadcast its side")
+    // the v2 feed diffs the grown side-files (EXCEPT ALL)
+    def feed(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "cents", "_change_type").as[(Long, Long, String)].collect().toSet
+    val sqlFeed = spark.read.format("graftlog").option("path", root)
+      .option("changeFeed", "true").option("startingVersion", "2").load()
+    val libFeed = TableLog.readChangeFeed(spark, root, 2L, 2L)
+    assert(feed(sqlFeed) == feed(libFeed))
+    assert(feed(sqlFeed).count(_._3 == "delete") == 200)
+  }
+
   test("the V1 bridge and its stats and hint rules are gone; the store reads resolve no paths") {
     def src(p: String) = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8)
